@@ -114,7 +114,8 @@ class InfrequentCollapserModel(Model, DefaultParamsReadable, DefaultParamsWritab
 
 class InfrequentCollapser(Estimator, DefaultParamsReadable, DefaultParamsWritable):
     """F4(a-b): learn the frequent-category set per column. ONE aggregation
-    job for all columns (grouping-sets style union), not one per column."""
+    job for all columns (grouping-sets style union), not one per column,
+    and no separate row count."""
 
     inputCols = Param(
         Params._dummy(), "inputCols", "categorical columns to collapse",
@@ -131,18 +132,27 @@ class InfrequentCollapser(Estimator, DefaultParamsReadable, DefaultParamsWritabl
 
     def _fit(self, df: DataFrame) -> InfrequentCollapserModel:
         input_cols = self.getOrDefault(self.inputCols)
-        n = df.count()
-        cutoff = self.getOrDefault(self.minFrequency) * n
         stacked = df.selectExpr(
             "stack({}, {}) as (col_name, value)".format(
                 len(input_cols),
                 ", ".join(f"'{c}', cast(`{c}` as string)" for c in input_cols),
             )
         )
+        # stack emits one row per (input row, column), null values
+        # included, so each column's group counts sum to the row count:
+        # the total comes from a window over the grouped frame, not a
+        # second scan of df, and the filter stays in Spark so only the
+        # frequent values reach the driver
+        grouped = stacked.groupBy("col_name", "value").agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        cutoff = F.lit(self.getOrDefault(self.minFrequency)) * F.sum("n").over(
+            Window.partitionBy("col_name")
+        )
         counts = (
-            stacked.groupBy("col_name", "value")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .filter((F.col("n") >= cutoff) & F.col("value").isNotNull())
+            grouped.withColumn("__cutoff", cutoff)
+            .filter((F.col("n") >= F.col("__cutoff")) & F.col("value").isNotNull())
+            .select("col_name", "value")
             .collect()
         )
         frequent: dict[str, list[str]] = {c: [] for c in input_cols}

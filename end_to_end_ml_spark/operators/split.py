@@ -56,20 +56,31 @@ def deterministic_key(pk_col: str):
     return (F.col(pk_col).cast("long") * F.lit(_HASH_MULT)) % F.lit(_HASH_MOD)
 
 
-def _validate_stratify(df: DataFrame, class_col: str, train_size: float) -> None:
-    """Mirror the reference's ValueError contract (prep.py:165-192)."""
+def _check_stratify_args(df: DataFrame, class_col: str, train_size: float) -> None:
+    """The reference's argument checks (prep.py:165-180); no Spark job."""
     if not 0.0 < train_size < 1.0:
         raise ValueError(f"train_size must be in (0, 1), got {train_size}")
     if class_col not in df.columns:
         raise ValueError(f"class column {class_col!r} not in DataFrame")
+
+
+def _check_class_stats(class_col: str, nulls: int, k: int) -> None:
+    """The reference's label checks (prep.py:181-192) over already-computed
+    stats: ``nulls`` null labels, ``k`` distinct non-null classes."""
+    if nulls:
+        raise ValueError(f"{nulls} null labels in {class_col!r}")
+    if k < 2:
+        raise ValueError(f"need >=2 classes in {class_col!r}, found {k}")
+
+
+def _validate_stratify(df: DataFrame, class_col: str, train_size: float) -> None:
+    """Mirror the reference's ValueError contract (prep.py:165-192)."""
+    _check_stratify_args(df, class_col, train_size)
     stats = df.agg(
         F.countDistinct(class_col).alias("k"),
         F.sum(F.col(class_col).isNull().cast("long")).alias("nulls"),
     ).collect()[0]
-    if stats["nulls"]:
-        raise ValueError(f"{stats['nulls']} null labels in {class_col!r}")
-    if stats["k"] < 2:
-        raise ValueError(f"need >=2 classes in {class_col!r}, found {stats['k']}")
+    _check_class_stats(class_col, stats["nulls"], stats["k"])
 
 
 def _bucketed_rank(df: DataFrame, class_col: str, pk_col: str):
@@ -302,12 +313,29 @@ def train_valid_calib_test(
     calib_size: float = 0.8,
 ) -> dict[str, DataFrame]:
     """T3+T5+T6: the reference's full 4-way carve — dev→(train,test), then
-    train→(train,valid), then train→(train,calib). Disjoint by construction;
-    each carve is the same single-window operator."""
-    train, test = stratified_split(df, class_col, pk_col, train_size)
-    train, valid = stratified_split(train, class_col, pk_col, valid_size)
-    train, calib = stratified_split(train, class_col, pk_col, calib_size)
-    return {"train": train, "validation": valid, "calibration": calib, "test": test}
+    train→(train,valid), then train→(train,calib). Disjoint and exhaustive
+    by construction; each frame has exactly ``df``'s columns.
+
+    Built on :func:`carve_assignment` (one rank pass, row-identical to the
+    three chained :func:`stratified_split` carves) and PERSISTED once at
+    the default storage level: the four frames are filters over that one
+    cached relation. A reference flow runs >= 10 actions on them (the
+    estimator fits, the metric and threshold actions, the test-split
+    write), and without the cache each would re-run the broadcast joins
+    and the rank windows over the input. The persist is fault tolerant (a
+    lost block recomputes from lineage, unlike a localCheckpoint); the
+    cache lives until ``spark.catalog.clearCache()`` releases it.
+
+    Evaluates the input plan more than once before the cache fills (the
+    bounded count collect, then the assignment pass): a nondeterministic
+    upstream must be persisted first; see carve_assignment."""
+    assigned = carve_assignment(
+        df, class_col, pk_col, train_size, valid_size, calib_size, "__subset"
+    ).persist()
+    return {
+        name: assigned.filter(F.col("__subset") == name).drop("__subset")
+        for name in ("train", "validation", "calibration", "test")
+    }
 
 
 def _kept_count(m: int, frac: float) -> int:
@@ -338,8 +366,8 @@ def carve_assignment(
     calib_size: float = 0.8,
     subset_col: str = "subset",
 ) -> DataFrame:
-    """Fused form of :func:`train_valid_calib_test`: the full 4-way carve
-    as ONE assignment column in ONE rank pass. Key insight: every chained
+    """The full 4-way carve of :func:`train_valid_calib_test` as ONE
+    assignment column in ONE rank pass. Key insight: every chained
     carve filters on ``percent_rank < frac`` under the SAME per-class
     (hash-key, pk) order, and filtering preserves that order — so each
     carve keeps a PREFIX of the class's ranked sequence, and the whole
@@ -350,19 +378,23 @@ def carve_assignment(
     kept(m) replays stratified_split's EXACT float comparison
     ``(r-1)/(m-1) < frac`` (IEEE double division, same result on driver
     and executor) over the 5-candidate neighborhood of the boundary, so
-    the fused assignment is row-identical to the materialized chain —
-    pinned by tests/test_split.py::test_carve_assignment_matches_chain.
+    the fused assignment is row-identical to three chained
+    :func:`stratified_split` calls — pinned by
+    tests/test_split.py::test_carve_assignment_matches_chain.
 
     Scale shape: one bucketed rank (the stratified_split machinery: rank
     within (class, high-bit bucket) + offsets from the tiny count frame
     — no one-partition-per-class window) + a BROADCAST of the per-class
-    cutoff table (|classes| rows). The chained form re-executes up to 3
-    upstream carves per leaf (~9 window passes + 4 scans); this is 1
-    pass, measured 3.6 -> ~1 s at sf0.1.
+    cutoff table (|classes| rows). Three chained stratified_split calls
+    nest three rank passes, each with its own validation and count jobs,
+    and an action on the innermost leaf runs all of them (~9 window
+    passes + 4 scans); this is 1 pass, measured 3.6 -> ~1 s at sf0.1.
+    The label checks (nulls, >= 2 classes) read the same collected
+    counts, so validation costs no pass of its own.
 
-    Evaluates the input plan multiple times (validation agg, per-class
-    totals, final assignment pass) — nondeterministic upstreams must be
-    persisted first; see the multi-evaluation caveat on global_ordinal."""
+    Evaluates the input plan twice (the count collect, then every action
+    on the result) — nondeterministic upstreams must be persisted first;
+    see the multi-evaluation caveat on global_ordinal."""
     kept = _kept_count
     for frac, label in (
         (train_size, "train_size"),
@@ -371,7 +403,7 @@ def carve_assignment(
     ):
         if not 0.0 < frac < 1.0:
             raise ValueError(f"{label} must be in (0, 1), got {frac}")
-    _validate_stratify(df, class_col, train_size)
+    _check_stratify_args(df, class_col, train_size)
 
     ranked, counts, _offsets = _bucketed_rank(df, class_col, pk_col)
     # ONE bounded driver fold: collect the (class x bucket) COUNT frame
@@ -386,6 +418,11 @@ def carve_assignment(
     totals: dict = {}
     for r in count_rows:
         totals[r[class_col]] = totals.get(r[class_col], 0) + r["__cnt"]
+    # label checks from the same counts: the None group holds the null
+    # labels, and k counts the non-null classes as countDistinct would
+    _check_class_stats(
+        class_col, totals.get(None, 0), len(totals) - (None in totals)
+    )
     off_rows = []
     by_class: dict = {}
     for r in sorted(count_rows, key=lambda r: (str(r[class_col]), r["__b"])):

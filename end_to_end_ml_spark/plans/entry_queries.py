@@ -6335,8 +6335,8 @@ def t13_four_way_carve(spark, sf_dir):
     and the oracle replays all three carves as chained rank CTEs. Runs
     through split.carve_assignment, the FUSED single-rank-pass form
     (chained carves keep per-class prefixes, so the chain reduces to
-    three integer cutoffs); row-identity with the materialized
-    train_valid_calib_test chain is pytest-pinned."""
+    three integer cutoffs); row-identity with three chained
+    stratified_split calls is pytest-pinned."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         split.carve_assignment(docs, "lang", "doc_id", 0.8, 0.8, 0.8)

@@ -12,11 +12,46 @@ Scale notes (100 TB design target):
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the default driver heap: this cap, or half the host's memory if smaller
+DRIVER_MEM_CAP_MIB = 20 * 1024
+
+_log = logging.getLogger(__name__)
+
+
+@functools.lru_cache(maxsize=None)
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap when neither the caller nor ``SPARK_GRAFT_DRIVER_MEM``
+    sets one: min(20g, half of MemTotal), in MiB. The heap is pinned
+    (-Xms), so a fixed 20g cannot start a JVM on a host with less memory;
+    half leaves room for the JVM's off-heap use and the Python side.
+    Without a readable ``meminfo`` the 20g cap applies. The choice is
+    logged once per process."""
+    total_kib = None
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    total_kib = int(line.split()[1])
+                    break
+    except (OSError, ValueError):
+        pass
+    if total_kib is None:
+        mem = f"{DRIVER_MEM_CAP_MIB}m"
+        _log.warning("driver memory %s: no MemTotal in %s", mem, meminfo)
+    else:
+        mem = f"{min(DRIVER_MEM_CAP_MIB, total_kib // 2048)}m"
+        _log.info(
+            "driver memory %s: min(%d MiB cap, half of MemTotal %d KiB)",
+            mem, DRIVER_MEM_CAP_MIB, total_kib,
+        )
+    return mem
 
 
 def merge_driver_java_options(driver_mem: str, caller_jopts: str | None) -> str:
@@ -44,11 +79,13 @@ def merge_driver_java_options(driver_mem: str, caller_jopts: str | None) -> str:
 def resolve_driver_memory(extra_conf: dict[str, str] | None) -> str:
     """Driver heap size with the precedence the -Xms floor must follow:
     an explicit extra_conf ``spark.driver.memory`` beats the
-    ``SPARK_GRAFT_DRIVER_MEM`` env default, so the fixed-heap floor built
-    from this value can never exceed the caller's -Xmx."""
-    return (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "20g")
+    ``SPARK_GRAFT_DRIVER_MEM`` env setting, which beats the host-derived
+    :func:`default_driver_memory`, so the fixed-heap floor built from
+    this value can never exceed the caller's -Xmx."""
+    mem = (extra_conf or {}).get("spark.driver.memory") or os.environ.get(
+        "SPARK_GRAFT_DRIVER_MEM"
     )
+    return mem or default_driver_memory()
 
 
 def get_spark(
@@ -67,7 +104,8 @@ def get_spark(
         master = f"local[{DEFAULT_CPUS}]"
     if master:
         builder = builder.master(master)
-    # Driver heap sizing rule (SPARK_GRAFT_DRIVER_MEM, default 20g): the
+    # Driver heap sizing rule (SPARK_GRAFT_DRIVER_MEM, default 20g capped
+    # at half the host's memory, see default_driver_memory): the
     # driver live set is bounded by (a) collect bounds — every driver-side
     # collect in the engine is capped (65536-row vocab/quantizer bounds,
     # 1-row aggregates), (b) broadcast relations (offsets/bounds tables,
@@ -79,8 +117,8 @@ def get_spark(
     # floor: ~7 GB peak observed at sf0.1). 20g = observed peak x ~3
     # headroom. -Xms is pinned to the same value (see extraJavaOptions
     # comment below), so the host must actually HAVE this much memory
-    # free: a caller on a smaller host passes SPARK_GRAFT_DRIVER_MEM=8g
-    # (tests/conftest.py honours the same env var).
+    # free: the default never asks for more than half of MemTotal, and
+    # SPARK_GRAFT_DRIVER_MEM overrides it either way.
     # An extra_conf override of spark.driver.memory takes precedence so
     # the -Xms floor can never exceed -Xmx (r13 ADVICE: a caller passing
     # driver.memory=8g used to still get -Xms20g and fail JVM startup).

@@ -64,6 +64,22 @@ def test_infrequent_collapser(spark):
     assert model.transform(new).collect()[0]["c"] == FP.INFREQUENT
 
 
+def test_infrequent_collapser_cutoff_counts_every_row(spark):
+    """The cutoff is minFrequency x the ROW count — null values included —
+    per column, with a category at exactly the cutoff kept: c1's 13 nulls
+    keep "d" (3 < 0.1 x 40) out, which a non-null total (27) would let in."""
+    c1 = ["a"] * 20 + ["b"] * 4 + ["d"] * 3 + [None] * 13
+    c2 = ["x"] * 36 + ["y"] * 4
+    df = spark.createDataFrame(list(zip(range(40), c1, c2)), "id int, c1 string, c2 string")
+    model = FP.InfrequentCollapser(inputCols=["c1", "c2"], minFrequency=0.1).fit(df)
+    want = {
+        col: {v for v in set(vals) - {None} if vals.count(v) >= 0.1 * len(vals)}
+        for col, vals in (("c1", c1), ("c2", c2))
+    }
+    assert {c: set(v) for c, v in model.frequent.items()} == want
+    assert want == {"c1": {"a", "b"}, "c2": {"x", "y"}}
+
+
 def test_unseen_category_with_zero_infrequent_at_fit(spark):
     """ADVICE r1 (medium): when NO training category is below min_frequency,
     __infrequent__ is absent from the fit data — the encode path must still

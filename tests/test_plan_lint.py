@@ -483,3 +483,24 @@ def test_driver_mem_extra_conf_precedence():
     assert merge_driver_java_options(
         resolve_driver_memory({"spark.driver.memory": "8g"}), None
     ).startswith("-Xms8g ")
+
+
+def test_default_driver_memory_fits_a_small_host(tmp_path, monkeypatch):
+    """The pinned default heap is min(20g, half of MemTotal): a 15 GB host
+    gets ~7.6g instead of an -Xms20g the JVM cannot commit; a big host
+    keeps 20g; an unreadable meminfo falls back to the 20g cap. The env
+    setting still wins over the host-derived default."""
+    from end_to_end_ml_spark import session as S
+
+    small = tmp_path / "small"
+    small.write_text("MemTotal:       15974528 kB\nMemFree:  1 kB\n")
+    big = tmp_path / "big"
+    big.write_text("MemTotal:       263941136 kB\n")
+    assert S.default_driver_memory(str(small)) == "7800m"
+    assert S.default_driver_memory(str(big)) == "20480m"
+    assert S.default_driver_memory(str(tmp_path / "missing")) == "20480m"
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert S.resolve_driver_memory(None) == S.default_driver_memory()
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert S.resolve_driver_memory(None) == "6g"
+    assert S.resolve_driver_memory({"spark.driver.memory": "8g"}) == "8g"

@@ -446,10 +446,9 @@ class TestTokenBudgetWaterfill:
 
 
 def test_carve_assignment_matches_chain(spark):
-    """The fused single-pass 4-way carve must be ROW-IDENTICAL to the
-    materialized stratified_split chain (train_valid_calib_test) — the
-    prefix-reduction argument, checked end-to-end including the float
-    boundary comparison."""
+    """The fused single-pass 4-way carve must be ROW-IDENTICAL to three
+    chained stratified_split calls — the prefix-reduction argument,
+    checked end-to-end including the float boundary comparison."""
     import pyspark.sql.functions as F
 
     from end_to_end_ml_spark.operators import split as SP
@@ -457,7 +456,10 @@ def test_carve_assignment_matches_chain(spark):
     rows = [(i, ["a", "b", "c"][i % 3]) for i in range(997)]  # odd sizes
     df = spark.createDataFrame(rows, ["pk", "cls"])
     fused = SP.carve_assignment(df, "cls", "pk", 0.8, 0.75, 0.6)
-    parts = SP.train_valid_calib_test(df, "cls", "pk", 0.8, 0.75, 0.6)
+    train, test = SP.stratified_split(df, "cls", "pk", 0.8)
+    train, valid = SP.stratified_split(train, "cls", "pk", 0.75)
+    train, calib = SP.stratified_split(train, "cls", "pk", 0.6)
+    parts = {"train": train, "validation": valid, "calibration": calib, "test": test}
     got = {
         name: {r["pk"] for r in fused.filter(F.col("subset") == name).collect()}
         for name in ("train", "validation", "calibration", "test")
@@ -465,6 +467,44 @@ def test_carve_assignment_matches_chain(spark):
     want = {name: {r["pk"] for r in frame.collect()} for name, frame in parts.items()}
     assert got == want
     assert sum(len(v) for v in got.values()) == 997  # exhaustive + disjoint
+
+
+def test_carve_assignment_validates_from_counts(spark, labeled):
+    """carve_assignment reads its label checks off the collected counts
+    (no validation pass of its own) with stratified_split's messages."""
+    with pytest.raises(ValueError, match="not in DataFrame"):
+        split.carve_assignment(labeled, "nope", "pk")
+    with pytest.raises(ValueError, match="need >=2 classes in 'y', found 1"):
+        split.carve_assignment(labeled.filter(F.col("y") == "pos"), "y", "pk")
+    withnull = labeled.withColumn(
+        "y", F.when(F.col("pk") < 3, None).otherwise(F.col("y"))
+    )
+    with pytest.raises(ValueError, match="3 null labels"):
+        split.carve_assignment(withnull, "y", "pk")
+
+
+def test_four_way_carve_keeps_input_schema(spark, labeled):
+    """The assignment column is internal: every frame has the input's
+    columns and types, and no __subset leaks out."""
+    splits = split.train_valid_calib_test(labeled, "y", "pk")
+    assert list(splits) == ["train", "validation", "calibration", "test"]
+    for frame in splits.values():
+        assert frame.dtypes == labeled.dtypes
+
+
+def test_four_way_carve_reads_one_cached_relation(spark, labeled):
+    """All four frames are filters over ONE persisted assignment: each
+    plan's only leaf, after cache substitution, is the same
+    InMemoryRelation — so downstream actions never re-run the carve."""
+    jvm = spark.sparkContext._jvm
+    splits = split.train_valid_calib_test(labeled, "y", "pk")
+    builders = set()
+    for frame in splits.values():
+        leaves = frame._jdf.queryExecution().withCachedData().collectLeaves()
+        kinds = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert kinds == ["InMemoryRelation"], kinds
+        builders.add(jvm.System.identityHashCode(leaves.apply(0).cacheBuilder()))
+    assert len(builders) == 1
 
 
 def test_rolling_origin_slices_are_temporally_ordered(spark):

@@ -233,6 +233,24 @@ def machine_state() -> dict:
     return state
 
 
+def driver_jvm_memory(spark) -> dict:
+    """The driver JVM's memory at the end of timing: its peak RSS (VmHWM),
+    committed heap and -Xmx. With the grow-only heap, committed heap is
+    what the run needed, not the cap; these show it on the host the bench
+    ran on."""
+    jvm = spark._jvm
+    heap = jvm.java.lang.management.ManagementFactory.getMemoryMXBean()
+    state = {
+        "xmx": spark.sparkContext.getConf().get("spark.driver.memory"),
+        "heap_committed_mb": heap.getHeapMemoryUsage().getCommitted() >> 20,
+    }
+    with open(f"/proc/{jvm.java.lang.ProcessHandle.current().pid()}/status") as fh:
+        for line in fh:
+            if line.startswith("VmHWM:"):
+                state["vmhwm_mb"] = int(line.split()[1]) // 1024
+    return state
+
+
 def main() -> None:
     t_proc0 = time.perf_counter()
     state_at_start = machine_state()
@@ -470,6 +488,10 @@ def main() -> None:
         # so the probe still measures early-session vs late-session state
         soak["q1_slot1"] = slot1.get("q1_pricing_summary", timings["q1_pricing_summary"])
         soak["degraded"] = soak["q1_end_of_run"] > 2 * soak["q1_slot1"]
+    try:
+        driver_jvm = driver_jvm_memory(spark)
+    except Exception as exc:  # noqa: BLE001 — diagnostics only
+        driver_jvm = {"error": f"{type(exc).__name__}: {exc}"[:300]}
     # JVM health snapshot (stderr, not the JSON line): code-cache pools are
     # the prime suspect for uniform late-run slowdowns — when CodeHeap
     # 'non-profiled nmethods' fills, HotSpot stops compiling and whole-stage
@@ -567,6 +589,7 @@ def main() -> None:
             "settle_lap": settle_lap,
             "settle_mem_mb_threshold": SETTLE_MEM_MB,
             "settle_load_1m_threshold": SETTLE_LOAD_1M,
+            "driver_jvm": driver_jvm,
         },
     }
     if soak:

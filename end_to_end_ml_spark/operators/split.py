@@ -20,6 +20,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 # Knuth multiplicative hash; exact in int64 for keys < ~3.5e9, and computable
 # identically by any SQL engine (pure integer arithmetic).
@@ -436,8 +437,15 @@ def carve_assignment(
         c3 = kept(c2, calib_size)
         cut_rows.append((cls, c1, c2, c3))
     spark = df.sparkSession
-    offsets = spark.createDataFrame(off_rows, [class_col, "__b", "__off"])
-    cuts = spark.createDataFrame(cut_rows, [class_col, "__c1", "__c2", "__c3"])
+
+    def schema(*longs: str) -> StructType:
+        # explicit, not inferred: inference walks every row in Python, and
+        # the class field keeps the input's type so the joins are type-exact
+        cls = StructField(class_col, df.schema[class_col].dataType)
+        return StructType([cls] + [StructField(c, LongType()) for c in longs])
+
+    offsets = spark.createDataFrame(off_rows, schema("__b", "__off"))
+    cuts = spark.createDataFrame(cut_rows, schema("__c1", "__c2", "__c3"))
     rank = F.col("__off") + F.col("__r_in")
     subset = (
         F.when(rank <= F.col("__c3"), F.lit("train"))

@@ -41,8 +41,10 @@ def predict_records(
 
     Results come back in REQUEST order: Spark does not guarantee row order
     through ``model.transform``+``collect``, so an explicit ``__row_id``
-    from ``enumerate(records)`` rides along and the output sorts on it —
-    callers can zip results with their inputs even with ``pk_col=None``."""
+    from ``enumerate(records)`` rides along and the collected rows sort on
+    it on the driver (they are bounded by the request, so a Spark
+    ``orderBy`` would only add a sampling job and a shuffle) — callers can
+    zip results with their inputs even with ``pk_col=None``."""
     from pyspark.sql.types import LongType, StructField, StructType
 
     for i, rec in enumerate(records):
@@ -65,10 +67,8 @@ def predict_records(
         (F.col("predicted_probability") >= F.lit(decision_threshold)).cast("int"),
     )
     cols = ([pk_col] if pk_col else []) + ["predicted_probability", "prediction"]
-    return [
-        r.asDict()
-        for r in out.orderBy("__row_id").select(*cols).collect()
-    ]
+    rows = sorted(out.select("__row_id", *cols).collect(), key=lambda r: r[0])
+    return [{c: r[c] for c in cols} for r in rows]
 
 
 def create_app(

@@ -12,80 +12,69 @@ Scale notes (100 TB design target):
 
 from __future__ import annotations
 
-import functools
 import logging
 import os
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 # the default driver heap: this cap, or half the host's memory if smaller
 DRIVER_MEM_CAP_MIB = 20 * 1024
+# Default driver JVM flags, each keyed by the flag family a caller's own
+# extraJavaOptions may set instead. The heap is GROW-ONLY: it starts at the
+# JVM's default initial size and grows on demand, so a run commits and
+# touches only what its live set needs (a pinned -Xms lets G1 spread eden
+# over the whole committed heap, and the host must hold all of -Xmx).
+# MaxHeapFreeRatio=100 stops G1 from shrinking the heap after a full GC or
+# a remark: that uncommit and the re-fault after it, around the bench's
+# per-query System.gc(), collapsed into all-core kernel-time storms under
+# co-tenant CPU steal (OPTIMIZATION_r13.md, "Continuation session 3").
+# The 512m code cache keeps the JIT compiling under
+# codegen.cache.maxEntries=10000.
+DRIVER_JAVA_OPTIONS = {
+    "MaxHeapFreeRatio": "-XX:MaxHeapFreeRatio=100",
+    "ReservedCodeCacheSize": "-XX:ReservedCodeCacheSize=512m",
+}
 
 _log = logging.getLogger(__name__)
 
 
-@functools.lru_cache(maxsize=None)
 def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
-    """Driver heap when neither the caller nor ``SPARK_GRAFT_DRIVER_MEM``
-    sets one: min(20g, half of MemTotal), in MiB. The heap is pinned
-    (-Xms), so a fixed 20g cannot start a JVM on a host with less memory;
-    half leaves room for the JVM's off-heap use and the Python side.
-    Without a readable ``meminfo`` the 20g cap applies. The choice is
-    logged once per process."""
-    total_kib = None
+    """Driver heap cap when neither the caller nor ``SPARK_GRAFT_DRIVER_MEM``
+    sets one: min(20g, half of MemTotal), in MiB. Half leaves room for the
+    JVM's off-heap use and the Python side. Without a readable ``meminfo``
+    the 20g cap applies."""
     try:
         with open(meminfo) as f:
             for line in f:
                 if line.startswith("MemTotal:"):
-                    total_kib = int(line.split()[1])
-                    break
+                    return f"{min(DRIVER_MEM_CAP_MIB, int(line.split()[1]) // 2048)}m"
     except (OSError, ValueError):
         pass
-    if total_kib is None:
-        mem = f"{DRIVER_MEM_CAP_MIB}m"
-        _log.warning("driver memory %s: no MemTotal in %s", mem, meminfo)
-    else:
-        mem = f"{min(DRIVER_MEM_CAP_MIB, total_kib // 2048)}m"
-        _log.info(
-            "driver memory %s: min(%d MiB cap, half of MemTotal %d KiB)",
-            mem, DRIVER_MEM_CAP_MIB, total_kib,
-        )
-    return mem
+    return f"{DRIVER_MEM_CAP_MIB}m"
 
 
-def merge_driver_java_options(driver_mem: str, caller_jopts: str | None) -> str:
-    """Merge caller ``spark.driver.extraJavaOptions`` with the fixed-heap
-    floor (``-Xms`` == driver memory; see the conf comment in get_spark).
-
-    Defaults are PREPENDED so caller flags stay authoritative (the JVM
-    honours the last occurrence of a flag). Each default is dropped only
-    when the caller sets that same flag family itself, so a caller adding
-    an unrelated flag (e.g. a GC option) keeps BOTH the heap floor and the
-    code-cache sizing (r13 ADVICE: the old merge dropped
-    ReservedCodeCacheSize whenever any caller flag was present, risking
-    JIT code-cache exhaustion under codegen.cache.maxEntries=10000)."""
+def merge_driver_java_options(caller_jopts: str | None) -> str:
+    """Caller ``spark.driver.extraJavaOptions`` merged with
+    :data:`DRIVER_JAVA_OPTIONS`. Defaults are PREPENDED so caller flags stay
+    authoritative (the JVM honours the last occurrence of a flag), and each
+    default is dropped only when the caller sets that same flag family, so
+    a caller adding an unrelated flag keeps every default."""
     cj = caller_jopts or ""
-    parts = []
-    if "-Xms" not in cj:
-        parts.append(f"-Xms{driver_mem}")
-    if "ReservedCodeCacheSize" not in cj:
-        parts.append("-XX:ReservedCodeCacheSize=512m")
-    if cj:
-        parts.append(cj)
-    return " ".join(parts)
+    parts = [flag for family, flag in DRIVER_JAVA_OPTIONS.items() if family not in cj]
+    return " ".join(parts + [cj] if cj else parts)
 
 
-def resolve_driver_memory(extra_conf: dict[str, str] | None) -> str:
-    """Driver heap size with the precedence the -Xms floor must follow:
-    an explicit extra_conf ``spark.driver.memory`` beats the
-    ``SPARK_GRAFT_DRIVER_MEM`` env setting, which beats the host-derived
-    :func:`default_driver_memory`, so the fixed-heap floor built from
-    this value can never exceed the caller's -Xmx."""
-    mem = (extra_conf or {}).get("spark.driver.memory") or os.environ.get(
-        "SPARK_GRAFT_DRIVER_MEM"
-    )
-    return mem or default_driver_memory()
+def resolve_driver_memory(extra_conf: dict[str, str] | None) -> tuple[str, str]:
+    """Driver heap size (-Xmx) and where it came from: an explicit
+    extra_conf ``spark.driver.memory`` beats the ``SPARK_GRAFT_DRIVER_MEM``
+    env setting, which beats the host-derived :func:`default_driver_memory`."""
+    if mem := (extra_conf or {}).get("spark.driver.memory"):
+        return mem, "extra_conf spark.driver.memory"
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem, "SPARK_GRAFT_DRIVER_MEM"
+    return default_driver_memory(), "host default min(20g, MemTotal/2)"
 
 
 def get_spark(
@@ -104,8 +93,7 @@ def get_spark(
         master = f"local[{DEFAULT_CPUS}]"
     if master:
         builder = builder.master(master)
-    # Driver heap sizing rule (SPARK_GRAFT_DRIVER_MEM, default 20g capped
-    # at half the host's memory, see default_driver_memory): the
+    # Driver heap cap (-Xmx; precedence in resolve_driver_memory): the
     # driver live set is bounded by (a) collect bounds — every driver-side
     # collect in the engine is capped (65536-row vocab/quantizer bounds,
     # 1-row aggregates), (b) broadcast relations (offsets/bounds tables,
@@ -115,15 +103,12 @@ def get_spark(
     # executor/block-manager memory — in local mode that is this same
     # heap, so the biggest checkpointed frame at the deployed SF sets the
     # floor: ~7 GB peak observed at sf0.1). 20g = observed peak x ~3
-    # headroom. -Xms is pinned to the same value (see extraJavaOptions
-    # comment below), so the host must actually HAVE this much memory
-    # free: the default never asks for more than half of MemTotal, and
-    # SPARK_GRAFT_DRIVER_MEM overrides it either way.
-    # An extra_conf override of spark.driver.memory takes precedence so
-    # the -Xms floor can never exceed -Xmx (r13 ADVICE: a caller passing
-    # driver.memory=8g used to still get -Xms20g and fail JVM startup).
-    driver_mem = resolve_driver_memory(extra_conf)
-    driver_jopts = merge_driver_java_options(driver_mem, None)
+    # headroom. The heap only grows to what a run needs (see
+    # DRIVER_JAVA_OPTIONS), so the cap need not fit in free memory.
+    driver_mem, mem_source = resolve_driver_memory(extra_conf)
+    driver_jopts = merge_driver_java_options(
+        (extra_conf or {}).get("spark.driver.extraJavaOptions")
+    )
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions or DEFAULT_CPUS),
         "spark.sql.adaptive.enabled": "true",
@@ -145,19 +130,6 @@ def get_spark(
         "spark.scheduler.mode": "FAIR",
         "spark.ui.enabled": "false",
         "spark.driver.memory": driver_mem,
-        # FIXED-SIZE heap (-Xms == -Xmx), mirroring what Spark itself does
-        # for executor JVMs. Measured on this box (r13 optimization round):
-        # with the default tiny -Xms, every full GC (the bench's per-query
-        # ContextCleaner nudge) uncommits the heap back to ~2.5 GB and the
-        # next heavy query re-faults 5-50 GB of pages — 1-2M page faults
-        # per run whose munmap/mmap TLB shootdowns collapse into 10-60 s
-        # ALL-CORE kernel-time storms under co-tenant CPU steal (sys ~30
-        # cores, user ~1 core in /proc/stat during the stalls). Pinning
-        # Xms=Xmx removes the heap commit/uncommit churn entirely: d16
-        # reps went from [6.2..21.9] scatter to [5.0..5.9] steady state.
-        # The default is sized to observed live sets (~7 GB peak at
-        # sf0.1), not the machine, and stays env-tunable for bigger jobs.
-        "spark.driver.extraJavaOptions": driver_jopts,
         # The default 100-entry codegen cache thrashes on this workload:
         # one heavy query alone compiles ~29 units/run at local[32] and a
         # session cycling many queries evicts everything, so every re-run
@@ -165,16 +137,14 @@ def get_spark(
         # recompiles per identical d16 re-run; 0 after raising the cap).
         "spark.sql.codegen.cache.maxEntries": "10000",
     }
-    if extra_conf:
-        caller_jopts = extra_conf.get("spark.driver.extraJavaOptions")
-        if caller_jopts:
-            # merge rather than replace so callers adding e.g. a code-cache
-            # flag don't silently drop the fixed-heap floor
-            extra_conf = dict(extra_conf)
-            extra_conf["spark.driver.extraJavaOptions"] = (
-                merge_driver_java_options(driver_mem, caller_jopts)
-            )
-        conf.update(extra_conf)
+    conf.update(extra_conf or {})
+    # merged, not replaced: a caller's unrelated flag keeps every default
+    conf["spark.driver.extraJavaOptions"] = driver_jopts
+    if SparkContext._active_spark_context is None:  # this call starts the JVM
+        _log.info(
+            "driver heap -Xmx%s from %s, grow-only; java options: %s",
+            driver_mem, mem_source, driver_jopts,
+        )
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

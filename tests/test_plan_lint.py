@@ -441,55 +441,56 @@ def test_no_raw_tokenizer_inside_hof_lambda():
     )
 
 
-def test_driver_java_options_fixed_heap_merge():
-    """The session factory pins a fixed-size driver heap (-Xms == driver
-    memory — the policy Spark applies to executor JVMs) and merges rather
-    than replaces caller extraJavaOptions, so a caller adding e.g. a
-    code-cache flag cannot silently drop the heap floor. The floor exists
-    because heap commit/uncommit churn around the bench's per-query GC
-    nudge was measured collapsing into all-core kernel-time storms
-    (OPTIMIZATION_r13.md, session 3)."""
+def test_driver_java_options_grow_only_merge():
+    """The session factory leaves the driver heap GROW-ONLY: no -Xms, and
+    MaxHeapFreeRatio=100 so G1 never uncommits heap after a full GC (the
+    uncommit/re-fault churn around the bench's per-query GC nudge was
+    measured collapsing into all-core kernel-time storms,
+    OPTIMIZATION_r13.md, "Continuation session 3"). Caller
+    extraJavaOptions are merged, not replaced, so a caller adding e.g. a
+    GC flag cannot silently drop the heap policy or the code-cache
+    sizing."""
     from end_to_end_ml_spark.session import merge_driver_java_options as m
 
-    assert m("20g", None).startswith("-Xms20g ")
-    assert m("20g", "-XX:ReservedCodeCacheSize=512m") == (
-        "-Xms20g -XX:ReservedCodeCacheSize=512m"
+    defaults = "-XX:MaxHeapFreeRatio=100 -XX:ReservedCodeCacheSize=512m"
+    assert m(None) == m("") == defaults
+    assert "-Xms" not in m(None)
+    # a caller's flag wins its own family, keeps the other default, and
+    # comes last so it would win any conflict (JVM last-flag-wins)
+    assert m("-XX:ReservedCodeCacheSize=256m") == (
+        "-XX:MaxHeapFreeRatio=100 -XX:ReservedCodeCacheSize=256m"
     )
-    # a caller that sets its own heap floor wins it, but keeps the
-    # code-cache default (r13 ADVICE: the old merge dropped
-    # ReservedCodeCacheSize whenever the caller set -Xms)
-    assert m("20g", "-Xms4g -XX:+UseG1GC") == (
-        "-XX:ReservedCodeCacheSize=512m -Xms4g -XX:+UseG1GC"
+    assert m("-XX:MaxHeapFreeRatio=70 -XX:+UseG1GC") == (
+        "-XX:ReservedCodeCacheSize=512m -XX:MaxHeapFreeRatio=70 -XX:+UseG1GC"
     )
-    # unrelated caller flags keep BOTH defaults, prepended so the caller's
-    # occurrence would win a conflict (JVM last-flag-wins)
-    assert m("20g", "-XX:+UseZGC") == (
-        "-Xms20g -XX:ReservedCodeCacheSize=512m -XX:+UseZGC"
+    # unrelated caller flags (a caller's own -Xms among them) keep both
+    assert m("-XX:+UseZGC") == f"{defaults} -XX:+UseZGC"
+    assert m("-Xms4g") == f"{defaults} -Xms4g"
+
+
+def test_driver_mem_extra_conf_precedence(monkeypatch):
+    """The driver heap (-Xmx) comes from extra_conf's spark.driver.memory,
+    then SPARK_GRAFT_DRIVER_MEM, then the host default, and the source is
+    reported with it for get_spark's one-line heap log."""
+    from end_to_end_ml_spark import session as S
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert S.resolve_driver_memory({"spark.driver.memory": "8g"}) == (
+        "8g", "extra_conf spark.driver.memory"
     )
-
-
-def test_driver_mem_extra_conf_precedence():
-    """get_spark derives the -Xms floor from extra_conf's
-    spark.driver.memory when the caller overrides it, so the floor can
-    never exceed -Xmx (r13 ADVICE medium: driver.memory=8g via extra_conf
-    used to still get -Xms20g and the JVM would refuse to start)."""
-    from end_to_end_ml_spark.session import (
-        merge_driver_java_options,
-        resolve_driver_memory,
+    assert S.resolve_driver_memory({}) == S.resolve_driver_memory(None) == (
+        "6g", "SPARK_GRAFT_DRIVER_MEM"
     )
-
-    assert resolve_driver_memory({"spark.driver.memory": "8g"}) == "8g"
-    assert resolve_driver_memory({}) == resolve_driver_memory(None)
-    assert merge_driver_java_options(
-        resolve_driver_memory({"spark.driver.memory": "8g"}), None
-    ).startswith("-Xms8g ")
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM")
+    mem, source = S.resolve_driver_memory(None)
+    assert mem == S.default_driver_memory()
+    assert source.startswith("host default")
 
 
-def test_default_driver_memory_fits_a_small_host(tmp_path, monkeypatch):
-    """The pinned default heap is min(20g, half of MemTotal): a 15 GB host
-    gets ~7.6g instead of an -Xms20g the JVM cannot commit; a big host
-    keeps 20g; an unreadable meminfo falls back to the 20g cap. The env
-    setting still wins over the host-derived default."""
+def test_default_driver_memory_fits_a_small_host(tmp_path):
+    """The default heap cap is min(20g, half of MemTotal): a 15 GB host
+    gets ~7.6g; a big host keeps 20g; an unreadable meminfo falls back to
+    the 20g cap."""
     from end_to_end_ml_spark import session as S
 
     small = tmp_path / "small"
@@ -499,8 +500,24 @@ def test_default_driver_memory_fits_a_small_host(tmp_path, monkeypatch):
     assert S.default_driver_memory(str(small)) == "7800m"
     assert S.default_driver_memory(str(big)) == "20480m"
     assert S.default_driver_memory(str(tmp_path / "missing")) == "20480m"
-    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
-    assert S.resolve_driver_memory(None) == S.default_driver_memory()
-    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
-    assert S.resolve_driver_memory(None) == "6g"
-    assert S.resolve_driver_memory({"spark.driver.memory": "8g"}) == "8g"
+
+
+def test_live_driver_heap_is_grow_only(spark):
+    """The running driver JVM got the grow-only policy: no -Xms among its
+    input arguments, MaxHeapFreeRatio=100, and a full GC after a job that
+    grew the heap leaves committed heap where it was (no uncommit)."""
+    jvm = spark._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    assert not [a for a in args if a.startswith("-Xms")], args
+    diag = mf.getPlatformMXBean(
+        jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
+    )
+    assert diag.getVMOption("MaxHeapFreeRatio").getValue() == "100"
+    spark.range(3_000_000).selectExpr(
+        "id % 100000 AS k", "CAST(id AS STRING) AS s"
+    ).groupBy("k").agg(F.max("s")).collect()
+    heap = mf.getMemoryMXBean()
+    before = heap.getHeapMemoryUsage().getCommitted()
+    jvm.System.gc()
+    assert heap.getHeapMemoryUsage().getCommitted() >= before

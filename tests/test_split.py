@@ -445,16 +445,22 @@ class TestTokenBudgetWaterfill:
         assert trace_for("0.01") == [[3], [4], []]  # round-2 refreeze
 
 
-def test_carve_assignment_matches_chain(spark):
+@pytest.mark.parametrize(
+    "classes, cls_type",
+    [(["a", "b", "c"], "string"), ([0, 1, 2], "int"), ([0.5, 1.0, 2.5], "double")],
+    ids=["string", "int", "double"],
+)
+def test_carve_assignment_matches_chain(spark, classes, cls_type):
     """The fused single-pass 4-way carve must be ROW-IDENTICAL to three
     chained stratified_split calls — the prefix-reduction argument,
-    checked end-to-end including the float boundary comparison."""
+    checked end-to-end including the float boundary comparison — for
+    string, integer and double class columns."""
     import pyspark.sql.functions as F
 
     from end_to_end_ml_spark.operators import split as SP
 
-    rows = [(i, ["a", "b", "c"][i % 3]) for i in range(997)]  # odd sizes
-    df = spark.createDataFrame(rows, ["pk", "cls"])
+    rows = [(i, classes[i % 3]) for i in range(997)]  # odd sizes
+    df = spark.createDataFrame(rows, f"pk long, cls {cls_type}")
     fused = SP.carve_assignment(df, "cls", "pk", 0.8, 0.75, 0.6)
     train, test = SP.stratified_split(df, "cls", "pk", 0.8)
     train, valid = SP.stratified_split(train, "cls", "pk", 0.75)

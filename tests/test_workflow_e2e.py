@@ -125,6 +125,42 @@ def test_serving_predict_records(spark, tmp_path):
             spark, fitted, [{"c_acctbal": 1.0}], schema, expected, pk_col="o_orderkey"
         )
 
+
+def test_serving_predict_records_request_order(spark):
+    """A multi-partition request in non-key order is answered in request
+    order, with and without a pk column: the order is restored from the
+    request index, not from the key or the partition layout."""
+    import random
+
+    from end_to_end_ml_spark import serving
+    from end_to_end_ml_spark.sources.io import ingest_json_records
+
+    df = order_training_frame(spark, SF_DIR)
+    stages = FP.build_preprocessing_stages(
+        numeric_cols=["c_acctbal"],
+        categorical_cols=["o_orderpriority", "c_mktsegment"],
+        variance_threshold=0.0,
+    )
+    fitted = FP.build_full_pipeline(stages, MZ.logistic_regression(max_iter=10)).fit(df)
+    schema = "o_orderkey long, c_acctbal double, o_orderpriority string, c_mktsegment string"
+    expected = ["c_acctbal", "o_orderpriority", "c_mktsegment"]
+    fields = ["o_orderkey", *expected]
+    records = [r.asDict() for r in df.select(*fields).orderBy("o_orderkey").limit(80).collect()]
+    random.Random(7).shuffle(records)
+    keys = [r["o_orderkey"] for r in records]
+    assert keys != sorted(keys)
+    assert ingest_json_records(spark, records, schema).rdd.getNumPartitions() > 1
+
+    keyed = serving.predict_records(spark, fitted, records, schema, expected, pk_col="o_orderkey")
+    assert [r["o_orderkey"] for r in keyed] == keys
+    unkeyed = serving.predict_records(
+        spark, fitted, [{c: r[c] for c in expected} for r in records],
+        "c_acctbal double, o_orderpriority string, c_mktsegment string", expected,
+    )
+    assert unkeyed == [
+        {c: r[c] for c in ("predicted_probability", "prediction")} for r in keyed
+    ]
+
 def test_local_json_tracker_full_run_log(tmp_path):
     """E7: the always-on local tracker produces a complete run log —
     params, per-model metrics, trial assets, champion, gate decision,

@@ -21,6 +21,34 @@ from end_to_end_ml_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# Session conf on top of get_spark's defaults; tools/opt_probe.py imports
+# it so probe numbers stay comparable to bench rows.
+BENCH_CONF = {
+    # small-SF local files: split finer so the scan uses all cores
+    # (on a real cluster the file count provides this for free).
+    # 256k, not the earlier 8m: at sf0.1 every table except
+    # lineitem is < 8 MB, so 8m left whole scans on ONE core
+    # (d12's gram explode measured 3.5 s single-task vs 0.95 s
+    # spread). Same for AQE's 64 MB advisory size — it coalesced
+    # every shuffle read to 1-10 partitions at this SF (d10/a18
+    # straggler stages); 256k keeps reduce-side parallelism.
+    # These are SMALL-SF knobs only: at production scale the
+    # 128m/64m defaults are correct and this override would be
+    # harmful (task-scheduling overhead per ~256k of input).
+    "spark.sql.files.maxPartitionBytes": "256k",
+    "spark.sql.files.openCostInBytes": "64k",
+    "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256k",
+    # Long-lived-session hygiene (d4 once measured 4.78 s in situ vs
+    # 0.66 s isolated — late-slot queries absorbed accumulated session
+    # state). The JIT code cache half of it, -XX:ReservedCodeCacheSize=512m,
+    # is a get_spark default (session.DRIVER_JAVA_OPTIONS). The other half:
+    # the async ContextCleaner only reclaims localCheckpoint / broadcast
+    # blocks after a driver GC notices the dead refs; an idle driver can go
+    # the whole bench without a full GC, so force one periodically (default
+    # is 30min — longer than the entire run).
+    "spark.cleaner.periodicGC.interval": "2min",
+}
+
 # Headline queries: the flagship relational plans + the metric queries that
 # represent each operator family (agg, join, window, as-of, sweep, text).
 HEADLINE = [
@@ -258,36 +286,7 @@ def main() -> None:
         "bench",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
-        extra_conf={
-            # small-SF local files: split finer so the scan uses all cores
-            # (on a real cluster the file count provides this for free).
-            # 256k, not the earlier 8m: at sf0.1 every table except
-            # lineitem is < 8 MB, so 8m left whole scans on ONE core
-            # (d12's gram explode measured 3.5 s single-task vs 0.95 s
-            # spread). Same for AQE's 64 MB advisory size — it coalesced
-            # every shuffle read to 1-10 partitions at this SF (d10/a18
-            # straggler stages); 256k keeps reduce-side parallelism.
-            # These are SMALL-SF knobs only: at production scale the
-            # 128m/64m defaults are correct and this override would be
-            # harmful (task-scheduling overhead per ~256k of input).
-            "spark.sql.files.maxPartitionBytes": "256k",
-            "spark.sql.files.openCostInBytes": "64k",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256k",
-            # Long-lived-session hygiene (the r5 bench shipped d4 at 4.78 s
-            # in situ vs 0.66 s isolated — late-slot queries absorbed
-            # accumulated session state):
-            # (1) ~125 queries x reps of giant generated aggregates churn
-            # the JIT code cache; the 240m default leaves the sweeper
-            # fighting for space once profiled nmethods fill, and HotSpot
-            # degrades to interpreted codegen exactly on the biggest plans.
-            "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
-            # (2) the async ContextCleaner only reclaims localCheckpoint /
-            # broadcast blocks after a driver GC notices the dead refs; an
-            # idle driver can go the whole bench without a full GC, so
-            # force one periodically (default is 30min — longer than the
-            # entire run).
-            "spark.cleaner.periodicGC.interval": "2min",
-        },
+        extra_conf=BENCH_CONF,
     )
     from end_to_end_ml_spark.plans.entry_queries import REGISTRY
 
@@ -304,8 +303,8 @@ def main() -> None:
     # (driver r7: headline 10.07 s vs 9.5 s solo). One end-to-end execution
     # per headline query compiles the hot plans before any timing starts —
     # the same session state a production driver reaches after its first
-    # request. Measured (tools/exp_warmlap.py, alternating 1-lap/2-lap
-    # headline-only sessions): a SECOND lap does not move slot-1
+    # request. Measured with alternating 1-lap/2-lap headline-only
+    # sessions: a SECOND lap does not move slot-1
     # (10.09/9.91 s one-lap vs 10.56/9.89 s two-lap — inside run noise);
     # the residual ~0.3-0.5 s slot1-vs-warm gap is scheduler/GC noise,
     # which the *_warm fold already reports honestly. Disclosed in the

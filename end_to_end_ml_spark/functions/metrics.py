@@ -28,20 +28,18 @@ import os
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Scale-conditional materialization for spearman_components (r13
-# optimization round). At sf0.1 on an idle local[32] the nine redundant
-# pair-frame/counts subtrees in a18's plan execute CONCURRENTLY inside one
-# job and beat the serializing localCheckpoint barriers (measured,
-# tools/exp_a18_ckpt_ab.py: 4.02 s no-ckpt vs 4.81 s both-ckpts min-of-8
-# alternating warmed; counts-only 4.36 vs 4.75). On a cluster, where each
-# redundant subtree is a full table scan and cores are not idle, the
+# Scale-conditional materialization for spearman_components. At sf0.1 on
+# an idle local[32] the nine redundant pair-frame/counts subtrees in a18's
+# plan execute CONCURRENTLY inside one job and beat the serializing
+# localCheckpoint barriers (4.02 s no-ckpt vs 4.81 s both-ckpts, min of 8
+# alternating warmed runs; counts-only 4.36 vs 4.75). On a cluster, where
+# each redundant subtree is a full table scan and cores are not idle, the
 # checkpointed shape wins.
 #
-# r14 (verdict item 3): the decision is DERIVED at call time instead of
-# requiring an env var nobody sets on the cluster —
+# The decision is DERIVED at call time, so a cluster needs no env var —
 #   SPARK_GRAFT_SCALE_MATERIALIZE=1/0 still forces it either way (read at
-#   call time, not import time — r13 ADVICE: the import-time read made
-#   later env changes a silent no-op);
+#   call time, not import time: an import-time read makes later env
+#   changes a silent no-op);
 #   unset -> materialize when the session master is NOT local (a cluster
 #   pays a full distributed scan per redundant subtree) OR when the
 #   optimizer's size estimate for the input frame exceeds

@@ -1208,51 +1208,15 @@ def remove_duplicated_spans(
     )
 
 
-# Join-strategy knobs for prefix_filter_jaccard_pairs, A/B'd in
-# tools/exp_d16_shj_ab.py (r13 optimization round; two independent
-# alternating warmed A/Bs at sf0.1: baseline SMJ 6.76/5.67 s vs verify-SHJ
-# 5.62/4.77 s — the win is skipping BOTH sorts of the ~1M-row candidate
-# frame, the second of which carries two token arrays per row).
-#
-# Verify joins default to shuffled-hash (guide §3): the build side is the
-# hinted RANKED frame, keyed by the unique doc id — a perfectly uniform
-# hash key, so per-partition build bytes are |ranked|/numPartitions and
-# AQE's advisory sizing keeps that bounded as the corpus grows. Sort-merge
-# buys nothing here: the stream side is consumed by a hash aggregate, not
-# another merge. The CANDIDATE self-join stays planner-default (SMJ): its
-# build side would be an exploded prefix frame keyed by token df — a
-# skewable key at scale — and the third A/B arm measured no gain over
-# verify-only SHJ (5.30 vs 5.62 / 4.91 vs 4.77, within host scatter).
-_PF_VERIFY_HINT: str | None = "shuffle_hash"
-_PF_CAND_HINT: str | None = None
-# Repartition the raw candidate pairs by id_a BEFORE the dedup aggregate so
-# the dedup's exchange doubles as the first verify join's distribution.
-# A/B'd in tools/exp_d16_repart_ab.py and REJECTED (r13 optimization round:
-# 6.86 s default vs 7.48 s repartitioned, min-of-5 alternating warmed):
-# repartition("id_a") satisfies the dedup's required distribution, so the
-# planner drops the pre-shuffle partial aggregate — the exchange then
-# carries RAW candidates (~1.26x rows) and the whole dedup runs
-# post-shuffle, which costs more than the one ENSURE_REQUIREMENTS exchange
-# it saves. Kept as a knob so the measurement is reproducible.
-_PF_REPART_CAND: bool = False
-# Materialize the gram explode (toks) so dfreq + ranked share one
-# tokenize pass instead of re-running split+shingle+explode twice.
-# r13 A/B'd this pre-heap-fix and saw only scatter; re-run r14 on the
-# stable host (tools/exp_d16_r14_ab.py): toks_ckpt 4.44 vs base 4.74
-# within one alternating session, and the combined arm wins — ON. At
-# scale the saved work is a full corpus tokenize+shingle pass.
-_PF_TOKS_CKPT: bool = True
-# Cast token ids to INT when the counted vocab fits 2^31 rows (r14,
-# guide §2.3): the stoks arrays are the payload of the ranked
-# localCheckpoint and all three verify exchanges, so element width is
-# shuffle bytes. False pins the r13 BIGINT shape for A/B reproduction.
-_PF_TID_NARROW: bool = True
-# Assign vocab ordinals DRIVER-SIDE when the counted vocab is at most
-# this many rows (the r13 bpe_train precedent: a vocab table is not
-# data — guide §5). Python's (df, token) tuple sort equals Spark's
-# (df_t asc, token asc) order (UTF-8 byte order preserves codepoint
-# order), so the mapping is identical to global_ordinal's; above the
-# bound the distributed bucketed-rank path is unchanged. 0 disables.
+# Vocab ordinals for prefix_filter_jaccard_pairs are assigned DRIVER-SIDE
+# when the counted vocab is at most this many rows (a vocab table is not
+# data — guide §5): one bounded collect replaces global_ordinal's
+# count+sketch job, bucket-count aggregate and rank window. Python's
+# (df, token) tuple sort equals Spark's (df_t asc, token asc) order (UTF-8
+# byte order preserves codepoint order), so the mapping is identical to
+# global_ordinal's; above the bound the distributed bucketed rank runs.
+# Together with INT token ids and the single tokenize pass: d16 at sf0.1
+# 4.29 -> 4.06-4.13 s (min over cold reps, alternating in one session).
 _PF_DRIVER_VOCAB_ROWS: int = 65536
 
 
@@ -1290,7 +1254,7 @@ def prefix_filter_jaccard_pairs(
     The vocabulary is DICTIONARY-ENCODED before anything touches pairs:
     global_ordinal (the bucketed-rank primitive — no global window)
     assigns each token a dense id in (df asc, token asc) order (INT when
-    the counted vocab fits 2^31 rows, else BIGINT — r14, guide §2.3),
+    the counted vocab fits 2^31 rows, else BIGINT — guide §2.3),
     so array_sort(collect_list(tid)) alone yields the rarest-first doc
     representation, candidate rows ship ints, and the per-pair
     verification intersects INT arrays instead of n-gram strings
@@ -1339,22 +1303,21 @@ def prefix_filter_jaccard_pairs(
     )
     from .ordinal import count_and_boundaries, global_ordinal
 
-    if _PF_TOKS_CKPT:
-        # one tokenize+explode pass instead of two (dfreq + ranked both
-        # consume toks) at the cost of materializing |corpus-token| rows
-        # of (doc, token-string) — the r13 A/B was scatter-dominated
-        # pre-heap-fix; re-measured r14, see _PF_TOKS_CKPT comment
-        toks = toks.localCheckpoint(eager=False)
+    # one tokenize+explode pass instead of two (dfreq + ranked both
+    # consume toks) at the cost of materializing |corpus-token| rows of
+    # (doc, token-string): 4.74 -> 4.44 s at sf0.1, alternating in one
+    # session; at scale the saved work is a full corpus tokenize+shingle
+    toks = toks.localCheckpoint(eager=False)
     dfreq = (
         toks.groupBy("token")
         .agg(F.count(F.lit(1)).alias("df_t"))
         .localCheckpoint(eager=False)
     )
-    # count + boundary sketch fused into ONE aggregate job (the r13
-    # emb4/ord1 treatment): the vocab row count decides the tid WIDTH —
-    # a dense ordinal over n_vocab rows fits an int iff n_vocab < 2^31,
-    # and the stoks arrays built from tids are the payload of every
-    # verify-side shuffle, so halving the element width halves those
+    # count + boundary sketch fused into ONE aggregate job
+    # (ordinal.count_and_boundaries): the vocab row count decides the tid
+    # WIDTH — a dense ordinal over n_vocab rows fits an int iff
+    # n_vocab < 2^31, and the stoks arrays built from tids are the payload
+    # of every verify-side shuffle, so halving the element width halves those
     # exchange bytes (guide §2.3 "narrower types", provably safe here
     # because the bound is checked, not assumed). At a corpus whose
     # n-gram vocabulary exceeds 2^31 the cast silently stays long.
@@ -1362,25 +1325,20 @@ def prefix_filter_jaccard_pairs(
     # bound+1 rows — when the whole vocab came back, the driver path
     # already HAS it (no count job, no sketch job); otherwise fall back
     # to the distributed bucketed rank with the fused count+sketch.
-    vrows = (
-        dfreq.limit(_PF_DRIVER_VOCAB_ROWS + 1).collect()
-        if _PF_DRIVER_VOCAB_ROWS > 0
-        else None
-    )
-    if vrows is not None and len(vrows) <= _PF_DRIVER_VOCAB_ROWS:
+    vrows = dfreq.limit(_PF_DRIVER_VOCAB_ROWS + 1).collect()
+    if len(vrows) <= _PF_DRIVER_VOCAB_ROWS:
         # vocab fits the driver bound: sort + enumerate locally and ship
         # the mapping as a LocalRelation — same (df_t asc, token asc)
         # ordinal as global_ordinal, without its bucket-count aggregate
         # and rank window in the broadcast build subtree
-        tid_type = "int" if _PF_TID_NARROW else "long"
         vrows.sort(key=lambda r: (r["df_t"], r["token"]))
         vocab_ids = df.sparkSession.createDataFrame(
             [(r["token"], i) for i, r in enumerate(vrows)],
-            schema=f"token string, tid {tid_type}",
+            schema="token string, tid int",
         )
     else:
         n_vocab, vocab_bnds = count_and_boundaries(dfreq, "df_t")
-        tid_type = "int" if (_PF_TID_NARROW and n_vocab <= 2**31 - 1) else "long"
+        tid_type = "int" if n_vocab <= 2**31 - 1 else "long"
         vocab_ids = global_ordinal(
             dfreq, "df_t", "token", out_col="tid", boundaries=vocab_bnds
         ).select("token", F.col("tid").cast(tid_type).alias("tid"))
@@ -1412,15 +1370,17 @@ def prefix_filter_jaccard_pairs(
     )
     a = prefixes.select(F.col("doc").alias("id_a"), F.col("sz").alias("pa"), "ptok")
     b = prefixes.select(F.col("doc").alias("id_b"), F.col("sz").alias("pb"), "ptok")
-    if _PF_CAND_HINT:
-        b = b.hint(_PF_CAND_HINT)
-    # _PF_REPART_CAND would reuse the dedup's exchange as the first verify
-    # join's distribution (repartition("id_a") satisfies the (id_a, id_b)
-    # aggregate's clustered distribution and pre-positions the stream for
-    # the id_a join) — measured SLOWER, see the knob's comment; default
-    # keeps the planner's own shape: map-side partial dedup, then one
-    # ENSURE_REQUIREMENTS exchange per verify key.
-    cand_raw = (
+    # The candidate self-join stays planner-default (sort-merge): a hash
+    # build side would be the exploded prefix frame keyed by token id — a
+    # skewable key at scale — and hinting it shuffled-hash too measured no
+    # gain over hinting the verify joins alone (5.30/4.91 s vs 5.62/4.77 s
+    # at sf0.1, two alternating A/Bs: within host scatter).
+    # The dedup below keeps the planner's own shape too: map-side partial
+    # dedup, then one exchange per verify key. Repartitioning the raw pairs
+    # by id_a first (to reuse that exchange for the id_a verify join) drops
+    # the partial aggregate, so the exchange carries ~1.26x raw rows and
+    # measured slower: 7.48 vs 6.86 s at sf0.1, min of 5 alternating.
+    cand_ids = (
         a.join(b, "ptok")
         .filter(
             (F.col("id_a") < F.col("id_b"))
@@ -1428,28 +1388,27 @@ def prefix_filter_jaccard_pairs(
             & (F.lit(100) * F.col("pb") >= F.lit(threshold_x100) * F.col("pa"))
         )
         .select("id_a", "id_b")
+        .dropDuplicates(["id_a", "id_b"])
     )
-    if _PF_REPART_CAND:
-        cand_raw = cand_raw.repartition("id_a")
-    cand_ids = cand_raw.dropDuplicates(["id_a", "id_b"])
     # verification joins the (|docs|-row) ranked frame back per side as a
-    # SHUFFLED-HASH join (see _PF_VERIFY_HINT above): building a local hash
-    # map on the uniformly-id-keyed ranked partitions skips sorting the
-    # candidate frame twice. (Broadcast was A/B'd and REJECTED earlier this
-    # round: two ~12 MB broadcast builds lose to the narrow-row shuffle.)
+    # SHUFFLED-HASH join (guide §3): the build side is keyed by the unique
+    # doc id — a uniform hash key, so per-partition build bytes stay
+    # |ranked|/numPartitions — and the stream side feeds a filter, not
+    # another merge, so sort-merge would sort the candidate frame twice
+    # (the second sort carries two token arrays per row) for nothing:
+    # 6.76/5.67 s sort-merge vs 5.62/4.77 s shuffled-hash at sf0.1, two
+    # alternating A/Bs. Two ~12 MB broadcast builds lost to the narrow-row
+    # shuffle.
     r_a = ranked.select(
         F.col("doc").alias("id_a"),
         F.col("stoks").alias("toks_a"),
         F.col("sz").alias("sz_a"),
-    )
+    ).hint("shuffle_hash")
     r_b = ranked.select(
         F.col("doc").alias("id_b"),
         F.col("stoks").alias("toks_b"),
         F.col("sz").alias("sz_b"),
-    )
-    if _PF_VERIFY_HINT:
-        r_a = r_a.hint(_PF_VERIFY_HINT)
-        r_b = r_b.hint(_PF_VERIFY_HINT)
+    ).hint("shuffle_hash")
     cand = cand_ids.join(r_a, "id_a").join(r_b, "id_b")
     inter = F.size(F.array_intersect("toks_a", "toks_b")).cast("long")
     verified = cand.select(

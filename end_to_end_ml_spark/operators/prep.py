@@ -271,55 +271,6 @@ def validate_request_schema(
     }
 
 
-def column_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """One-pass table profiler: for each requested column emit
-    (column, n_rows, n_null, n_distinct, min_value, max_value) — the
-    dataset-audit companion to :func:`null_fraction_audit` with
-    cardinality and range added (cf. reference data-validation checks,
-    src/feature/utils/prep.py duplicate/NULL audits).
-
-    Plan shape: ONE aggregate over the scan computes every per-column
-    statistic (count / null-count / exact countDistinct / min / max);
-    Spark plans the multiple DISTINCT aggregates with a single Expand
-    (rows ×k_distinct_cols) feeding one partial-aggregated shuffle — the
-    standard exact-distinct strategy at any scale. The k×5-expression
-    single row is then exploded driver-cheaply into k rows via an inline
-    array of structs (no second scan, no per-column jobs like pandas
-    ``describe`` loops).
-
-    min/max are computed in each column's NATIVE type (numeric order for
-    numerics) and presented as strings for the uniform schema."""
-    names = list(cols) if cols is not None else list(df.columns)
-    aggs = []
-    for c in names:
-        aggs += [
-            F.count(F.lit(1)).alias(f"__n_{c}"),
-            F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{c}"),
-            F.countDistinct(F.col(c)).alias(f"__nd_{c}"),
-            F.min(F.col(c)).cast("string").alias(f"__min_{c}"),
-            F.max(F.col(c)).cast("string").alias(f"__max_{c}"),
-        ]
-    one = df.agg(*aggs)
-    rows = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.col(f"__n_{c}").alias("n_rows"),
-                F.col(f"__nn_{c}").alias("n_null"),
-                F.col(f"__nd_{c}").alias("n_distinct"),
-                F.col(f"__min_{c}").alias("min_value"),
-                F.col(f"__max_{c}").alias("max_value"),
-            )
-            for c in names
-        ]
-    )
-    return (
-        one.select(F.explode(rows).alias("p"))
-        .select("p.*")
-        .orderBy("column")
-    )
-
-
 def winsorize(
     df,
     value_col: str,

@@ -3480,11 +3480,12 @@ REGISTRY["s10_merge_upsert"] = (s10_merge_upsert, S10_MERGE_SQL)
 def prof1_column_profile(spark, sf_dir):
     """One-pass column profiler over orders: count/nulls/exact distinct/
     min/max per column from a single aggregate (multi-DISTINCT via Spark's
-    Expand), exploded to one row per column."""
+    Expand), exploded to one row per column — p15's profile_columns with
+    the null count named n_null."""
     orders = load_table(spark, sf_dir, "orders")
-    return prep.column_profile(
+    return prep.profile_columns(
         orders, ["o_custkey", "o_orderdate", "o_orderpriority", "o_orderstatus"]
-    )
+    ).withColumnRenamed("n_nulls", "n_null")
 
 
 PROF1_SQL = """

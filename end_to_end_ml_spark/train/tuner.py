@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame
 # ("int", lo, hi) | ("float", lo, hi) | ("float_log", lo, hi)
 SearchSpace = dict[str, tuple]
 
-LOWER_IS_BETTER_METRICS = {"ece", "log_loss", "brier"}  # optimizer.py:54
+LOWER_IS_BETTER_METRICS: frozenset = frozenset({"ece", "log_loss", "brier_score", "brier"})
 
 
 def sample_params(space: SearchSpace, rng: random.Random) -> dict:
@@ -154,16 +154,13 @@ class Trial:
     error: str | None = None
 
 
-LOWER_IS_BETTER_METRICS: frozenset = frozenset({"log_loss", "brier_score", "brier"})
-
-
 def resolve_metric(optimization_metric: str, fbeta_score_beta: float = 0.5) -> tuple[str, str]:
     """(row name, study direction) for a configured optimization metric —
     the reference's _metric_row_name + optimization_direction contract
     (/root/reference/src/training/core/optimizer.py:237-262, pinned by
     tests/test_training/test_training_search.py): ``fbeta_score`` maps to
     ``f_{beta}_score``, everything else is used as-is; direction is
-    "minimize" only for the lower-is-better set (log_loss, brier)."""
+    "minimize" only for the lower-is-better set (ece, log_loss, brier)."""
     row = (
         f"f_{fbeta_score_beta}_score"
         if optimization_metric == "fbeta_score"

@@ -922,6 +922,44 @@ def test_prefix_filter_jaccard_bigram_tokens_match_bruteforce(spark):
     assert not any((1, 3) == p for p in got)
 
 
+def _plan_nodes(node):
+    nodes = [node]
+    children = node.children()
+    for i in range(children.size()):
+        nodes += _plan_nodes(children.apply(i))
+    return nodes
+
+
+def test_prefix_filter_jaccard_plan_shape(spark):
+    """The d16 join shape, read off the pre-AQE physical plan: the two
+    verify joins are shuffled-hash (hinted), the candidate self-join stays
+    the planner's sort-merge, the raw candidate pairs are not repartitioned
+    before their dedup, and the ranked token arrays reach every join as
+    INT ids (the vocab fits the driver-side bound)."""
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "e d c b a"), (4, "a b c d e")],
+        ["doc_id", "text"],
+    )
+    qe = dedup.prefix_filter_jaccard_pairs(
+        df, "doc_id", "text", threshold_x100=60, ngram=2
+    )._jdf.queryExecution()
+    nodes = _plan_nodes(qe.sparkPlan())
+    names = [n.nodeName() for n in nodes]
+    assert names.count("ShuffledHashJoin") == 2, names
+    assert names.count("SortMergeJoin") == 1, names
+    # before EnsureRequirements only an explicit repartition plans an Exchange
+    assert "Exchange" not in names, names
+    logical = [n.nodeName() for n in _plan_nodes(qe.optimizedPlan())]
+    assert "RepartitionByExpression" not in logical, logical
+    stoks_leaves = [
+        n.schema().simpleString()
+        for n in nodes
+        if n.children().size() == 0 and "stoks" in list(n.schema().fieldNames())
+    ]
+    assert stoks_leaves, names
+    assert all("stoks:array<int>" in s for s in stoks_leaves), stoks_leaves
+
+
 def test_prefix_filter_jaccard_rejects_bad_ngram(spark):
     df = spark.createDataFrame([(1, "a b")], ["doc_id", "text"])
     with pytest.raises(ValueError, match="ngram"):

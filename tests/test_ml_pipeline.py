@@ -369,13 +369,14 @@ def test_binary_metrics_has_no_auc_without_probabilities(spark):
 
 def test_optimizer_metric_resolution_and_direction():
     """Reference parity (test_training_search.py): fbeta_score resolves to
-    f_{beta}_score and maximize; roc_auc maximize; log_loss minimize."""
+    f_{beta}_score and maximize; roc_auc maximize; log_loss and ece minimize."""
     from end_to_end_ml_spark.train.tuner import resolve_metric
 
     assert resolve_metric("fbeta_score", 0.5) == ("f_0.5_score", "maximize")
     assert resolve_metric("roc_auc") == ("roc_auc", "maximize")
     assert resolve_metric("log_loss") == ("log_loss", "minimize")
     assert resolve_metric("brier_score") == ("brier_score", "minimize")
+    assert resolve_metric("ece") == ("ece", "minimize")
     assert resolve_metric("recall") == ("recall", "maximize")
 
 

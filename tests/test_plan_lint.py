@@ -441,6 +441,26 @@ def test_no_raw_tokenizer_inside_hof_lambda():
     )
 
 
+def test_tools_do_not_patch_engine_internals():
+    """An A/B arm belongs in the commit message, not in the tree: no script
+    under tools/ and not bench.py may switch engine behaviour by assigning
+    (or setattr-ing) a module's private upper-case constant, the way the
+    deleted d16 experiment scripts flipped ``dedup._PF_*`` knobs. A decision
+    the engine needs at run time is an argument or a derived value."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    patch = re.compile(r"\b\w+\._[A-Z][A-Z0-9_]*\s*=(?!=)|setattr\(")
+    offenders = [
+        f"{py.relative_to(root)}:{i}: {line.strip()}"
+        for py in sorted((root / "tools").glob("*.py")) + [root / "bench.py"]
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if patch.search(line)
+    ]
+    assert not offenders, offenders
+
+
 def test_driver_java_options_grow_only_merge():
     """The session factory leaves the driver heap GROW-ONLY: no -Xms, and
     MaxHeapFreeRatio=100 so G1 never uncommits heap after a full GC (the

@@ -197,17 +197,17 @@ def test_merge_upsert_tiebreak_deterministic(spark):
 
 
 def test_column_profile_counts_nulls_distinct(spark):
-    from end_to_end_ml_spark.operators.prep import column_profile
+    from end_to_end_ml_spark.operators.prep import profile_columns
 
     df = spark.createDataFrame(
         [("a", 1), ("a", 2), (None, 2), ("b", None)], "s string, n int"
     )
-    prof = {r["column"]: r for r in column_profile(df).collect()}
+    prof = {r["column"]: r for r in profile_columns(df).collect()}
     assert prof["s"]["n_rows"] == 4
-    assert prof["s"]["n_null"] == 1
+    assert prof["s"]["n_nulls"] == 1
     assert prof["s"]["n_distinct"] == 2  # NULL not counted
     assert prof["s"]["min_value"] == "a" and prof["s"]["max_value"] == "b"
-    assert prof["n"]["n_null"] == 1
+    assert prof["n"]["n_nulls"] == 1
     assert prof["n"]["min_value"] == "1" and prof["n"]["max_value"] == "2"
 
 

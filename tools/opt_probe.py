@@ -24,6 +24,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import BENCH_CONF  # noqa: E402
 from end_to_end_ml_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -42,15 +43,7 @@ def main() -> None:
         "opt-probe",
         master=f"local[{CPUS}]",
         shuffle_partitions=CPUS,
-        extra_conf={
-            # bench.py's small-SF conf, verbatim — probe numbers must be
-            # comparable to bench rows
-            "spark.sql.files.maxPartitionBytes": "256k",
-            "spark.sql.files.openCostInBytes": "64k",
-            "spark.sql.adaptive.advisoryPartitionSizeInBytes": "256k",
-            "spark.driver.extraJavaOptions": "-XX:ReservedCodeCacheSize=512m",
-            "spark.cleaner.periodicGC.interval": "2min",
-        },
+        extra_conf=BENCH_CONF,
     )
     from end_to_end_ml_spark.plans.entry_queries import REGISTRY
 

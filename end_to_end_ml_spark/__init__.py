@@ -14,6 +14,8 @@ Layout
 - ``plans``      composed end-to-end query plans (TPC-H-style demo queries,
                  the reference's prep→split→score flow)
 - ``streaming``  Structured Streaming surface over event tables
+- ``materialize`` the materialization policy: the scale decision behind
+                 every scale-gated checkpoint and the guarded persist
 
 Everything here is DataFrame/SQL-first: Catalyst owns physical planning; the
 only Python-side loops are driver-side orchestration over small metric frames.

@@ -23,47 +23,10 @@ makes these queries DuckDB-oracle-checkable.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# Scale-conditional materialization for spearman_components. At sf0.1 on
-# an idle local[32] the nine redundant pair-frame/counts subtrees in a18's
-# plan execute CONCURRENTLY inside one job and beat the serializing
-# localCheckpoint barriers (4.02 s no-ckpt vs 4.81 s both-ckpts, min of 8
-# alternating warmed runs; counts-only 4.36 vs 4.75). On a cluster, where
-# each redundant subtree is a full table scan and cores are not idle, the
-# checkpointed shape wins.
-#
-# The decision is DERIVED at call time, so a cluster needs no env var —
-#   SPARK_GRAFT_SCALE_MATERIALIZE=1/0 still forces it either way (read at
-#   call time, not import time: an import-time read makes later env
-#   changes a silent no-op);
-#   unset -> materialize when the session master is NOT local (a cluster
-#   pays a full distributed scan per redundant subtree) OR when the
-#   optimizer's size estimate for the input frame exceeds
-#   _SCALE_MATERIALIZE_BYTES (a big LOCAL job re-deriving a multi-GB
-#   frame nine times loses to one materialization too).
-# Estimates above ~1 EiB are Catalyst's "unknown size" defaultSizeInBytes
-# sentinel (Long.MaxValue), not a measurement — treated as unknown so an
-# ExistingRDD input cannot flip the measured-optimal local plan.
-_SCALE_MATERIALIZE_BYTES = 4 * 1024**3
-_SIZE_UNKNOWN_SENTINEL = 2**60
-
-
-def _scale_materialize(df: DataFrame) -> bool:
-    env = os.environ.get("SPARK_GRAFT_SCALE_MATERIALIZE")
-    if env is not None:
-        return env == "1"
-    if not df.sparkSession.sparkContext.master.startswith("local"):
-        return True
-    try:
-        # py4j converts the Scala BigInt to a Python int directly
-        size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-    except Exception:  # noqa: BLE001 — stats are advisory, never fatal
-        return False
-    return _SCALE_MATERIALIZE_BYTES < size < _SIZE_UNKNOWN_SENTINEL
+from ..materialize import checkpoint_at_scale
 
 
 def quantize_score(col, score_precision: int | None):
@@ -716,14 +679,12 @@ def roc_auc_ovr(df: DataFrame, label_col: str, score_cols: dict) -> DataFrame:
             / (F.sum("pos") * F.sum("neg"))
         ).alias("auc")
     )
-    if _scale_materialize(df):
-        # K rows (one per class), consumed by BOTH the output union and
-        # the macro fold — on a cluster-shaped input the bounded
-        # checkpoint stops the full subtree running twice (r14 census:
-        # a8 carried 6 input scans); at sf0.1 the extra job barrier
-        # loses to the cheap re-derivation, so the decision is the
-        # derived a18 one (_scale_materialize).
-        per_class = per_class.localCheckpoint(eager=False)
+    # K rows (one per class), consumed by BOTH the output union and the
+    # macro fold — on a cluster-shaped input the bounded checkpoint stops
+    # the full subtree running twice (r14 census: a8 carried 6 input
+    # scans); at sf0.1 the extra job barrier loses to the cheap
+    # re-derivation, so the decision is the derived a18 one (at_scale).
+    per_class = checkpoint_at_scale(per_class, df)
     pivoted = per_class.agg(
         *[
             F.sum(F.when(F.col("class") == str(k), F.col("auc"))).alias(f"__a{i}")
@@ -803,7 +764,7 @@ def drift_bins(
     # result twice more — Catalyst re-derives the subtree per reference,
     # so a16's main plan carried EIGHT full scans of the input for two
     # histogram passes). Scale-conditional via the derived a18 decision
-    # (_scale_materialize): at sf0.1 the checkpoint's job barrier costs
+    # (materialize.at_scale): at sf0.1 the checkpoint's job barrier costs
     # more than six re-scans of a tiny parquet (measured 0.70 -> 1.32 s
     # on a16), on a non-local master or >4 GiB input each re-derivation
     # is a full distributed scan.
@@ -812,8 +773,7 @@ def drift_bins(
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
         F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
     )
-    if _scale_materialize(ref) or _scale_materialize(cur):
-        joined = joined.localCheckpoint(eager=False)
+    joined = checkpoint_at_scale(joined, ref, cur)
     tot = joined.agg(
         F.sum("n_ref").alias("__tr"), F.sum("n_cur").alias("__tc")
     )
@@ -917,11 +877,10 @@ def _doubled_tie_ranks(
     balance is affected, and the quantized-integer columns this path
     serves are range-bounded by construction."""
     counts = df.groupBy(col).agg(F.count(F.lit(1)).alias("__cnt"))
-    if _scale_materialize(df):
-        # consumed by the bounds agg, the totals/offsets ladder and the
-        # main join — one materialization replaces three derivations of
-        # the distinct-counts shuffle (cluster shape; see knob comment)
-        counts = counts.localCheckpoint(eager=False)
+    # consumed by the bounds agg, the totals/offsets ladder and the main
+    # join — one materialization replaces three derivations of the
+    # distinct-counts shuffle (cluster shape; see materialize.at_scale)
+    counts = checkpoint_at_scale(counts, df)
     dtype = dict(df.dtypes)[col]
     if boundaries is None and dtype in _INTEGRAL_DTYPES:
         # min/max over the distinct-value table == min/max over df, and
@@ -1006,11 +965,10 @@ def spearman_components(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     # before pairing would let half-missing rows shift the other column's
     # ranks non-uniformly and bias rho
     df = df.filter(F.col(x_col).isNotNull() & F.col(y_col).isNotNull())
-    if _scale_materialize(df):
-        # the filtered pair frame feeds rx, ry and the ranked join — at
-        # cluster scale those are three full input scans (knob comment
-        # at the top of the module; default off = local-measured optimum)
-        df = df.localCheckpoint(eager=False)
+    # the filtered pair frame feeds rx, ry and the ranked join — at
+    # cluster scale those are three full input scans (materialize.at_scale;
+    # off on a small local input = the local-measured optimum)
+    df = checkpoint_at_scale(df, df)
     dtypes = dict(df.dtypes)
     if dtypes[x_col] in _INTEGRAL_DTYPES and dtypes[y_col] in _INTEGRAL_DTYPES:
         # round-13: integral columns take _doubled_tie_ranks' in-plan

@@ -20,31 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _persist(df: DataFrame) -> DataFrame:
-    """``persist()`` guarded on the CacheManager: with memoized scans
-    (sources.io._SCAN_CACHE) a repeated operator call rebuilds an IDENTICAL
-    logical plan, and a bare ``persist()`` on it triggers ``WARN
-    CacheManager: Asked to cache already cached data`` — worse, in a
-    long-lived session a later ``unpersist()`` from one call site would
-    evict the sibling's live cache. ``df.storageLevel`` consults the
-    session CacheManager by plan, so this is a true already-cached test,
-    not an object-identity test."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df
-    return df.persist()
-
-
-def _persist_owned(df: DataFrame) -> tuple[DataFrame, bool]:
-    """Like :func:`_persist` but reports whether THIS call performed the
-    persist. A call site that wants to ``unpersist()`` on exit must only do
-    so when it owns the cache — if the guard returned an already-cached
-    sibling (identical plan cached by another call site), unpersisting here
-    would evict the sibling's live cache mid-use, the exact hazard the
-    guard exists to prevent."""
-    if df.storageLevel.useMemory or df.storageLevel.useDisk:
-        return df, False
-    return df.persist(), True
+from ..materialize import persist
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -212,25 +188,6 @@ def ngram_jaccard_pairs(
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
-
-
-def minhash_signature(shingle_col, num_hashes: int = 64, seed: int = 42):
-    """num_hashes-wide MinHash signature as a row-local expression:
-    sig[i] = min over shingles of xxhash64(shingle, seed+i).
-
-    NOTE (hot paths): this form materializes ``num_hashes`` temporary
-    arrays per row inside higher-order lambdas; prefer
-    :func:`minhash_signatures_agg` (explode + 64-way hash aggregate, no
-    array churn, map-side combine) — measured 4.6 s → 0.65 s for the
-    signature stage at sf0.1. This expression form remains for contexts
-    that need a signature inline without a groupBy (tests, estimators
-    over already-bound arrays)."""
-    return F.transform(
-        F.sequence(F.lit(seed), F.lit(seed + num_hashes - 1)),
-        lambda i: F.array_min(
-            F.transform(shingle_col, lambda s: F.xxhash64(s, i))
-        ),
-    )
 
 
 def minhash_signatures_agg(
@@ -422,7 +379,7 @@ def minhash_dedup_pairs(
     sig = minhash_signatures_agg(
         _spread(df), id_col, char_shingles(text_col, shingle_size), num_hashes, seed
     )
-    sig = _persist(sig)
+    sig, _ = persist(sig)
     cands = _band_candidates(sig, num_hashes, bands)
     est = _estimator_prune(
         cands, sig, sig, "id_a", "id_b", num_hashes, threshold, estimator_margin
@@ -453,8 +410,8 @@ class MinHashIndex:
     minhash_signatures_agg + the shared _banded projection emit, so
     probe plans are identical from the join onward). ``unpersist()``
     releases both; only frames THIS index persisted are dropped
-    (the _persist_owned discipline — an identical plan cached by another
-    call site is left alone)."""
+    (the materialize.persist ownership flag — an identical plan cached by
+    another call site is left alone)."""
 
     def __init__(
         self,
@@ -499,13 +456,13 @@ def minhash_build_index(
     history-derived state a probe touches — history text is read again
     only for the final exact-Jaccard verify of estimator survivors."""
     assert num_hashes % bands == 0
-    sig, sig_owned = _persist_owned(
+    sig, sig_owned = persist(
         minhash_signatures_agg(
             _spread(hist_df), id_col, char_shingles(text_col, shingle_size),
             num_hashes, seed,
         )
     )
-    bands_df, bands_owned = _persist_owned(_banded(sig, num_hashes, bands))
+    bands_df, bands_owned = persist(_banded(sig, num_hashes, bands))
     return MinHashIndex(
         sig, bands_df, (sig_owned, bands_owned),
         num_hashes, bands, seed, shingle_size,
@@ -572,7 +529,7 @@ def minhash_probe_pairs(
     # result — an unpersist before the caller executes would silently drop
     # the cache. O(|batch|) only; the history side comes from ``index``
     # when given (pre-persisted once per epoch, never re-cached per call).
-    sig_new = _persist(
+    sig_new, _ = persist(
         minhash_signatures_agg(
             _spread(new_df), id_col, char_shingles(text_col, shingle_size),
             num_hashes, seed,
@@ -582,7 +539,7 @@ def minhash_probe_pairs(
         sig_hist = index.sig
         hist_bands = index.bands_df
     else:
-        sig_hist = _persist(
+        sig_hist, _ = persist(
             minhash_signatures_agg(
                 _spread(hist_df), id_col, char_shingles(text_col, shingle_size),
                 num_hashes, seed,
@@ -710,13 +667,6 @@ def simhash(
     return bit_sums.selectExpr("id", "(" + " + ".join(terms) + ") as simhash")
 
 
-def sum_fold_longs(cols):
-    out = cols[0]
-    for c in cols[1:]:
-        out = out + c
-    return out
-
-
 def simhash_near_pairs(
     df: DataFrame,
     id_col: str,
@@ -733,8 +683,8 @@ def simhash_near_pairs(
     explode+aggregate simhash pipeline TWICE (self-joins don't reliably
     hit ReusedExchange). The cached frame is one (id, fingerprint) long
     per document — tiny at any scale (same pattern as the MinHash path's
-    ``sig.persist()``)."""
-    fps = _persist(simhash(df, id_col, text_col, hash_family=hash_family))
+    persisted signature frame)."""
+    fps, _ = persist(simhash(df, id_col, text_col, hash_family=hash_family))
     chunked = fps.select(
         "id",
         "simhash",
@@ -942,7 +892,7 @@ def connected_components(
     silently returning partial labels would split real dup-groups and is a
     wrong answer, not a degraded one."""
     edges = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
-    sym, sym_owned = _persist_owned(edges.unionByName(
+    sym, sym_owned = persist(edges.unionByName(
         edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ))  # every round joins sym: without the persist each iteration
     # re-executes the ENTIRE upstream pair-generation pipeline (signatures,

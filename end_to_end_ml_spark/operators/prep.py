@@ -33,13 +33,6 @@ from pyspark.sql import functions as F
 MISSING_TOKENS = ["", "<NA>", "null", "?", "N/A", "NAN", "nan"]
 
 
-def select_columns(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """P1: projection by configured role lists. Catalyst pushes this into the
-    parquet reader (column pruning) — at 100 TB this is the difference between
-    scanning 2 columns and scanning 23."""
-    return df.select(*cols)
-
-
 def reconcile_columns(df: DataFrame, required: Sequence[str]) -> DataFrame:
     """P2: keep only configured columns actually present (driver-side set
     intersection, preserving configured order)."""
@@ -390,9 +383,10 @@ def profile_columns(df, columns=None):
 
     ONE aggregation pass: all per-column measures ride a single agg();
     Spark plans the multiple exact count-distincts via expand (one shuffle
-    carrying |columns| streams) — at 100 TB swap exact distinct for
-    approx_count_distinct per column, same plan shape minus the expand
-    (documented knob, exactness is what makes THIS form oracle-checkable).
+    carrying |columns| streams). At 100 TB the alternative is
+    approx_count_distinct per column: the same plan shape minus the
+    expand, but not exact, and exactness is what makes THIS form
+    oracle-checkable, so this function does not offer it.
     Min/max stringification is engine-deterministic for the integer /
     string columns profiled here (floats would need explicit formatting
     pinned on both engines)."""

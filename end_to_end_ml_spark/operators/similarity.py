@@ -21,6 +21,7 @@ import math
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import persist
 from .dedup import _spread
 
 
@@ -40,10 +41,6 @@ def _norm(a):
             lambda acc, x: acc + x,
         )
     )
-
-
-def with_norm(df: DataFrame, vec_col: str, out_col: str = "norm") -> DataFrame:
-    return df.withColumn(out_col, _norm(F.col(vec_col)))
 
 
 def _group_rerank(k: int, round_digits: int | None = 6):
@@ -488,19 +485,15 @@ class IvfIndex:
     O(batch)). The index therefore OWNS a list of persisted frames; an
     index returned by ivf_index_add SUPERSEDES its input (they share
     cached layers), so callers unpersist only the final index of a
-    chain, never the intermediates."""
+    chain, never the intermediates. Only frames THIS index persisted are
+    owned (the materialize.persist ownership flag — an identical plan
+    cached by another call site is left alone)."""
 
-    def __init__(
-        self, cells: DataFrame, centroids, radii, owned: bool,
-        owned_frames=None,
-    ) -> None:
+    def __init__(self, cells: DataFrame, centroids, radii, owned_frames) -> None:
         self.cells = cells
         self.centroids = centroids
         self.radii = radii
-        if owned_frames is not None:
-            self._owned_frames = list(owned_frames)
-        else:
-            self._owned_frames = [cells] if owned else []
+        self._owned_frames = list(owned_frames)
 
     def unpersist(self) -> None:
         for f in self._owned_frames:
@@ -568,7 +561,7 @@ def ivf_build_index(
     # persist the ASSIGNED frame itself (not a projection of it) so the
     # radii aggregate and every later probe join read the same cached
     # blocks instead of re-running the assignment mapInPandas
-    assigned = _assign_with_angle(hist_df, id_col, vec_col, cent).persist()
+    assigned, owned = persist(_assign_with_angle(hist_df, id_col, vec_col, cent))
     radii_rows = assigned.groupBy("cell").agg(F.max("ang").alias("r")).collect()
     # keep the persisted frame itself as `cells` (the ang column rides
     # along unused) so unpersist() targets the cached plan directly
@@ -576,7 +569,7 @@ def ivf_build_index(
     radii = np.zeros(len(cent))
     for row in radii_rows:
         radii[row["cell"]] = row["r"]
-    return IvfIndex(cells, cent, radii, owned=True)
+    return IvfIndex(cells, cent, radii, [cells] if owned else [])
 
 
 def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str) -> IvfIndex:
@@ -606,7 +599,9 @@ def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str)
     records."""
     import numpy as np
 
-    assigned = _assign_with_angle(new_df, id_col, vec_col, index.centroids).persist()
+    assigned, owned = persist(
+        _assign_with_angle(new_df, id_col, vec_col, index.centroids)
+    )
     # O(batch) radii aggregate — also materializes the new layer's cache
     radii_rows = assigned.groupBy("cell").agg(F.max("ang").alias("r")).collect()
     radii = index.radii.copy()
@@ -614,8 +609,8 @@ def ivf_index_add(index: IvfIndex, new_df: DataFrame, id_col: str, vec_col: str)
         radii[row["cell"]] = max(radii[row["cell"]], row["r"])
     cells = index.cells.select("cell", "nid", "nvec", "ang").unionByName(assigned)
     return IvfIndex(
-        cells, index.centroids, radii, owned=True,
-        owned_frames=index._owned_frames + [assigned],
+        cells, index.centroids, radii,
+        index._owned_frames + ([assigned] if owned else []),
     )
 
 

@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
+from ..materialize import checkpoint_at_scale, persist
+
 # Knuth multiplicative hash; exact in int64 for keys < ~3.5e9, and computable
 # identically by any SQL engine (pure integer arithmetic).
 _HASH_MULT = 2654435761
@@ -110,11 +112,9 @@ def _bucketed_rank(df: DataFrame, class_col: str, pk_col: str):
     # a full distributed scan+window. ranked itself is data-sized and
     # deliberately NOT materialized (re-scan beats a full-data
     # checkpoint; house rule from temperature_sample).
-    from ..functions.metrics import _scale_materialize
-
-    counts = ranked.groupBy(class_col, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    if _scale_materialize(df):
-        counts = counts.localCheckpoint(eager=False)
+    counts = checkpoint_at_scale(
+        ranked.groupBy(class_col, "__b").agg(F.count(F.lit(1)).alias("__cnt")), df
+    )
     w_off = (
         Window.partitionBy(class_col)
         .orderBy("__b")
@@ -170,31 +170,6 @@ def stratified_split(
     return (
         tagged.filter(F.col("split") == "train").drop("split"),
         tagged.filter(F.col("split") == "test").drop("split"),
-    )
-
-
-def stratified_split_approx(
-    df: DataFrame,
-    class_col: str,
-    pk_col: str,
-    train_size: float = 0.8,
-    relative_error: float = 1e-4,
-) -> tuple[DataFrame, DataFrame]:
-    """T1 at 100 TB: the exact window variant funnels each class through one
-    partition (total order per class). This variant computes an approximate
-    ``train_size``-quantile of the deterministic hash key per class
-    (percentile_approx: mergeable sketches, no global sort) and splits by
-    threshold — per-class fraction error bounded by ``relative_error``,
-    fully deterministic given the data, no skewed shuffle."""
-    _validate_stratify(df, class_col, train_size)
-    keyed = df.withColumn("__k", deterministic_key(pk_col))
-    cuts = keyed.groupBy(class_col).agg(
-        F.percentile_approx("__k", train_size, int(1 / relative_error)).alias("__cut")
-    )
-    tagged = keyed.join(F.broadcast(cuts), class_col)
-    return (
-        tagged.filter(F.col("__k") <= F.col("__cut")).drop("__k", "__cut"),
-        tagged.filter(F.col("__k") > F.col("__cut")).drop("__k", "__cut"),
     )
 
 
@@ -330,9 +305,9 @@ def train_valid_calib_test(
     Evaluates the input plan more than once before the cache fills (the
     bounded count collect, then the assignment pass): a nondeterministic
     upstream must be persisted first; see carve_assignment."""
-    assigned = carve_assignment(
+    assigned, _ = persist(carve_assignment(
         df, class_col, pk_col, train_size, valid_size, calib_size, "__subset"
-    ).persist()
+    ))
     return {
         name: assigned.filter(F.col("__subset") == name).drop("__subset")
         for name in ("train", "validation", "calibration", "test")

@@ -1357,7 +1357,6 @@ def dsir_scores(
     weights: DataFrame,
     carry_cols: tuple = (),
     n_buckets: int = 256,
-    unseen_bucket_weight: int | None = None,
     floor_unseen: bool = False,
 ) -> DataFrame:
     """Per-document DSIR importance scores over the raw pool.
@@ -1373,7 +1372,7 @@ def dsir_scores(
     dim, and the per-doc agg partially aggregates map-side.
 
     Unseen buckets (round-10 ADVICE): with the default
-    ``unseen_bucket_weight=None`` the weights join is INNER, so the
+    ``floor_unseen=False`` the weights join is INNER, so the
     scored frame MUST be a subset of the raw pool the weights were
     counted from — every bigram of such a doc lands in a bucket with
     r_count > 0 by construction, and the join drops nothing. Scoring
@@ -1386,9 +1385,7 @@ dsir_weights_from_store` table) would silently drop unseen-bucket
     is DERIVED from the ``scale_x`` metadata
     :func:`dsir_weights_from_counts` stamps on the weight column, so a
     non-default scale can never silently mis-floor (round-11 ADVICE
-    #4); a weights frame without the metadata raises. The older
-    ``unseen_bucket_weight=<int>`` explicit override remains for
-    hand-built weight tables.
+    #4); a weights frame without the metadata raises.
 
     Overflow (round-10 ADVICE): the sum stays BIGINT, and under ANSI —
     Spark 4's default, PINNED in session.py precisely for this
@@ -1407,10 +1404,6 @@ dsir_weights_from_store` table) would silently drop unseen-bucket
     from .dedup import _spread
 
     if floor_unseen:
-        if unseen_bucket_weight is not None:
-            raise ValueError(
-                "pass floor_unseen=True OR unseen_bucket_weight, not both"
-            )
         if "weight" not in weights.columns:
             raise ValueError(
                 "floor_unseen=True needs a weights frame with a 'weight' "
@@ -1422,24 +1415,20 @@ dsir_weights_from_store` table) would silently drop unseen-bucket
             raise ValueError(
                 "floor_unseen=True needs a weights frame built by "
                 "dsir_weights_from_counts/dsir_bucket_weights* (no scale_x "
-                "metadata on the weight column) — pass "
-                "unseen_bucket_weight=<scale_x> explicitly instead"
+                "metadata on the weight column)"
             )
-        unseen_bucket_weight = int(meta["scale_x"])
+        floor = int(meta["scale_x"])
     exploded = _spread(raw_df).select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
         F.explode(hashed_bigram_buckets(text_col, n_buckets)).alias("bucket"),
     )
-    if unseen_bucket_weight is None:
+    if not floor_unseen:
         joined = exploded.join(F.broadcast(weights), "bucket")
     else:
         joined = exploded.join(F.broadcast(weights), "bucket", "left").withColumn(
             "weight",
-            F.coalesce(
-                F.col("weight"),
-                F.lit(int(unseen_bucket_weight)).cast("long"),
-            ),
+            F.coalesce(F.col("weight"), F.lit(floor).cast("long")),
         )
     return (
         joined.groupBy(id_col, *carry_cols)

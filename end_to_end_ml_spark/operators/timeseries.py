@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..materialize import checkpoint_at_scale
+
 
 def hourly_downsample(
     events: DataFrame, key_col: str, ts_col: str, value_col: str
@@ -278,10 +280,7 @@ def rolling_distinct_users(
     # 3 input scans). Materialize once when the input is cluster-shaped
     # (derived a18 decision); locally the job barrier loses to re-scanning
     # a tiny parquet.
-    from ..functions.metrics import _scale_materialize
-
-    if _scale_materialize(events):
-        pairs = pairs.localCheckpoint(eager=False)
+    pairs = checkpoint_at_scale(pairs, events)
     days_present = pairs.select("d").distinct()
     exploded = pairs.select(
         "u",

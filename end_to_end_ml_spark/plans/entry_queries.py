@@ -8539,7 +8539,7 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # broken by md5(f"r14:{name}"), with the best-effort family guard.
 # All registry entries remain locally verified via tools/check_oracle.py
 # (full-registry + full-window-at-sf0.1 results committed as
-# CHECK_ORACLE_LOCAL_r11.json / CHECK_ORACLE_SF01_WINDOW_r11.json);
+# CHECK_ORACLE_LOCAL_r13.json / CHECK_ORACLE_SF01_WINDOW_r13.json);
 # counts are asserted below and in tests
 # (tests/test_plan_lint.py::test_registry_count_claims).
 # ---------------------------------------------------------------------------

@@ -17,7 +17,6 @@ from ..features import pipeline as FP
 from ..operators import split
 from ..sources import load_table
 from ..train import models as MZ
-from ..train.workflow import evaluate_binary
 
 
 def order_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -38,31 +37,6 @@ def order_training_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.join(F.broadcast(mean_price)).withColumn(
         "label", (F.col("o_totalprice") > F.col("m")).cast("double")
     ).drop("m")
-
-
-def train_and_evaluate(
-    spark: SparkSession,
-    sf_dir: str,
-    model_name: str = "logistic_regression",
-    beta: float = 0.5,
-) -> tuple:
-    """Fit the full pipeline (F1-F10 + classifier) on the train split and
-    evaluate on validation. Returns (fitted PipelineModel, metrics dict)."""
-    df = order_training_frame(spark, sf_dir)
-    train, valid = split.stratified_split(df, "label", "o_orderkey", 0.8)
-
-    # NOTE: features exclude o_totalprice (the label source) — the model
-    # learns from priority/segment/balance only.
-    stages = FP.build_preprocessing_stages(
-        numeric_cols=["c_acctbal"],
-        categorical_cols=["o_orderpriority", "c_mktsegment"],
-        variance_threshold=0.0,
-    )
-    clf = MZ.MODEL_BUILDERS[model_name]()
-    pipe = FP.build_full_pipeline(stages, clf)
-    fitted = pipe.fit(train)
-    scored = fitted.transform(valid)
-    return fitted, evaluate_binary(scored, beta=beta)
 
 
 def ml_scores_query(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import persist
+
 TESTDATA_TABLES = (
     "region",
     "nation",
@@ -590,7 +592,7 @@ def read_jsonl_quarantine(spark, path: str, schema: str):
     corrupt column to be part of the declared schema; it is appended
     here, callers pass only their data columns.
 
-    Cache note: the parsed frame is cache()d (Spark disallows filtering
+    Cache note: the parsed frame is persisted (Spark disallows filtering
     on only the corrupt column of an unmaterialized json scan,
     SPARK-21610) and BOTH returned frames read through that cache; after
     materializing/writing both sides, callers ingesting huge files should
@@ -599,14 +601,14 @@ def read_jsonl_quarantine(spark, path: str, schema: str):
     from pyspark.sql import functions as F
 
     full_schema = schema + ", _corrupt_record STRING"
-    df = (
+    # Spark requires materialization before filtering on the corrupt
+    # column (SPARK-21610: referencing only the corrupt column of an
+    # unmaterialized json scan is disallowed)
+    df, _ = persist(
         spark.read.schema(full_schema)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
-        .cache()  # Spark requires materialization before filtering on
-        # the corrupt column (SPARK-21610: referencing only the corrupt
-        # column of an unmaterialized json scan is disallowed)
     )
     good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select(

@@ -17,9 +17,11 @@ sample → fit → score on validation → keep best → refit.
   group — the constant-liar trick, discouraging duplicate in-flight
   samples (reference's constant_liar=True for its Dask path).
 
-Scale notes (SURVEY §4): the preprocessed train/validation frames are
-``.persist()``-ed ONCE before the loop — ~N trials reuse them (the
-reference's manual CSE, optimizer.py:10-19 / train.py:350-353). Concurrent
+Scale notes (SURVEY §4): the train/validation frames should be cached
+ONCE before the loop so ~N trials reuse them (the reference's manual CSE,
+optimizer.py:10-19 / train.py:350-353) — the frames of
+operators.split.train_valid_calib_test already are filters over one
+persisted carve. Concurrent
 trials (parallel_jobs>1, H4) submit Spark jobs from driver threads; pass
 ``spark`` so each thread is pinned to its own FAIR-scheduler pool
 (``spark.scheduler.pool``; the session factory sets
@@ -36,8 +38,6 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 from math import ceil, exp, log, pi, sqrt
 
-from pyspark import StorageLevel
-from pyspark.sql import DataFrame
 
 # Search-space grammar: name -> ("categorical", [choices]) |
 # ("int", lo, hi) | ("float", lo, hi) | ("float_log", lo, hi)
@@ -270,24 +270,3 @@ def tune(
         for i in range(n_trials):
             run_one(0)
     return study
-
-
-def make_fit_score_objective(
-    build_model: Callable[..., object],
-    train_df: DataFrame,
-    valid_df: DataFrame,
-    score_fn: Callable[[DataFrame], float],
-    fixed_params: dict | None = None,
-):
-    """H2: objective closure — build estimator with sampled+fixed params, fit
-    on (cached) train, transform valid, score. Caches both frames on first
-    use (MEMORY_AND_DISK: spill-safe at scale)."""
-    train_df.persist(StorageLevel.MEMORY_AND_DISK)
-    valid_df.persist(StorageLevel.MEMORY_AND_DISK)
-
-    def objective(params: dict) -> float:
-        model = build_model(**{**(fixed_params or {}), **params})
-        fitted = model.fit(train_df)
-        return score_fn(fitted.transform(valid_df))
-
-    return objective

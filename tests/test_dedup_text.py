@@ -1202,7 +1202,7 @@ def test_dsir_scores_unseen_bucket_floor(spark):
     """round-10 ADVICE: scoring docs OUTSIDE the counted pool. With the
     default (inner join) a bigram hashing to a bucket absent from the
     weight table vanishes from both the sum and the n_bigrams
-    denominator; with unseen_bucket_weight=scale_x it is counted at the
+    denominator; with floor_unseen=True it is counted at the
     add-one floor an unseen bucket would have received. Pinned against
     a Python replay on a planted split."""
     from end_to_end_ml_spark.operators import text
@@ -1231,7 +1231,7 @@ def test_dsir_scores_unseen_bucket_floor(spark):
     assert inner[0]["dsir_score"] == sum(w[b] for b in seen)
 
     floored = text.dsir_scores(
-        new_docs, "doc_id", "text", weights, unseen_bucket_weight=65536
+        new_docs, "doc_id", "text", weights, floor_unseen=True
     ).collect()
     assert len(floored) == 1
     assert floored[0]["n_bigrams"] == len(seen) + len(unseen)
@@ -1244,8 +1244,8 @@ def test_dsir_floor_unseen_derives_scale_from_metadata(spark):
     derives it from the scale_x metadata the weight builders stamp on
     the weight column — pinned with a NON-default scale (1024), where
     the old documented floor of 65536 would mis-floor by 64x. Also pins
-    the loud paths: both knobs at once raises; a weights frame without
-    the metadata raises instead of guessing."""
+    the loud path: a weights frame without the metadata raises instead
+    of guessing."""
     import pytest as _pytest
 
     from end_to_end_ml_spark.operators import text
@@ -1288,11 +1288,6 @@ def test_dsir_floor_unseen_derives_scale_from_metadata(spark):
     w2 = text.dsir_weights_from_counts(counts, scale_x=1024)
     assert (w2.schema["weight"].metadata or {}).get("scale_x") == 1024
 
-    with _pytest.raises(ValueError, match="not both"):
-        text.dsir_scores(
-            new_docs, "doc_id", "text", weights,
-            floor_unseen=True, unseen_bucket_weight=5,
-        )
     bare = weights.select("bucket", (F2.col("weight") + 0).alias("weight"))
     with _pytest.raises(ValueError, match="no scale_x metadata"):
         text.dsir_scores(new_docs, "doc_id", "text", bare, floor_unseen=True)

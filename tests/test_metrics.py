@@ -340,7 +340,7 @@ class TestSpearmanScaleMaterialize:
         """SPARK_GRAFT_SCALE_MATERIALIZE flips a18's plan to the
         cluster shape (localCheckpoint the pair frame + each counts
         table instead of re-deriving them per consumer — measured local
-        loss, cluster win; see the knob comment in functions/metrics).
+        loss, cluster win; see the comment in materialize).
         The knob must never change a single value, ties and NULLs
         included."""
         from end_to_end_ml_spark.functions import metrics
@@ -366,7 +366,7 @@ class TestSpearmanScaleMaterialize:
         on a local master keeps the measured-optimal local plan (no
         materialization barriers) — the r14 auto-derive must not change
         the local bench's a18 plan."""
-        from end_to_end_ml_spark.functions import metrics
+        from end_to_end_ml_spark import materialize
 
         monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
         df = spark.createDataFrame([(1, 2), (3, 4)], "x long, y long")
@@ -374,7 +374,7 @@ class TestSpearmanScaleMaterialize:
         # test_knob_is_result_identical (the base frame is already
         # RDD-backed under createDataFrame, so "ExistingRDD" appears in
         # every plan here and cannot witness the checkpoint)
-        assert metrics._scale_materialize(df) is False
+        assert materialize.at_scale(df) is False
 
     def test_auto_derive_size_threshold(self, spark, monkeypatch):
         """Unset env + a local master still flips to the materialized
@@ -383,19 +383,80 @@ class TestSpearmanScaleMaterialize:
         consumer loses to one materialization), while Catalyst's
         unknown-size sentinel (Long.MaxValue on ExistingRDD inputs) is
         treated as unknown, not huge."""
-        from end_to_end_ml_spark.functions import metrics
+        from end_to_end_ml_spark import materialize
 
         monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
         # Range has exact optimizer stats (rows x 8 bytes), so it can
         # cross a zeroed threshold honestly
         df = spark.range(4).selectExpr("id as x", "id as y")
-        monkeypatch.setattr(metrics, "_SCALE_MATERIALIZE_BYTES", 0)
-        assert metrics._scale_materialize(df) is True
+        monkeypatch.setattr(materialize, "_SCALE_MATERIALIZE_BYTES", 0)
+        assert materialize.at_scale(df) is True
         # unknown-size sentinel: an ExistingRDD frame reports
         # defaultSizeInBytes (Long.MaxValue) — treated as unknown, must
         # NOT flip the plan even with the threshold at zero
         rdd_backed = spark.createDataFrame([(1, 2), (3, 4)], "x long, y long")
-        assert metrics._scale_materialize(rdd_backed) is False
+        assert materialize.at_scale(rdd_backed) is False
+        # any input at scale decides for the set (drift_bins' ref, cur)
+        assert materialize.at_scale(rdd_backed, df) is True
+
+    def test_decision_is_logged_with_its_inputs(self, spark, monkeypatch, caplog):
+        """Every at_scale call logs ONE INFO line with the decision, the
+        master, the per-input size estimates and the env override: a
+        Range frame reports its exact size, an ExistingRDD frame the
+        unknown-size sentinel (and stays local-shaped)."""
+        import logging
+        import re
+
+        from end_to_end_ml_spark import materialize
+
+        monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
+        caplog.set_level(logging.INFO, logger=materialize.__name__)
+        ranged = spark.range(4).selectExpr("id as x", "id as y")
+        rdd_backed = spark.createDataFrame([(1, 2), (3, 4)], "x long, y long")
+        master = spark.sparkContext.master
+        sizes = []
+        for df in (ranged, rdd_backed):
+            caplog.clear()
+            assert materialize.at_scale(df) is False
+            msgs = [r.getMessage() for r in caplog.records
+                    if r.name == materialize.__name__]
+            assert len(msgs) == 1, msgs
+            m = re.fullmatch(
+                rf"at_scale=False master={re.escape(master)} "
+                r"size_bytes=\[(\d+)\] env=None",
+                msgs[0],
+            )
+            assert m, msgs[0]
+            sizes.append(int(m.group(1)))
+        assert 0 < sizes[0] < materialize._SIZE_UNKNOWN_SENTINEL
+        assert sizes[1] >= materialize._SIZE_UNKNOWN_SENTINEL
+        # the env override is logged as the input that decided
+        caplog.clear()
+        monkeypatch.setenv("SPARK_GRAFT_SCALE_MATERIALIZE", "1")
+        assert materialize.at_scale(ranged) is True
+        assert [r.getMessage() for r in caplog.records] == [
+            f"at_scale=True master={master} size_bytes=None env=1"
+        ]
+
+    def test_failed_size_probe_warns_and_keeps_local_shape(
+        self, spark, monkeypatch, caplog
+    ):
+        """A size probe that raises is not fatal and not silent: the
+        decision falls back to the local shape and a WARNING names the
+        exception."""
+        import logging
+        from types import SimpleNamespace
+
+        from end_to_end_ml_spark import materialize
+
+        monkeypatch.delenv("SPARK_GRAFT_SCALE_MATERIALIZE", raising=False)
+        caplog.set_level(logging.INFO, logger=materialize.__name__)
+        broken = SimpleNamespace(sparkSession=spark, _jdf=None)
+        assert materialize.at_scale(broken) is False
+        warnings = [r for r in caplog.records if r.levelno == logging.WARNING]
+        assert len(warnings) == 1
+        assert "AttributeError" in warnings[0].getMessage()
+        assert caplog.records[-1].getMessage().startswith("at_scale=False ")
 
     def test_drift_and_ovr_sites_flip_with_env(self, spark, monkeypatch):
         """The r14 census sites (drift_bins histogram, roc_auc_ovr

@@ -461,6 +461,29 @@ def test_tools_do_not_patch_engine_internals():
     assert not offenders, offenders
 
 
+def test_materialization_has_one_owner():
+    """Caching is a policy with one owner: end_to_end_ml_spark/materialize.py
+    decides scale checkpoints and owns every engine persist (with the
+    already-cached guard and its ownership flag). No other engine module
+    may call ``.persist(``/``.cache()`` directly or keep a private copy of
+    the scale decision or the guard."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parent.parent / "end_to_end_ml_spark"
+    pattern = re.compile(
+        r"\.persist\(|\.cache\(\)|\b_scale_materialize\b|\b_persist(_owned)?\b"
+    )
+    offenders = [
+        f"{py.relative_to(pkg.parent)}:{i}: {line.strip()}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py != pkg / "materialize.py"
+        for i, line in enumerate(py.read_text().splitlines(), 1)
+        if pattern.search(line)
+    ]
+    assert not offenders, offenders
+
+
 def test_driver_java_options_grow_only_merge():
     """The session factory leaves the driver heap GROW-ONLY: no -Xms, and
     MaxHeapFreeRatio=100 so G1 never uncommits heap after a full GC (the

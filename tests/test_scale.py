@@ -207,28 +207,36 @@ def test_write_parquet_observed_single_pass_stats(spark, tmp_path):
 
 
 def test_guarded_persist_skips_already_cached_plan(spark):
-    """dedup._persist must not re-persist a plan the CacheManager already
-    holds — with memoized scans a repeated operator call rebuilds an
-    IDENTICAL logical plan, and a bare persist() there logs `Asked to
-    cache already cached data` and risks sibling-cache eviction."""
+    """materialize.persist must not re-persist a plan the CacheManager
+    already holds — with memoized scans a repeated operator call rebuilds
+    an IDENTICAL logical plan, and a bare persist() there logs `Asked to
+    cache already cached data` and risks sibling-cache eviction. The
+    short-circuit reports owned=False, so the caller leaves the sibling's
+    cache alone."""
     from pyspark.storagelevel import StorageLevel
 
-    from end_to_end_ml_spark.operators.dedup import _persist
+    from end_to_end_ml_spark.materialize import persist
 
     a = spark.range(1234).withColumn("v", F.col("id") % 5)
     try:
-        _persist(a).count()  # materialize the cache
+        cached, owned = persist(a)
+        assert owned is True
+        cached.count()  # materialize the cache
         # a SEPARATE DataFrame object with the identical logical plan:
         # storageLevel consults the CacheManager by plan, not by object
         b = spark.range(1234).withColumn("v", F.col("id") % 5)
         assert b.storageLevel != StorageLevel.NONE
-        assert _persist(b) is b  # guard short-circuits: no second persist
+        same, owned = persist(b)
+        assert same is b  # guard short-circuits: no second persist
+        assert owned is False
     finally:
         a.unpersist()
     fresh = spark.range(4321).withColumn("v", F.col("id") % 5)
     try:
         assert fresh.storageLevel == StorageLevel.NONE
-        assert _persist(fresh) is not fresh or fresh.storageLevel != StorageLevel.NONE
+        got, owned = persist(fresh)
+        assert got is not fresh or fresh.storageLevel != StorageLevel.NONE
+        assert owned is True
     finally:
         fresh.unpersist()
 

@@ -820,7 +820,7 @@ def test_stream_dsir_store_scores_new_batch_with_floor(spark, tmp_path):
     """The ADVICE-#1 scenario done RIGHT, end to end: a store built by
     the streaming sink over a HISTORICAL corpus scores a brand-new
     nightly batch (docs never counted into the store) via
-    dsir_scores(unseen_bucket_weight=scale_x). Pinned against a Python
+    dsir_scores(floor_unseen=True). Pinned against a Python
     replay: known buckets at their store weight, unseen buckets at the
     add-one floor — and the default inner join is confirmed to UNDERcount
     exactly the unseen-bucket bigrams (the quiet skew the floor fixes)."""
@@ -871,7 +871,7 @@ def test_stream_dsir_store_scores_new_batch_with_floor(spark, tmp_path):
     floored = {
         r["doc_id"]: (r["dsir_score"], r["n_bigrams"])
         for r in text.dsir_scores(
-            batch, "doc_id", "text", weights, unseen_bucket_weight=65536
+            batch, "doc_id", "text", weights, floor_unseen=True
         ).collect()
     }
     assert floored == {

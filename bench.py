@@ -72,21 +72,18 @@ HEADLINE = [
     "d4_simhash_pairs",
 ]
 
-# Round-5 additions: the heavy operators whose regressions were previously
-# invisible to the bench (d7 went 140 s -> ~8 s in r4 and was never
-# measured). They run fewer reps (still min-of-N) because a single execution
-# is seconds, not milliseconds; their sum is reported inside the same total,
-# and "r4_comparable_total" preserves the old 18-query sum for
-# round-over-round comparison.
+# Heavy operators (d7 once went 140 s -> ~8 s without a bench row to show
+# it). A single execution is seconds, not milliseconds; their sum is in the
+# same total, and "r4_comparable_total" keeps the 18-query HEADLINE sum.
 HEAVY = [
     "q9_product_profit",
     "pipe3_pretrain_corpus",
     "d7_near_dup_groups",
 ]
 
-# Round-5 operator families: banded range join, greedy packing
-# (applyInPandas), corpus-frequency scoring (double shuffle), SCD2
-# gaps-and-islands. Counted in the total, not in r4_comparable_total.
+# Banded range join, greedy packing (applyInPandas), corpus-frequency
+# scoring (double shuffle), SCD2 gaps-and-islands. Counted in the total,
+# not in r4_comparable_total.
 R5 = [
     "rj1_event_pairs",
     "pack1_sequence_packing",
@@ -94,53 +91,47 @@ R5 = [
     "ev3_scd2_history",
 ]
 
-# Round-6 additions: the heavy round-5-tail families that had no bench row
-# (a regression there would be invisible exactly as d7's was before r5):
-# session-path mining (two windows + two aggregations over all events),
+# Session-path mining (two windows + two aggregations over all events),
 # market-basket self-join pair counting + association rules, the eval-set
-# corpus pipeline, and the sequential EWMA kernel. Counted in the total,
-# not in r4_comparable_total.
+# corpus pipeline, the sequential EWMA kernel and the heavy plan families
+# below. Counted in the total, not in r4_comparable_total.
 R6 = [
     "ev4_top_session_paths",
     "q23_copurchase_pairs",
     "q24_association_rules",
     "pipe5_eval_set",
     "ts6_ewma",
-    # round-6 operators: span-level substring dedup (positional-gram
-    # explode — the heaviest new plan), multi-touch attribution (banded
+    # span-level substring dedup (positional-gram explode), multi-touch
+    # attribution (banded
     # two-frame interval join), CountMin build+merge+probe, incremental
     # fingerprint-store ingest
     "d10_span_dedup",
     "ev6_linear_attribution",
     "ts7_countmin_heavy_hitters",
     "pipe6_incremental_ingest",
-    # batch-8/9 additions: two-pass bucketed global rank, ordinal-join
-    # negative sampling (the two heaviest new plan families)
+    # two-pass bucketed global rank, ordinal-join negative sampling
     "ord1_global_ordinal",
     "emb4_negative_pairs",
-    # batch-12 additions: rank-statistic double join (a18), per-user lead
+    # rank-statistic double join (a18), per-user lead
     # window over all events (ev7), 4-stage curation composition (pipe7)
     "a18_spearman_components",
     "ev7_event_transitions",
     "pipe7_curated_shards",
-    # heavy late additions: cross-source gram containment (distinct-gram
+    # cross-source gram containment (distinct-gram
     # aggregation), count-frame join-cardinality estimate
     "d12_source_overlap_matrix",
     "skew4_join_cardinality",
 ]
 
-# Round-7 additions (r6 verdict #6): the remaining un-benched heavy
-# families — BM25 (corpus-wide dl sums + broadcast term probe), blocked
-# levenshtein self-join (the most likely hidden-cost query in the
-# registry), the full four-way split chain, and the one-pass column
+# BM25 (corpus-wide dl sums + broadcast term probe), blocked levenshtein
+# self-join, the full four-way split chain, and the one-pass column
 # profile. Counted in the total only.
 R7 = [
     "x17_bm25_components",
     "d11_edit_distance_pairs",
     "t13_four_way_carve",
     "p15_profile_columns",
-    # round-7 operators + previously-invisible iterative trainer: the
-    # oracle-exact HLL register rollup, URL-canonicalization dedup, and
+    # the oracle-exact HLL register rollup, URL-canonicalization dedup, and
     # the per-round distributed BPE merge trainer (8 rounds of pair
     # count + argmax + localCheckpoint — the registry's only multi-round
     # iterative text algorithm besides d7)
@@ -155,12 +146,11 @@ R7 = [
     "d4b_simhash_md5_pairs",
 ]
 
-# Round-8 additions (r7 verdict #3/#6 "done" criteria demand bench rows):
-# the batched BPE trainer at the production-merge-count regime (full
-# corpus closure, 90 merges at sf0.1, k=32 disjoint merges/round — the
-# row that proves the multi-round trainer scales past the 8-merge demo),
-# and the incremental ANN probe (batch-vs-persisted-IVF-index cosine
-# maintenance — the embedding twin of pipe8). Counted in the total only.
+# The batched BPE trainer at the production-merge-count regime (full
+# corpus closure, 90 merges at sf0.1, k=32 disjoint merges/round), the
+# incremental ANN probe (batch-vs-persisted-IVF-index cosine maintenance —
+# the embedding twin of pipe8) and the rows below. Counted in the total
+# only.
 R8 = [
     "x16b_bpe_batched",
     "pipe9_incremental_ann",
@@ -177,7 +167,7 @@ R8 = [
     "f14_target_encode",
     # mergeSchema two-generation roundtrip (writes + merged read-back)
     "s17_schema_evolution",
-    # round-8 composition flagship: gopher gate -> exact dedup ->
+    # curation composition: gopher gate -> exact dedup ->
     # token-budget allocation -> integer md5 admit draws
     "pipe10_budget_curation",
     # rolling z-score anomaly over the daily aggregate
@@ -190,9 +180,9 @@ R8 = [
     "t14_rolling_origin",
 ]
 
-# Round-9 additions: the oracled replacement of the rows-only MLlib slot
-# (real frame + exact label + stratified split + integer leaderboard —
-# the split machinery under a computed label gets its own row).
+# The oracled MLlib leaderboard (real frame + exact label + stratified
+# split + integer leaderboard — the split machinery under a computed label
+# gets its own row) and the rows below.
 R9 = [
     "ml1b_validation_leaderboard",
     # exact-substring tile dedup WITH document rewrite (keep-first window
@@ -206,11 +196,11 @@ R9 = [
     "mix3_epoch_expansion",
 ]
 
-# Round-10 additions: the two new oracled composites — the LLaMA-style
-# water-filling allocator (one groupBy to |buckets| rows + the exact
-# integer freeze loop driver-side) and the adaptive ANN router's EXACT
+# The LLaMA-style water-filling allocator (one groupBy to |buckets| rows +
+# the exact integer freeze loop driver-side) and the adaptive ANN router's EXACT
 # mode on the planted-cluster geometry (index build + lossless
-# triangle-inequality probe where pruning provably engages).
+# triangle-inequality probe where pruning provably engages), plus the DSIR
+# selection and curation rows.
 R10 = [
     "mix4_waterfill",
     "mix5_dsir_selection",
@@ -224,14 +214,14 @@ def force(df) -> None:
 
 
 # Below this much MemAvailable at bench start, the OS is still reclaiming a
-# previous heavy JVM's heap (the r10/r11 driver signature: the driver starts
-# bench the instant its ~90 GB sweep JVM exits, which inflated slot-1
-# uniformly ~30-45%) — take ONE extra untimed headline lap so the timed
-# pass measures the engine, not the page-cache churn.
+# previous heavy JVM's heap (a bench started the instant a ~90 GB sweep JVM
+# exits read slot-1 uniformly ~30-45% slow) — take ONE extra untimed
+# headline lap so the timed pass measures the engine, not the page-cache
+# churn.
 SETTLE_MEM_MB = int(os.environ.get("SPARK_GRAFT_SETTLE_MEM_MB", str(48 * 1024)))
-# ... and above this 1-min load average (r12: the driver run had 115 GiB
-# MemAvailable — no settle lap — but load_1m 6.19, and its first pass read
-# ~25% slow; high load is the OTHER face of the same back-to-back-JVM host
+# ... and above this 1-min load average (a run with 115 GiB MemAvailable —
+# no settle lap — but load_1m 6.19 read its first pass ~25% slow; high load
+# is the OTHER face of the same back-to-back-JVM host
 # state, so it should be ABSORBED, not just classified).
 SETTLE_LOAD_1M = float(os.environ.get("SPARK_GRAFT_SETTLE_LOAD_1M", "2.0"))
 
@@ -297,18 +287,18 @@ def main() -> None:
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     for t in ("lineitem", "orders", "customer", "events"):
         load_table(spark, SF_DIR, t).count()
-    # One untimed warm lap over the HEADLINE segment (round-7 verdict #5):
-    # HEADLINE runs first, so its slot-1 min-of-5 was paying the session's
-    # initial C2-compilation slope that every later segment gets for free
-    # (driver r7: headline 10.07 s vs 9.5 s solo). One end-to-end execution
+    # One untimed warm lap over the HEADLINE segment: HEADLINE runs first,
+    # so its slot-1 min-of-5 would pay the session's initial C2-compilation
+    # slope that every later segment gets for free (headline 10.07 s in
+    # situ vs 9.5 s solo). One end-to-end execution
     # per headline query compiles the hot plans before any timing starts —
     # the same session state a production driver reaches after its first
     # request. Measured with alternating 1-lap/2-lap headline-only
     # sessions: a SECOND lap does not move slot-1
     # (10.09/9.91 s one-lap vs 10.56/9.89 s two-lap — inside run noise);
     # the residual ~0.3-0.5 s slot1-vs-warm gap is scheduler/GC noise,
-    # which the *_warm fold already reports honestly. Disclosed in the
-    # JSON "methodology" field: r1-r6 baselines did not have this lap.
+    # which the *_warm fold already reports. Disclosed in the JSON
+    # "methodology" field.
     for name in HEADLINE:
         try:
             force(REGISTRY[name][0](spark, SF_DIR))
@@ -372,12 +362,9 @@ def main() -> None:
         # extra reps so min-of-N reports steady state, not the slope.
         if name == "d4_simhash_pairs":
             reps = 8
-        # d7 adjudication (r6 verdict watch item): isolated min-of-5 at
-        # HEAD is 2.76 s vs 4.16 s for the r5 code measured identically —
-        # the code got FASTER; the r6 in-situ 1.79 -> 2.82 s delta was
-        # rep-convergence slope (reps measured 13.8 -> 4.1 -> 3.3 -> 2.8
-        # -> 2.76, still descending at rep 4 where min-of-4 stopped).
-        # Same remedy as d4: enough reps to report steady state.
+        # d7's reps converge slowly too (13.8 -> 4.1 -> 3.3 -> 2.8 -> 2.76,
+        # still descending at rep 4). Same remedy as d4: enough reps to
+        # report steady state.
         if name == "d7_near_dup_groups":
             reps = 8
         try:
@@ -391,16 +378,15 @@ def main() -> None:
                 t0 = time.perf_counter()
                 force(fn(spark, SF_DIR))
                 rep_times.append(time.perf_counter() - t0)
-                # Cold-honest reps (round 14, r13 verdict #1): operators
-                # that persist() intermediates (minhash/simhash signature
-                # stores — pipe8, d3, d7 family) used to hit rep 1's
-                # CacheManager-materialized frames on reps 2+, so their
-                # min-of-N reported warm-cache cost (~2x flattering for
-                # pipe8). Clear the SQL cache INSIDE the rep loop so every
-                # rep recomputes from parquet. localCheckpoint blocks are
+                # Cold-honest reps: operators that persist() intermediates
+                # (minhash/simhash signature stores — pipe8, d3, d7 family)
+                # would hit rep 1's CacheManager-materialized frames on
+                # reps 2+, so their min-of-N would report warm-cache cost
+                # (~2x flattering for pipe8). Clear the SQL cache INSIDE
+                # the rep loop so every rep recomputes from parquet. localCheckpoint blocks are
                 # NOT affected (RDD-level, rebuilt per call by design).
                 spark.catalog.clearCache()
-            # Convergence guard (round 13): a co-tenant steal burst can
+            # Convergence guard: a co-tenant steal burst can
             # cover ALL N reps of one query and poison its min (measured:
             # a 10-60 s all-core kernel/steal storm read d16's min-of-5
             # as 10.06 s vs a 5 s steady state reproduced minutes later).
@@ -434,7 +420,7 @@ def main() -> None:
             # JVM GC — without a nudge they linger and the heap pressure
             # showed up as 2-4x slowdowns in whatever queries ran last
             spark._jvm.System.gc()
-    # Second pass over HEADLINE at end of run: the r6 soak probe showed q1
+    # Second pass over HEADLINE at end of run: the soak probe showed q1
     # at 0.777 s fully warm vs 1.04 s in slot 1 — the HEADLINE segment runs
     # FIRST, before ~40 queries' worth of C2 compilation has accumulated,
     # so its min-of-5 under-reports steady state by ~25%. Re-run each
@@ -455,8 +441,8 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             # the query DID complete in pass 1 (its timing stands); a
             # failed warm re-run must not also mark it failed — that
-            # would double-count it in both queries and errors (round-7
-            # review finding). Non-fatal: note on stderr only.
+            # would double-count it in both queries and errors.
+            # Non-fatal: note on stderr only.
             print(
                 f"[bench] second-pass re-run of {name} failed "
                 f"({type(exc).__name__}); keeping pass-1 timing",
@@ -468,7 +454,7 @@ def main() -> None:
     # headline query after the full sweep; if it is >2x its own slot-1 time
     # the session has accumulated state (code-cache exhaustion, cleaner
     # backlog, old-gen pressure) and the bench flags it rather than letting
-    # late-slot queries silently absorb the penalty (r5 shipped d4 at 4.78 s
+    # late-slot queries silently absorb the penalty (d4 once read 4.78 s
     # in situ vs 0.66 s isolated for exactly this reason).
     # min-of-3, NOT single-shot: rep 0 of any query carries one-time plan
     # analysis/codegen cost (~1.7 s vs 0.95 s steady for q1), so a
@@ -508,10 +494,10 @@ def main() -> None:
         print(f"[jvm-pool] unavailable: {exc}", file=sys.stderr)
     total = round(sum(timings.values()), 3)
 
-    # The r1-r6 baselines were measured WITHOUT the end-of-run warm pass,
-    # so the *_comparable_totals must use the FIRST-PASS headline numbers
-    # (slot1) or the round-over-round delta would mix a methodology
-    # change into the code-change signal (round-7 review finding). The
+    # The *_comparable_totals' baselines were measured WITHOUT the
+    # end-of-run warm pass, so they use the FIRST-PASS headline numbers
+    # (slot1) or the delta would mix a methodology change into the
+    # code-change signal. The
     # warm-folded totals are reported separately as *_warm — the
     # steady-state view a long-lived production driver would see.
     def seg(names, first_pass):
@@ -536,15 +522,12 @@ def main() -> None:
         "r4_comparable_warm": seg(HEADLINE, False),
         "r5_comparable_warm": seg(HEADLINE + HEAVY + R5, False),
         "r6_comparable_warm": seg(HEADLINE + HEAVY + R5 + R6, False),
-        # Per-query slot-1 minima for the headline segment (round-8
-        # verdict #2: the r4-comparable first-pass moved 10.07 -> 11.30 s
-        # in the driver session while the warm fold and solo runs both
-        # beat the target — publishing the per-query slot-1 numbers lets
-        # any reader attribute a future slot-1 delta to the specific
+        # Per-query slot-1 minima for the headline segment: they let any
+        # reader attribute a slot-1 delta to the specific
         # queries whose first-pass JIT/session state inflated, instead of
         # guessing from the segment sum).
         "headline_slot1": slot1,
-        # Honest-comparison disclosure (round-7 ADVICE): the session conf
+        # Honest-comparison disclosure: the session conf
         # and warm-up methodology have CHANGED since the rounds the
         # *_comparable_totals are named after, so those deltas mix harness
         # changes into the code-change signal. Changes: round 7 re-tuned
@@ -560,26 +543,26 @@ def main() -> None:
             },
             "headline_warm_lap_since_round": 8,
             "machine_state_markers_since_round": 12,
-            # round 13: settle lap also fires on high start load (the r12
-            # driver run had plenty of memory but load_1m 6.19 — the same
-            # host state, now absorbed instead of merely classified)
+            # the settle lap also fires on high start load (plenty of
+            # memory but load_1m 6.19 is the same host state, absorbed
+            # instead of merely classified)
             "settle_on_load_since_round": 13,
-            # round 13 (optimization): up to 3 extra reps per query while
+            # up to 3 extra reps per query while
             # the two best reps disagree by >25% — min-of-N is only
             # reported once a second rep corroborates the best, so a
             # co-tenant steal burst covering one query's whole rep window
             # can't poison its row (measured: d16 min-of-5 read 10.06 s
             # under a storm vs 5 s steady state minutes later). Still a
-            # min over full end-to-end executions; no old number removed.
+            # min over full end-to-end executions.
             "rep_convergence_guard_since_round": 13,
-            # round 14 (r13 verdict #1): spark.catalog.clearCache() runs
-            # INSIDE the rep loop, so persist()-ing operators (pipe8, d7,
-            # d3 signature stores) report per-call COLD cost — their rows
-            # rise vs r13 by construction, not by regression (r13's
-            # pipe8 1.45 s was measured warm; its cold cost was ~3.3 s).
+            # spark.catalog.clearCache() runs INSIDE the rep loop, so
+            # persist()-ing operators (pipe8, d7, d3 signature stores)
+            # report per-call COLD cost — their rows rose at that round by
+            # construction, not by regression (pipe8 1.45 s warm vs ~3.3 s
+            # cold).
             "cold_reps_since_round": 14,
         },
-        # Round-12 self-attribution markers (verdict #3): classify slot-1
+        # Self-attribution markers: classify slot-1
         # drift from the artifact alone — low mem_available_mb at start +
         # high load = the back-to-back-JVM signature, not a code change.
         "machine_state": {
@@ -596,9 +579,8 @@ def main() -> None:
     if errors:
         out["errors"] = errors
     line = json.dumps(out)
-    # Loss-proof artifact (r13 verdict #1b): BENCH_r12's stdout tail was
-    # truncated mid-JSON by the capture layer, blinding the round-over-round
-    # comparison (PERF_r13 n_common=0). Write the same line to a file FIRST,
+    # Loss-proof artifact: a stdout tail truncated mid-JSON by a capture
+    # layer leaves no comparable numbers. Write the same line to a file FIRST,
     # then print it — stdout remains the contract, the file is the backup.
     try:
         with open(

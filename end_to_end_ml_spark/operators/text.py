@@ -194,6 +194,14 @@ def fingerprint_column(text_col):
     return F.md5(F.lower(F.regexp_replace(F.trim(t), r"\s+", " ")))
 
 
+def prefix_fingerprint_column(text_col):
+    """md5 of the first 8 whitespace tokens — the boilerplate-header key of
+    the incremental ingest and curation (pipe6, pipe11, the streaming
+    dedup sink). Whole-doc md5 is vacuous on the synthetic corpus; a
+    16-byte prefix fp is all a history store ever ships."""
+    return F.md5(F.concat_ws(" ", F.slice(tokens(text_col), 1, 8)))
+
+
 def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Content fingerprint after whitespace/case normalization — the
     standard near-exact-dup key (md5 so any engine can reproduce it)."""

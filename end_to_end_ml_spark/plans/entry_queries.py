@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 import os
 
 from ..functions import metrics as M
-from ..operators import dedup, multimodal, pit, prep, similarity, split, text
+from ..operators import curate, dedup, multimodal, pit, prep, similarity, split, text
 from ..plans import relational as R
 from ..sources import io
 from ..sources import load_table
@@ -5184,9 +5184,7 @@ def pipe6_incremental_ingest(spark, sf_dir):
     broadcast when the batch is small or a co-partitioned equi-join when
     it is not."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.concat_ws(" ", F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 8))
-    )
+    fp = text.prefix_fingerprint_column("text")
     hist = docs.filter(F.col("doc_id") % 4 != 0).select(fp.alias("fp")).distinct()
     batch = docs.filter(F.col("doc_id") % 4 == 0).select(
         "doc_id", "lang", "n_chars", fp.alias("fp")
@@ -7606,21 +7604,8 @@ def pipe10_budget_curation(spark, sf_dir):
     fingerprint window shuffle, which a re-evaluation would repeat
     (measured r13: the q23/mix4 pattern)."""
     docs = load_table(spark, sf_dir, "documents")
-    feat = docs.select(
-        "doc_id",
-        "source",
-        text.fingerprint_column("text").alias("fp"),
-        *text.gopher_evidence_columns("text"),
-    ).select("*", *text.gopher_rule_columns())
-    # keep-min-id via row_number()==1, not min(doc_id)+equality: the rank-1
-    # limit pushes below the exchange (InferWindowGroupLimit), so a
-    # mass-duplicated fingerprint ships <= one row per map partition
-    # instead of funneling every copy through one hot window partition
-    w_fp = Window.partitionBy("fp").orderBy("doc_id")
     surv = (
-        feat.filter(F.col("keep"))
-        .withColumn("__rn", F.row_number().over(w_fp))
-        .filter(F.col("__rn") == 1)
+        curate.gated_keepers(docs, text.fingerprint_column("text"))
         .select("doc_id", "source", "n_words")
         # surv is 3 narrow columns/doc but its lineage re-runs the gopher
         # feature extraction + the fingerprint window shuffle; it is
@@ -7629,25 +7614,8 @@ def pipe10_budget_curation(spark, sf_dir):
         # draw pass reads checkpointed rows (q23/mix4 pattern).
         .localCheckpoint(eager=False)
     )
-    rates = split.token_budget_allocation(
-        surv, "source", "n_words", budget_tokens=50_000, max_epochs_x1024=1024
-    ).select("source", F.col("epochs_ppm").alias("admit_ppm"))
-    draw = F.expr(
-        "CAST(conv(substring(md5(concat_ws('|', 'bud1',"
-        " CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
-        " * 1000000 < CAST(admit_ppm AS DECIMAL(38,0)) * 281474976710656"
-    )
-    return (
-        surv.join(F.broadcast(rates), "source")
-        .filter(draw)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("n_words").cast("long").alias("n_tokens_kept"),
-            F.min("admit_ppm").cast("long").alias("admit_ppm"),
-        )
-        .orderBy("source")
-    )
+    admitted, _ = curate.budget_admit(surv, 50_000, "bud1")
+    return curate.admit_stats(admitted)
 
 
 PIPE10_SQL = r"""
@@ -7875,25 +7843,13 @@ def pipe11_incremental_curation(spark, sf_dir):
     is never re-curated. Composition of oracled primitives (x22 + pipe6 +
     mix2 + pipe10's draw), so the chain is fully oracled."""
     docs = load_table(spark, sf_dir, "documents")
-    fp = F.md5(
-        F.concat_ws(" ", F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 8))
-    )
+    fp = text.prefix_fingerprint_column("text")
     hist = docs.filter(F.col("doc_id") % 4 != 0).select(fp.alias("fp")).distinct()
-    feat = (
-        docs.filter(F.col("doc_id") % 4 == 0)
-        .select(
-            "doc_id",
-            "source",
-            fp.alias("fp"),
-            *text.gopher_evidence_columns("text"),
-        )
-        .select("*", *text.gopher_rule_columns())
+    batch = docs.filter(
+        (F.col("doc_id") % 4 == 0) & F.col("source").isNotNull()
     )
-    w_fp = Window.partitionBy("fp").orderBy("doc_id")
     surv = (
-        feat.filter(F.col("keep") & F.col("source").isNotNull())
-        .withColumn("__rn", F.row_number().over(w_fp))
-        .filter(F.col("__rn") == 1)
+        curate.gated_keepers(batch, fp)
         .join(hist, "fp", "left_anti")
         .select("doc_id", "source", "n_words")
         # same double-consumption as pipe10, and here the lineage ALSO
@@ -7901,25 +7857,8 @@ def pipe11_incremental_curation(spark, sf_dir):
         # the checkpoint the full history scan ran twice per query
         .localCheckpoint(eager=False)
     )
-    rates = split.token_budget_allocation(
-        surv, "source", "n_words", budget_tokens=3000, max_epochs_x1024=1024
-    ).select("source", F.col("epochs_ppm").alias("admit_ppm"))
-    draw = F.expr(
-        "CAST(conv(substring(md5(concat_ws('|', 'bud2',"
-        " CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
-        " * 1000000 < CAST(admit_ppm AS DECIMAL(38,0)) * 281474976710656"
-    )
-    return (
-        surv.join(F.broadcast(rates), "source")
-        .filter(draw)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("n_words").cast("long").alias("n_tokens_kept"),
-            F.min("admit_ppm").cast("long").alias("admit_ppm"),
-        )
-        .orderBy("source")
-    )
+    admitted, _ = curate.budget_admit(surv, 3000, "bud2")
+    return curate.admit_stats(admitted)
 
 
 PIPE11_SQL = r"""
@@ -8196,13 +8135,6 @@ ORDER BY g.len_bucket
 REGISTRY["mix4_waterfill"] = (mix4_waterfill, MIX4_SQL)
 
 
-# Curated "target" sources for DSIR selection — the distribution we want
-# more of (DSIR's canonical use: select web data resembling Wikipedia +
-# books; here the first four synthetic sources stand in for the curated
-# set, chosen before looking at any content).
-_DSIR_TARGET_SOURCES = ("src0", "src1", "src2", "src3")
-
-
 def mix5_dsir_selection(spark, sf_dir):
     """DSIR data selection (Xie et al., NeurIPS 2023) — the mixture
     family's importance-resampling member: score every document in the
@@ -8231,7 +8163,7 @@ def mix5_dsir_selection(spark, sf_dir):
     from ..operators import text
 
     docs = load_table(spark, sf_dir, "documents")
-    is_target = F.col("source").isin(*_DSIR_TARGET_SOURCES)
+    is_target = F.col("source").isin(*curate.DSIR_TARGET_SOURCES)
     weights = text.dsir_bucket_weights_from_flag(docs, is_target, "text")
     return (
         text.dsir_scores(
@@ -8246,7 +8178,7 @@ def mix5_dsir_selection(spark, sf_dir):
     )
 
 
-_DSIR_TGT_SQL = "('src0', 'src1', 'src2', 'src3')"
+_DSIR_TGT_SQL = str(curate.DSIR_TARGET_SOURCES)
 
 MIX5_SQL = f"""
 WITH tk AS (
@@ -8342,25 +8274,15 @@ def pipe13_dsir_curation(spark, sf_dir):
     from ..operators import text as TX
 
     docs = load_table(spark, sf_dir, "documents")
-    feat = docs.select(
-        "doc_id",
-        "source",
-        "text",
-        text.fingerprint_column("text").alias("fp"),
-        *text.gopher_evidence_columns("text"),
-    ).select("*", *text.gopher_rule_columns())
-    # row_number()==1 keeper (InferWindowGroupLimit pushdown — the NULL-
-    # source filter stays AFTER the window exactly as before: the rank-1
-    # row IS the min-doc_id keeper, and only then is its source checked)
-    w_fp = Window.partitionBy("fp").orderBy("doc_id")
+    # the NULL-source filter runs AFTER the keeper window: the rank-1 row
+    # IS the min-doc_id keeper, and only then is its source checked
     surv = (
-        feat.filter(F.col("keep"))
-        .withColumn("__rn", F.row_number().over(w_fp))
-        .filter((F.col("__rn") == 1) & F.col("source").isNotNull())
+        curate.gated_keepers(docs, text.fingerprint_column("text"))
+        .filter(F.col("source").isNotNull())
         .select("doc_id", "source", "text", "n_words")
         .localCheckpoint(eager=False)
     )
-    is_target = F.col("source").isin(*_DSIR_TARGET_SOURCES)
+    is_target = F.col("source").isin(*curate.DSIR_TARGET_SOURCES)
     weights = TX.dsir_bucket_weights_from_flag(surv, is_target, "text")
     scored = TX.dsir_scores(
         surv.filter(~is_target),
@@ -8392,26 +8314,8 @@ def pipe13_dsir_curation(spark, sf_dir):
         .unionByName(sel)
         .localCheckpoint(eager=False)
     )
-    rates = split.token_budget_allocation(
-        admitted_pop, "source", "n_words", budget_tokens=5_000,
-        max_epochs_x1024=1024,
-    ).select("source", F.col("epochs_ppm").alias("admit_ppm"))
-    draw = F.expr(
-        "CAST(conv(substring(md5(concat_ws('|', 'bud1',"
-        " CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
-        " * 1000000 < CAST(admit_ppm AS DECIMAL(38,0)) * 281474976710656"
-    )
-    return (
-        admitted_pop.join(F.broadcast(rates), "source")
-        .filter(draw)
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("n_words").cast("long").alias("n_tokens_kept"),
-            F.min("admit_ppm").cast("long").alias("admit_ppm"),
-        )
-        .orderBy("source")
-    )
+    admitted, _ = curate.budget_admit(admitted_pop, 5_000, "bud1")
+    return curate.admit_stats(admitted)
 
 
 PIPE13_SQL = rf"""
@@ -8520,7 +8424,7 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # round-8 verdict asked for a deterministic rotation policy that bounds
 # every oracled query's driver-exposure latency; it lives in
 # tools/pick_window.py and this list is its verbatim output for
-# `--round 14` (re-run the tool to audit). Policy: (1) queries red in the
+# `--round 15` (re-run the tool to audit). Policy: (1) queries red in the
 # latest committed CORRECTNESS artifact are forced in until proven green
 # (none this round); (2) never-driver-exposed queries UNCONDITIONALLY,
 # newest registration round first (DRIVER_LEDGER.json) — round-9
@@ -8530,13 +8434,12 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # a round later; (3) previously-exposed fill by (exposure count, last
 # exposed round) with a best-effort family-coverage guard — ties broken
 # by md5(f"r{N}:{name}") so no name starves behind a fixed order.
-# Round-14 pick: 0 first exposures / 50 — pure RE-CHECK ROTATION
-# (no new registrations carried in; r10's four first exposures all went
-# driver-green, so policy #2 has an empty queue).
+# Round-15 pick: 0 first exposures / 50 — pure RE-CHECK ROTATION
+# (no new registrations carried in, so policy #2 has an empty queue).
 # As of CORRECTNESS_r09 every oracled registry query has at least one
 # green driver row, so windows are now pure least-exposed-first
 # re-checks: fill order (exposure count, last exposed round), ties
-# broken by md5(f"r14:{name}"), with the best-effort family guard.
+# broken by md5(f"r15:{name}"), with the best-effort family guard.
 # All registry entries remain locally verified via tools/check_oracle.py
 # (full-registry + full-window-at-sf0.1 results committed as
 # CHECK_ORACLE_LOCAL_r13.json / CHECK_ORACLE_SF01_WINDOW_r13.json);
@@ -8545,55 +8448,55 @@ REGISTRY["pipe13_dsir_curation"] = (pipe13_dsir_curation, PIPE13_SQL)
 # ---------------------------------------------------------------------------
 
 DRIVER_WINDOW = [
-    "d10_span_dedup",
-    "pipe6_incremental_ingest",
-    "t10_fixed_count_sample",
-    "ev6_linear_attribution",
-    "ev2_retention_cohorts",
-    "fn_array_suite",
-    "t13_four_way_carve",
-    "ts8_weekly_profile",
-    "x5_repetition_scores",
-    "ev4_top_session_paths",
-    "d12_source_overlap_matrix",
-    "dq1_expectations",
-    "a18_spearman_components",
-    "q7_volume_shipping",
-    "a11_champion_leaderboard",
-    "ev1_funnel_conversion",
-    "ev8_time_to_conversion",
-    "x17_bm25_components",
-    "a15_drift_bins",
-    "f11_quantile_uniform",
-    "t9_weighted_sample",
-    "dq3_referential_integrity",
-    "ts7_countmin_heavy_hitters",
-    "mix1_temperature_sample",
-    "pipe5_eval_set",
-    "s9_online_export",
-    "ts2_gap_fill",
-    "pipe7_curated_shards",
-    "f8_label_index",
-    "q24_association_rules",
-    "pipe10_budget_curation",
-    "ts4b_hll_registers",
-    "pipe8_incremental_near_dup",
-    "set1_repeat_customers",
-    "emb5_cosine_histogram",
-    "mm3_resize_payloads",
-    "agg_grouping_sets",
-    "p9_recode_status",
-    "skew1_salted_join_agg",
-    "pack3_shard_shuffle",
-    "w7_pivot_matrix",
-    "j5_customers_without_orders",
-    "sim1b_topk_sharded",
+    "t12_replicated_sample",
+    "ts11_quantile_sketch",
+    "x12_dup_ngram_fraction",
+    "x22_gopher_filters",
+    "a3_imbalance_ratio",
+    "s10_merge_upsert",
+    "dq5_id_gap_audit",
+    "ev7_event_transitions",
+    "ts10_rolling_zscore",
+    "ev10_stickiness",
+    "s17_schema_evolution",
+    "d4b_simhash_md5_pairs",
+    "x6_pii_scrub",
+    "ev9_attribution_models",
+    "d16_prefix_filter_jaccard",
+    "q15_top_supplier",
+    "d13_url_canonical_dupes",
+    "q12_late_shipments",
+    "x20_length_quantiles",
+    "fn_grouped_agg_wmean",
+    "q16_supplier_counts",
+    "d11_edit_distance_pairs",
+    "f3_cat_impute",
+    "s16_csv_roundtrip",
+    "f14_target_encode",
+    "t14_rolling_origin",
+    "pipe9_incremental_ann",
+    "mix2_token_budget",
+    "q11_important_parts",
+    "emb2_label_centroids",
+    "fn_window_suite",
+    "t9b_replicated_sample",
+    "x15_charset_audit",
+    "a17_corr_components",
+    "set3_union_targets",
+    "mm4_payload_dup_groups",
+    "agg_pivot_event_matrix",
+    "skew4_join_cardinality",
+    "p7_enforce_types",
+    "pack2_bin_summary",
+    "w1_top_parts",
+    "j2_split_overlap",
+    "sim1_topk_bruteforce",
     "prof1_column_profile",
     "ml1b_validation_leaderboard",
+    "m8q_threshold_sweep_quantized",
     "ord1_global_ordinal",
     "h7_asha_schedule",
-    "m8_threshold_sweep",
-    "st_sessionize",
+    "st_hourly_window",
     "rj1_event_pairs",
 ]
 

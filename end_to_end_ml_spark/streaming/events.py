@@ -581,14 +581,11 @@ def stream_dedup_ingest(
     hence the contract above, not just the guard."""
     import os
 
+    from ..operators.text import prefix_fingerprint_column
+
     def sink(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
-        fp = F.md5(
-            F.concat_ws(
-                " ", F.slice(F.split(F.trim(F.col(text_col)), r"\s+"), 1, 8)
-            )
-        )
-        batch = batch_df.withColumn("__fp", fp)
+        batch = batch_df.withColumn("__fp", prefix_fingerprint_column(text_col))
         w = Window.partitionBy("__fp").orderBy(id_col)
         within = (
             batch.withColumn("__rn", F.row_number().over(w))

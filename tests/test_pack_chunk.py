@@ -624,7 +624,7 @@ def test_curation_multi_epoch_invariants(spark, tmp_path):
     from collections import Counter
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from run_curation_pipeline import fingerprint_expr, run_epochs
+    from run_curation_pipeline import run_epochs
 
     from end_to_end_ml_spark.operators import text
     from end_to_end_ml_spark.sources import load_table
@@ -638,7 +638,9 @@ def test_curation_multi_epoch_invariants(spark, tmp_path):
     docs = load_table(spark, sf, "documents")
     fp_by_id = {
         r["doc_id"]: r["fp"]
-        for r in docs.select("doc_id", fingerprint_expr().alias("fp")).collect()
+        for r in docs.select(
+            "doc_id", text.prefix_fingerprint_column("text").alias("fp")
+        ).collect()
     }
     epoch_rows = [c.collect() for c, _ in per_epoch]
     assert any(len(rows) > 0 for rows in epoch_rows)
@@ -672,7 +674,7 @@ def test_curation_multi_epoch_invariants(spark, tmp_path):
         r["fp"]
         for r in docs.select(
             "source",
-            fingerprint_expr().alias("fp"),
+            text.prefix_fingerprint_column("text").alias("fp"),
             *text.gopher_evidence_columns("text"),
         )
         .select("source", "fp", *text.gopher_rule_columns())
@@ -861,52 +863,58 @@ def test_curation_cli_incremental_dsir_runs(spark, tmp_path, monkeypatch):
 
 
 def test_curation_epoch_dsir_parity_with_full_mode(spark):
-    """round-10 verdict #4 'done' criterion — stats parity vs full mode
-    on a single epoch: curate_epoch over the WHOLE corpus as one batch,
-    with the full-text fingerprint and the full-mode draw salt, must
-    reproduce curate(dsir_frac=0.5)'s per-source stats EXACTLY (same
-    gate, same keeper, merged counts over an empty store == the
-    single-scan flag weights, same k over the scored frame, same
-    draws). The fingerprint/draw_salt knobs exist precisely so this
-    parity is by construction, not gate-dependent."""
+    """The epoch path and full mode share one DSIR stage
+    (operators/curate.dsir_top_fraction); what differs is only where the
+    weights come from. Over one survivor frame (curate_epoch's own
+    survivors of the whole corpus as one batch), weights from merged
+    counts over an EMPTY store must select exactly the docs the
+    full-mode single-scan flag weights select (merging into an empty
+    store is the identity); and the counts curate_epoch returns ARE the
+    flag counts of its survivors, replayed independently."""
     import os
     import sys
 
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from run_curation_pipeline import curate, curate_epoch
+    from run_curation_pipeline import curate_epoch
 
-    from end_to_end_ml_spark.operators import text
+    from end_to_end_ml_spark.operators import curate, text
     from end_to_end_ml_spark.sources import load_table
 
+    from pyspark.sql import Window, functions as F
+
     sf = "/root/testdata/sf0.001"
-    _, full_stats = curate(spark, sf, budget_tokens=5_000, dsir_frac=0.5)
     docs = load_table(spark, sf, "documents")
-    _, epoch_stats, _, counts = curate_epoch(
+    persisted: list = []
+    _, _, _, counts, surv = curate_epoch(
         spark,
         docs,
         None,
         budget_tokens=5_000,
-        draw_salt="bud1",
-        fingerprint=text.fingerprint_column("text"),
         dsir_frac=0.5,
+        persisted_out=persisted,
     )
-    key = lambda rows: {  # noqa: E731
-        r["source"]: (r["n_docs_kept"], r["n_tokens_kept"], int(r["admit_ppm"]))
-        for r in rows
-    }
-    assert key(epoch_stats.collect()) == key(full_stats.collect())
-    # the returned counts ARE the survivor flag counts (merging into an
-    # empty store is the identity) — replayed with curate_epoch's own
-    # survivor semantics (keep + non-NULL source BEFORE the keeper
-    # window, row_number keep-first)
-    from run_curation_pipeline import DSIR_TARGET_SOURCES
-
-    from pyspark.sql import Window, functions as F
-
+    is_target = F.col("source").isin(*curate.DSIR_TARGET_SOURCES)
+    merged = text.dsir_weights_from_counts(
+        text.dsir_merge_counts(
+            None, text.dsir_bucket_counts_from_flag(surv, is_target, "text")
+        )
+    )
+    flag = text.dsir_bucket_weights_from_flag(surv, is_target, "text")
+    picks = []
+    for weights in (merged, flag):
+        selected, owned = curate.dsir_top_fraction(surv, weights, 0.5)
+        picks.append(sorted(r["doc_id"] for r in selected.collect()))
+        persisted += owned
+    assert picks[0] == picks[1]
+    n_pool = surv.filter(~is_target).count()
+    assert 0 < len(picks[0]) - surv.filter(is_target).count() < n_pool
+    # the returned counts ARE the survivor flag counts — replayed with
+    # curate_epoch's survivor semantics (keep + non-NULL source BEFORE
+    # the keeper window, row_number keep-first on the prefix-8 fp)
     surv_replay = (
         docs.select(
             "doc_id", "source", "text",
-            text.fingerprint_column("text").alias("fp"),
+            text.prefix_fingerprint_column("text").alias("fp"),
             *text.gopher_evidence_columns("text"),
         )
         .select("*", *text.gopher_rule_columns())
@@ -918,11 +926,13 @@ def test_curation_epoch_dsir_parity_with_full_mode(spark):
         .filter(F.col("__rn") == 1)
     )
     flag_counts = text.dsir_bucket_counts_from_flag(
-        surv_replay, F.col("source").isin(*DSIR_TARGET_SOURCES), "text"
+        surv_replay, is_target, "text"
     )
     got = sorted(map(tuple, counts.collect()))
     want = sorted(map(tuple, flag_counts.collect()))
     assert got == want
+    for f in persisted:
+        f.unpersist()
 
 
 def test_pipe13_matches_runner_dsir_mode(spark):
@@ -979,7 +989,6 @@ def test_curation_multi_epoch_dsir_invariants(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     from run_curation_pipeline import (
         DSIR_TARGET_SOURCES,
-        fingerprint_expr,
         run_epochs,
     )
 
@@ -1006,7 +1015,7 @@ def test_curation_multi_epoch_dsir_invariants(spark, tmp_path):
             docs.filter(F.col("doc_id") % 3 == e)
             .select(
                 "doc_id", "source", "text",
-                fingerprint_expr().alias("fp"),
+                text.prefix_fingerprint_column("text").alias("fp"),
                 *text.gopher_evidence_columns("text"),
             )
             .select("*", *text.gopher_rule_columns())
@@ -1063,7 +1072,9 @@ def test_curation_multi_epoch_dsir_invariants(spark, tmp_path):
     # (4) base cross-epoch invariants under DSIR
     fp_by_id = {
         r["doc_id"]: r["fp"]
-        for r in docs.select("doc_id", fingerprint_expr().alias("fp")).collect()
+        for r in docs.select(
+            "doc_id", text.prefix_fingerprint_column("text").alias("fp")
+        ).collect()
     }
     all_fps = [fp_by_id[r["doc_id"]] for rows in epoch_rows for r in rows]
     assert [f for f, n in Counter(all_fps).items() if n > 1] == []
@@ -1109,7 +1120,6 @@ def test_operational_loop_composes_four_systems(spark, tmp_path):
     sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
     from run_curation_pipeline import (
         DSIR_TARGET_SOURCES,
-        fingerprint_expr,
         run_operational_loop,
     )
 
@@ -1143,7 +1153,7 @@ def test_operational_loop_composes_four_systems(spark, tmp_path):
             docs.filter(F.col("doc_id") % 3 == e)
             .select(
                 "doc_id", "source", "text",
-                fingerprint_expr().alias("fp"),
+                text.prefix_fingerprint_column("text").alias("fp"),
                 *text.gopher_evidence_columns("text"),
             )
             .select("*", *text.gopher_rule_columns())
@@ -1186,7 +1196,9 @@ def test_operational_loop_composes_four_systems(spark, tmp_path):
     assert any(rows for rows in curated_rows)
     fp_by_id = {
         r["doc_id"]: r["fp"]
-        for r in docs.select("doc_id", fingerprint_expr().alias("fp")).collect()
+        for r in docs.select(
+            "doc_id", text.prefix_fingerprint_column("text").alias("fp")
+        ).collect()
     }
     all_fps = [fp_by_id[r["doc_id"]] for rows in curated_rows for r in rows]
     assert [f for f, n in Counter(all_fps).items() if n > 1] == []

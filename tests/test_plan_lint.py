@@ -464,23 +464,92 @@ def test_tools_do_not_patch_engine_internals():
 def test_materialization_has_one_owner():
     """Caching is a policy with one owner: end_to_end_ml_spark/materialize.py
     decides scale checkpoints and owns every engine persist (with the
-    already-cached guard and its ownership flag). No other engine module
-    may call ``.persist(``/``.cache()`` directly or keep a private copy of
-    the scale decision or the guard."""
+    already-cached guard and its ownership flag). No other engine module,
+    and no tool driving the engine, may call ``.persist(``/``.cache()``
+    directly or keep a private copy of the scale decision or the guard."""
     import re
     from pathlib import Path
 
-    pkg = Path(__file__).resolve().parent.parent / "end_to_end_ml_spark"
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "end_to_end_ml_spark"
     pattern = re.compile(
-        r"\.persist\(|\.cache\(\)|\b_scale_materialize\b|\b_persist(_owned)?\b"
+        r"(?<!\bmaterialize)\.persist\(|\.cache\(\)|\b_scale_materialize\b"
+        r"|\b_persist(_owned)?\b"
     )
     offenders = [
-        f"{py.relative_to(pkg.parent)}:{i}: {line.strip()}"
-        for py in sorted(pkg.rglob("*.py"))
+        f"{py.relative_to(root)}:{i}: {line.strip()}"
+        for py in [*sorted(pkg.rglob("*.py")), *sorted((root / "tools").glob("*.py"))]
         if py != pkg / "materialize.py"
         for i, line in enumerate(py.read_text().splitlines(), 1)
         if pattern.search(line)
     ]
+    assert not offenders, offenders
+
+
+def test_curation_chain_has_one_definition():
+    """The curation chain's decisions live in operators/curate.py (and the
+    fingerprint/gate columns in operators/text.py): no other engine
+    module or tool may call the Gopher gate column builders, build the
+    integer admit draw, build the prefix-8 token slice, or spell out the
+    DSIR target-source list. The DuckDB oracle strings (``*_SQL``) are
+    the independent reference and exempt."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "end_to_end_ml_spark"
+    owners = {pkg / "operators" / "text.py", pkg / "operators" / "curate.py"}
+    targets = ["src0", "src1", "src2", "src3"]
+
+    def name(node):
+        f = node.func if isinstance(node, ast.Call) else None
+        return getattr(f, "attr", None) or getattr(f, "id", None)
+
+    def consts(nodes):
+        return [n.value for n in nodes if isinstance(n, ast.Constant)]
+
+    offenders = []
+    for py in [*sorted(pkg.rglob("*.py")), *sorted((root / "tools").glob("*.py"))]:
+        if py in owners:
+            continue
+        tree = ast.parse(py.read_text())
+        oracle = {
+            id(sub)
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Assign)
+            and any(
+                isinstance(t, ast.Name) and t.id.endswith("_SQL")
+                for t in node.targets
+            )
+            for sub in ast.walk(node.value)
+        }
+        for node in ast.walk(tree):
+            if id(node) in oracle:
+                continue
+            hit = (
+                name(node) in ("gopher_evidence_columns", "gopher_rule_columns")
+                or (
+                    name(node) == "slice"
+                    and node.args
+                    and name(node.args[0]) == "split"
+                    and node.args[0].args
+                    and name(node.args[0].args[0]) == "trim"
+                )
+                or (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "concat_ws('|', 'bud" in node.value
+                )
+                or (
+                    isinstance(node, (ast.Tuple, ast.List))
+                    and consts(node.elts) == targets
+                )
+                or (isinstance(node, ast.Call) and consts(node.args) == targets)
+            )
+            if hit:
+                offenders.append(
+                    f"{py.relative_to(root)}:{node.lineno}: {ast.unparse(node)[:60]}"
+                )
     assert not offenders, offenders
 
 

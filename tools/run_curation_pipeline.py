@@ -3,14 +3,20 @@ tools/run_pipeline.py: run the pipe10 budget-curation chain over the
 documents table and MATERIALIZE the result the way a pretraining job
 consumes it (curated parquet shards + a stats JSON sidecar).
 
-Stages (each a library operator, composed into few jobs):
-  1. quality gate      — Gopher integer rules (operators/text)
-  2. exact dedup       — normalized-fingerprint keep-min-id
-  3. budget allocation — temperature-weighted token budget per source
-                         (operators/split.token_budget_allocation)
-  4. admit draws       — integer md5 cross-multiplication per doc
-  5. shard + write     — deterministic md5 shard shuffle (operators/pack)
-                         partitioned parquet + stats JSON
+The chain's stages come from end_to_end_ml_spark/operators/curate.py,
+the same definitions the pipe10/pipe11/pipe13 registry rows compose:
+  1. quality gate + exact dedup — curate.gated_keepers (Gopher integer
+                                  rules, keep-first per fingerprint)
+  2. DSIR selection (optional)  — curate.dsir_top_fraction
+  3. budget admission           — curate.budget_admit (temperature-
+                                  weighted token budget per source +
+                                  integer md5 admit draws)
+  4. shard + write              — deterministic md5 shard shuffle
+                                  (operators/pack), partitioned parquet
+                                  + stats JSON
+This module keeps what only the runner does: where its survivor frames
+are persisted (through end_to_end_ml_spark/materialize.persist), the
+epoch loops and their versioned stores, and the shard/stats outputs.
 
 Usage: python tools/run_curation_pipeline.py [sf_dir] [out_dir] [budget]
        python tools/run_curation_pipeline.py [sf_dir] [out_dir] [budget] --incremental
@@ -26,7 +32,7 @@ survivor-scan trade the declarative pipe10/pipe11 query forms document.
 --dsir-frac composes with both modes: full-mode scores the pool against
 the whole survivor frame; incremental/epoch mode scores the nightly
 batch against bucket counts that already reflect history via the
-mergeable (bucket, t_count, r_count) store (round-10 verdict #4).
+mergeable (bucket, t_count, r_count) store.
 """
 
 from __future__ import annotations
@@ -37,17 +43,32 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from end_to_end_ml_spark.operators import pack, split, text  # noqa: E402
+from end_to_end_ml_spark import materialize  # noqa: E402
+from end_to_end_ml_spark.operators import curate as C  # noqa: E402
+from end_to_end_ml_spark.operators import pack, text  # noqa: E402
+from end_to_end_ml_spark.operators.curate import DSIR_TARGET_SOURCES  # noqa: E402
 from end_to_end_ml_spark.session import get_spark  # noqa: E402
 from end_to_end_ml_spark.sources import load_table  # noqa: E402
 
 
-#: Curated "target" sources for the optional DSIR stage — must match
-#: plans/entry_queries._DSIR_TARGET_SOURCES (the oracled mix5 row).
-DSIR_TARGET_SOURCES = ("src0", "src1", "src2", "src3")
+def _shards_and_stats(admitted, rates, n_shards: int, salt: str):
+    """(curated, stats): the admitted docs in md5 shard order, and the
+    per-source kept doc/token counts joined to the allocation table."""
+    curated = pack.shard_shuffle(
+        admitted, "doc_id", n_shards=n_shards, salt=salt
+    ).select("shard", "pos", "doc_id", "source", "n_words", "text")
+    stats = (
+        admitted.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs_kept"),
+            F.sum("n_words").cast("long").alias("n_tokens_kept"),
+        )
+        .join(rates, "source")
+        .orderBy("source")
+    )
+    return curated, stats
 
 
 def curate(
@@ -66,109 +87,37 @@ def curate(
     dedup → target-similarity selection → mixture): survivors from the
     curated target sources pass unconditionally; pool survivors are
     scored by hashed-bigram importance weight vs the target distribution
-    (operators/text.dsir_*) and only the top ceil(dsir_frac * |pool|)
+    (operators/text.dsir_*) and only the top ceil(dsir_frac * |scored|)
     proceed to allocation. Zero-bigram pool docs are unscorable and
     dropped by the stage (the documented mix5 contract). The one extra
     job is the pool count; selection itself is a TakeOrderedAndProject
     + a semi join back on doc_id."""
     docs = load_table(spark, sf_dir, "documents")
-    feat = docs.select(
-        "doc_id",
-        "source",
-        "text",
-        text.fingerprint_column("text").alias("fp"),
-        *text.gopher_evidence_columns("text"),
-    ).select("*", *text.gopher_rule_columns())
-    w_fp = Window.partitionBy("fp").orderBy("doc_id")
+    # Keeper selection MUST see NULL-source docs: in the oracled pipe10
+    # form a NULL-source doc that is the min-doc_id keeper of a
+    # fingerprint suppresses its non-NULL duplicates. Filtering source
+    # before the window would let those duplicates through — so the NULL
+    # filter runs AFTER dedup here, exactly as PIPE10_SQL does.
     surv = (
-        # Keeper selection MUST see NULL-source docs (round-9 ADVICE): in
-        # the oracled pipe10 form a NULL-source doc that is the min-doc_id
-        # keeper of a fingerprint suppresses its non-NULL duplicates, and
-        # only the allocation/rates join drops the NULL-source survivor
-        # itself. Filtering source before the window would let those
-        # duplicates through — so the NULL filter runs AFTER dedup here,
-        # exactly as PIPE10_SQL does.
-        # row_number()==1 keeper (== the min-doc_id row; doc_id is a PK)
-        # so InferWindowGroupLimit caps a mass-duplicated fingerprint at
-        # one forwarded row per map partition (round-12)
-        feat.filter(F.col("keep"))
-        .withColumn("__rn", F.row_number().over(w_fp))
-        .filter((F.col("__rn") == 1) & F.col("source").isNotNull())
+        C.gated_keepers(docs, text.fingerprint_column("text"))
+        .filter(F.col("source").isNotNull())
         .select("doc_id", "source", "text", "n_words")
     )
     if dsir_frac is not None:
-        import math
-
         # the DSIR stage reads the survivor frame several times (weight
         # build, scoring, the semi join) — persist it once so those
         # passes read cached blocks instead of re-running the gate +
-        # dedup window lineage (the curate_epoch materialization
-        # pattern; without it full-mode --dsir-frac is a five-pass trade)
-        surv = surv.persist()
-        is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
-        tgt = surv.filter(is_target)
-        pool = surv.filter(~is_target)
-        # single-scan weight building: surv's lineage is the gate + dedup
-        # window, so every extra pass re-runs it — the flag variant costs
-        # one survivor pass instead of two
-        weights = text.dsir_bucket_weights_from_flag(surv, is_target, "text")
-        # score ONCE and size k over the SCORED frame (round-10 ADVICE):
-        # zero-bigram pool docs are unscorable and never selectable, so
-        # ceil(frac·|pool|) and ceil(frac·|scored|) agree only while the
-        # quality gate guarantees ≥ 2 alnum tokens per survivor —
-        # counting over the scored frame makes the pipe13 parity
-        # contract (2·rank ≤ n_scored + 1) structural instead of
-        # gate-dependent. The top-k is still TakeOrderedAndProject
-        # (per-partition top-k + k-row driver merge), never a global
-        # sort; scored is one row per pool doc, persisted for the
-        # count + top-k + semi-join passes.
-        scored = text.dsir_scores(pool, "doc_id", "text", weights).persist()
-        k = int(math.ceil(dsir_frac * scored.count()))
-        top = (
-            scored.orderBy(F.col("dsir_score_q").desc(), "doc_id")
-            .limit(k)
-            .select("doc_id")
+        # dedup window lineage (without it full-mode --dsir-frac is a
+        # five-pass trade)
+        surv, _ = materialize.persist(surv)
+        # single-scan weight building: the flag variant costs one
+        # survivor pass instead of two
+        weights = text.dsir_bucket_weights_from_flag(
+            surv, F.col("source").isin(*DSIR_TARGET_SOURCES), "text"
         )
-        surv = tgt.unionByName(pool.join(top, "doc_id", "semi"))
-    rates = split.token_budget_allocation(
-        surv, "source", "n_words", budget_tokens=budget_tokens,
-        max_epochs_x1024=1024,
-    ).select(
-        "source",
-        "n_tokens",
-        "alloc_tokens",
-        F.col("epochs_ppm").alias("admit_ppm"),
-        "clipped",
-    )
-    draw = F.expr(
-        "CAST(conv(substring(md5(concat_ws('|', 'bud1',"
-        " CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
-        " * 1000000 < CAST(admit_ppm AS DECIMAL(38,0)) * 281474976710656"
-    )
-    admitted = surv.join(
-        F.broadcast(rates.select("source", "admit_ppm")), "source"
-    ).filter(draw)
-    curated = pack.shard_shuffle(
-        admitted, "doc_id", n_shards=n_shards, salt="cur1"
-    ).select("shard", "pos", "doc_id", "source", "n_words", "text")
-    stats = (
-        admitted.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("n_words").cast("long").alias("n_tokens_kept"),
-        )
-        .join(rates, "source")
-        .orderBy("source")
-    )
-    return curated, stats
-
-
-def fingerprint_expr():
-    """pipe11's normalized prefix-8 fingerprint (16-byte md5 of the first
-    8 whitespace tokens) — the ONLY thing the history store ever ships."""
-    return F.md5(
-        F.concat_ws(" ", F.slice(F.split(F.trim(F.col("text")), r"\s+"), 1, 8))
-    )
+        surv, _ = C.dsir_top_fraction(surv, weights, dsir_frac)
+    admitted, rates = C.budget_admit(surv, budget_tokens, "bud1")
+    return _shards_and_stats(admitted, rates, n_shards, "cur1")
 
 
 def curate_epoch(
@@ -178,25 +127,21 @@ def curate_epoch(
     budget_tokens: int,
     n_shards: int = 8,
     salt: str = "cur2",
-    draw_salt: str = "bud2",
-    fingerprint=None,
     dsir_frac: float | None = None,
     dsir_counts=None,
     dsir_weights=None,
     persisted_out: list | None = None,
 ):
     """ONE nightly epoch of the pipe11 chain over an arbitrary batch
-    frame: Gopher gate → within-batch keep-first dedup on the
-    fingerprint (default: pipe11's prefix-8; pass ``fingerprint`` to
-    override, e.g. the full-text normalized fp for full-mode parity
-    tests) → LEFT ANTI against ``hist_fps`` (a 1-column `fp` frame, or
-    None for the first epoch) → optional DSIR selection → per-source
-    budget admission → integer md5 draws (``draw_salt``) → shard
+    frame: Gopher gate → within-batch keep-first dedup on pipe11's
+    prefix-8 fingerprint (NULL sources dropped before the keeper window)
+    → LEFT ANTI against ``hist_fps`` (a 1-column `fp` frame, or None for
+    the first epoch) → optional DSIR selection → per-source budget
+    admission → integer md5 draws (pipe11's 'bud2' salt) → shard
     assignment. The survivor frame is persisted ONCE (the
     materialization trade pipe11's declarative form documents).
 
-    DSIR (round-10 verdict #4 — the last composition gap in the
-    curation story): with ``dsir_frac`` set, the batch survivors' bucket
+    DSIR: with ``dsir_frac`` set, the batch survivors' bucket
     counts are SUM-merged into ``dsir_counts`` (the versioned store a
     production loop carries — streaming/events.stream_dsir_counts_ingest
     maintains the same (bucket, t_count, r_count) shape), and the batch
@@ -212,28 +157,29 @@ def curate_epoch(
     |scored|) by length-normalized integer importance weight (ties by
     doc_id), exactly the full-mode stage.
 
-    EXTERNALLY-MAINTAINED store mode (round-11 verdict #4, the composed
-    operational loop): pass ``dsir_weights`` (a weight table from
-    streaming/events.dsir_weights_from_store — i.e. a store some OTHER
-    system maintains, typically stream_dsir_counts_ingest) and the pool
-    is scored directly against it with ``floor_unseen=True`` — tonight's
-    docs are NOT counted into those weights, so unseen buckets take the
-    add-one floor derived from the table's scale_x metadata. No count
-    merge happens here (the stream owns the store); the returned
+    EXTERNALLY-MAINTAINED store mode: pass ``dsir_weights`` (a weight
+    table from streaming/events.dsir_weights_from_store — i.e. a store
+    some OTHER system maintains, typically stream_dsir_counts_ingest) and
+    the pool is scored directly against it with ``floor_unseen=True`` —
+    tonight's docs are NOT counted into those weights, so unseen buckets
+    take the add-one floor derived from the table's scale_x metadata. No
+    count merge happens here (the stream owns the store); the returned
     dsir_counts_df is None. Mutually exclusive with ``dsir_counts``.
 
-    ``persisted_out``: optional list; every frame this call persists is
-    appended (element 0 is always the survivor frame) so long-lived
-    callers can unpersist once the epoch's outputs are written — without
-    it, executor cache grows linearly with epochs (round-11 ADVICE #2).
+    ``persisted_out``: optional list; every frame this call persisted and
+    owns (materialize.persist's ownership flag) is appended, so
+    long-lived callers can unpersist once the epoch's outputs are written
+    — without it, executor cache grows linearly with epochs.
 
-    Returns (curated_df, stats_df, admitted_fps_df, dsir_counts_df) —
-    the caller unions admitted_fps into its store so the NEXT epoch
-    dedups against everything the corpus already contains (a
+    Returns (curated_df, stats_df, admitted_fps_df, dsir_counts_df,
+    survivors_df) — the caller unions admitted_fps into its store so the
+    NEXT epoch dedups against everything the corpus already contains (a
     draw-rejected doc keeps its chance in later epochs; an admitted
-    fingerprint never re-enters), and carries dsir_counts_df (the
-    merged counts, or None when DSIR is off or the store is external)
-    as the next epoch's ``dsir_counts``."""
+    fingerprint never re-enters), and carries dsir_counts_df (the merged
+    counts, or None when DSIR is off or the store is external) as the
+    next epoch's ``dsir_counts``. survivors_df is the persisted
+    (doc_id, source, text, n_words, fp) frame after the gate, the dedup
+    and the history anti join, before DSIR selection."""
     if dsir_weights is not None and dsir_counts is not None:
         raise ValueError(
             "pass dsir_counts (self-merged store) OR dsir_weights "
@@ -241,88 +187,38 @@ def curate_epoch(
         )
     if dsir_weights is not None and dsir_frac is None:
         raise ValueError("dsir_weights without dsir_frac has no effect")
-    feat = batch_docs.select(
-        "doc_id",
-        "source",
-        "text",
-        (fingerprint if fingerprint is not None else fingerprint_expr()).alias(
-            "fp"
-        ),
-        *text.gopher_evidence_columns("text"),
-    ).select("*", *text.gopher_rule_columns())
-    w_fp = Window.partitionBy("fp").orderBy("doc_id")
-    surv = (
-        feat.filter(F.col("keep") & F.col("source").isNotNull())
-        .withColumn("__rn", F.row_number().over(w_fp))
-        .filter(F.col("__rn") == 1)
+    keepers = C.gated_keepers(
+        batch_docs.filter(F.col("source").isNotNull()),
+        text.prefix_fingerprint_column("text"),
     )
     if hist_fps is not None:
-        surv = surv.join(hist_fps, "fp", "left_anti")
-    surv = surv.select("doc_id", "source", "text", "n_words", "fp").persist()
-    if persisted_out is not None:
-        persisted_out.append(surv)
+        keepers = keepers.join(hist_fps, "fp", "left_anti")
+    keepers, owned = materialize.persist(
+        keepers.select("doc_id", "source", "text", "n_words", "fp")
+    )
+    persisted = [keepers] if owned else []
+    surv = keepers
     new_counts = None
     if dsir_frac is not None:
-        import math
-
-        is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
         if dsir_weights is not None:
             # external store: the stream already counted history; tonight's
             # batch is outside it, so unseen buckets take the derived floor
             weights = dsir_weights
-            floor = True
         else:
             batch_counts = text.dsir_bucket_counts_from_flag(
-                surv, is_target, "text"
+                keepers, F.col("source").isin(*DSIR_TARGET_SOURCES), "text"
             )
             new_counts = text.dsir_merge_counts(dsir_counts, batch_counts)
             weights = text.dsir_weights_from_counts(new_counts)
-            floor = False
-        tgt = surv.filter(is_target)
-        pool = surv.filter(~is_target)
-        scored = text.dsir_scores(
-            pool, "doc_id", "text", weights, floor_unseen=floor
-        ).persist()
-        if persisted_out is not None:
-            persisted_out.append(scored)
-        k = int(math.ceil(dsir_frac * scored.count()))
-        top = (
-            scored.orderBy(F.col("dsir_score_q").desc(), "doc_id")
-            .limit(k)
-            .select("doc_id")
+        surv, owned_scored = C.dsir_top_fraction(
+            keepers, weights, dsir_frac, floor_unseen=dsir_weights is not None
         )
-        surv = tgt.unionByName(pool.join(top, "doc_id", "semi"))
-    rates = split.token_budget_allocation(
-        surv, "source", "n_words", budget_tokens=budget_tokens,
-        max_epochs_x1024=1024,
-    ).select(
-        "source",
-        "n_tokens",
-        "alloc_tokens",
-        F.col("epochs_ppm").alias("admit_ppm"),
-        "clipped",
-    )
-    draw = F.expr(
-        f"CAST(conv(substring(md5(concat_ws('|', '{draw_salt}',"
-        " CAST(doc_id AS STRING))), 1, 12), 16, 10) AS DECIMAL(38,0))"
-        " * 1000000 < CAST(admit_ppm AS DECIMAL(38,0)) * 281474976710656"
-    )
-    admitted = surv.join(
-        F.broadcast(rates.select("source", "admit_ppm")), "source"
-    ).filter(draw)
-    curated = pack.shard_shuffle(
-        admitted, "doc_id", n_shards=n_shards, salt=salt
-    ).select("shard", "pos", "doc_id", "source", "n_words", "text")
-    stats = (
-        admitted.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs_kept"),
-            F.sum("n_words").cast("long").alias("n_tokens_kept"),
-        )
-        .join(rates, "source")
-        .orderBy("source")
-    )
-    return curated, stats, admitted.select("fp").distinct(), new_counts
+        persisted += owned_scored
+    if persisted_out is not None:
+        persisted_out.extend(persisted)
+    admitted, rates = C.budget_admit(surv, budget_tokens, "bud2")
+    curated, stats = _shards_and_stats(admitted, rates, n_shards, salt)
+    return curated, stats, admitted.select("fp").distinct(), new_counts, keepers
 
 
 def curate_incremental(
@@ -352,33 +248,23 @@ def curate_incremental(
     store between epochs, and stream_dsir_counts_ingest maintains the
     same shape online, so a real nightly job reads ≤256 rows instead
     of running this pass). The history slice is gated + deduped before
-    counting (round-11 ADVICE #1): the production stores accumulate
-    SURVIVOR counts, so a demo distribution counted over raw history —
-    gated-out and duplicate docs included — would differ in shape from
-    the store it stands in for."""
+    counting: the production stores accumulate SURVIVOR counts, so a
+    demo distribution counted over raw history — gated-out and
+    duplicate docs included — would differ in shape from the store it
+    stands in for."""
     docs = load_table(spark, sf_dir, "documents")
     hist_docs = docs.filter(F.col("doc_id") % batch_mod != 0)
-    hist = hist_docs.select(fingerprint_expr().alias("fp")).distinct()
+    fp = text.prefix_fingerprint_column("text")
+    hist = hist_docs.select(fp.alias("fp")).distinct()
     hist_counts = None
     if dsir_frac is not None:
-        w_fp = Window.partitionBy("fp").orderBy("doc_id")
-        hist_surv = (
-            hist_docs.select(
-                "doc_id",
-                "source",
-                "text",
-                fingerprint_expr().alias("fp"),
-                *text.gopher_evidence_columns("text"),
-            )
-            .select("*", *text.gopher_rule_columns())
-            .filter(F.col("keep") & F.col("source").isNotNull())
-            .withColumn("__rn", F.row_number().over(w_fp))
-            .filter(F.col("__rn") == 1)
+        hist_surv = C.gated_keepers(
+            hist_docs.filter(F.col("source").isNotNull()), fp
         )
         hist_counts = text.dsir_bucket_counts_from_flag(
             hist_surv, F.col("source").isin(*DSIR_TARGET_SOURCES), "text"
         )
-    curated, stats, _, _ = curate_epoch(
+    curated, stats, _, _, _ = curate_epoch(
         spark,
         docs.filter(F.col("doc_id") % batch_mod == 0),
         hist,
@@ -426,11 +312,12 @@ def run_epochs(
     docs = load_table(spark, sf_dir, "documents")
     store = None
     counts = None
+    owned_state: list = []
     per_epoch = []
     for e in range(n_epochs):
         batch = docs.filter(F.col("doc_id") % n_epochs == e)
         epoch_persisted: list = []
-        curated, stats, admitted_fps, new_counts = curate_epoch(
+        curated, stats, admitted_fps, new_counts, _ = curate_epoch(
             spark,
             batch,
             store,
@@ -466,18 +353,20 @@ def run_epochs(
             for f in epoch_persisted:
                 f.unpersist()
         else:
-            prev_store, prev_counts = store, counts
-            store = new_store.persist()
+            prev_owned, owned_state = owned_state, []
+            store, owned = materialize.persist(new_store)
+            if owned:
+                owned_state.append(store)
             if new_counts is not None:
-                counts = new_counts.persist()
+                counts, owned = materialize.persist(new_counts)
+                if owned:
+                    owned_state.append(counts)
                 counts.count()  # materialize before dropping the previous
             store.count()
             # the new versions are materialized; the previous epoch's
             # store/counts blocks are unreachable by any later lineage
-            if prev_store is not None:
-                prev_store.unpersist()
-            if prev_counts is not None:
-                prev_counts.unpersist()
+            for f in prev_owned:
+                f.unpersist()
         per_epoch.append((curated, stats))
     return per_epoch, store
 
@@ -579,7 +468,7 @@ def run_operational_loop(
             SE.dsir_weights_from_store(spark, dsir_store) if e > 0 else None
         )
         persisted: list = []
-        curated, stats, admitted_fps, _ = curate_epoch(
+        curated, stats, admitted_fps, _, surv = curate_epoch(
             spark,
             batch,
             fp_store,
@@ -605,13 +494,14 @@ def run_operational_loop(
         # index rows land, so history is exactly nights < e) ---
         from end_to_end_ml_spark.operators import dedup as DD
 
-        surv = persisted[0]
         n_mh_pairs = 0
         if e > 0:
+            sig, sig_owned = materialize.persist(spark.read.parquet(mh_sig_dir))
+            bands, bands_owned = materialize.persist(
+                spark.read.parquet(mh_bands_dir)
+            )
             idx = DD.MinHashIndex(
-                spark.read.parquet(mh_sig_dir).persist(),
-                spark.read.parquet(mh_bands_dir).persist(),
-                (True, True),
+                sig, bands, (sig_owned, bands_owned),
                 num_hashes=64, bands=16, seed=42, shingle_size=5,
             )
             hist_text = spark.read.parquet(surv_src).select("doc_id", "text")
@@ -624,7 +514,7 @@ def run_operational_loop(
             idx.unpersist()
         # feed tonight's survivors to the stream (one file per night so
         # each drain is one micro-batch = one store version), then drain
-        persisted[0].select(
+        surv.select(
             "doc_id", is_target.alias("is_tgt"), "text"
         ).coalesce(1).write.mode("append").parquet(surv_src)
         stream = (

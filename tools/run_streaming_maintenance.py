@@ -119,9 +119,9 @@ def maintain_streams(spark, sf_dir: str, out_dir: str, n_batches: int = 3):
     )
     # the SAME fingerprint convention as the sinks/pipe6/pipe11 — imported,
     # not re-inlined, so a convention change cannot silently stale this check
-    from run_curation_pipeline import fingerprint_expr
+    from end_to_end_ml_spark.operators.text import prefix_fingerprint_column
 
-    truth = docs.select(fingerprint_expr().alias("fp")).distinct()
+    truth = docs.select(prefix_fingerprint_column("text").alias("fp")).distinct()
     store = SE.read_latest_snapshot(spark, os.path.join(dd, "store"))
     # dedup state is KEY-sized (one fp per ever-accepted doc), so parity
     # stays distributed: symmetric-difference via two anti-join counts
@@ -187,8 +187,9 @@ def maintain_streams(spark, sf_dir: str, out_dir: str, n_batches: int = 3):
     # 5. DSIR bucket-count distributions (sum-merge; weight table derived
     #    from the store so a nightly selection job never rescans history)
     from end_to_end_ml_spark.operators import text as TX
+    from end_to_end_ml_spark.operators.curate import DSIR_TARGET_SOURCES
 
-    is_target = F.col("source").isin("src0", "src1", "src2", "src3")
+    is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
     dsir_store = os.path.join(out_dir, "dsir")
     dsir_stream = _mkstream(spark, doc_src).withColumn("is_tgt", is_target)
     SE.stream_dsir_counts_ingest(

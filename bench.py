@@ -49,164 +49,157 @@ BENCH_CONF = {
     "spark.cleaner.periodicGC.interval": "2min",
 }
 
+# The timed run plan, in run order: query -> reps (min-of-N). The heavy
+# generated aggregates need 2-3 executions before C2 JIT reaches steady
+# state; min-of-3 was still measuring compilation on the big plans.
+#
 # Headline queries: the flagship relational plans + the metric queries that
 # represent each operator family (agg, join, window, as-of, sweep, text).
-HEADLINE = [
-    "q1_pricing_summary",
-    "q3_top_orders",
-    "q4_order_priority",
-    "q5_supplier_volume",
-    "q10_returned_items",
-    "w4_running_total",
-    "p6_latest_order_per_customer",
-    "t1_stratified_split",
-    "s3_pit_join",
-    "a6_roc_auc",
-    "a8_auc_ovr_macro",
-    "a12_roc_curve",
-    "a13_lift_gains",
-    "m8_threshold_sweep",
-    "st_hourly_window",
-    "ts3_time_weighted_avg",
-    "sim1_topk_bruteforce",
-    "d4_simhash_pairs",
-]
+# They get the untimed warm lap, the end-of-run second pass, and
+# r4_comparable_total (their first-pass sum).
+HEADLINE = {
+    "q1_pricing_summary": 5,
+    "q3_top_orders": 5,
+    "q4_order_priority": 5,
+    "q5_supplier_volume": 5,
+    "q10_returned_items": 5,
+    "w4_running_total": 5,
+    "p6_latest_order_per_customer": 5,
+    "t1_stratified_split": 5,
+    "s3_pit_join": 5,
+    "a6_roc_auc": 5,
+    "a8_auc_ovr_macro": 5,
+    "a12_roc_curve": 5,
+    "a13_lift_gains": 5,
+    "m8_threshold_sweep": 5,
+    "st_hourly_window": 5,
+    "ts3_time_weighted_avg": 5,
+    "sim1_topk_bruteforce": 5,
+    # d4's ~2000-node generated aggregate needs the most C2 warm-up of any
+    # plan; in a warm session its reps were measured still DESCENDING at
+    # rep 5 (3.6 -> 2.3 -> 2.1 -> 1.4 -> ...) while isolated it converges
+    # by rep 4 — the extra reps report steady state, not the slope.
+    "d4_simhash_pairs": 8,
+}
 
-# Heavy operators (d7 once went 140 s -> ~8 s without a bench row to show
-# it). A single execution is seconds, not milliseconds; their sum is in the
-# same total, and "r4_comparable_total" keeps the 18-query HEADLINE sum.
-HEAVY = [
-    "q9_product_profit",
-    "pipe3_pretrain_corpus",
-    "d7_near_dup_groups",
-]
-
-# Banded range join, greedy packing (applyInPandas), corpus-frequency
-# scoring (double shuffle), SCD2 gaps-and-islands. Counted in the total,
-# not in r4_comparable_total.
-R5 = [
-    "rj1_event_pairs",
-    "pack1_sequence_packing",
-    "x11_token_rarity",
-    "ev3_scd2_history",
-]
-
-# Session-path mining (two windows + two aggregations over all events),
-# market-basket self-join pair counting + association rules, the eval-set
-# corpus pipeline, the sequential EWMA kernel and the heavy plan families
-# below. Counted in the total, not in r4_comparable_total.
-R6 = [
-    "ev4_top_session_paths",
-    "q23_copurchase_pairs",
-    "q24_association_rules",
-    "pipe5_eval_set",
-    "ts6_ewma",
+# Every other benched row, counted in the total only.
+REST = {
+    # Heavy operators (d7 once went 140 s -> ~8 s without a bench row to
+    # show it). pipe3 isolated converges only at rep 3-4 (9.3 -> 2.2 ->
+    # 2.1 -> 1.73 -> 1.76); min-of-3 reported the warm-up slope, and
+    # shipped numbers swung 1.7-3.4 s run-to-run.
+    "q9_product_profit": 5,
+    "pipe3_pretrain_corpus": 5,
+    # d7's reps converge slowly too (13.8 -> 4.1 -> 3.3 -> 2.8 -> 2.76,
+    # still descending at rep 4): same remedy as d4.
+    "d7_near_dup_groups": 8,
+    # The rows below run min-of-4 for the same reason at smaller magnitude.
+    # Banded range join, greedy packing (applyInPandas), corpus-frequency
+    # scoring (double shuffle), SCD2 gaps-and-islands.
+    "rj1_event_pairs": 4,
+    "pack1_sequence_packing": 4,
+    "x11_token_rarity": 4,
+    "ev3_scd2_history": 4,
+    # Session-path mining (two windows + two aggregations over all events),
+    # market-basket self-join pair counting + association rules, the
+    # eval-set corpus pipeline, the sequential EWMA kernel.
+    "ev4_top_session_paths": 4,
+    "q23_copurchase_pairs": 4,
+    "q24_association_rules": 4,
+    "pipe5_eval_set": 4,
+    "ts6_ewma": 4,
     # span-level substring dedup (positional-gram explode), multi-touch
-    # attribution (banded
-    # two-frame interval join), CountMin build+merge+probe, incremental
-    # fingerprint-store ingest
-    "d10_span_dedup",
-    "ev6_linear_attribution",
-    "ts7_countmin_heavy_hitters",
-    "pipe6_incremental_ingest",
+    # attribution (banded two-frame interval join), CountMin
+    # build+merge+probe, incremental fingerprint-store ingest
+    "d10_span_dedup": 4,
+    "ev6_linear_attribution": 4,
+    "ts7_countmin_heavy_hitters": 4,
+    "pipe6_incremental_ingest": 4,
     # two-pass bucketed global rank, ordinal-join negative sampling
-    "ord1_global_ordinal",
-    "emb4_negative_pairs",
-    # rank-statistic double join (a18), per-user lead
-    # window over all events (ev7), 4-stage curation composition (pipe7)
-    "a18_spearman_components",
-    "ev7_event_transitions",
-    "pipe7_curated_shards",
-    # cross-source gram containment (distinct-gram
-    # aggregation), count-frame join-cardinality estimate
-    "d12_source_overlap_matrix",
-    "skew4_join_cardinality",
-]
-
-# BM25 (corpus-wide dl sums + broadcast term probe), blocked levenshtein
-# self-join, the full four-way split chain, and the one-pass column
-# profile. Counted in the total only.
-R7 = [
-    "x17_bm25_components",
-    "d11_edit_distance_pairs",
-    "t13_four_way_carve",
-    "p15_profile_columns",
+    "ord1_global_ordinal": 4,
+    "emb4_negative_pairs": 4,
+    # rank-statistic double join (a18), per-user lead window over all
+    # events (ev7), 4-stage curation composition (pipe7)
+    "a18_spearman_components": 4,
+    "ev7_event_transitions": 4,
+    "pipe7_curated_shards": 4,
+    # cross-source gram containment (distinct-gram aggregation),
+    # count-frame join-cardinality estimate
+    "d12_source_overlap_matrix": 4,
+    "skew4_join_cardinality": 4,
+    # BM25 (corpus-wide dl sums + broadcast term probe), blocked
+    # levenshtein self-join, the full four-way split chain, and the
+    # one-pass column profile
+    "x17_bm25_components": 4,
+    "d11_edit_distance_pairs": 4,
+    "t13_four_way_carve": 4,
+    "p15_profile_columns": 4,
     # the oracle-exact HLL register rollup, URL-canonicalization dedup, and
     # the per-round distributed BPE merge trainer (8 rounds of pair
     # count + argmax + localCheckpoint — the registry's only multi-round
     # iterative text algorithm besides d7)
-    "ts4b_hll_registers",
-    "d13_url_canonical_dupes",
-    "x16_bpe_merges",
+    "ts4b_hll_registers": 4,
+    "d13_url_canonical_dupes": 4,
+    "x16_bpe_merges": 4,
     # incremental LSH probe (batch-vs-history near-dup maintenance)
-    "pipe8_incremental_near_dup",
+    "pipe8_incremental_near_dup": 4,
     # cosine-distribution audit over the md5 pair sample
-    "emb5_cosine_histogram",
+    "emb5_cosine_histogram": 4,
     # oracle-exact md5-family SimHash pairs (vs d4's xxhash64 family)
-    "d4b_simhash_md5_pairs",
-]
-
-# The batched BPE trainer at the production-merge-count regime (full
-# corpus closure, 90 merges at sf0.1, k=32 disjoint merges/round), the
-# incremental ANN probe (batch-vs-persisted-IVF-index cosine maintenance —
-# the embedding twin of pipe8) and the rows below. Counted in the total
-# only.
-R8 = [
-    "x16b_bpe_batched",
-    "pipe9_incremental_ann",
+    "d4b_simhash_md5_pairs": 4,
+    # the batched BPE trainer at the production-merge-count regime (full
+    # corpus closure, 90 merges at sf0.1, k=32 disjoint merges/round)
+    "x16b_bpe_batched": 4,
+    # incremental ANN probe (batch-vs-persisted-IVF-index cosine
+    # maintenance — the embedding twin of pipe8)
+    "pipe9_incremental_ann": 4,
     # Arrow-batched memoized tokenizer application (train 40 sub-word
     # merges, encode the whole corpus via mapInPandas + Zipf word cache)
-    "x18b_bpe_encode_batched",
+    "x18b_bpe_encode_batched": 4,
     # Gopher-rule quality gate: scan-fused all-integer JVM projection
-    "x22_gopher_filters",
+    "x22_gopher_filters": 4,
     # token-budget mixture allocation: one groupBy to |sources| rows
-    "mix2_token_budget",
+    "mix2_token_budget": 4,
     # bucketed surrogate-key gap audit (partitioned windows, one scan)
-    "dq5_id_gap_audit",
+    "dq5_id_gap_audit": 4,
     # smoothed mean target encoding (decimal sums + fixed double chain)
-    "f14_target_encode",
+    "f14_target_encode": 4,
     # mergeSchema two-generation roundtrip (writes + merged read-back)
-    "s17_schema_evolution",
+    "s17_schema_evolution": 4,
     # curation composition: gopher gate -> exact dedup ->
     # token-budget allocation -> integer md5 admit draws
-    "pipe10_budget_curation",
+    "pipe10_budget_curation": 4,
     # rolling z-score anomaly over the daily aggregate
-    "ts10_rolling_zscore",
+    "ts10_rolling_zscore": 4,
     # lossless prefix-filter exact jaccard join (bigram tokens, %2 slice)
-    "d16_prefix_filter_jaccard",
+    "d16_prefix_filter_jaccard": 4,
     # mergeable histogram sketch -> weekly P50/P90/P99 (integer edges)
-    "ts11_quantile_sketch",
+    "ts11_quantile_sketch": 4,
     # rolling-origin CV audit (integer epoch slices, expanding n_train)
-    "t14_rolling_origin",
-]
-
-# The oracled MLlib leaderboard (real frame + exact label + stratified
-# split + integer leaderboard — the split machinery under a computed label
-# gets its own row) and the rows below.
-R9 = [
-    "ml1b_validation_leaderboard",
+    "t14_rolling_origin": 4,
+    # the oracled MLlib leaderboard (real frame + exact label + stratified
+    # split + integer leaderboard — the split machinery under a computed
+    # label gets its own row)
+    "ml1b_validation_leaderboard": 4,
     # exact-substring tile dedup WITH document rewrite (keep-first window
     # partitioned by tile text + per-doc rebuild agg)
-    "d17_tile_dedup_rewrite",
+    "d17_tile_dedup_rewrite": 4,
     # incremental curation flagship: gopher gate -> within-batch +
     # vs-history exact dedup -> budget admission, one plan
-    "pipe11_incremental_curation",
+    "pipe11_incremental_curation": 4,
     # epoch-expansion stream materialization (broadcast rates + row-local
     # bounded explode)
-    "mix3_epoch_expansion",
-]
-
-# The LLaMA-style water-filling allocator (one groupBy to |buckets| rows +
-# the exact integer freeze loop driver-side) and the adaptive ANN router's EXACT
-# mode on the planted-cluster geometry (index build + lossless
-# triangle-inequality probe where pruning provably engages), plus the DSIR
-# selection and curation rows.
-R10 = [
-    "mix4_waterfill",
-    "mix5_dsir_selection",
-    "pipe13_dsir_curation",
-    "pipe12_adaptive_ann_exact",
-]
+    "mix3_epoch_expansion": 4,
+    # the LLaMA-style water-filling allocator (one groupBy to |buckets|
+    # rows + the exact integer freeze loop driver-side), the DSIR
+    # selection and curation rows, and the adaptive ANN router's EXACT
+    # mode on the planted-cluster geometry (index build + lossless
+    # triangle-inequality probe where pruning provably engages)
+    "mix4_waterfill": 4,
+    "mix5_dsir_selection": 4,
+    "pipe13_dsir_curation": 4,
+    "pipe12_adaptive_ann_exact": 4,
+}
 
 
 def force(df) -> None:
@@ -297,7 +290,7 @@ def main() -> None:
     # sessions: a SECOND lap does not move slot-1
     # (10.09/9.91 s one-lap vs 10.56/9.89 s two-lap — inside run noise);
     # the residual ~0.3-0.5 s slot1-vs-warm gap is scheduler/GC noise,
-    # which the *_warm fold already reports. Disclosed in the JSON
+    # which the end-of-run second pass folds out. Disclosed in the JSON
     # "methodology" field.
     for name in HEADLINE:
         try:
@@ -341,38 +334,9 @@ def main() -> None:
     # failure is itself a defect.
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    # HEAVY runs min-of-5: pipe3 isolated converges only at rep 3-4
-    # (9.3 -> 2.2 -> 2.1 -> 1.73 -> 1.76); min-of-3 was reporting the
-    # warm-up slope, and shipped numbers swung 1.7-3.4 s run-to-run.
-    # R5/R6 run min-of-4 for the same reason at smaller magnitude.
-    for name, reps in (
-        [(n, 5) for n in HEADLINE]
-        + [(n, 5) for n in HEAVY]
-        + [(n, 4) for n in R5]
-        + [(n, 4) for n in R6]
-        + [(n, 4) for n in R7]
-        + [(n, 4) for n in R8]
-        + [(n, 4) for n in R9]
-        + [(n, 4) for n in R10]
-    ):
-        # d4's ~2000-node generated aggregate needs the most C2 warm-up of
-        # any plan; in a warm session (17 queries already run) its reps
-        # were measured still DESCENDING at rep 5 (3.6 -> 2.3 -> 2.1 ->
-        # 1.4 -> ...) while isolated it converges by rep 4 — give it the
-        # extra reps so min-of-N reports steady state, not the slope.
-        if name == "d4_simhash_pairs":
-            reps = 8
-        # d7's reps converge slowly too (13.8 -> 4.1 -> 3.3 -> 2.8 -> 2.76,
-        # still descending at rep 4). Same remedy as d4: enough reps to
-        # report steady state.
-        if name == "d7_near_dup_groups":
-            reps = 8
+    for name, reps in (*HEADLINE.items(), *REST.items()):
         try:
             fn = REGISTRY[name][0]
-            # min-of-N with N from the list above (HEADLINE/HEAVY 5,
-            # R5/R6 4, d4 8): the heavy generated aggregates need 2-3
-            # executions before C2 JIT reaches steady state; min-of-3 was
-            # still measuring compilation on the big plans.
             rep_times: list[float] = []
             for _ in range(reps):
                 t0 = time.perf_counter()
@@ -494,16 +458,6 @@ def main() -> None:
         print(f"[jvm-pool] unavailable: {exc}", file=sys.stderr)
     total = round(sum(timings.values()), 3)
 
-    # The *_comparable_totals' baselines were measured WITHOUT the
-    # end-of-run warm pass, so they use the FIRST-PASS headline numbers
-    # (slot1) or the delta would mix a methodology change into the
-    # code-change signal. The
-    # warm-folded totals are reported separately as *_warm — the
-    # steady-state view a long-lived production driver would see.
-    def seg(names, first_pass):
-        src = {**timings, **slot1} if first_pass else timings
-        return round(sum(v for k, v in src.items() if k in names), 3)
-
     out = {
         "metric": "headline_queries_total",
         "value": total,
@@ -513,23 +467,19 @@ def main() -> None:
         "cpus": CPUS,
         "completed": len(timings),
         "failed": len(errors),
-        # sums over the pre-round-5 18 / round-5 25 / round-6 41 query
-        # sets, methodology-matched to those rounds' baselines
-        "r4_comparable_total": seg(HEADLINE, True),
-        "r5_comparable_total": seg(HEADLINE + HEAVY + R5, True),
-        "r6_comparable_total": seg(HEADLINE + HEAVY + R5 + R6, True),
-        # same sets with the warm-pass fold (not baseline-comparable)
-        "r4_comparable_warm": seg(HEADLINE, False),
-        "r5_comparable_warm": seg(HEADLINE + HEAVY + R5, False),
-        "r6_comparable_warm": seg(HEADLINE + HEAVY + R5 + R6, False),
+        # the 18-query HEADLINE sum, the pre-round-5 query set. Its
+        # baseline was measured WITHOUT the end-of-run warm pass, so it
+        # sums the FIRST-PASS numbers (slot1) or the delta would mix a
+        # methodology change into the code-change signal.
+        "r4_comparable_total": round(sum(slot1.values()), 3),
         # Per-query slot-1 minima for the headline segment: they let any
         # reader attribute a slot-1 delta to the specific
         # queries whose first-pass JIT/session state inflated, instead of
         # guessing from the segment sum).
         "headline_slot1": slot1,
         # Honest-comparison disclosure: the session conf
-        # and warm-up methodology have CHANGED since the rounds the
-        # *_comparable_totals are named after, so those deltas mix harness
+        # and warm-up methodology have CHANGED since the round
+        # r4_comparable_total is named after, so its delta mixes harness
         # changes into the code-change signal. Changes: round 7 re-tuned
         # small-SF parallelism (maxPartitionBytes 8m->256k, openCostInBytes
         # 1m->64k, AQE advisory 64m->256k); round 8 added one untimed

@@ -800,53 +800,13 @@ def embedding_near_dup_lsh(
     ``multiprobe`` probes Hamming-1 neighbor buckets from one side —
     recall rises like p^r → p^r + r·p^(r-1)(1-p) per band WITHOUT
     shrinking the bucket space (see similarity.lsh_topk)."""
-    from .similarity import _dot, _hyperplanes, _norm
+    from .similarity import _dot, _norm, sign_lsh_candidates
 
-    if dim is None:
-        dim = len(df.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-    plane_arr = F.array(*[F.array(*[F.lit(v) for v in row]) for row in planes])
-    r = n_planes // bands
-    base = _spread(df).select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")).withColumn(
-        "sig",
-        F.transform(plane_arr, lambda p: (_dot(p, F.col("vec")) >= 0).cast("int")),
-    )
-
-    def bucket_expr(j: int, flip: int | None = None):
-        bits = F.slice(F.col("sig"), j * r + 1, r)
-        if flip is not None:
-            bits = F.concat(
-                F.slice(bits, 1, flip),
-                F.array(F.lit(1) - F.element_at(bits, flip + 1)),
-                F.slice(bits, flip + 2, r - flip - 1),
-            )
-        return F.concat_ws("", bits)
-
-    exact_structs = [
-        F.struct(F.lit(j).alias("band"), bucket_expr(j).alias("bucket"))
-        for j in range(bands)
-    ]
-    probe_structs = exact_structs + (
-        [
-            F.struct(F.lit(j).alias("band"), bucket_expr(j, fl).alias("bucket"))
-            for j in range(bands)
-            for fl in range(r)
-        ]
-        if multiprobe
-        else []
-    )
-    left = base.select(
-        F.col("id").alias("id_a"),
-        F.col("vec").alias("va"),
-        F.explode(F.array(*probe_structs)).alias("bb"),
-    ).select("bb.band", "bb.bucket", "id_a", "va")
-    right = base.select(
-        F.col("id").alias("id_b"),
-        F.col("vec").alias("vb"),
-        F.explode(F.array(*exact_structs)).alias("bb"),
-    ).select("bb.band", "bb.bucket", "id_b", "vb")
     cands = (
-        left.join(right, on=["band", "bucket"])
+        sign_lsh_candidates(
+            df, id_col, vec_col, ("id_a", "va"), ("id_b", "vb"),
+            n_planes, bands, dim, seed, multiprobe,
+        )
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "va", "id_b", "vb")
         .distinct()

@@ -227,28 +227,28 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     return planes
 
 
-def lsh_topk(
+def sign_lsh_candidates(
     df: DataFrame,
     id_col: str,
     vec_col: str,
-    k: int = 5,
-    n_planes: int = 16,
-    bands: int = 4,
-    dim: int | None = None,
-    seed: int = 42,
-    multiprobe: bool = True,
+    probe_cols: tuple[str, str],
+    match_cols: tuple[str, str],
+    n_planes: int,
+    bands: int,
+    dim: int | None,
+    seed: int,
+    multiprobe: bool,
 ) -> DataFrame:
-    """Approximate cosine top-k: sign-LSH signature (n_planes bits), banded
-    into ``bands`` bucket keys; candidates share any band bucket; exact
-    cosine re-rank within candidates. Cost is O(avg bucket size), not O(N²).
+    """The sign-LSH candidate join behind :func:`lsh_topk` and
+    ``dedup.embedding_near_dup_lsh``: each vector's ``n_planes``-bit sign
+    signature is cut into ``bands`` bucket keys; the probe side explodes
+    its exact keys (plus, with ``multiprobe``, every Hamming-1 neighbor
+    key) and equi-joins the match side's exact keys on (band, bucket).
 
-    ``multiprobe`` is the recall lever that PRESERVES bucket granularity:
-    the query side additionally probes every Hamming-1 neighbor of each
-    band bucket (r extra keys per band), lifting band-match probability
-    from p^r to p^r + r·p^(r-1)(1-p) — e.g. 0.43 → ~0.95 recall at the
-    default config on the test embeddings — while candidate volume grows
-    only ×(r+1), NOT by shrinking buckets to N/4 each (the scale-unsafe
-    alternative of lowering r)."""
+    Returns ``band, bucket`` plus the probe side's id/vector under
+    ``probe_cols`` and the match side's under ``match_cols``. A pair
+    repeats once per shared band and self-pairs are included: callers
+    apply their own pair filter and ``distinct``."""
     if dim is None:
         dim = len(df.select(vec_col).first()[0])
     planes = _hyperplanes(dim, n_planes, seed)
@@ -273,11 +273,6 @@ def lsh_topk(
         F.struct(F.lit(j).alias("band"), bucket_expr(j).alias("bucket"))
         for j in range(bands)
     ]
-    right = base.select(
-        F.col("id").alias("nid"),
-        F.col("vec").alias("nvec"),
-        F.explode(F.array(*exact_structs)).alias("bb"),
-    ).select("bb.band", "bb.bucket", "nid", "nvec")
     probe_structs = exact_structs + (
         [
             F.struct(F.lit(j).alias("band"), bucket_expr(j, fl).alias("bucket"))
@@ -287,13 +282,47 @@ def lsh_topk(
         if multiprobe
         else []
     )
-    left = base.select(
-        F.col("id").alias("qid"),
-        F.col("vec").alias("qvec"),
-        F.explode(F.array(*probe_structs)).alias("bb"),
-    ).select("bb.band", "bb.bucket", "qid", "qvec")
+
+    def side(cols: tuple[str, str], structs) -> DataFrame:
+        out_id, out_vec = cols
+        return base.select(
+            F.col("id").alias(out_id),
+            F.col("vec").alias(out_vec),
+            F.explode(F.array(*structs)).alias("bb"),
+        ).select("bb.band", "bb.bucket", out_id, out_vec)
+
+    return side(probe_cols, probe_structs).join(
+        side(match_cols, exact_structs), on=["band", "bucket"]
+    )
+
+
+def lsh_topk(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int = 5,
+    n_planes: int = 16,
+    bands: int = 4,
+    dim: int | None = None,
+    seed: int = 42,
+    multiprobe: bool = True,
+) -> DataFrame:
+    """Approximate cosine top-k: sign-LSH signature (n_planes bits), banded
+    into ``bands`` bucket keys; candidates share any band bucket; exact
+    cosine re-rank within candidates. Cost is O(avg bucket size), not O(N²).
+
+    ``multiprobe`` is the recall lever that PRESERVES bucket granularity:
+    the query side additionally probes every Hamming-1 neighbor of each
+    band bucket (r extra keys per band), lifting band-match probability
+    from p^r to p^r + r·p^(r-1)(1-p) — e.g. 0.43 → ~0.95 recall at the
+    default config on the test embeddings — while candidate volume grows
+    only ×(r+1), NOT by shrinking buckets to N/4 each (the scale-unsafe
+    alternative of lowering r)."""
     cands = (
-        left.join(right, on=["band", "bucket"])
+        sign_lsh_candidates(
+            df, id_col, vec_col, ("qid", "qvec"), ("nid", "nvec"),
+            n_planes, bands, dim, seed, multiprobe,
+        )
         .filter(F.col("qid") != F.col("nid"))
         .select("qid", "qvec", "nid", "nvec")
         .distinct()

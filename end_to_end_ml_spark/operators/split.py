@@ -657,17 +657,19 @@ def token_budget_allocation(
     t = F.col("n_tokens").cast("double")
     wexpr = F.sqrt(t) if alpha == 0.5 else F.pow(t, F.lit(alpha))
     w = g.withColumn("weight_q", F.floor(F.lit(1024.0) * wexpr).cast("long"))
-    # Σw via a GLOBAL window over the grouped frame: the frame is at most
-    # |groups| rows (post map-side-combined agg), so the single-partition
-    # window is a handful of rows — and unlike a separate .agg() +
-    # crossJoin, it does NOT re-evaluate the grouped lineage, keeping the
-    # fact table at ONE scan (a second full scan at 100 TB would double
-    # the operator's entire cost).
-    from pyspark.sql import Window
-
-    a = w.withColumn(
-        "total_w",
-        F.sum("weight_q").over(Window.partitionBy()).cast("long"),
+    # Σw by ONE global aggregate that gathers the ≤|groups| rows with their
+    # total, exploded back out: the fact table stays at ONE scan (a second
+    # full scan at 100 TB would double the operator's entire cost). A 1-row
+    # .agg() + broadcast crossJoin scans it twice (column pruning drops
+    # n_docs from that branch, so its exchange is not reused), and a global
+    # window logs a WindowExec warning on every execution.
+    a = (
+        w.agg(
+            F.collect_list(F.struct(*w.columns)).alias("__rows"),
+            F.sum("weight_q").alias("total_w"),
+        )
+        .select(F.explode("__rows").alias("__r"), "total_w")
+        .select("__r.*", "total_w")
     ).select(
         "*",
         F.expr(

@@ -17,10 +17,10 @@ micro-serving path.
 from __future__ import annotations
 
 from pyspark.ml import PipelineModel
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
+from .features.calibrate import positive_probability
+from .functions.metrics import apply_threshold
 from .operators.prep import validate_request_schema
 from .sources.io import ingest_json_records
 
@@ -60,11 +60,12 @@ def predict_records(
         schema = f"{schema}, __row_id long"
     df = ingest_json_records(spark, tagged, schema)
     scored = model.transform(df)
-    out = scored.withColumn(
-        "predicted_probability", vector_to_array(F.col("probability"))[pos_index]
-    ).withColumn(
-        "prediction",
-        (F.col("predicted_probability") >= F.lit(decision_threshold)).cast("int"),
+    out = apply_threshold(
+        positive_probability(
+            scored, pos_index=pos_index, out_col="predicted_probability"
+        ),
+        "predicted_probability",
+        decision_threshold,
     )
     cols = ([pk_col] if pk_col else []) + ["predicted_probability", "prediction"]
     rows = sorted(out.select("__row_id", *cols).collect(), key=lambda r: r[0])

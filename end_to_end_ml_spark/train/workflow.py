@@ -12,9 +12,7 @@ from __future__ import annotations
 import os
 
 from pyspark.ml import PipelineModel
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..functions import metrics as M
 from ..features import calibrate as C
@@ -116,11 +114,12 @@ def batch_score(
     model's stages fused into the scan."""
     df = spark.read.parquet(input_path)
     scored = model.transform(df)
-    out = scored.withColumn(
-        "predicted_probability", vector_to_array(F.col("probability"))[pos_index]
-    ).withColumn(
-        "prediction",
-        (F.col("predicted_probability") >= F.lit(decision_threshold)).cast("int"),
+    out = M.apply_threshold(
+        C.positive_probability(
+            scored, pos_index=pos_index, out_col="predicted_probability"
+        ),
+        "predicted_probability",
+        decision_threshold,
     )
     result = out.select(*df.columns, "predicted_probability", "prediction")
     if output_path:

@@ -170,23 +170,19 @@ def test_entire_registry_is_lint_clean(spark):
     assert dirty == {}, dirty
 
 
-def test_registry_keys_never_shadowed():
-    """A late REGISTRY["name"] = ... assignment silently replaces an
-    existing entry (dicts don't complain) — the bug that once swallowed
-    the lineitem rollup query. Source-level tripwire: every late
-    registration name is unique and absent from the initial literal."""
-    import re
+def test_query_rejects_duplicate_name():
+    """A second declaration of a registry name would silently replace the
+    first in a plain dict — the bug that once swallowed the lineitem
+    rollup query. query() refuses it and leaves the first entry in place,
+    for names from any part of the module (q12 was declared in a late
+    block, q1 among the first)."""
+    from end_to_end_ml_spark.plans.entry_queries import query
 
-    import end_to_end_ml_spark.plans.entry_queries as eq
-
-    src = open(eq.__file__.replace(".pyc", ".py")).read()
-    late = re.findall(r'^REGISTRY\["([A-Za-z0-9_]+)"\] = ', src, re.M)
-    assert len(late) == len(set(late)), sorted(
-        {n for n in late if late.count(n) > 1}
-    )
-    literal = re.findall(r'^    "([A-Za-z0-9_]+)": \(', src, re.M)
-    shadowed = set(late) & set(literal)
-    assert not shadowed, sorted(shadowed)
+    for name in ("q1_pricing_summary", "q12_late_shipments"):
+        before = REGISTRY[name]
+        with pytest.raises(ValueError, match=name):
+            query(name, lambda spark, sf_dir: None)
+        assert REGISTRY[name] is before
 
 
 def test_registry_count_claims():
@@ -295,24 +291,60 @@ def test_cohorts_partition_the_oracled_tail():
 
 def test_bench_and_plandump_lists_reference_live_queries():
     """Round-9 retired two registry names (ts4, ml1) — a stale name left
-    in bench.py or tools/dump_plans.py would only surface as a runtime
-    KeyError in the driver's bench run. Pin every list statically."""
+    in bench.py's run tables or tools/dump_plans.py would only surface as
+    a runtime KeyError in the driver's bench run. Check every name."""
     import os
-    import re
     import sys
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, root)
+    sys.path.insert(0, os.path.join(root, "tools"))
+    import bench
+    import dump_plans
+
     import __spark_entry__ as entry_mod
 
     live = set(entry_mod.queries())
-    for path in ("bench.py", os.path.join("tools", "dump_plans.py")):
-        src = open(os.path.join(root, path)).read()
-        names = set()
-        for block in re.findall(r"^\w+ = \[(.*?)^\]", src, re.S | re.M):
-            names |= set(re.findall(r'"([a-z][a-z0-9_]+)"', block))
-        stale = names - live
-        assert not stale, f"{path} references non-registry queries: {sorted(stale)}"
+    assert set(bench.HEADLINE).isdisjoint(bench.REST)
+    for where, names in (
+        ("bench.HEADLINE", bench.HEADLINE),
+        ("bench.REST", bench.REST),
+        ("tools/dump_plans.QUERIES", dump_plans.QUERIES),
+    ):
+        assert names, where
+        stale = set(names) - live
+        assert not stale, f"{where} references non-registry queries: {sorted(stale)}"
+
+
+@pytest.mark.parametrize(
+    "argv, code, says",
+    [
+        (["--help"], 0, "usage:"),
+        (["--no-such-flag"], 2, "--no-such-flag"),
+        ([SF, "q1_pricing_summary", "q1_pricing_sumary"], 2, "q1_pricing_sumary"),
+    ],
+)
+def test_check_oracle_cli_fails_before_spark(monkeypatch, capsys, argv, code, says):
+    """tools/check_oracle.py reads its whole command line before it starts
+    Spark: --help, an unknown flag and a name that is not in the registry
+    each exit without a session (a mistyped query name used to be skipped,
+    reporting 0/0 pass with exit 0)."""
+    import os
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, os.path.join(root, "tools"))
+    import check_oracle
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("check_oracle started Spark")
+
+    monkeypatch.setattr(check_oracle, "get_spark", no_spark)
+    with pytest.raises(SystemExit) as exc:
+        check_oracle.main(argv)
+    assert exc.value.code == code
+    out = capsys.readouterr()
+    assert says in out.out + out.err
 
 
 def test_no_raw_tokenizer_inside_hof_lambda():

@@ -3,12 +3,13 @@ Spark and its oracle_sql() on DuckDB over the same sf dir; compare row count,
 schema (column names), and order-insensitive values.
 
 Usage: python tools/check_oracle.py [--window] [--json OUT.json] [sf_dir] [query ...]
-(--window restricts to the driver's 50-slot DRIVER_WINDOW snapshot;
---json writes a per-query result map, the committable evidence artifact)
+(see --help). The command line is parsed before Spark starts, and a query
+name that is not in the registry is an error.
 """
 
 from __future__ import annotations
 
+import argparse
 import json
 import math
 import os
@@ -49,18 +50,28 @@ def rows_to_multiset(cols, rows):
     )
 
 
-def main():
-    args = [a for a in sys.argv[1:]]
-    window_only = "--window" in args
-    if window_only:
-        args.remove("--window")
-    json_out = None
-    if "--json" in args:
-        i = args.index("--json")
-        json_out = args[i + 1]
-        del args[i : i + 2]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    only = set(args[1:])
+def main(argv=None):
+    ap = argparse.ArgumentParser(
+        description="Compare registry queries on Spark against their DuckDB oracles."
+    )
+    ap.add_argument(
+        "sf_dir", nargs="?", default="/root/testdata/sf0.01",
+        help="directory of the parquet tables (default: the sf0.01 test data)",
+    )
+    ap.add_argument("queries", nargs="*", help="registry names (default: all)")
+    ap.add_argument(
+        "--window", action="store_true",
+        help="check the driver's 50-slot DRIVER_WINDOW snapshot",
+    )
+    ap.add_argument(
+        "--json", metavar="OUT", help="write the per-query result map to OUT",
+    )
+    args = ap.parse_intermixed_args(argv)
+    unknown = [n for n in args.queries if n not in entry_mod.queries()]
+    if unknown:
+        ap.error(f"not registry queries: {' '.join(unknown)}")
+    window_only, json_out, sf_dir = args.window, args.json, args.sf_dir
+    only = set(args.queries)
     if window_only:
         # replicate exactly the driver's snapshot: the first 50 registry
         # entries (== DRIVER_WINDOW by construction)

@@ -97,6 +97,20 @@ def artifact_exposures() -> tuple[dict[str, list[int]], dict[str, int]]:
     return exposures, latest_red
 
 
+def priority_tiers(round_n: int, names: list[str], ledger: dict, exposures: dict):
+    """``names`` as the policy's sorted tiers (T1, T2); see the module
+    docstring, step 2."""
+
+    def tiebreak(name: str) -> str:
+        return hashlib.md5(f"r{round_n}:{name}".encode()).hexdigest()
+
+    t1 = [n for n in names if n not in exposures]
+    t2 = [n for n in names if n in exposures]
+    t1.sort(key=lambda n: (-ledger.get(n, {}).get("first_seen_round", 0), tiebreak(n)))
+    t2.sort(key=lambda n: (len(exposures[n]), exposures[n][-1], tiebreak(n)))
+    return t1, t2
+
+
 def pick(round_n: int, update_ledger: bool = False) -> list[str]:
     sys.path.insert(0, ROOT)
     import __spark_entry__ as entry  # noqa: E402
@@ -114,15 +128,8 @@ def pick(round_n: int, update_ledger: bool = False) -> list[str]:
     exposures, latest_red = artifact_exposures()
 
     forced = [n for n in oracled if latest_red.get(n)]
-
-    def tiebreak(name: str) -> str:
-        return hashlib.md5(f"r{round_n}:{name}".encode()).hexdigest()
-
     rest = [n for n in oracled if n not in forced]
-    t1 = [n for n in rest if n not in exposures]
-    t2 = [n for n in rest if n in exposures]
-    t1.sort(key=lambda n: (-ledger.get(n, {}).get("first_seen_round", 0), tiebreak(n)))
-    t2.sort(key=lambda n: (len(exposures[n]), exposures[n][-1], tiebreak(n)))
+    t1, t2 = priority_tiers(round_n, rest, ledger, exposures)
 
     all_families = {family(n) for n in oracled}
     window: list[str] = list(forced)[:WINDOW_SIZE]
@@ -175,22 +182,14 @@ def cohort2(round_n: int, cohort_n: int = 2) -> list[str]:
 
     oracled = list(entry.oracle_sql())
     exposures, _ = artifact_exposures()
-
-    def tiebreak(name: str) -> str:
-        return hashlib.md5(f"r{round_n}:{name}".encode()).hexdigest()
-
     slow_oracle: set[str] = set()
     locals_ = sorted(glob.glob(os.path.join(ROOT, "CHECK_ORACLE_LOCAL_r*.json")))
     if locals_:
         with open(locals_[-1]) as f:
             res = json.load(f).get("results", {})
         slow_oracle = {n for n, r in res.items() if (r.get("duck_s") or 0) > 5}
-    ledger = load_ledger()
     rest = [n for n in oracled if n not in window and n not in slow_oracle]
-    t1 = [n for n in rest if n not in exposures]
-    t2 = [n for n in rest if n in exposures]
-    t1.sort(key=lambda n: (-ledger.get(n, {}).get("first_seen_round", 0), tiebreak(n)))
-    t2.sort(key=lambda n: (len(exposures[n]), exposures[n][-1], tiebreak(n)))
+    t1, t2 = priority_tiers(round_n, rest, load_ledger(), exposures)
     lo = WINDOW_SIZE * (cohort_n - 2)
     return (t1 + t2)[lo : lo + WINDOW_SIZE]
 

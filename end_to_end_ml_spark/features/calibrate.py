@@ -24,21 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def positive_class_index(classes, pos_label=1) -> int:
-    """Resolve the probability-vector COLUMN of the positive class from
-    the model's class order instead of assuming index == label
-    (reference /root/reference/src/inference/utils/model.py:37-55,
-    pinned by tests/test_inference/test_inference_serving.py's
-    reversed-classes_ case): a model whose classes_ is [1, 0] keeps its
-    positive column at index 0. MLlib's probability vector is indexed by
-    the label INDEX, so pass the fitted label order (e.g. a
-    StringIndexerModel's .labels) when it may differ from [0, 1]."""
-    classes = list(classes)
-    if pos_label not in classes:
-        raise ValueError(f"positive label {pos_label!r} not in classes {classes!r}")
-    return classes.index(pos_label)
-
-
 def positive_probability(df: DataFrame, probability_col: str = "probability", pos_index: int = 1,
                          out_col: str = "pos_proba") -> DataFrame:
     """M9: extract the positive-class probability by fitted label index."""

@@ -302,10 +302,6 @@ def build_preprocessing_stages(
     return stages
 
 
-def build_preprocessing_pipeline(**kwargs) -> Pipeline:
-    return Pipeline(stages=build_preprocessing_stages(**kwargs))
-
-
 def fit_label_indexer(df: DataFrame, label_col: str, output_col: str = "label"):
     """F8: sklearn-LabelEncoder-parity indexer (lexicographic order)."""
     return StringIndexer(

@@ -599,15 +599,6 @@ def pr_curve_with_ap(
     )
 
 
-def class_imbalance_ratio(df: DataFrame, label_col: str) -> float:
-    """A3: n_neg / n_pos → e.g. XGBoost scale_pos_weight."""
-    r = df.agg(
-        F.sum((F.col(label_col) == 0).cast("long")).alias("neg"),
-        F.sum((F.col(label_col) == 1).cast("long")).alias("pos"),
-    ).collect()[0]
-    return r["neg"] / r["pos"]
-
-
 def column_variance(df: DataFrame, cols) -> DataFrame:
     """A14: per-column variance for variance-threshold selection, computed
     via exact decimal sums (engine-independent, unlike streaming variance):

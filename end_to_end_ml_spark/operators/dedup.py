@@ -55,12 +55,6 @@ def exact_duplicate_groups(df: DataFrame, text_col: str, id_col: str) -> DataFra
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """Keep the smallest-id document per distinct text (deterministic)."""
-    keepers = df.groupBy(text_col).agg(F.min(id_col).alias(id_col))
-    return df.join(keepers, on=[text_col, id_col], how="left_semi")
-
-
 # ---------------------------------------------------------------------------
 # shingling (shared by MinHash / Jaccard)
 # ---------------------------------------------------------------------------
@@ -74,18 +68,6 @@ def char_shingles(text_col, n: int = 3):
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1))),
             lambda i: t.substr(i, F.lit(n)),
-        )
-    )
-
-
-def word_shingles(text_col, n: int = 2):
-    """Distinct word n-grams (space-joined) from whitespace tokens."""
-    t = F.col(text_col) if isinstance(text_col, str) else text_col
-    toks = F.split(F.trim(t), r"\s+")
-    return F.array_distinct(
-        F.transform(
-            F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0))),
-            lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
 
@@ -287,35 +269,11 @@ def _estimator_prune(
     )
 
 
-def _band_candidates(
-    sig: DataFrame,
-    num_hashes: int,
-    bands: int,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
+def _band_candidates(sig: DataFrame, num_hashes: int, bands: int) -> DataFrame:
     """Banding over a (id, sig) frame: docs sharing any band hash are
     candidates. One explode (b rows/doc) + one equi-join on the band key —
-    no cross-join. Output: distinct (id_a, id_b), id_a < id_b.
-
-    ``max_bucket_size`` is the hot-bucket guard for adversarial corpora: a
-    document duplicated millions of times puts every copy in the same
-    bucket and the self-join of that ONE bucket is quadratic. Production
-    LSH dedup (e.g. the BigCode/near-dedup pipelines) drops buckets above
-    a size cap — members that near-duplicate each other still meet in
-    their other, less-degenerate bands, and byte-identical floods belong
-    to the cheaper exact_dedup pass that should run first. Default None
-    (no cap) keeps candidate generation exhaustive for oracle checks; the
-    cap costs one extra count-per-bucket aggregation reusing the same
-    shuffle key."""
+    no cross-join. Output: distinct (id_a, id_b), id_a < id_b."""
     banded = _banded(sig, num_hashes, bands)
-    if max_bucket_size is not None:
-        ok = (
-            banded.groupBy("band", "bucket")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") <= max_bucket_size)
-            .select("band", "bucket")
-        )
-        banded = banded.join(ok, on=["band", "bucket"], how="left_semi")
     left = banded.select("band", "bucket", F.col("id").alias("id_a"))
     right = banded.select("band", "bucket", F.col("id").alias("id_b"))
     return (
@@ -324,24 +282,6 @@ def _band_candidates(
         .select("id_a", "id_b")
         .distinct()
     )
-
-
-def minhash_lsh_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Candidate near-dup pairs via MinHash banding (see _band_candidates)."""
-    assert num_hashes % bands == 0
-    sig = minhash_signatures_agg(
-        _spread(df), id_col, char_shingles(text_col, shingle_size), num_hashes, seed
-    )
-    return _band_candidates(sig, num_hashes, bands, max_bucket_size)
 
 
 def minhash_dedup_pairs(
@@ -439,36 +379,6 @@ class MinHashIndex:
         self._owned = (False, False)
 
 
-def minhash_build_index(
-    hist_df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_size: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    seed: int = 42,
-) -> MinHashIndex:
-    """Build the persisted history LSH index once per corpus epoch; pass
-    the result to :func:`minhash_probe_pairs` via ``index=`` for every
-    ingest batch, and ``unpersist()`` (or write to the index store) when
-    the epoch rolls. At 100 TB the index is ~1000× smaller than the text
-    (bands × 16 B band rows + 64 × 8 B signature per doc) and is the ONLY
-    history-derived state a probe touches — history text is read again
-    only for the final exact-Jaccard verify of estimator survivors."""
-    assert num_hashes % bands == 0
-    sig, sig_owned = persist(
-        minhash_signatures_agg(
-            _spread(hist_df), id_col, char_shingles(text_col, shingle_size),
-            num_hashes, seed,
-        )
-    )
-    bands_df, bands_owned = persist(_banded(sig, num_hashes, bands))
-    return MinHashIndex(
-        sig, bands_df, (sig_owned, bands_owned),
-        num_hashes, bands, seed, shingle_size,
-    )
-
-
 def minhash_probe_pairs(
     new_df: DataFrame,
     hist_df: DataFrame,
@@ -504,9 +414,10 @@ def minhash_probe_pairs(
     slice of the full pairs — pinned by
     tests/test_dedup_text.py::test_minhash_probe_matches_full_pairs.
 
-    ``index=`` (a :class:`MinHashIndex` from :func:`minhash_build_index`)
-    is the maintenance-loop contract: the history signature/band frames
-    come pre-persisted from the index, so the ONLY per-call cache is the
+    ``index=`` (a :class:`MinHashIndex` over the persisted history
+    signature and band frames) is the maintenance-loop contract: the
+    history signature/band frames come pre-persisted from the index, so
+    the ONLY per-call cache is the
     O(|batch|) batch signature (reclaimed by clearCache / session end /
     the index epoch roll) — without it each call cached a fresh
     history-sized signature frame and a loop's executor storage grew
@@ -960,14 +871,12 @@ def canonical_per_group(
 
 
 def _span_intervals(df: DataFrame, id_col: str, text_col: str, n: int):
-    """Shared front half of the span-dedup pair (stats + cutting): tokenize,
-    explode positional n-gram md5 prefixes, keep grams occurring >= 2 times
-    corpus-wide, and merge touching/overlapping hits into maximal
-    intervals. Returns (toks, intervals) where toks = (id, __toks,
-    n_tokens) and intervals = (id, __isl, s, e) with e exclusive. The two
-    public operators MUST share this (same tokenization, gram hash width,
-    and pos == prev_end merge rule) — their outputs are asserted
-    consistent by tests, and a drifted copy would desynchronize them."""
+    """Front half of :func:`duplicated_span_stats`: tokenize, explode
+    positional n-gram md5 prefixes, keep grams occurring >= 2 times
+    corpus-wide, and merge touching/overlapping hits (pos == prev_end)
+    into maximal intervals. Returns (toks, intervals) where toks = (id,
+    __toks, n_tokens) and intervals = (id, __isl, s, e) with e
+    exclusive."""
     toks = df.select(
         F.col(id_col).alias("id"),
         F.split(F.trim(F.col(text_col)), r"\s+").alias("__toks"),
@@ -1073,48 +982,6 @@ def duplicated_span_stats(
                 / F.col("n_tokens")
             ).alias("kept_frac"),
         )
-    )
-
-
-def remove_duplicated_spans(
-    df: DataFrame, id_col: str, text_col: str, n: int = 10
-) -> DataFrame:
-    """The cutting half of :func:`duplicated_span_stats`: re-emit each
-    document with every duplicated length-``n`` token span excised
-    (whitespace normalized to single spaces — the tokenization is the
-    unit of surgery, byte-exact whitespace is not preserved). Same dup
-    policy and scale shape as the stats pass, plus one join of the
-    per-doc interval list (tiny: merged intervals, not hits) back onto
-    the token arrays and a JVM-side filter over (token, index) pairs —
-    no Python in the row path.
-
-    Output: (id, clean_text, n_tokens, n_removed_tokens)."""
-    toks, spans = _span_intervals(df, id_col, text_col, n)
-    intervals = spans.groupBy("id").agg(
-        F.collect_list(F.struct("s", "e")).alias("__cuts")
-    )
-    cut = toks.join(intervals, "id", "left")
-    keep = F.filter(
-        F.zip_with(
-            F.col("__toks"),
-            F.sequence(F.lit(0), F.col("n_tokens") - 1),
-            lambda t, i: F.struct(t.alias("t"), i.alias("i")),
-        ),
-        lambda p: ~F.exists(
-            F.coalesce(F.col("__cuts"), F.array()),
-            lambda c: (p["i"] >= c["s"]) & (p["i"] < c["e"]),
-        ),
-    )
-    return cut.select(
-        F.col("id").alias(id_col),
-        F.concat_ws(" ", F.transform(keep, lambda p: p["t"])).alias("clean_text"),
-        "n_tokens",
-        F.coalesce(
-            F.aggregate(
-                F.col("__cuts"), F.lit(0), lambda acc, c: acc + (c["e"] - c["s"])
-            ),
-            F.lit(0),
-        ).cast("long").alias("n_removed_tokens"),
     )
 
 

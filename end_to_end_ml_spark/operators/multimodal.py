@@ -3,10 +3,9 @@ columns with typed metadata, processed via Arrow-batched Pandas UDFs.
 
 The Spark-side architecture is real and tested — schemas, partitioning,
 mapInPandas batch shape, metadata extraction. The actual media decoding is
-STUBBED (``decode_image`` raises NotImplementedError; ``fake_features``
-is the deterministic stand-in) because media libraries (PIL/ffmpeg) are not
-in this container. Swapping in a real decoder changes only the inner
-function body, not the distributed plan.
+STUBBED by deterministic byte-level stand-ins because media libraries
+(PIL/ffmpeg) are not in this container. Swapping in a real decoder changes
+only the inner function body, not the distributed plan.
 
 Scale design: payloads stay in executor memory only for the lifetime of one
 Arrow batch; ``spark.sql.execution.arrow.maxRecordsPerBatch`` bounds batch
@@ -53,71 +52,6 @@ def payload_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
     )
 
 
-def decode_image(payload: bytes) -> "object":
-    """STUB — media decode needs PIL/opencv, not present in this container.
-    Replace the body with e.g. ``PIL.Image.open(io.BytesIO(payload))``."""
-    raise NotImplementedError(
-        "image decoding requires a media library not present in this container"
-    )
-
-
-def _fake_feature_vector(payload: bytes, dim: int) -> list[float]:
-    """Deterministic stand-in for a decoded-media feature extractor: fold
-    bytes into ``dim`` accumulators, scale to [0,1). Stable across runs."""
-    acc = [0] * dim
-    for i, byte in enumerate(payload):
-        acc[i % dim] = (acc[i % dim] * 31 + byte) % 100003
-    return [a / 100003.0 for a in acc]
-
-
-def extract_features(
-    df: DataFrame, id_col: str, payload_col: str, dim: int = 16
-) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads — the real
-    distributed plumbing for a decode→featurize stage. The inner transform
-    is the deterministic fake (see module docstring)."""
-    out_schema = f"{id_col} long, feature array<float>"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "feature": [
-                        _fake_feature_vector(bytes(p), dim) for p in pdf[payload_col]
-                    ],
-                }
-            )
-
-    return df.select(id_col, payload_col).mapInPandas(batches, schema=out_schema)
-
-
-def sample_frames(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    n_frames: int = 4,
-    frame_bytes: int = 64,
-) -> DataFrame:
-    """Video-style frame sampling plumbing: emit n evenly-spaced byte windows
-    per payload (stand-in for real frame extraction; one output row per
-    frame — the explode shape a real decoder would produce)."""
-    p = F.col(payload_col)
-    total = F.length(p)
-    frames = F.transform(
-        F.sequence(F.lit(0), F.lit(n_frames - 1)),
-        lambda i: F.struct(
-            i.alias("frame_idx"),
-            F.substring(
-                p, (i * F.greatest(total - frame_bytes, F.lit(1)) / F.lit(n_frames)).cast("int") + 1, frame_bytes
-            ).alias("frame_bytes"),
-        ),
-    )
-    return df.select(F.col(id_col), F.explode(frames).alias("f")).select(
-        id_col, "f.frame_idx", "f.frame_bytes"
-    )
-
-
 def sample_frames_stride(
     df: DataFrame,
     id_col: str,
@@ -125,7 +59,7 @@ def sample_frames_stride(
     frame_size: int = 64,
     every: int = 4,
 ) -> DataFrame:
-    """Strided variant of :func:`sample_frames`: segment the payload into
+    """Video-style frame sampling plumbing: segment the payload into
     fixed-size frames and keep every ``every``-th one, emitting (id, frame_idx, frame_md5).
     With a real container format the frame boundaries come from the codec
     index instead of fixed offsets; the distributed shape is identical.

@@ -123,29 +123,6 @@ def shard_shuffle(
     )
 
 
-def write_shuffled_shards(
-    df: DataFrame, path: str, id_col: str, n_shards: int = 64, salt: str = "sh1"
-) -> None:
-    """Materialize :func:`shard_shuffle` as a parquet layout partitioned by
-    shard, rows sorted by ``pos`` inside each file — the on-disk form a
-    sequential trainer reads shard-by-shard. ``repartitionByRange(n_shards,
-    shard)`` co-locates each shard's rows before the sorted write —
-    range partitioning on the dense 0..n_shards-1 ids gives approximately
-    one shard per writer task (hash repartition could co-locate colliding
-    shard ids while leaving other tasks empty; range boundaries come from
-    a sampling pass, so 1:1 is the norm, not a guarantee). Output files
-    are correct either way (partitionBy + sortWithinPartitions), this
-    only balances writer parallelism."""
-    shuffled = shard_shuffle(df, id_col, n_shards=n_shards, salt=salt)
-    (
-        shuffled.repartitionByRange(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
 def pack_bin_summary(packed: DataFrame, budget: int) -> DataFrame:
     """Roll packed assignments up to bins: (shard, bin_id, n_docs,
     n_tokens, fill_ppm). fill_ppm = floor(n_tokens * 1e6 / budget) — exact

@@ -9,7 +9,7 @@ with the same key and ``feature_ts <= entity_ts`` and
 kept with NULL features (left as-of join) — Feast's behavior.
 
 Physical strategy (the one nontrivial join of the reference):
-- Default: ranged equi-join on the key + time predicates, then keep the
+- Ranged equi-join on the key + time predicates, then keep the
   newest feature row per entity via one window. Catalyst broadcasts the
   small side automatically; otherwise both sides shuffle once on the key.
   AQE's skew-join splitting covers hot keys.
@@ -74,67 +74,4 @@ def as_of_join(
         joined.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "__eid")
-    )
-
-
-def as_of_join_union(
-    entity_df: DataFrame,
-    feature_df: DataFrame,
-    keys: Sequence[str],
-    entity_ts: str,
-    feature_ts: str,
-    ttl_seconds: int | None = None,
-    feature_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """Sort-based as-of join — the large×large scale path.
-
-    Instead of a ranged join (whose fan-out is every feature row inside the
-    TTL window per entity), union the two sides tagged by role, sort each
-    key's timeline once, and carry the latest feature row forward with
-    ``last(struct, ignorenulls)`` — one shuffle per side on the key, zero
-    fan-out, state = one struct per row. The classic merge-asof recast as a
-    window; this is what survives when both sides are fact-sized and feature
-    history per key is deep.
-
-    Equal-timestamp semantics match :func:`as_of_join`: features at exactly
-    ``entity_ts`` are visible (features sort before entities at the same
-    instant), and ties on ``feature_ts`` resolve to the maximum feature
-    tuple. Entities with no (in-TTL) feature row keep NULL features.
-    Byte-identical duplicate entity rows are preserved, same as
-    :func:`as_of_join`."""
-    keys = list(keys)
-    feat_cols = (
-        list(feature_cols)
-        if feature_cols is not None
-        else [c for c in feature_df.columns if c not in keys]
-    )
-    f_side = feature_df.select(
-        *keys,
-        F.col(feature_ts).alias("__ts"),
-        F.lit(0).alias("__is_entity"),
-        F.struct(
-            F.col(feature_ts).alias("__fts"), *[F.col(c) for c in feat_cols]
-        ).alias("__feat"),
-    )
-    e_side = entity_df.withColumn("__ts", F.col(entity_ts)).withColumn(
-        "__is_entity", F.lit(1)
-    )
-    u = e_side.unionByName(f_side, allowMissingColumns=True)
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col("__ts").asc(), F.col("__is_entity").asc(), F.col("__feat").asc())
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    picked = u.withColumn("__last", F.last("__feat", ignorenulls=True).over(w)).filter(
-        F.col("__is_entity") == 1
-    )
-    in_window = F.col("__last").isNotNull()
-    if ttl_seconds is not None:
-        in_window = in_window & (
-            F.col("__last.__fts")
-            >= F.col(entity_ts) - F.expr(f"INTERVAL {int(ttl_seconds)} SECONDS")
-        )
-    return picked.select(
-        *entity_df.columns,
-        *[F.when(in_window, F.col(f"__last.{c}")).alias(c) for c in feat_cols],
     )

@@ -2,42 +2,31 @@
 
 Each operator is a pure ``DataFrame -> DataFrame`` function, composable with
 ``df.transform(...)`` — the Spark-native form of the reference's injectable
-step registry (P13, src/feature/utils/prep.py:364-412). All of them are
-single-pass narrow transformations (no shuffle) except the dedup/validation
-ops, which shuffle once on their key — by design they're the *only* wide
-operators here, so Catalyst fuses the rest into one codegen stage over the
-parquet scan.
+step registry (P13, src/feature/utils/prep.py:364-412). The cleaning steps
+(P3, P4, P7, P9) are single-pass narrow transformations (no shuffle), so
+Catalyst fuses them into one codegen stage over the parquet scan; the audit,
+quantile and winsorizing operators aggregate.
 
 Reference citations (relative to /root/reference/):
 - P3  blank→null          src/feature/utils/prep.py:414-423
 - P4  token normalize     src/feature/utils/prep.py:425-445
-- P5  dup validation      src/feature/utils/prep.py:447-472
-- P6  dedup keep-last     src/feature/utils/prep.py:474-498
 - P7  type enforcement    src/feature/utils/prep.py:500-556
 - P8  null audit          src/feature/utils/prep.py:558-608
 - P9  value recode        src/feature/utils/prep.py:669-684
-- P10 class recode        src/feature/utils/prep.py:686-704
-- P11 name sanitization   src/feature/utils/data.py:685-719
-- P13 step registry       src/feature/utils/prep.py:364-412
+
+P5 (dup validation) and P6 (dedup keep-last) are the registry rows
+``p5_dup_check`` and ``p6_latest_order_per_customer``.
 """
 
 from __future__ import annotations
 
-import re
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 # Tokens the reference treats as missing (prep.py:425-445).
 MISSING_TOKENS = ["", "<NA>", "null", "?", "N/A", "NAN", "nan"]
-
-
-def reconcile_columns(df: DataFrame, required: Sequence[str]) -> DataFrame:
-    """P2: keep only configured columns actually present (driver-side set
-    intersection, preserving configured order)."""
-    present = set(df.columns)
-    return df.select(*[c for c in required if c in present])
 
 
 def blanks_to_null(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
@@ -58,44 +47,6 @@ def normalize_missing_tokens(
     for c in targets:
         out = out.withColumn(c, F.when(F.col(c).isin(list(tokens)), None).otherwise(F.col(c)))
     return out
-
-
-def count_duplicates(df: DataFrame, pk_cols: Sequence[str]) -> tuple[int, int]:
-    """P5: (full-row dup count, dup-by-PK count). One job; both counts come
-    from aggregations, no collect of data rows."""
-    total = df.count()
-    distinct_rows = df.distinct().count()
-    pk_dupes = (
-        df.groupBy(*pk_cols)
-        .count()
-        .filter(F.col("count") > 1)
-        .agg(F.coalesce(F.sum(F.col("count") - 1), F.lit(0)).alias("d"))
-        .collect()[0]["d"]
-    )
-    return total - distinct_rows, int(pk_dupes)
-
-
-def validate_no_duplicates(df: DataFrame, pk_cols: Sequence[str]) -> DataFrame:
-    """P5 (raising form): mirror the reference's ValueError contract."""
-    row_dupes, pk_dupes = count_duplicates(df, pk_cols)
-    if row_dupes > 0:
-        raise ValueError(f"{row_dupes} duplicate rows found")
-    if pk_dupes > 0:
-        raise ValueError(f"{pk_dupes} duplicate primary keys found")
-    return df
-
-
-def dedup_keep_last(df: DataFrame, pk_cols: Sequence[str], order_col: str) -> DataFrame:
-    """P6: drop_duplicates(keep="last") needs an explicit order in Spark —
-    pandas row order is not a distributed concept. ``order_col`` (event
-    timestamp or a monotonic ingest id) defines "last". Single shuffle on the
-    PK; AQE handles skewed keys."""
-    w = Window.partitionBy(*pk_cols).orderBy(F.col(order_col).desc())
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def enforce_types(
@@ -147,22 +98,6 @@ def null_fraction_audit(df: DataFrame, cols: Sequence[str] | None = None) -> Dat
     ).orderBy(F.col("null_fraction").desc(), "column_name")
 
 
-def high_null_columns(
-    df: DataFrame,
-    threshold: float = 0.3,
-    exclude: Sequence[str] | None = None,
-) -> list[str]:
-    """P8 flagging side: columns with ≥ threshold null fraction (tiny driver
-    collect of the audit frame). ``exclude`` mirrors the reference's
-    ``cols_to_exclude`` (identify_cols_with_high_nans,
-    /root/reference/tests/test_feature/test_data_preprocessor.py:432):
-    excluded columns are never audited or flagged — id/date columns that
-    are legitimately sparse stay out of the drop list."""
-    targets = [c for c in df.columns if not exclude or c not in set(exclude)]
-    audit = null_fraction_audit(df, targets)
-    return [r["column_name"] for r in audit.filter(F.col("null_fraction") >= threshold).collect()]
-
-
 def recode_values(
     df: DataFrame, col: str, mapping: dict, on_missing: str = "warn"
 ) -> DataFrame:
@@ -174,8 +109,8 @@ def recode_values(
     reference's map_categorical_features contract exactly
     (/root/reference/src/feature/utils/prep.py:669-684, pinned by
     tests/test_feature/test_data_transformer.py's caplog assertion);
-    pass on_missing="error" to raise instead (the class-label contract —
-    use :func:`recode_class_labels`)."""
+    pass on_missing="error" to raise instead, for a load-bearing column
+    such as the class label."""
     if col not in df.columns:
         if on_missing == "warn":
             import logging
@@ -185,9 +120,7 @@ def recode_values(
             )
             return df
         # generic message: recode_values serves ordinary categorical
-        # columns too — the class-specific wording belongs to
-        # recode_class_labels, which pre-checks and raises its own
-        # (round-9 ADVICE)
+        # columns too
         raise ValueError(f"Column {col} doesn't exist in data.")
     expr = F.col(col)
     out = None
@@ -195,56 +128,6 @@ def recode_values(
         cond = F.col(col) == F.lit(k)
         out = F.when(cond, F.lit(v)) if out is None else out.when(cond, F.lit(v))
     return df.withColumn(col, out.otherwise(expr) if out is not None else expr)
-
-
-def recode_class_labels(df: DataFrame, col: str, mapping: dict) -> DataFrame:
-    """P10: class-label recode — cast to string THEN dict replace, raising
-    ValueError on a missing column (the reference's map_class_labels
-    contract, /root/reference/src/feature/utils/prep.py:686-704: the
-    label column is load-bearing, so silence is not an option there,
-    unlike the advisory categorical recode)."""
-    if col not in df.columns:
-        raise ValueError(f"Class column {col} doesn't exist in data.")
-    return recode_values(
-        df.withColumn(col, F.col(col).cast("string")), col, mapping,
-        on_missing="error",
-    )
-
-
-def sanitize_column_names(df: DataFrame) -> DataFrame:
-    """P11: LightGBM-style name cleanup (non-alphanumeric → underscore)."""
-    return df.toDF(*[re.sub(r"[^A-Za-z0-9]+", "_", c) for c in df.columns])
-
-
-class PrepPipeline:
-    """P13: the reference's injectable step registry — ordered ``df → df``
-    callables with add/prepend semantics, folded lazily so Catalyst still
-    fuses all narrow steps into one stage."""
-
-    def __init__(
-        self,
-        steps: Sequence[Callable[[DataFrame], DataFrame]] = (),
-        prepend_steps: Sequence[Callable[[DataFrame], DataFrame]] = (),
-        append_steps: Sequence[Callable[[DataFrame], DataFrame]] = (),
-    ):
-        # prepend_steps run before and append_steps after the base steps —
-        # the reference's constructor contract
-        # (test_data_preprocessor.py:62, run_preprocessing_pipeline)
-        self.steps: list[Callable[[DataFrame], DataFrame]] = (
-            list(prepend_steps) + list(steps) + list(append_steps)
-        )
-
-    def add_step(self, step: Callable[[DataFrame], DataFrame], position: int | None = None):
-        if position is None:
-            self.steps.append(step)
-        else:
-            self.steps.insert(position, step)
-        return self
-
-    def run(self, df: DataFrame) -> DataFrame:
-        for step in self.steps:
-            df = df.transform(step)
-        return df
 
 
 def validate_request_schema(

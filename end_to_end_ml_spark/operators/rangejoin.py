@@ -16,10 +16,6 @@ event within ``window`` seconds of an earlier one sits in the same or the
 next bin. Per-bucket candidate volume is bounded by the key's own event
 rate per window — skewed keys fall out of AQE's skew-join splitting since
 this is a plain equi-join.
-
-The streaming twin (stream-stream interval join with watermark-bounded
-state) is streaming/events.py:interval_join; this is the batch/backfill
-form of the same semantics.
 """
 
 from __future__ import annotations

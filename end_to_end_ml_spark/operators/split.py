@@ -30,7 +30,6 @@ _HASH_MULT = 2654435761
 _HASH_MOD = 1000000007
 
 
-
 def uniform_draw(key_col, salt: str):
     """The module's ONE md5 uniform draw: u(key) = first-48-md5-bits of
     ``salt|key`` / 2^48 ∈ [0, 1). Every sampler below (and the oracles
@@ -170,59 +169,6 @@ def stratified_split(
     return (
         tagged.filter(F.col("split") == "train").drop("split"),
         tagged.filter(F.col("split") == "test").drop("split"),
-    )
-
-
-def stratified_split_random(
-    df: DataFrame, class_col: str, train_size: float = 0.8, seed: int = 42
-) -> tuple[DataFrame, DataFrame]:
-    """T1 (seeded-random form): exact per-class fractions ordered by
-    rand(seed) — for when callers don't have a stable PK. Reproducible only
-    for a fixed physical partitioning of ``df`` (Spark seeds rand per
-    partition), the inherent caveat of a PK-less random split.
-
-    Same two-level construction as ``_bucketed_rank``, instantiated on the
-    random key instead of the hashed PK (separate instantiation on purpose:
-    the round-7 one-implementation rule protects the row-identity guarantee
-    between stratified_split_column and carve_assignment, which this
-    variant does not participate in — and it has no PK to feed that
-    helper's tie-break). ``floor(__k·8192)`` buckets are monotone in the
-    key, so per-bucket offsets + within-bucket rank reproduce the global
-    per-class rank exactly while each class spreads over ~8k window
-    partitions — the former ``percent_rank() OVER (PARTITION BY class)``
-    funneled every class's FULL row set through one task (class labels are
-    the canonical low-cardinality key: a binary-label corpus put ~N/2 rows
-    in one sort at scale, the exact hot-partition class two_level_rank
-    eliminated). rand ties (P ~ n²/2⁵³) break by partition order; with no
-    PK there is nothing deterministic to break them by, and percent_rank
-    ranked them equal — both resolutions are inside the random split's
-    contract."""
-    _validate_stratify(df, class_col, train_size)
-    keyed = df.withColumn("__k", F.rand(seed)).withColumn(
-        "__b", F.floor(F.col("__k") * 8192).cast("int")
-    )
-    w_in = Window.partitionBy(class_col, "__b").orderBy("__k")
-    ranked = keyed.withColumn("__r_in", F.row_number().over(w_in))
-    counts = ranked.groupBy(class_col, "__b").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = (
-        Window.partitionBy(class_col)
-        .orderBy("__b")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    meta = (
-        counts.withColumn("__off", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0)))
-        .join(counts.groupBy(class_col).agg(F.sum("__cnt").alias("__n")), class_col)
-        .select(class_col, "__b", "__off", "__n")
-    )
-    tagged = ranked.join(meta, on=[class_col, "__b"])
-    pr = F.when(
-        F.col("__n") > 1,
-        (F.col("__off") + F.col("__r_in") - 1) / (F.col("__n") - 1),
-    ).otherwise(F.lit(0.0))
-    tagged = tagged.withColumn("__pr", pr).select(*df.columns, "__pr")
-    return (
-        tagged.filter(F.col("__pr") < train_size).drop("__pr"),
-        tagged.filter(F.col("__pr") >= train_size).drop("__pr"),
     )
 
 

@@ -214,8 +214,8 @@ def word_ngrams_from_tokens(toks, n: int):
     ``select`` earlier) before invoking this: a raw split() expression
     passed here would be re-evaluated per gram inside the lambda —
     Catalyst's subexpression elimination does not hoist through
-    higher-order-function lambdas, so ``word_ngrams`` over an expression
-    costs O(words²) regex splits per document (measured 2.2 s → 0.2 s on
+    higher-order-function lambdas, so an unbound ``tokens(text_col)``
+    expression costs O(words²) regex splits per document (measured 2.2 s → 0.2 s on
     5k docs for the gram explode). Against a bound attribute, slice just
     reads the row value."""
     toks = F.col(toks) if isinstance(toks, str) else toks
@@ -225,17 +225,6 @@ def word_ngrams_from_tokens(toks, n: int):
             lambda i: F.concat_ws(" ", F.slice(toks, i + 1, n)),
         )
     )
-
-
-def word_ngrams(text_col, n: int):
-    """Distinct word n-grams (space-joined) as an array column — pure JVM
-    expressions, same windowing convention as dedup.word_shingles: documents
-    shorter than ``n`` tokens yield their single (short) whole-doc gram.
-
-    NOTE (hot paths): prefer materializing ``tokens(text_col)`` as a column
-    in a prior select and calling :func:`word_ngrams_from_tokens` — see its
-    docstring for the O(words²) re-split pitfall this form carries."""
-    return word_ngrams_from_tokens(tokens(text_col), n)
 
 
 def repetition_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -504,24 +493,6 @@ def winnow_fingerprints(
     )
     return with_kg.select(
         F.col(id_col), F.explode(F.array_distinct(mins)).alias("fp")
-    )
-
-
-def winnow_match_pairs(
-    df: DataFrame, id_col: str, text_col: str, k: int = 8, w: int = 16
-) -> DataFrame:
-    """Candidate copied-passage pairs: docs sharing >= 1 winnowed
-    fingerprint, with the shared-fingerprint count as match strength.
-    Bucket equi-join on fp — candidates shuffle, never N^2."""
-    fps = winnow_fingerprints(df, id_col, text_col, k, w)
-    a = fps.select(F.col(id_col).alias("id_a"), "fp")
-    b = fps.select(F.col(id_col).alias("id_b"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("shared_fps"))
-        .orderBy(F.col("shared_fps").desc(), "id_a", "id_b")
     )
 
 
@@ -981,9 +952,9 @@ def bm25_components(
     Emits one row per (doc, matched term) carrying ONLY exact integers —
     tf (term count in doc), dl (doc token length), df_t (docs containing
     the term), n_docs, total_tokens — so the table is engine-exact and
-    oracle-checkable; the floating-point score (idf · saturation) is a
-    separate composition, :func:`bm25_score`, because ln() is the one
-    piece libm does not promise bit-identical across engines.
+    oracle-checkable; the floating-point score (idf · saturation) is left
+    to the consumer, because ln() is the one piece libm does not promise
+    bit-identical across engines.
 
     Scale shape (round-13 optimization): ONE tokenize pass. The former
     shape derived dl / corpus constants / term matches / per-term df as
@@ -1046,29 +1017,6 @@ def bm25_components(
         .crossJoin(F.broadcast(consts))
         .select(id_col, "term", "tf", "dl", "df_t", "n_docs", "total_tokens")
     )
-
-
-def bm25_score(components: DataFrame, k1: float = 1.2, b: float = 0.75):
-    """Per-(doc, term) BM25 score over :func:`bm25_components` output,
-    plus the per-doc total. Lucene's non-negative idf variant:
-    ln(1 + (N - df + 0.5)/(df + 0.5)); saturation tf·(k1+1) /
-    (tf + k1·(1 - b + b·dl/avgdl)) with avgdl = total_tokens/n_docs.
-    Pure JVM double math — reproducible per engine; cross-engine only to
-    libm ulp."""
-    avgdl = F.col("total_tokens").cast("double") / F.col("n_docs").cast("double")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
-    )
-    sat = (F.col("tf") * F.lit(k1 + 1.0)) / (
-        F.col("tf")
-        + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl)
-    )
-    id_col = components.columns[0]
-    scored = components.withColumn("score", idf * sat)
-    totals = scored.groupBy(id_col).agg(F.sum("score").alias("bm25"))
-    return scored, totals
 
 
 def bpe_encode(

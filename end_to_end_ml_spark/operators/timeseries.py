@@ -114,46 +114,6 @@ def time_weighted_avg(
     )
 
 
-def hourly_distinct_sketches(
-    df, key_col: str, ts_col: str = "ts", group_col: str = "event_type", lg_k: int = 12
-):
-    """Hourly HLL sketches of distinct ``key_col`` per group — the
-    MERGEABLE pre-aggregate of the hypertable-rollup pattern. At 100 TB
-    you materialize these per hour/partition once (each sketch is ~2^lg_k
-    bytes regardless of cardinality) and answer any coarser distinct-count
-    rollup by merging sketches, never rescanning raw data."""
-    from pyspark.sql import functions as F
-
-    return (
-        df.groupBy(
-            F.date_trunc("hour", F.col(ts_col)).alias("hour"),
-            F.col(group_col),
-        )
-        .agg(F.hll_sketch_agg(F.col(key_col), F.lit(lg_k)).alias("sketch"))
-    )
-
-
-def rollup_distinct_from_sketches(hourly, group_col: str = "event_type"):
-    """Merge hourly sketches to daily distinct-count estimates — a pure
-    sketch union (tiny shuffle of fixed-size binaries), no raw-data
-    access. The estimate is deterministic for given input (datasketches
-    HLL is deterministic), so the output is test-stable."""
-    from pyspark.sql import functions as F
-
-    return (
-        hourly.groupBy(
-            F.date_trunc("day", F.col("hour")).alias("day"), F.col(group_col)
-        )
-        .agg(F.hll_union_agg("sketch").alias("merged"))
-        .select(
-            "day",
-            group_col,
-            F.hll_sketch_estimate("merged").alias("approx_distinct"),
-        )
-        .orderBy("day", group_col)
-    )
-
-
 def hll_registers(
     df,
     key_col: str,
@@ -161,9 +121,9 @@ def hll_registers(
     group_col: str = "event_type",
     p: int = 6,
 ):
-    """Engine-portable HLL register table — the ORACLE-CHECKABLE twin of
-    :func:`hourly_distinct_sketches` (which stores opaque Apache
-    DataSketches binaries no other engine can rebuild). Same trick as the
+    """Engine-portable HLL register table — ORACLE-CHECKABLE, unlike
+    Spark's ``hll_sketch_agg`` (opaque Apache DataSketches binaries no
+    other engine can rebuild). Same trick as the
     Count-Min family (:func:`countmin_sketch`): derive the sketch's
     randomness from md5 so ANY engine computes the identical sketch, and
     keep it relational so merging is plain SQL.
@@ -178,11 +138,10 @@ def hll_registers(
 
     Only NON-EMPTY registers appear (relational sparse form, <= m rows
     per bucket·group regardless of cardinality); the harmonic-mean
-    estimate (which needs the empty count = m - rows) lives in
-    :func:`hll_estimate_registers` and is pytest-verified — a float
-    estimate would NOT be bit-portable (sums of 2^-rho need > 53 mantissa
-    bits), which is exactly why the registry query emits registers, not
-    estimates.
+    estimate (which needs the empty count = m - rows) is left to the
+    consumer — a float estimate would NOT be bit-portable (sums of
+    2^-rho need > 53 mantissa bits), which is exactly why the registry
+    query emits registers, not estimates.
 
     Scale shape: one narrow projection + one partial-agg groupBy (max
     absorbs map-side); the register table is the mergeable hypertable
@@ -230,25 +189,6 @@ def hll_registers_rollup(hourly, group_col: str = "event_type"):
     )
 
 
-def hll_estimate_registers(register_rows: list, p: int = 6) -> float:
-    """Driver-side HLL estimate from one group's collected (idx, max_rho)
-    rows (<= 2^p of them — a bounded fold, never data-sized). Standard
-    HLL: alpha_m * m^2 / (sum over ALL m registers of 2^-M_j) with
-    linear counting for the small-range correction. Python floats here
-    are fine — this is the analytics consumer, not the oracle surface."""
-    import math
-
-    m = 1 << p
-    alpha = 0.7213 / (1 + 1.079 / m)
-    seen = {int(r[0]): int(r[1]) for r in register_rows}
-    s = sum(2.0 ** -seen.get(j, 0) for j in range(m))
-    est = alpha * m * m / s
-    zeros = m - len(seen)
-    if est <= 2.5 * m and zeros > 0:
-        return m * math.log(m / zeros)
-    return est
-
-
 def rolling_distinct_users(
     events: DataFrame,
     ts_col: str = "ts",
@@ -265,8 +205,8 @@ def rolling_distinct_users(
     EXPLODE each pair into the ≤ N windows it contributes to and count
     distinct users per window end-day. Data expansion is bounded by N on
     the deduped pairs, both shuffles key on high-cardinality columns, and
-    at 100 TB the N-day sketch alternative is hourly_distinct_sketches +
-    rollup (same module) when approximate counts suffice.
+    at 100 TB the N-day sketch alternative is hll_registers +
+    hll_registers_rollup (same module) when approximate counts suffice.
 
     Window ends with no events on the end day itself are excluded (each
     emitted day is a real activity day — matches the DuckDB oracle's

@@ -966,8 +966,8 @@ _SHINGLE_SQL = (
 
 def s9_online_export(spark, sf_dir):
     """S2-variant online-store export core (Feast materialize stand-in):
-    latest event per (user_id, event_type) — the frame export_online_store
-    writes bucketed by key hash; the relational part is the oracle surface."""
+    latest event per (user_id, event_type) — the frame an online store is
+    loaded from; the relational part is the oracle surface."""
     from ..sources.io import latest_per_key
 
     ev = load_table(spark, sf_dir, "events")
@@ -1698,12 +1698,10 @@ def f8_label_index(spark, sf_dir):
     whose output is SQL-checkable because alphabetical ordering makes the
     index a dense rank over sorted labels (the sklearn LabelEncoder
     contract, SURVEY §2.7 F8)."""
-    from pyspark.ml.feature import StringIndexer
+    from ..features.pipeline import fit_label_indexer
 
     docs = load_table(spark, sf_dir, "documents")
-    model = StringIndexer(
-        inputCol="lang", outputCol="lang_idx", stringOrderType="alphabetAsc"
-    ).fit(docs)
+    model = fit_label_indexer(docs, "lang", "lang_idx")
     return (
         model.transform(docs)
         .select("doc_id", "lang", F.col("lang_idx").cast("int").alias("lang_idx"))
@@ -3526,8 +3524,8 @@ query("prof1_column_profile", prof1_column_profile, PROF1_SQL)
 
 
 def pipe4_shard_stats(spark, sf_dir):
-    """Deterministic training-shard assignment (md5 hex-nibble — the
-    engine-independent shard key export_training_shards partitions by):
+    """Deterministic training-shard assignment (md5 hex-nibble — an
+    engine-independent shard key to partition training shards by):
     per-shard doc count, char volume, id range. Verifies shard membership
     is reproducible cross-engine — stable shard membership is what lets a
     resumed training job re-read identical batches."""
@@ -5531,8 +5529,7 @@ def x17_bm25_components(spark, sf_dir):
     """Exact BM25 statistics for a probe query-term set (operators/text.
     bm25_components): one row per (doc, matched term) of pure integers —
     tf, dl, df_t, n_docs, total_tokens. Broadcast term probe; ln-based
-    scoring lives in text.bm25_score (pytest-verified) because libm ln is
-    not bit-portable."""
+    scoring is left out because libm ln is not bit-portable."""
     docs = load_table(spark, sf_dir, "documents")
     return text.bm25_components(
         docs, "doc_id", "text", ["data", "model", "learning"]

@@ -1,123 +1,26 @@
-"""Structured Streaming surface over event tables (engine extension — the
-reference is batch-only, SURVEY §2.12; this is the scale-out path for the
-``events`` schema the driver ships).
+"""Structured Streaming maintenance sinks over event and document streams
+(engine extension — the reference is batch-only, SURVEY §2.12), plus the
+batch sessionizer the registry's sessions query uses.
 
-Every aggregation here has a batch-equivalent in plans/entry_queries
-(st_hourly_window) so correctness is oracle-checkable in batch mode while
-the streaming form adds watermarks + incremental state.
-
-Scale notes:
-- Watermark bounds state: late rows beyond it are dropped, so state size is
-  O(active windows × groups), not O(stream length).
-- ``dropDuplicatesWithinWatermark`` gives at-least-once dedup with bounded
-  state — the streaming form of P6.
-- session_window state is per (user, gap-session); AQE doesn't apply to
-  streaming shuffles, so shuffle partitions are set by the session factory.
+Every sink is a ``foreachBatch`` over a VERSIONED parquet store: epoch N
+writes ``store_path/v=<N>`` from the newest version strictly below N and
+never overwrites what it reads (an in-place overwrite of a lazily-read
+input drops the data before the new rows are computed). A crash replay
+of epoch N rewrites its own version directory, and readers only ever see
+the max version. On a table format (Delta/Iceberg) the same sink is a
+MERGE INTO; versioning is what plain parquet needs for the same
+semantics. Each sink drains available input synchronously
+(``processAllAvailable``), then stops.
 """
-
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-def read_event_stream(spark: SparkSession, directory: str, glob: str = "events.parquet") -> DataFrame:
-    """File-source stream of the events table (parquet). The file source
-    needs a *directory* (new files appear → new micro-batches); ``glob``
-    selects the table's files within it. In production the same
-    transformations run off Kafka — only this reader changes.
-
-    The schema is read from the files themselves (one batch-read of the
-    footer — metadata only, no data scan) instead of being hardcoded:
-    how the TIMESTAMP(NANOS) ``ts`` column surfaces varies by Spark
-    version, and assuming one encoding turns a version bump into silently
-    mis-scaled timestamps. ``normalize_event_ts`` raises on encodings it
-    doesn't recognize."""
-    from end_to_end_ml_spark.sources.io import normalize_event_ts
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    file_schema = (
-        spark.read.option("pathGlobFilter", glob).parquet(directory).schema
-    )
-    raw = (
-        spark.readStream.schema(file_schema)
-        .format("parquet")
-        .option("pathGlobFilter", glob)
-        .load(directory)
-    )
-    return normalize_event_ts(raw)
-
-
-def tumbling_counts(
-    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
-) -> DataFrame:
-    """Watermarked tumbling-window counts+sums by event_type (streaming form
-    of st_hourly_window)."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n", "total_value")
-    )
-
-
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding-window event rates."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def session_aggregates(
-    events: DataFrame, gap: str = "30 minutes", watermark: str = "2 hours"
-) -> DataFrame:
-    """Per-user session windows (gap-based): session bounds + event count +
-    value sum. State is bounded by the watermark."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("s"), "user_id")
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            "user_id",
-            F.col("s.start").alias("session_start"),
-            F.col("s.end").alias("session_end"),
-            "n_events",
-            "total_value",
-        )
-    )
-
-
-def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming P6: drop duplicate event_ids within the watermark horizon
-    (bounded-state exactly-once-per-horizon semantics)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(["event_id"])
-
-
-def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "append"):
-    """Test/demo sink: drive the streaming query over all available input
-    synchronously and leave results in the in-memory table ``name``."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
-
 
 def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     """Batch sessionization (lag + cumulative gap-count) — the classic SQL
-    formulation, usable as an oracle for session_window and at rest over the
-    full history. One shuffle on user_id."""
+    formulation, over the full history at rest. One shuffle on user_id."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -141,380 +44,6 @@ def sessionize_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
     )
 
 
-def stateful_user_totals(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Custom stateful streaming operator (``applyInPandasWithState``):
-    per-user running totals carried across micro-batches — semantics the
-    built-in windowed aggregations can't express (an ever-growing cumulative
-    re-emitted on every batch, in ``update`` mode).
-
-    Scale shape: state is one tiny (n, total) tuple per user key, partitioned
-    by user across executors; each micro-batch touches only the users present
-    in that batch. Arrow-batched pandas transfer, no per-row Python."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    def update(key, pdfs, state):
-        n, total = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            total += float(pdf["value"].sum())
-        state.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            "user_id long, n_events long, total_value double",
-            "n long, total double",
-            "update",
-            GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-def sessionize_stateful(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "2 hours"
-) -> DataFrame:
-    """Gap-based sessionization as a CUSTOM stateful operator
-    (``applyInPandasWithState``) — the hand-rolled equivalent of
-    ``F.session_window`` (see :func:`session_aggregates`), kept as the
-    template for session semantics the built-in can't express (e.g. a
-    per-session distinct count or an early-exit rule folded into state).
-
-    State per user: the one OPEN session (start, last event ts, n, value
-    sum). Each micro-batch folds its rows in event-time order: a row within
-    ``gap_minutes`` of the last event extends the session; a later row
-    closes it (the closed session is emitted) and opens a new one. An
-    EventTimeTimeout set to last_ts+gap flushes the open session once the
-    watermark passes it, so state stays bounded exactly like the built-in's.
-
-    Scale shape: state is ONE tuple per active user, hash-partitioned by
-    user across executors; each batch moves only its own rows (Arrow
-    batches, no per-row Python)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def to_us(series):
-        # Arrow hands ts as datetime64[ns] (session-TZ naive, UTC here):
-        # int64 view is nanoseconds since epoch
-        return series.astype("int64") // 1000
-
-    def update(key, pdfs, state):
-        out = []
-        if state.hasTimedOut:
-            if state.exists:
-                start, last, n, tv = state.get
-                out.append((key[0], start, last, n, tv))
-                state.remove()
-            return iter(
-                [
-                    pd.DataFrame(
-                        out,
-                        columns=[
-                            "user_id",
-                            "start_us",
-                            "end_us",
-                            "n_events",
-                            "total_value",
-                        ],
-                    )
-                ]
-            )
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        rows = rows.sort_values(["ts", "event_id"])
-        ts_us = to_us(rows["ts"])
-        cur = state.get if state.exists else None  # (start, last, n, tv)
-        for t, v in zip(ts_us.tolist(), rows["value"].tolist()):
-            if cur is None:
-                cur = (t, t, 1, float(v))
-            elif t - cur[1] > gap_us:
-                out.append((key[0], *cur))
-                cur = (t, t, 1, float(v))
-            else:
-                # late (out-of-order across micro-batches, within-watermark)
-                # events may carry t < cur[1] — or even t < cur[0]; clamp so
-                # a straggler can only widen the session, never regress its
-                # end (which would also pull the EventTimeTimeout earlier
-                # and close the session prematurely, mis-splitting the rest)
-                cur = (
-                    min(cur[0], t),
-                    max(cur[1], t),
-                    cur[2] + 1,
-                    cur[3] + float(v),
-                )
-        state.update(cur)
-        state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)  # ms epoch
-        return iter(
-            [
-                pd.DataFrame(
-                    out,
-                    columns=["user_id", "start_us", "end_us", "n_events", "total_value"],
-                )
-            ]
-        )
-
-    raw = (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            "user_id long, start_us long, end_us long, n_events long, total_value double",
-            "start long, last long, n long, tv double",
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    return raw.select(
-        "user_id",
-        F.timestamp_micros(F.col("start_us")).alias("session_start"),
-        F.timestamp_micros(F.col("end_us")).alias("session_end"),
-        "n_events",
-        "total_value",
-    )
-
-
-def enrich_stream(events: DataFrame, dim: DataFrame, on: str, how: str = "left") -> DataFrame:
-    """Stream-static join: enrich the event stream with a (batch) dimension
-    table. Spark plans the static side as a broadcast against each
-    micro-batch, so no streaming state is kept at all — the canonical way
-    to attach user/item attributes to events at any scale. The dim frame
-    is re-resolved per micro-batch, so slowly-changing dims pick up
-    updates on the next trigger."""
-    return events.join(F.broadcast(dim), on=on, how=how)
-
-
-def write_stream_parquet(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint_dir: str,
-    partition_by: list[str] | None = None,
-    query_name: str = "to_parquet",
-):
-    """Checkpointed parquet sink via foreachBatch: each micro-batch appends
-    atomically, exactly-once per epoch under the checkpoint (the file-sink
-    commit log). foreachBatch (rather than the direct parquet sink) so
-    aggregated streams in update/complete mode can also land in parquet,
-    and so a batch-side ``partition_by`` works identically to
-    sources.io.write_parquet. Synchronous like run_to_memory: drains all
-    available input, then stops."""
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        writer = batch_df.write.mode("append")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(path)
-
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
-
-
-def interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    user_col: str = "user_id",
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermarked stream-stream INTERVAL join: pair each left event with
-    the same user's right events whose timestamp falls in
-    (left.ts - max_lag, left.ts] — the attribution-join shape ("which
-    views preceded this purchase within the hour").
-
-    Both sides carry watermarks and the join condition time-bounds the
-    match range, so Spark derives a state-retention bound for each side
-    (state is dropped once the other side's watermark passes the possible
-    match window) — without the time bound a stream-stream join would
-    buffer forever. Output columns: (l_id, r_id, user, l_ts, r_ts)."""
-    l = left.select(
-        F.col("event_id").alias("l_id"),
-        F.col(user_col).alias("l_user"),
-        F.col("ts").alias("l_ts"),
-    ).withWatermark("l_ts", watermark)
-    r = right.select(
-        F.col("event_id").alias("r_id"),
-        F.col(user_col).alias("r_user"),
-        F.col("ts").alias("r_ts"),
-    ).withWatermark("r_ts", watermark)
-    lag = F.expr(f"INTERVAL {max_lag}")
-    return l.join(
-        r,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") > F.col("l_ts") - lag),
-        "inner",
-    ).select(
-        "l_id", "r_id", F.col("l_user").alias("user_id"), "l_ts", "r_ts"
-    )
-
-
-def interval_join_outer(
-    left: DataFrame,
-    right: DataFrame,
-    user_col: str = "user_id",
-    max_lag: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """LEFT OUTER variant of :func:`interval_join`: every left event is
-    emitted, with NULL right columns when no same-user right event landed
-    in (left.ts - max_lag, left.ts] — the "purchases with NO preceding
-    view" attribution gap report. Outer stream-stream joins need BOTH the
-    watermarks and the time-bound condition for a second reason beyond
-    state retention: a left row can only be emitted as unmatched once the
-    right watermark has passed its entire candidate window (before that a
-    match could still arrive), so null-joined rows trail the watermark
-    rather than appearing immediately. State bound and shuffle shape are
-    identical to the inner form."""
-    l = left.select(
-        F.col("event_id").alias("l_id"),
-        F.col(user_col).alias("l_user"),
-        F.col("ts").alias("l_ts"),
-    ).withWatermark("l_ts", watermark)
-    r = right.select(
-        F.col("event_id").alias("r_id"),
-        F.col(user_col).alias("r_user"),
-        F.col("ts").alias("r_ts"),
-    ).withWatermark("r_ts", watermark)
-    lag = F.expr(f"INTERVAL {max_lag}")
-    return l.join(
-        r,
-        (F.col("l_user") == F.col("r_user"))
-        & (F.col("r_ts") <= F.col("l_ts"))
-        & (F.col("r_ts") > F.col("l_ts") - lag),
-        "left_outer",
-    ).select(
-        "l_id", "r_id", F.col("l_user").alias("user_id"), "l_ts", "r_ts"
-    )
-
-
-def stateful_user_totals_tws(events: DataFrame) -> DataFrame:
-    """The Spark 4 ``transformWithStateInPandas`` form of
-    :func:`stateful_user_totals` — same per-user running totals, written
-    against the arbitrary-stateful-processor API that supersedes
-    ``applyInPandasWithState`` (typed value state on a handle, explicit
-    init/close lifecycle, composable timers). Requires the RocksDB state
-    store provider, and a working ``protobuf`` python package for the
-    state-server protocol.
-
-    EXPERIMENTAL support status: ``protobuf`` is absent from this
-    container, so the batch-parity equivalence test import-gates and
-    skips here — this operator is the one surface in the repo that CI
-    cannot execute end-to-end. The test auto-unskips wherever protobuf
-    is installed; prefer :func:`stateful_user_totals`
-    (``applyInPandasWithState``, fully tested) until then.
-
-    Scale shape is unchanged: one tiny state row per user key in the
-    executor-local RocksDB store, Arrow-batched input, only keys present
-    in a micro-batch are touched."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("totals", "n long, total double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._state.exists():
-                n, total = self._state.get()
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
-def stream_upsert_snapshot(
-    stream_df: DataFrame,
-    path: str,
-    key_cols: list[str],
-    ts_col: str,
-    checkpoint_dir: str,
-    tiebreak_cols: list[str] | None = None,
-    query_name: str = "upsert_snapshot",
-):
-    """Streaming state table with EVENT-TIME last-writer-wins: every
-    micro-batch is merged into a parquet snapshot keeping, per key, the row
-    with the greatest (ts, tiebreak) — the continuously-maintained
-    online/feature table a CDC stream feeds. Event-time (not arrival-order)
-    wins, so the final snapshot is independent of how the source splits
-    into micro-batches or which file arrives first — late/out-of-order
-    changes can never clobber a newer state. (Arrival-order CDC semantics
-    — change always beats base — is operators/merge.merge_upsert; use it
-    in a foreachBatch only when the transport guarantees per-key order.)
-
-    Snapshots are VERSIONED (``path/v=<epoch>``): a batch writes the next
-    version from the previous one, never overwriting what it reads (an
-    in-place overwrite of a lazily-read input drops the data before the
-    new rows are computed). Epoch replays after a crash are idempotent —
-    the retried epoch rewrites its own version directory under the same
-    id, and ``read_latest_snapshot`` only ever sees the max version; the
-    union-with-base also makes replaying an already-applied batch a no-op.
-    On a table format (Delta/Iceberg) the same sink is MERGE INTO;
-    versioning here is what plain parquet needs for identical semantics.
-
-    Scale: the union + per-key window shuffles (snapshot + batch) on the
-    key once per epoch; writing the snapshot bucketed on the key would
-    make successive merges co-located. Synchronous: drains available
-    input, then stops."""
-    import os
-
-    from end_to_end_ml_spark.sources.io import latest_per_key
-
-    def sink(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = _snapshot_versions(path)
-        prior = [v for v in versions if v < epoch_id]
-        merged = batch_df
-        if prior:
-            base = spark.read.parquet(os.path.join(path, f"v={max(prior)}"))
-            merged = base.unionByName(batch_df)
-        snap = latest_per_key(
-            merged, key_cols, ts_col, tiebreak_cols=tiebreak_cols
-        )
-        snap.write.mode("overwrite").parquet(os.path.join(path, f"v={epoch_id}"))
-
-    q = (
-        stream_df.writeStream.outputMode("update")
-        .foreachBatch(sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return q
-
-
 def _snapshot_versions(path: str) -> list[int]:
     import os
 
@@ -528,7 +57,8 @@ def _snapshot_versions(path: str) -> list[int]:
 
 
 def read_latest_snapshot(spark: SparkSession, path: str) -> DataFrame:
-    """Read the newest version of a stream_upsert_snapshot state table."""
+    """Read the newest version (``path/v=<max epoch>``) of a versioned
+    store."""
     import os
 
     versions = _snapshot_versions(path)
@@ -554,12 +84,12 @@ def stream_dedup_ingest(
     fingerprints. Fingerprint = md5 of the normalized first-8-token
     prefix, the same convention as pipe6.
 
-    The store is VERSIONED like stream_upsert_snapshot (``store_path/
-    v=<epoch>`` written from the previous version, never overwriting what
-    it reads), and accepted docs land in per-epoch directories
-    (``out_path/epoch=<id>``, overwritten on replay) — so a crashed
-    epoch's retry rewrites its own outputs and the ingest is exactly-once
-    at the directory level without a table format. Cross-batch state is
+    The store is VERSIONED (``store_path/v=<epoch>`` written from the
+    previous version, never overwriting what it reads), and accepted docs
+    land in per-epoch directories (``out_path/epoch=<id>``, overwritten
+    on replay) — so a crashed epoch's retry rewrites its own outputs and
+    the ingest is exactly-once at the directory level without a table
+    format. Cross-batch state is
     16 bytes per EVER-ACCEPTED doc (fingerprints only, never text), the
     anti-join broadcasts while the store is small and co-partitions
     after. Synchronous drain (processAllAvailable), like the other
@@ -707,7 +237,7 @@ def stream_hll_ingest(
     splits into micro-batches, which arrives first, or whether an epoch
     replays — parity with the batch operator is pytest-pinned.
 
-    Store layout/versioning follows stream_upsert_snapshot (``store_path/
+    Store layout/versioning as in the module docstring (``store_path/
     v=<epoch>``, write-next-from-previous, crash replays rewrite their
     own version); same lifecycle contract as stream_dedup_ingest — the
     guard refuses a fresh checkpoint against a store with versions ahead
@@ -758,8 +288,8 @@ def stream_countmin_ingest(
     FUNCTION of (version < N, batch N), both deterministic, so a crash
     replay of epoch N rewrites ``v=N`` byte-identically rather than
     re-adding. Same store layout and fresh-checkpoint guard as
-    stream_upsert_snapshot / stream_dedup_ingest / stream_hll_ingest;
-    synchronous drain. Scaffolding shared via _versioned_sketch_sink."""
+    stream_dedup_ingest / stream_hll_ingest; synchronous drain.
+    Scaffolding shared via _versioned_sketch_sink."""
     from ..operators.timeseries import countmin_sketch
 
     return _versioned_sketch_sink(

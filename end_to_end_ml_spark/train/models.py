@@ -4,10 +4,6 @@ MLlib-native classifiers; the gradient-boosting slots (reference LightGBM /
 XGBoost) map to MLlib GBTClassifier by default, with xgboost.spark /
 SynapseML LightGBM used automatically when those packages are present
 (import-try gates — they are not in this container).
-
-``class_weight="balanced"`` (reference training-config.yml:101) has no MLlib
-keyword: it becomes a computed ``weightCol`` = n / (k * n_class), the same
-formula sklearn uses.
 """
 
 from __future__ import annotations
@@ -17,35 +13,8 @@ from pyspark.ml.classification import (
     LogisticRegression,
     RandomForestClassifier,
 )
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def add_balanced_weights(df: DataFrame, label_col: str, weight_col: str = "class_weight") -> DataFrame:
-    """sklearn class_weight='balanced': w_c = n / (k * n_c).
-
-    The per-class counts are a k-row aggregate (k = #classes), so the weights
-    table is tiny by construction: compute it with a map-side-combinable
-    ``groupBy(label).count()``, derive n and k with a single-row cross join,
-    and broadcast-join the k-row weight table back onto the frame.  No
-    unpartitioned window touches the full dataset (the naive
-    ``count().over(Window.partitionBy())`` funnels every row through one
-    WindowExec partition — a non-starter at scale).
-
-    LEFT join, not inner: an inner join on the label would silently drop
-    NULL-label rows (NULL never equi-matches), turning a data-quality
-    problem into vanished rows. NULL-label rows survive with a NULL
-    weight, so a downstream fit fails loudly or a prep step can filter
-    them explicitly."""
-    counts = df.groupBy(label_col).agg(F.count(F.lit(1)).alias("__n_c"))
-    totals = counts.agg(
-        F.sum("__n_c").alias("__n"), F.count(F.lit(1)).alias("__k")
-    )
-    weights = counts.crossJoin(F.broadcast(totals)).select(
-        label_col,
-        (F.col("__n") / (F.col("__k") * F.col("__n_c"))).alias(weight_col),
-    )
-    return df.join(F.broadcast(weights), on=label_col, how="left")
 
 
 def logistic_regression(features_col="features", label_col="label", weight_col=None,
@@ -93,9 +62,9 @@ def gradient_boosting(features_col="features", label_col="label", n_estimators: 
     per branch, or the closest representable form on the GBT fallback —
     ``min_child_samples`` → ``minInstancesPerNode``, ``num_leaves`` →
     a ``maxDepth`` cap of ceil(log2(num_leaves)) (a depth-d tree has at
-    most 2^d leaves), ``scale_pos_weight`` → ``weightCol`` (pair with
-    :func:`with_scale_pos_weight` to materialize the column; reference
-    train.py:500 computes the ratio via :func:`scale_pos_weight`)."""
+    most 2^d leaves), ``scale_pos_weight`` → ``weightCol``, a caller-built column
+    weighting positives ×spw and negatives 1.0 (reference train.py:500
+    computes the ratio via :func:`scale_pos_weight`)."""
     try:  # pragma: no cover - not installed in this container
         from xgboost.spark import SparkXGBClassifier
 
@@ -150,18 +119,6 @@ def gradient_boosting(features_col="features", label_col="label", n_estimators: 
     if scale_pos_weight is not None:
         kw["weightCol"] = weight_col
     return GBTClassifier(**kw)
-
-
-def with_scale_pos_weight(
-    df: DataFrame, label_col: str, spw: float, out_col: str = "class_weight_spw"
-) -> DataFrame:
-    """M4 wiring: materialize scale_pos_weight as a row weight column
-    (positives weighted ×spw, negatives 1.0) for builders that emulate the
-    ratio via ``weightCol`` (MLlib GBT, SynapseML LightGBM)."""
-    return df.withColumn(
-        out_col,
-        F.when(F.col(label_col) == 1, F.lit(float(spw))).otherwise(F.lit(1.0)),
-    )
 
 
 def scale_pos_weight(df: DataFrame, label_col: str) -> float:

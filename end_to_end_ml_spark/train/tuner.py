@@ -43,8 +43,6 @@ from math import ceil, exp, log, pi, sqrt
 # ("int", lo, hi) | ("float", lo, hi) | ("float_log", lo, hi)
 SearchSpace = dict[str, tuple]
 
-LOWER_IS_BETTER_METRICS: frozenset = frozenset({"ece", "log_loss", "brier_score", "brier"})
-
 
 def sample_params(space: SearchSpace, rng: random.Random) -> dict:
     """H1: one parameter draw (categorical / int / linear / log-scale)."""
@@ -152,24 +150,6 @@ class Trial:
     value: float | None = None
     state: str = "pending"
     error: str | None = None
-
-
-def resolve_metric(optimization_metric: str, fbeta_score_beta: float = 0.5) -> tuple[str, str]:
-    """(row name, study direction) for a configured optimization metric —
-    the reference's _metric_row_name + optimization_direction contract
-    (/root/reference/src/training/core/optimizer.py:237-262, pinned by
-    tests/test_training/test_training_search.py): ``fbeta_score`` maps to
-    ``f_{beta}_score``, everything else is used as-is; direction is
-    "minimize" only for the lower-is-better set (ece, log_loss, brier)."""
-    row = (
-        f"f_{fbeta_score_beta}_score"
-        if optimization_metric == "fbeta_score"
-        else optimization_metric
-    )
-    direction = (
-        "minimize" if optimization_metric in LOWER_IS_BETTER_METRICS else "maximize"
-    )
-    return row, direction
 
 
 @dataclass

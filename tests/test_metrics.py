@@ -130,9 +130,19 @@ def test_threshold_sweep_and_best(spark):
     assert 0.3 < M.best_threshold(df, "y", "s") <= 0.7
 
 
-def test_class_imbalance_ratio(spark):
-    df = spark.createDataFrame([(0,)] * 9 + [(1,)], ["y"])
-    assert M.class_imbalance_ratio(df, "y") == pytest.approx(9.0)
+def test_class_imbalance_ratio(spark, tmp_path):
+    """A3 as the registry row a3_imbalance_ratio runs it: negatives per
+    positive over the scored-events fixture (label = event_id % 7 < 3)."""
+    import datetime as dt
+
+    from end_to_end_ml_spark.plans.entry_queries import a3_imbalance
+
+    ts = dt.datetime(2024, 1, 1)
+    spark.createDataFrame(
+        [(i, ts) for i in range(14)], "event_id long, ts timestamp"
+    ).write.parquet(str(tmp_path / "events.parquet"))
+    r = a3_imbalance(spark, str(tmp_path)).collect()[0]
+    assert r["imbalance_ratio"] == pytest.approx(8 / 6)
 
 
 def test_column_variance_matches_numpy(spark):

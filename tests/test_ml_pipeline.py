@@ -5,12 +5,10 @@ calibration tests on test_calibration_threshold.py)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.ml.functions import vector_to_array
 from pyspark.sql import functions as F
 
 from end_to_end_ml_spark.features import calibrate as C
 from end_to_end_ml_spark.features import pipeline as FP
-from end_to_end_ml_spark.features.ensemble import VotingEnsemble
 from end_to_end_ml_spark.train import models as MZ
 from end_to_end_ml_spark.train import tuner
 from end_to_end_ml_spark.train.workflow import (
@@ -39,11 +37,12 @@ def test_label_indexer_alphabetical(spark, frame):
 
 def test_preprocessing_pipeline_fit_transform(spark, frame):
     m = FP.fit_label_indexer(frame, "label_str")
-    stages = FP.build_preprocessing_stages(
-        numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
-    )
-    pipe = FP.build_preprocessing_pipeline(
-        numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
+    from pyspark.ml import Pipeline
+
+    pipe = Pipeline(
+        stages=FP.build_preprocessing_stages(
+            numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
+        )
     )
     labeled = m.transform(frame)
     fitted = pipe.fit(labeled)
@@ -134,12 +133,42 @@ def test_full_pipeline_and_evaluation(spark, frame):
     assert 0 <= metrics["ece"] <= 1
 
 
-def test_balanced_weights(spark):
-    df = spark.createDataFrame([(0.0,)] * 30 + [(1.0,)] * 10, ["label"])
-    out = MZ.add_balanced_weights(df, "label")
-    w = {r["label"]: r["class_weight"] for r in out.distinct().collect()}
-    assert w[0.0] == pytest.approx(40 / (2 * 30))
-    assert w[1.0] == pytest.approx(40 / (2 * 10))
+def test_feature_importances_name_every_feature(spark):
+    """M10 + F7 names on tools/run_pipeline.py's stage list: one
+    recovered name per model input, categorical names carry their OHE
+    level, LR importances are |coefficients| and GBT importances sum
+    to 1."""
+    priorities = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+    segments = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+    df = spark.createDataFrame(
+        [
+            (float(i % 17) * 100.0, priorities[i % 5], segments[(i // 5) % 5],
+             float((i % 17 > 8) != (i % 5 == 0)))
+            for i in range(200)
+        ],
+        ["c_acctbal", "o_orderpriority", "c_mktsegment", "label"],
+    )
+    stages = FP.build_preprocessing_stages(
+        numeric_cols=["c_acctbal"],
+        categorical_cols=["o_orderpriority", "c_mktsegment"],
+        variance_threshold=0.0,
+    )
+    for clf in (
+        MZ.logistic_regression(max_iter=20),
+        MZ.gradient_boosting(n_estimators=5, max_depth=3),
+    ):
+        fitted = FP.build_full_pipeline(stages, clf).fit(df)
+        names = FP.recover_feature_names(fitted, df)
+        model = fitted.stages[-1]
+        assert len(names) == model.numFeatures
+        assert "c_mktsegment__ohe_BUILDING" in names
+        imp = MZ.feature_importances(fitted, names)
+        assert [n for n, _ in imp] == names
+        vals = [v for _, v in imp]
+        if hasattr(model, "coefficients"):
+            assert vals == [abs(c) for c in model.coefficients.toArray()]
+        else:
+            assert sum(vals) == pytest.approx(1.0)
 
 
 def test_scale_pos_weight(spark):
@@ -302,58 +331,6 @@ def test_select_champion_and_gate():
         deployment_gate({"fbeta": 0.1})
 
 
-def test_voting_ensemble_soft_and_hard(spark, frame):
-    m = FP.fit_label_indexer(frame, "label_str")
-    labeled = m.transform(frame)
-    stages = FP.build_preprocessing_stages(
-        numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
-    )
-    m1 = FP.build_full_pipeline(stages, MZ.logistic_regression()).fit(labeled)
-    m2 = FP.build_full_pipeline(stages, MZ.random_forest(n_estimators=5, max_depth=3)).fit(labeled)
-    for voting in ("soft", "hard"):
-        ens = VotingEnsemble([m1, m2], voting=voting, id_col="id")
-        out = ens.transform(labeled)
-        assert out.count() == labeled.count()
-        preds = {r["prediction"] for r in out.select("prediction").distinct().collect()}
-        assert preds <= {0.0, 1.0}
-    with pytest.raises(ValueError, match=">= 2"):
-        VotingEnsemble([m1])
-
-
-def test_get_base_models_uses_each_classifier_name(spark, frame):
-    """Reference parity (test_ensemble_and_config.py): each base model is
-    paired with its OWN final-estimator class name — LR + RF never
-    collapse to one repeated name."""
-    from end_to_end_ml_spark.features.ensemble import get_base_models
-
-    m = FP.fit_label_indexer(frame, "label_str")
-    labeled = m.transform(frame)
-    stages = FP.build_preprocessing_stages(
-        numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
-    )
-    m1 = FP.build_full_pipeline(stages, MZ.logistic_regression()).fit(labeled)
-    m2 = FP.build_full_pipeline(
-        stages, MZ.random_forest(n_estimators=5, max_depth=3)
-    ).fit(labeled)
-    base = get_base_models([m1, m2])
-    names = [n for n, _ in base]
-    assert names == ["LogisticRegressionModel", "RandomForestClassificationModel"]
-    for name, model in base:
-        est = model.stages[-1]
-        assert type(est).__name__ == name
-
-
-def test_positive_class_index_decodes_via_classes():
-    """Reference parity (test_inference_serving.py): a reversed class
-    order still resolves the positive probability column."""
-    from end_to_end_ml_spark.features.calibrate import positive_class_index
-
-    assert positive_class_index([1, 0], pos_label=1) == 0
-    assert positive_class_index([0, 1], pos_label=1) == 1
-    with pytest.raises(ValueError, match="not in classes"):
-        positive_class_index([0, 1], pos_label=2)
-
-
 def test_binary_metrics_has_no_auc_without_probabilities(spark):
     """Reference parity (test_evaluator_auc.py): AUC is probability-based
     — the label/prediction-only metric pass must not claim a roc_auc
@@ -365,35 +342,6 @@ def test_binary_metrics_has_no_auc_without_probabilities(spark):
     cols = set(M.binary_metrics(df, "y", "p").columns)
     assert "roc_auc" not in cols
     assert {"accuracy", "precision", "recall", "f1"} <= cols
-
-
-def test_optimizer_metric_resolution_and_direction():
-    """Reference parity (test_training_search.py): fbeta_score resolves to
-    f_{beta}_score and maximize; roc_auc maximize; log_loss and ece minimize."""
-    from end_to_end_ml_spark.train.tuner import resolve_metric
-
-    assert resolve_metric("fbeta_score", 0.5) == ("f_0.5_score", "maximize")
-    assert resolve_metric("roc_auc") == ("roc_auc", "maximize")
-    assert resolve_metric("log_loss") == ("log_loss", "minimize")
-    assert resolve_metric("brier_score") == ("brier_score", "minimize")
-    assert resolve_metric("ece") == ("ece", "minimize")
-    assert resolve_metric("recall") == ("recall", "maximize")
-
-
-def test_ensemble_soft_probability_is_mean(spark, frame):
-    m = FP.fit_label_indexer(frame, "label_str")
-    labeled = m.transform(frame)
-    stages = FP.build_preprocessing_stages(
-        numeric_cols=["num_a"], categorical_cols=["cat_b"], variance_threshold=0.0
-    )
-    m1 = FP.build_full_pipeline(stages, MZ.logistic_regression()).fit(labeled)
-    ens = VotingEnsemble([m1, m1], voting="soft", id_col="id")
-    a = {r["id"]: r["p"] for r in m1.transform(labeled).select(
-        "id", vector_to_array(F.col("probability"))[1].alias("p")).collect()}
-    b = {r["id"]: r["p"] for r in ens.transform(labeled).select(
-        "id", vector_to_array(F.col("probability"))[1].alias("p")).collect()}
-    for k in a:
-        assert b[k] == pytest.approx(a[k])  # mean of identical models = model
 
 
 # ---------------------------------------------------------------------------
@@ -447,8 +395,8 @@ def test_gbt_real_lib_param_mapping(spark):
 
 
 def test_scale_pos_weight_wiring_trains_and_shifts_recall(spark):
-    """with_scale_pos_weight + the weightCol wiring must (a) produce the
-    ratio column, (b) actually fit, and (c) push the decision boundary
+    """A positives-×spw weight column + the weightCol wiring must (a)
+    carry the ratio, (b) actually fit, and (c) push the decision boundary
     toward the positive class on imbalanced data."""
     from pyspark.ml.feature import VectorAssembler
 
@@ -459,7 +407,10 @@ def test_scale_pos_weight_wiring_trains_and_shifts_recall(spark):
     df = spark.createDataFrame(rows, ["x", "label"])
     spw = MZ.scale_pos_weight(df, "label")
     assert spw == pytest.approx(9.0)
-    weighted = MZ.with_scale_pos_weight(df, "label", spw)
+    weighted = df.withColumn(
+        "class_weight_spw",
+        F.when(F.col("label") == 1, F.lit(spw)).otherwise(F.lit(1.0)),
+    )
     w = {r["label"]: r["class_weight_spw"] for r in weighted.distinct().collect()}
     assert w[1] == pytest.approx(9.0) and w[0] == 1.0
 
@@ -482,21 +433,6 @@ def test_scale_pos_weight_wiring_trains_and_shifts_recall(spark):
 
     assert recall(scored_w) >= recall(scored_u)
     assert recall(scored_w) > 0.5  # weighting actually recovers positives
-
-
-def test_balanced_weights_keeps_null_label_rows(spark):
-    """Inner join on the label silently dropped NULL-label rows (ADVICE
-    r2); the left join must keep them, with a NULL weight."""
-    rows = [(0.0,)] * 3 + [(1.0,)] * 1 + [(None,)] * 2
-    df = spark.createDataFrame(rows, "label double")
-    out = MZ.add_balanced_weights(df, "label")
-    assert out.count() == 6
-    nulls = out.filter(F.col("label").isNull())
-    assert nulls.count() == 2
-    assert nulls.filter(F.col("class_weight").isNull()).count() == 2
-    # non-null weights unchanged by the join-type fix
-    w = {r["label"]: r["class_weight"] for r in out.filter(F.col("label").isNotNull()).distinct().collect()}
-    assert w[0.0] == pytest.approx(4 / (2 * 3))
 
 
 def test_unfitted_pipeline_save_load_roundtrip(spark, tmp_path):

@@ -101,8 +101,8 @@ def test_lightgbm_branch_maps_reference_params(lgbm_stub):
     assert est.kw["baggingFraction"] == 0.9
     assert est.kw["minDataInLeaf"] == 20  # LightGBM's min_child_samples
     assert est.kw["numLeaves"] == 64
-    # LightGBM-on-Spark has no scale_pos_weight: the ratio rides a weight
-    # column materialized by with_scale_pos_weight
+    # LightGBM-on-Spark has no scale_pos_weight: the ratio rides a
+    # caller-built weight column
     assert est.kw["weightCol"] == "class_weight_spw"
 
 

@@ -479,15 +479,6 @@ class TestShardShuffle:
         adjacent = sum(1 for x, y in zip(order, order[1:]) if y == x + 1)
         assert adjacent < 20  # ~1/1000 expected under a random permutation
 
-    def test_write_shuffled_shards_roundtrip(self, spark, tmp_path):
-        df = spark.createDataFrame([(i, f"t{i}") for i in range(120)], ["doc_id", "text"])
-        path = str(tmp_path / "shards")
-        pack.write_shuffled_shards(df, path, "doc_id", n_shards=3)
-        back = spark.read.parquet(path)
-        assert back.count() == 120
-        assert back.select("doc_id").distinct().count() == 120
-        assert set(back.select("shard").distinct().toPandas()["shard"]) <= {0, 1, 2}
-
     def test_rejects_bad_shard_count(self, spark):
         df = spark.createDataFrame([(1,)], ["doc_id"])
         with pytest.raises(ValueError):

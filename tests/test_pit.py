@@ -88,12 +88,14 @@ def test_as_of_exactly_one_row_per_entity(spark):
     assert out.groupBy("id").count().filter("count > 1").count() == 0
 
 
-def test_union_asof_matches_ranged_asof(spark):
-    """The sort-based scale path must agree with the ranged-join path row
-    for row on data with deep feature history, TTL expiry, and ties."""
+def test_ranged_asof_matches_python_reference(spark):
+    """The ranged-join path must agree row for row with a brute-force
+    Python as-of on data with deep feature history, TTL expiry, and ties
+    (newest fts wins, then the larger feature value)."""
+    import datetime as dt
     import random
 
-    from end_to_end_ml_spark.operators.pit import as_of_join, as_of_join_union
+    from end_to_end_ml_spark.operators.pit import as_of_join
 
     rng = random.Random(11)
     entities = [
@@ -108,12 +110,26 @@ def test_union_asof_matches_ranged_asof(spark):
     ]
     e = _ts(spark, spark.createDataFrame(entities, ["id", "ets"]).distinct(), ["ets"])
     f = _ts(spark, spark.createDataFrame(feats, ["id", "fts", "val"]), ["fts"])
+
+    def parse(s):
+        return dt.datetime.strptime(s, "%Y-%m-%d %H:%M:%S")
+
     for ttl in (None, 7 * 86400):
-        a = as_of_join(e, f, ["id"], "ets", "fts", ttl_seconds=ttl)
-        b = as_of_join_union(e, f, ["id"], "ets", "fts", ttl_seconds=ttl)
-        ra = sorted(map(tuple, a.select("id", "ets", "fts", "val").collect()))
-        rb = sorted(map(tuple, b.select("id", "ets", "fts", "val").collect()))
-        assert ra == rb
+        rows = as_of_join(e, f, ["id"], "ets", "fts", ttl_seconds=ttl).collect()
+        got = {(r["id"], r["ets"]): (r["fts"], r["val"]) for r in rows}
+        want = {}
+        for k, ets in set(entities):
+            t = parse(ets)
+            cands = [
+                (parse(fts), v)
+                for kk, fts, v in feats
+                if kk == k
+                and parse(fts) <= t
+                and (ttl is None or parse(fts) >= t - dt.timedelta(seconds=ttl))
+            ]
+            want[(k, t)] = max(cands) if cands else (None, None)
+        assert len(rows) == len(want)
+        assert got == want
 
 
 def test_as_of_duplicate_entity_rows_each_scored(spark):

@@ -144,16 +144,6 @@ def test_w1_threshold_prefilter_reaches_scan(spark):
     assert "Window" in plan, plan
 
 
-def test_balanced_weights_plan_has_no_window(spark):
-    from end_to_end_ml_spark.train.models import add_balanced_weights
-
-    df = spark.range(0, 1000).selectExpr("id", "cast(id % 3 = 0 as int) as label")
-    out = add_balanced_weights(df, "label")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan, plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
-
-
 def test_driver_window_outputs_are_scalar_columns(spark):
     """The driver's pandas canonicalizer cannot sort array/map/struct cells
     (round-4 lesson: skew2_salted_collect err'd on an array<long> column

@@ -518,6 +518,84 @@ def test_materialization_has_one_owner():
     assert not offenders, offenders
 
 
+# Public names whose caller is not in this repo's runtime, with the reason.
+RUNTIME_CALLER_ALLOWLIST = {
+    "create_app": "serving.py: the ASGI factory behind the REST endpoint; "
+    "its caller is an outside ASGI server",
+    "audit_plan": "plans/lint.py: the plan linter; by design its callers "
+    "are the lint tests",
+    "dsir_select": "operators/text.py: the independent DSIR reference that "
+    "the curation DSIR stage and dsir_bucket_weights_from_flag are "
+    "checked against",
+    "calibrate_prefit": "features/calibrate.py: the calibration step named "
+    "in the paper; the served PipelineModel carries no calibrator, so "
+    "wiring it changes what is served",
+}
+
+
+def test_every_public_name_has_a_runtime_caller():
+    """Every public top-level function and class of the package is used by
+    code that runs: the package itself, tools/, perfbench/ (not its
+    tests), bench.py or __spark_entry__.py. A use is an ``ast.Name``, an
+    ``ast.Attribute`` or an import alias of that name outside the name's
+    own definition; comments and docstrings do not count. A name without
+    such a caller is deleted with its tests, or gets an allowlist entry
+    with the reason it stays."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "end_to_end_ml_spark"
+    runtime = [
+        *sorted(pkg.rglob("*.py")),
+        *sorted((root / "tools").glob("*.py")),
+        *sorted((root / "perfbench").glob("*.py")),
+        root / "bench.py",
+        root / "__spark_entry__.py",
+    ]
+    trees = {py: ast.parse(py.read_text()) for py in runtime}
+    defs = [
+        (node.name, py, node)
+        for py in sorted(pkg.rglob("*.py"))
+        for node in trees[py].body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+        and not node.name.startswith("_")
+    ]
+
+    used: set[str] = set()
+    for py, tree in trees.items():
+        own = {
+            id(sub)
+            for name, def_py, node in defs
+            if def_py == py
+            for sub in ast.walk(node)
+            if getattr(sub, "id", getattr(sub, "attr", None)) == name
+        }
+        for node in ast.walk(tree):
+            if id(node) in own:
+                continue
+            if isinstance(node, ast.Name):
+                used.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                used.add(node.attr)
+            elif isinstance(node, ast.alias):
+                used.add(node.name.rsplit(".", 1)[-1])
+
+    orphans = sorted(
+        f"{py.relative_to(root)}:{node.lineno} {name}"
+        for name, py, node in defs
+        if name not in used and name not in RUNTIME_CALLER_ALLOWLIST
+    )
+    assert not orphans, (
+        f"{len(orphans)} public names have no caller outside tests/ "
+        "(delete them with their tests, or allowlist with a reason): "
+        + "; ".join(orphans)
+    )
+    assert set(RUNTIME_CALLER_ALLOWLIST) <= {name for name, _, _ in defs}, (
+        "stale allowlist entry"
+    )
+
+
 def test_curation_chain_has_one_definition():
     """The curation chain's decisions live in operators/curate.py (and the
     fingerprint/gate columns in operators/text.py): no other engine

@@ -1,6 +1,6 @@
 """Unit tests for prep operators — mirrors the reference's
 tests/test_feature/test_data_preprocessor.py behaviors (keep-last dedup,
-token normalization, type enforcement, step ordering)."""
+token normalization, type enforcement, recode contracts)."""
 
 from __future__ import annotations
 
@@ -26,26 +26,6 @@ def test_normalize_missing_tokens(spark):
     assert [r["c"] for r in out] == [None] * 5 + ["ok"]
 
 
-def test_dedup_keep_last(spark):
-    df = spark.createDataFrame(
-        [(1, 10, "old"), (1, 20, "new"), (2, 5, "only")], ["pk", "ts", "v"]
-    )
-    out = {r["pk"]: r["v"] for r in prep.dedup_keep_last(df, ["pk"], "ts").collect()}
-    assert out == {1: "new", 2: "only"}
-
-
-def test_validate_no_duplicates_raises(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "a")], ["pk", "v"])
-    with pytest.raises(ValueError, match="duplicate"):
-        prep.validate_no_duplicates(df, ["pk"])
-
-
-def test_validate_no_duplicates_pk_only(spark):
-    df = spark.createDataFrame([(1, "a"), (1, "b")], ["pk", "v"])
-    with pytest.raises(ValueError, match="primary key"):
-        prep.validate_no_duplicates(df, ["pk"])
-
-
 def test_enforce_types_coerce(spark):
     df = spark.createDataFrame(
         [("2024-01-01", "1.5", 7), ("not-a-date", "2.5", 8)], ["d", "n", "c"]
@@ -67,22 +47,82 @@ def test_null_fraction_audit(spark):
 
 
 def test_high_null_columns(spark):
+    """Flagging columns above a null-fraction threshold reads off
+    null_fraction_audit's report."""
     df = spark.createDataFrame([(1, None), (2, None), (3, "x")], "a int, b string")
-    assert prep.high_null_columns(df, threshold=0.5) == ["b"]
+    audit = prep.null_fraction_audit(df).collect()
+    assert [r["column_name"] for r in audit if r["null_fraction"] > 0.5] == ["b"]
 
 
 def test_high_null_columns_respects_exclude(spark):
     """Reference parity (identify_cols_with_high_nans cols_to_exclude,
-    test_data_preprocessor.py:432): excluded columns are never flagged
-    even above threshold; others still are."""
+    test_data_preprocessor.py:432): a column left out of ``cols`` is never
+    reported even above threshold; the others still are, sorted by
+    fraction descending, then by name."""
     df = spark.createDataFrame(
         [(None, None, 1), (1, None, 2), (None, None, 3), (None, 1, 4)],
         "a int, b int, c int",
     )
+
     # a: 0.75, b: 0.75, c: 0.0
-    assert prep.high_null_columns(df, threshold=0.5) == ["a", "b"]
-    assert prep.high_null_columns(df, threshold=0.5, exclude=["a"]) == ["b"]
-    assert prep.high_null_columns(df, threshold=0.5, exclude=["a", "b"]) == []
+    def flagged(cols=None):
+        audit = prep.null_fraction_audit(df, cols).collect()
+        return [r["column_name"] for r in audit if r["null_fraction"] > 0.5]
+
+    assert flagged() == ["a", "b"]
+    assert flagged(["b", "c"]) == ["b"]
+    assert flagged(["c"]) == []
+
+
+def test_dedup_keep_last(spark, tmp_path):
+    """P6 keep-last dedup as the registry row p6_latest_order_per_customer
+    runs it: one row per customer, the latest o_orderdate wins and the
+    larger o_orderkey breaks a date tie."""
+    import datetime as dt
+
+    from end_to_end_ml_spark.plans.relational import latest_order_per_customer
+
+    spark.createDataFrame(
+        [
+            (1, 10, dt.date(2020, 1, 1), "old"),
+            (2, 10, dt.date(2021, 1, 1), "new"),
+            (3, 20, dt.date(2020, 5, 5), "tie-lo"),
+            (4, 20, dt.date(2020, 5, 5), "tie-hi"),
+            (5, 30, dt.date(2019, 1, 1), "only"),
+        ],
+        "o_orderkey long, o_custkey long, o_orderdate date, o_comment string",
+    ).write.parquet(str(tmp_path / "orders.parquet"))
+    out = latest_order_per_customer(spark, str(tmp_path)).collect()
+    assert [(r["o_custkey"], r["o_comment"]) for r in out] == [
+        (10, "new"), (20, "tie-hi"), (30, "only")
+    ]
+
+
+def _dup_check(spark, tmp_path, rows):
+    """P5 as the registry row p5_dup_check runs it, over a lineitem
+    table of ``rows``: (row_dupes, pk_dupes)."""
+    from end_to_end_ml_spark.plans.entry_queries import p_dup_check
+
+    spark.createDataFrame(
+        rows, "l_orderkey long, l_linenumber int, l_comment string"
+    ).write.parquet(str(tmp_path / "lineitem.parquet"))
+    r = p_dup_check(spark, str(tmp_path)).collect()[0]
+    return r["row_dupes"], r["pk_dupes"]
+
+
+def test_validate_no_duplicates_raises(spark, tmp_path):
+    """A full-row duplicate counts as both a row dupe and a primary-key
+    dupe; a clean table reports zero of each (P5 reports the counts, the
+    caller decides whether to stop)."""
+    assert _dup_check(spark, tmp_path / "dup", [(1, 1, "a"), (1, 1, "a"), (2, 1, "b")]) == (1, 1)
+    assert _dup_check(spark, tmp_path / "clean", [(1, 1, "a"), (1, 2, "a")]) == (0, 0)
+
+
+def test_validate_no_duplicates_pk_only(spark, tmp_path):
+    """Rows that differ outside the key are no row dupes but still
+    primary-key dupes: three copies of one key count two."""
+    rows = [(1, 1, "a"), (1, 1, "b"), (1, 1, "c"), (2, 1, "a")]
+    assert _dup_check(spark, tmp_path, rows) == (0, 2)
 
 
 def test_recode_values_passthrough(spark):
@@ -94,7 +134,8 @@ def test_recode_values_passthrough(spark):
 def test_recode_missing_column_warns_categorical_raises_class(spark, caplog):
     """Reference parity (test_data_transformer.py): a missing column is a
     WARNING + no-op for the categorical recode (prep.py:669-684) but a
-    ValueError for the class-label recode (prep.py:686-704)."""
+    ValueError with on_missing="error", the class-label contract
+    (prep.py:686-704)."""
     import logging
 
     df = spark.createDataFrame([("1",)], ["g"])
@@ -106,41 +147,15 @@ def test_recode_missing_column_warns_categorical_raises_class(spark, caplog):
         for r in caplog.records
     )
     with pytest.raises(ValueError, match="doesn't exist in data"):
-        prep.recode_class_labels(df, "Class", {"0": "Non-Diabetic"})
+        prep.recode_values(df, "Class", {"0": "Non-Diabetic"}, on_missing="error")
 
 
 def test_recode_error_messages_distinguish_paths(spark):
-    """round-9 ADVICE: recode_values serves ordinary categorical columns,
-    so its on_missing='error' message is generic; only
-    recode_class_labels (which pre-checks) says 'Class column'."""
+    """recode_values serves ordinary categorical columns, so its
+    on_missing='error' message is generic (no 'Class column' wording)."""
     df = spark.createDataFrame([("1",)], ["g"])
     with pytest.raises(ValueError, match=r"^Column cat doesn't exist"):
         prep.recode_values(df, "cat", {"1": "First"}, on_missing="error")
-    with pytest.raises(ValueError, match=r"^Class column y doesn't exist"):
-        prep.recode_class_labels(df, "y", {"0": "No"})
-
-
-def test_recode_class_labels_casts_then_maps(spark):
-    """map_class_labels parity: astype(string) BEFORE replace, so an
-    integer-typed label column maps through its string form."""
-    df = spark.createDataFrame([(0,), (1,), (0,)], ["Class"])
-    out = prep.recode_class_labels(
-        df, "Class", {"0": "Non-Diabetic", "1": "Diabetic"}
-    ).collect()
-    assert [r["Class"] for r in out] == ["Non-Diabetic", "Diabetic", "Non-Diabetic"]
-
-
-def test_sanitize_column_names(spark):
-    df = spark.createDataFrame([(1, 2)], ["a col!", "b(c)"])
-    assert prep.sanitize_column_names(df).columns == ["a_col_", "b_c_"]
-
-
-def test_prep_pipeline_order_and_insert(spark):
-    df = spark.createDataFrame([(" ",), ("null",)], ["c"])
-    pipe = prep.PrepPipeline([lambda d: prep.normalize_missing_tokens(d)])
-    pipe.add_step(lambda d: prep.blanks_to_null(d), position=0)
-    out = pipe.run(df).collect()
-    assert [r["c"] for r in out] == [None, None]
 
 
 def test_validate_request_schema():
@@ -211,33 +226,22 @@ def test_column_profile_counts_nulls_distinct(spark):
     assert prof["n"]["min_value"] == "1" and prof["n"]["max_value"] == "2"
 
 
-def test_export_training_shards_stable_and_sorted(spark, tmp_path):
-    """Shard membership must be reproducible (pure function of the id) and
-    each shard directory internally sorted by the sort key."""
+def test_deterministic_shard_is_stable(spark):
+    """Shard membership is a pure function of the id: the same docs in a
+    different partitioning get the same shard, and n_hex=1 gives at most
+    16 shards."""
     from end_to_end_ml_spark.sources import io as sio
     from end_to_end_ml_spark.sources.io import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    path = str(tmp_path / "shards")
-    sharded = sio.export_training_shards(docs, "doc_id", path, n_hex=1)
-    back = spark.read.parquet(path)
-    assert back.count() == docs.count()
-    # membership is deterministic: re-deriving the shard from doc_id agrees
-    rederived = back.withColumn(
-        "shard2", sio.deterministic_shard("doc_id", 1)
-    ).filter("shard != shard2")
-    assert rederived.count() == 0
-    # sorted within each shard file
-    import pandas as pd
-
-    for r in back.select("shard").distinct().collect():
-        pdf = (
-            back.filter(back["shard"] == r["shard"]).select("doc_id").toPandas()
-        )
-        ids = pdf["doc_id"].tolist()
-        # file read order == write order within the shard's files
-        assert ids == sorted(ids)
-    assert sharded.select("shard").distinct().count() <= 16
+    a = docs.select("doc_id", sio.deterministic_shard("doc_id", 1).alias("s1"))
+    b = docs.repartition(7).select(
+        "doc_id", sio.deterministic_shard("doc_id", 1).alias("s2")
+    )
+    joined = a.join(b, "doc_id")
+    assert joined.count() == docs.count()
+    assert joined.filter("s1 != s2").count() == 0
+    assert a.select("s1").distinct().count() <= 16
 
 
 def test_id_gap_audit_cross_bucket_boundary(spark):
@@ -318,26 +322,3 @@ def test_target_encode_table_shrinks_to_prior(spark):
     assert out["big"]["target_enc"] == pytest.approx((10000.0 + 10 * prior) / 1010)
     # shrinkage direction: rare lands between its own mean and the prior
     assert prior < out["rare"]["target_enc"] < 100.0
-
-
-def test_prep_pipeline_prepend_append_order(spark):
-    """Reference parity (test_prepend_and_append_steps_are_applied_in_order):
-    prepend steps run before base, append steps after, add_step at an
-    explicit position lands where asked."""
-    calls = []
-
-    def mk(tag):
-        def step(df):
-            calls.append(tag)
-            return df
-
-        return step
-
-    pipe = prep.PrepPipeline(
-        [mk("base")], prepend_steps=[mk("pre")], append_steps=[mk("post")]
-    )
-    pipe.add_step(mk("added"))          # appends after post
-    pipe.add_step(mk("inserted"), 1)    # between pre and base
-    df = spark.createDataFrame([(1,)], ["a"])
-    pipe.run(df).collect()
-    assert calls == ["pre", "inserted", "base", "post", "added"]

@@ -1,12 +1,11 @@
-"""Scale-machinery tests: salting preserves semantics; bucketing removes the
-join shuffle."""
+"""Scale-machinery tests: salting preserves semantics; partitioned writes
+prune; scans are memoized and invalidated on write; persists are guarded."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from end_to_end_ml_spark.operators import skew
-from end_to_end_ml_spark.sources.io import write_bucketed
 
 
 def test_salted_join_matches_plain_join(spark):
@@ -40,29 +39,6 @@ def test_salted_collect_list_sorted_exact(spark):
     assert out["b"] == list(range(5))
 
 
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    left = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 2).alias("a")
-    )
-    right = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") * 3).alias("b")
-    )
-    write_bucketed(left, "t_bleft", ["k"], num_buckets=4, sort_cols=["k"])
-    write_bucketed(right, "t_bright", ["k"], num_buckets=4, sort_cols=["k"])
-    try:
-        joined = (
-            spark.table("t_bleft")
-            .hint("merge")
-            .join(spark.table("t_bright").hint("merge"), "k")
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 10000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bleft")
-        spark.sql("DROP TABLE IF EXISTS t_bright")
-
-
 def test_partitioned_write_enables_partition_pruning(spark, tmp_path):
     from end_to_end_ml_spark.sources.io import write_parquet
 
@@ -91,9 +67,10 @@ def test_salted_join_rejects_outer_joins(spark):
 
 
 def test_online_store_export_roundtrip(spark, tmp_path):
-    """S2-variant (Feast-materialize stand-in): latest row per key, written
-    bucketed by key hash; a point lookup reads one bucket directory."""
-    from end_to_end_ml_spark.sources.io import export_online_store
+    """S2-variant (Feast-materialize stand-in): the latest row per key
+    (``latest_per_key``, the s9_online_export core) survives a parquet
+    write/read round trip unchanged."""
+    from end_to_end_ml_spark.sources.io import latest_per_key, write_parquet
 
     rows = [
         (1, "2024-01-01 00:00:00", 1.0),
@@ -104,17 +81,13 @@ def test_online_store_export_roundtrip(spark, tmp_path):
     df = spark.createDataFrame(rows, ["k", "ts", "v"]).selectExpr(
         "k", "cast(ts as timestamp) ts", "v"
     )
-    path = str(tmp_path / "online")
-    out = export_online_store(df, ["k"], "ts", path, num_buckets=8)
+    out = latest_per_key(df, ["k"], "ts", feature_cols=["v"])
     got = {r["k"]: r["v"] for r in out.collect()}
     assert got == {1: 3.0, 2: 2.0}
+    path = str(tmp_path / "online")
+    write_parquet(out, path)
     back = spark.read.parquet(path)
     assert {r["k"]: r["v"] for r in back.collect()} == got
-    assert "__bucket" in back.columns  # partition column = addressable bucket
-    import os
-
-    buckets = [d for d in os.listdir(path) if d.startswith("__bucket=")]
-    assert 1 <= len(buckets) <= 8
 
 
 def test_register_views_full_sql_surface(spark):
@@ -157,53 +130,6 @@ def test_load_table_memoizes_per_session_and_dir(spark):
     assert d is not a
     # the cached frame is still a plain lazy scan — fresh queries compose
     assert a.filter("o_orderkey = 1").count() <= 1
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    """ORC source/sink parity: values survive the round trip and filters
-    reach the ORC scan (PushedFilters), same as the parquet path."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_ml_spark.sources.io import load_table, write_orc
-
-    df = load_table(spark, "/root/testdata/sf0.001", "orders")
-    path = str(tmp_path / "orders_orc")
-    write_orc(df, path)
-    back = spark.read.orc(path)
-    assert back.count() == df.count()
-    assert sorted(back.columns) == sorted(df.columns)
-    a = df.agg(F.sum(F.col("o_totalprice").cast("decimal(20,4)")).alias("s")).collect()
-    b = back.agg(F.sum(F.col("o_totalprice").cast("decimal(20,4)")).alias("s")).collect()
-    assert a == b
-    plan = (
-        back.filter(F.col("o_orderkey") == 5)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "EqualTo(o_orderkey,5)" in plan, plan
-
-
-def test_write_parquet_observed_single_pass_stats(spark, tmp_path):
-    """The observed sink's stats must equal a direct recount — without the
-    recount scan (Observation piggybacks on the write tasks).
-
-    Runs in a child session (`newSession`): Spark 4.1's Observation leaves
-    the owning session's ObservationManager captured in later closure
-    serialization (NotSerializableException in unrelated MLlib fits) — a
-    session-state leak the operator's docstring warns about; the shared
-    SparkContext is unaffected."""
-    from pyspark.sql import functions as F
-
-    from end_to_end_ml_spark.sources.io import write_parquet_observed
-
-    spark = spark.newSession()
-    df = spark.range(1000).select(
-        "id", F.when(F.col("id") % 10 == 0, None).otherwise(F.col("id")).alias("v")
-    )
-    stats = write_parquet_observed(df, str(tmp_path / "obs"), count_null_cols=["v"])
-    assert stats["n_rows"] == 1000
-    assert stats["null_v"] == 100
-    back = spark.read.parquet(str(tmp_path / "obs"))
-    assert back.count() == 1000
 
 
 def test_guarded_persist_skips_already_cached_plan(spark):
@@ -280,75 +206,6 @@ def test_scan_cache_invalidated_on_write(spark, tmp_path):
     assert sio.invalidate_scan_cache(f"{d}/tbl.parquet") == 1  # drops what we re-cached
 
 
-def test_merge_schema_read_surfaces_evolved_columns(spark, tmp_path):
-    """Schema evolution: a column added in later batches must surface (as
-    NULL for old rows) — and reconcile_columns then pins the serving set."""
-    from end_to_end_ml_spark.operators.prep import reconcile_columns
-    from end_to_end_ml_spark.sources.io import read_parquet_evolved
-
-    p = str(tmp_path / "evolving")
-    spark.range(0, 10).selectExpr("id", "id * 2 AS a").write.parquet(p + "/batch=1")
-    spark.range(10, 20).selectExpr(
-        "id", "id * 2 AS a", "id * 3 AS b"
-    ).write.parquet(p + "/batch=2")
-    back = read_parquet_evolved(spark, p)
-    assert set(back.columns) >= {"id", "a", "b"}
-    assert back.count() == 20
-    assert back.filter(F.col("b").isNull()).count() == 10
-    pinned = reconcile_columns(back, ["id", "b", "missing_col"])
-    assert pinned.columns == ["id", "b"]
-
-
-def test_compact_small_files_reduces_file_count(spark, tmp_path):
-    from end_to_end_ml_spark.sources.io import compact_small_files
-    import os
-
-    src = str(tmp_path / "fragmented")
-    dst = str(tmp_path / "compacted")
-    spark.range(0, 20000).repartition(64).write.parquet(src)
-    n_src = sum(f.endswith(".parquet") for f in os.listdir(src))
-    assert n_src >= 32
-    n = compact_small_files(spark, src, dst, target_file_mb=128)
-    n_dst = sum(f.endswith(".parquet") for f in os.listdir(dst))
-    assert n == 1 and n_dst == 1  # tiny dataset -> one target-size file
-    assert spark.read.parquet(dst).count() == 20000
-
-
-def test_zorder_write_clusters_both_dims(spark, tmp_path):
-    """Z-ordered files must each cover a small rectangle of the 2-D value
-    space: the summed per-file min-max coverage on EACH dimension is far
-    below the unclustered layout's (where every file spans ~the whole
-    domain) — the property parquet min/max pruning exploits."""
-    from end_to_end_ml_spark.sources.io import write_zordered
-
-    df = spark.range(40_000).select(
-        (F.col("id") % 200).alias("a"),
-        ((F.col("id") * 7919) % 200).alias("b"),
-    )
-    zpath = str(tmp_path / "z")
-    rpath = str(tmp_path / "r")
-    write_zordered(df, zpath, "a", "b", n_files=16)
-    df.repartition(16).write.parquet(rpath)
-
-    def mean_coverage(path, col):
-        per_file = (
-            spark.read.parquet(path)
-            .groupBy(F.input_file_name().alias("f"))
-            .agg(((F.max(col) - F.min(col)) / F.lit(199.0)).alias("cov"))
-        )
-        rows = per_file.collect()
-        return sum(r["cov"] for r in rows) / len(rows)
-
-    for c in ("a", "b"):
-        z, r = mean_coverage(zpath, c), mean_coverage(rpath, c)
-        assert z < 0.55 * r, f"dim {c}: z-order coverage {z} not << random {r}"
-    # layout-only: the data itself is unchanged
-    assert spark.read.parquet(zpath).count() == 40_000
-    zsum = spark.read.parquet(zpath).agg(F.sum("a"), F.sum("b")).collect()[0]
-    rsum = df.agg(F.sum("a"), F.sum("b")).collect()[0]
-    assert tuple(zsum) == tuple(rsum)
-
-
 def test_schema_evolution_merge_read(spark, tmp_path):
     """Ingest-side schema evolution: a dataset written in two epochs (the
     second adds a column) must read back under one merged schema with
@@ -385,109 +242,6 @@ def test_approx_percentile_rank_error_bounded(spark):
     for p, v in zip(ps, approx):
         true_rank = li.filter(F.col("l_extendedprice") <= v).count()
         assert abs(true_rank - p * n) <= n / accuracy + 1, (p, v, true_rank, n)
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from end_to_end_ml_spark.sources.io import compact_parquet, parquet_file_stats
-
-    src = str(tmp_path / "frag")
-    # 64 tiny files
-    spark.range(0, 10000).withColumn("v", F.col("id") * 3).repartition(64).write.parquet(src)
-    assert parquet_file_stats(src)["n_files"] == 64
-
-    dst = str(tmp_path / "compact")
-    report = compact_parquet(spark, src, dst, target_file_bytes=10 * 1024 * 1024)
-    assert report["after"]["n_files"] < report["before"]["n_files"]
-    assert report["after"]["n_files"] == report["n_target"] == 1
-
-    a = spark.read.parquet(src)
-    b = spark.read.parquet(dst)
-    assert b.count() == 10000
-    # content identical (layout-only operation)
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
-
-
-def test_compact_parquet_empty_source_raises(spark, tmp_path):
-    import pytest as _pytest
-
-    from end_to_end_ml_spark.sources.io import compact_parquet
-
-    empty = tmp_path / "none"
-    empty.mkdir()
-    with _pytest.raises(ValueError):
-        compact_parquet(spark, str(empty), str(tmp_path / "out"))
-
-
-def test_read_text_corpus_content_ids(spark, tmp_path):
-    from end_to_end_ml_spark.sources.io import read_text_corpus
-
-    d = tmp_path / "corpus"
-    d.mkdir()
-    (d / "a.txt").write_text("hello world\n\nsecond doc\n")
-    (d / "b.txt").write_text("hello world\nthird doc\n")
-    out = read_text_corpus(spark, str(d)).collect()
-    assert len(out) == 4  # empty line dropped
-    ids = {}
-    for r in out:
-        ids.setdefault(r["text"], set()).add(r["doc_id"])
-    # identical content -> identical id (by contract), distinct otherwise
-    assert len(ids["hello world"]) == 1
-    assert len({list(v)[0] for v in ids.values()}) == 3
-    assert all(r["file"].endswith((".txt",)) for r in out)
-
-
-def test_read_jsonl_quarantine_splits_bad_lines(spark, tmp_path):
-    from end_to_end_ml_spark.sources.io import read_jsonl_quarantine
-
-    f = tmp_path / "in.jsonl"
-    f.write_text(
-        '{"id": 1, "v": "ok"}\n'
-        '{"id": 2, "v": "also ok"}\n'
-        "{broken json!!\n"
-        '{"id": "not-an-int", "v": 3}\n'
-    )
-    good, bad = read_jsonl_quarantine(spark, str(f), "id BIGINT, v STRING")
-    g = good.orderBy("id").collect()
-    assert [r["id"] for r in g if r["id"] is not None] == [1, 2]
-    b = bad.collect()
-    assert any("broken json" in r["raw_line"] for r in b)
-
-
-def test_compact_parquet_rejects_remote_uri(spark, tmp_path):
-    """os.walk sizing is local-only: a remote URI must fail loudly, not
-    report n_files=0 (r6 advisory)."""
-    import pytest
-
-    from end_to_end_ml_spark.sources.io import parquet_file_stats
-
-    with pytest.raises(ValueError, match="non-local path"):
-        parquet_file_stats("s3://bucket/table")
-    with pytest.raises(ValueError, match="non-local path"):
-        parquet_file_stats("file://remotehost/tmp/t")  # non-local file URI
-    # local file URIs resolve — both slash forms Hadoop accepts
-    local = tmp_path / "t"
-    spark.range(10).write.parquet(str(local))
-    assert parquet_file_stats(f"file://{local}")["n_files"] >= 1
-    assert parquet_file_stats(f"file:{local}")["n_files"] >= 1  # single-slash
-    assert parquet_file_stats(f"file://localhost{local}")["n_files"] >= 1
-    # a legal local directory whose first segment contains a colon is NOT
-    # a URI (round-7 ADVICE: 'data:v2/table' was rejected as remote)
-    colon = tmp_path / "data:v2" / "t"
-    spark.range(5).write.parquet(str(colon))
-    import os
-
-    cwd = os.getcwd()
-    os.chdir(tmp_path)
-    try:
-        assert parquet_file_stats("data:v2/t")["n_files"] >= 1
-        # round-8 ADVICE: the URI test must be SYNTACTIC, not
-        # filesystem-state-dependent — a local directory literally named
-        # 'hdfs:' must not turn a remote URI into a silent local walk
-        (tmp_path / "hdfs:" / "nn" / "warehouse" / "t").mkdir(parents=True)
-        with pytest.raises(ValueError, match="non-local path"):
-            parquet_file_stats("hdfs://nn/warehouse/t")
-    finally:
-        os.chdir(cwd)
 
 
 def test_write_csv_roundtrip_adversarial_content(spark, tmp_path):

@@ -60,26 +60,20 @@ def test_payload_metadata_magic(spark):
     assert out[1]["n_bytes"] == 7
 
 
-def test_extract_features_deterministic_and_shaped(spark):
-    df = spark.createDataFrame([(1, bytearray(b"abcdef")), (2, bytearray(b"abcdef"))], ["id", "payload"])
-    rows = multimodal.extract_features(df, "id", "payload", dim=4).collect()
-    feats = {r["id"]: r["feature"] for r in rows}
-    assert feats[1] == feats[2]
-    assert len(feats[1]) == 4
-    assert all(0 <= v < 1 for v in feats[1])
-
-
-def test_decode_image_stub():
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_image(b"\x89PNG")
-
-
 def test_sample_frames_shape(spark):
-    df = spark.createDataFrame([(1, bytearray(bytes(range(200))))], ["id", "payload"])
-    rows = multimodal.sample_frames(df, "id", "payload", n_frames=4, frame_bytes=16).collect()
-    assert len(rows) == 4
-    assert [r["frame_idx"] for r in rows] == [0, 1, 2, 3]
-    assert all(len(r["frame_bytes"]) == 16 for r in rows)
+    """Every ``every``-th fixed-size frame, the last one short, each
+    hashed over exactly its own bytes."""
+    import hashlib
+
+    payload = bytes(range(200))
+    df = spark.createDataFrame([(1, bytearray(payload))], ["id", "payload"])
+    rows = multimodal.sample_frames_stride(
+        df, "id", "payload", frame_size=16, every=4
+    ).collect()
+    assert [r["frame_idx"] for r in rows] == [0, 4, 8, 12]  # ceil(200/16) = 13 frames
+    for r in rows:
+        start = r["frame_idx"] * 16
+        assert r["frame_md5"] == hashlib.md5(payload[start:start + 16]).hexdigest()
 
 
 # ---------------------------------------------------------------------------
@@ -533,12 +527,15 @@ def test_read_binary_files_feeds_payload_metadata(spark, tmp_path):
     """binaryFile source -> multimodal metadata: one row per file, glob
     filters at listing time, magic bytes sniffed from real file content."""
     from end_to_end_ml_spark.operators import multimodal
-    from end_to_end_ml_spark.sources.io import read_binary_files
 
     (tmp_path / "a.png").write_bytes(b"\x89PNG\r\n\x1a\nrest-of-png")
     (tmp_path / "b.jpg").write_bytes(b"\xff\xd8\xff\xe0JFIFdata")
     (tmp_path / "notes.txt").write_bytes(b"ignore me")
-    files = read_binary_files(spark, str(tmp_path), glob="*.{png,jpg}")
+    files = (
+        spark.read.format("binaryFile")
+        .option("pathGlobFilter", "*.{png,jpg}")
+        .load(str(tmp_path))
+    )
     assert files.count() == 2
     meta = {
         r["id"].rsplit("/", 1)[-1]: r
@@ -549,40 +546,6 @@ def test_read_binary_files_feeds_payload_metadata(spark, tmp_path):
     assert meta["a.png"]["format"] == "png"
     assert meta["b.jpg"]["format"] == "jpeg"
     assert meta["a.png"]["n_bytes"] == len(b"\x89PNG\r\n\x1a\nrest-of-png")
-
-
-class TestBinaryAssetIngest:
-    def test_reads_files_with_metadata(self, spark, tmp_path):
-        from end_to_end_ml_spark.operators.multimodal import payload_metadata
-        from end_to_end_ml_spark.sources.io import read_binary_assets
-
-        d = tmp_path / "assets"
-        d.mkdir()
-        (d / "a.jpg").write_bytes(b"\xff\xd8\xff\xe0" + b"x" * 100)
-        (d / "b.png").write_bytes(b"\x89PNG\r\n\x1a\n" + b"y" * 50)
-        (d / "notes.txt").write_bytes(b"skip me")
-
-        out = read_binary_assets(spark, str(d)).orderBy("path").collect()
-        assert len(out) == 3
-        assert [r["ext"] for r in out] == ["jpg", "png", "txt"]
-        assert out[0]["length"] == 104 and len(out[0]["content"]) == 104
-        assert len({r["asset_id"] for r in out}) == 3
-
-        # glob pushdown: only jpg files are surfaced
-        jpg = read_binary_assets(spark, str(d), glob="*.jpg").collect()
-        assert len(jpg) == 1 and jpg[0]["ext"] == "jpg"
-
-        # plumbs straight into the multimodal metadata operator
-        meta = payload_metadata(
-            spark.createDataFrame(
-                [(r["asset_id"], r["content"]) for r in out],
-                "asset_id string, payload binary",
-            ),
-            "asset_id",
-            "payload",
-        ).collect()
-        fmts = {m["format"] for m in meta}
-        assert "jpeg" in fmts and "png" in fmts
 
 
 def test_ann_maintenance_runner_e2e(spark):

@@ -51,41 +51,6 @@ def test_stratified_errors(spark, labeled):
         split.stratified_split(withnull, "y", "pk", 0.8)
 
 
-def test_random_split_exact_fractions(spark, labeled):
-    train, test = split.stratified_split_random(labeled, "y", 0.8, seed=7)
-    per = {r["y"]: r["count"] for r in train.groupBy("y").count().collect()}
-    assert per == {"pos": 40, "neg": 120}
-    assert train.count() + test.count() == 200
-    # disjoint + reproducible within one partitioning of the input
-    a, _ = split.stratified_split_random(labeled, "y", 0.8, seed=7)
-    assert sorted(r["pk"] for r in a.collect()) == sorted(
-        r["pk"] for r in train.collect()
-    )
-
-
-def test_random_split_no_one_partition_per_class_window(spark, labeled):
-    """The fact-sized rank window must partition by (class, bucket), never
-    class alone — class labels are the canonical low-cardinality key, so a
-    percent_rank() OVER (PARTITION BY class) funnels ~N/|classes| rows
-    through one sort task at scale (the two_level_rank hot-partition
-    class). The only class-alone window allowed is the per-bucket offset
-    prefix-sum over the bounded (class x bucket) counts frame."""
-    import re
-
-    train, _ = split.stratified_split_random(labeled, "y", 0.8, seed=7)
-    plan = train._jdf.queryExecution().executedPlan().toString()
-    assert "percent_rank" not in plan, plan
-    assert re.search(r"row_number\(\) windowspecdefinition\(y#\d+, __b#\d+", plan), plan
-
-
-def test_random_split_validates_like_the_deterministic_form(spark, labeled):
-    with pytest.raises(ValueError, match="train_size"):
-        split.stratified_split_random(labeled, "y", 1.5)
-    single = labeled.filter(F.col("y") == "pos")
-    with pytest.raises(ValueError, match=">=2 classes"):
-        split.stratified_split_random(single, "y", 0.8)
-
-
 def test_time_split(spark):
     df = spark.createDataFrame(
         [(i, f"2024-01-{d:02d} 00:00:00") for i, d in enumerate(range(1, 21))],

@@ -106,10 +106,17 @@ def main() -> None:
         tracker.log_asset(f"trials_{name}", study.to_rows())
         print(f"{name}: valid={candidates[name]}")
 
-    # ---- select + gate + calibrate + threshold + register (evaluate.py) ----
+    # ---- select + gate + importances + threshold + register (evaluate.py) ----
+    # M6 calibration is not run: the served PipelineModel + sidecar carries
+    # no calibrator, so the threshold is tuned on the raw pos_proba.
     champ = W.select_champion(candidates, "fbeta")
     W.deployment_gate(candidates[champ], "fbeta", threshold=0.3)
     fitted = fitted_models[champ]
+    importances = MZ.feature_importances(fitted, FP.recover_feature_names(fitted, train))
+    tracker.log_asset(
+        "feature_importances", [{"feature": n, "importance": v} for n, v in importances]
+    )
+    print(f"{champ} importances: {sorted(importances, key=lambda p: -p[1])}")
     calib_scored = C.positive_probability(fitted.transform(calib))
     thr = M.best_threshold(calib_scored, "label", "pos_proba", beta=0.5)
     model_path = os.path.join(out_dir, "champion")

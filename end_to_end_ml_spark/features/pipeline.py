@@ -317,7 +317,13 @@ def positive_label_index(label_indexer_model, positive_label: str) -> int:
 
 def recover_feature_names(fitted_pipeline_model, df: DataFrame, output_col: str = "features") -> list[str]:
     """F7 name recovery: post-OHE + selector feature names from ML attrs
-    metadata (reference data.py:124-163's name extraction)."""
+    metadata (reference data.py:124-163's name extraction).
+
+    The final assembler names the numeric block after its vector column:
+    by slot behind a scaler, which writes no attributes
+    (``__num_scaled_0``), else by imputed column
+    (``__num_vec_c_acctbal__imp``). Both map back to the numeric input
+    column, read off the ``__num_vec`` assembler (``c_acctbal``)."""
     transformed = fitted_pipeline_model.transform(df.limit(1))
     meta = transformed.schema[output_col].metadata
     attrs = meta.get("ml_attr", {}).get("attrs", {})
@@ -325,7 +331,19 @@ def recover_feature_names(fitted_pipeline_model, df: DataFrame, output_col: str 
     for group in attrs.values():
         named.extend(attrs_entry for attrs_entry in group)
     named.sort(key=lambda a: a["idx"])
-    return [a.get("name", f"f{a['idx']}") for a in named]
+    imputed = next(
+        (
+            stage.getInputCols()
+            for stage in fitted_pipeline_model.stages
+            if isinstance(stage, VectorAssembler) and stage.getOutputCol() == "__num_vec"
+        ),
+        [],
+    )
+    numeric = {}
+    for i, c in enumerate(imputed):
+        numeric[f"__num_scaled_{i}"] = numeric[f"__num_vec_{c}"] = c.removesuffix("__imp")
+    names = [a.get("name", f"f{a['idx']}") for a in named]
+    return [numeric.get(n, n) for n in names]
 
 
 def build_full_pipeline(prep_stages: list, classifier) -> Pipeline:

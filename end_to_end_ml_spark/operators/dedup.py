@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..materialize import persist
+from ..sources.io import local_frame
 
 
 def _spread(df: DataFrame) -> DataFrame:
@@ -1109,9 +1110,10 @@ def prefix_filter_jaccard_pairs(
         # ordinal as global_ordinal, without its bucket-count aggregate
         # and rank window in the broadcast build subtree
         vrows.sort(key=lambda r: (r["df_t"], r["token"]))
-        vocab_ids = df.sparkSession.createDataFrame(
+        vocab_ids = local_frame(
+            df.sparkSession,
             [(r["token"], i) for i, r in enumerate(vrows)],
-            schema="token string, tid int",
+            "token string, tid int",
         )
     else:
         n_vocab, vocab_bnds = count_and_boundaries(dfreq, "df_t")

@@ -1,8 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
-- ``brute_force_topk``: exact cosine top-k — broadcast corpus matrix, one
-  BLAS matmul per Arrow batch inside ``mapInPandas``. Quadratic in
-  comparisons, so it is the verification path and the small-candidate path.
+- ``brute_force_topk``: exact cosine top-k. A corpus and a query side of
+  at most ``max_broadcast_rows`` each are collected as numpy and scored on
+  the driver (no Python worker starts); above that, the corpus is
+  hash-sharded and each shard reranks its queries in a cogroup. Quadratic
+  in comparisons, so it is the verification path and the small-candidate
+  path.
 - ``lsh_topk``: random-hyperplane (sign) LSH buckets with banding; only
   vectors sharing a bucket are compared. Hyperplanes derive
   deterministically from a seed — reproducible across runs/cluster sizes.
@@ -10,19 +13,23 @@
   probes its nearest cells and reranks members exactly.
 
 At 100 TB: LSH shuffles each vector to b band buckets (b ~ 8) and never
-cross-joins; IVF shards the corpus by cell; brute force chunks the broadcast
-matrix with a running top-k merge.
+cross-joins; IVF shards the corpus by cell; brute force shards the corpus
+by id and merges the per-shard top-k with a window.
 """
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..materialize import persist
+from ..sources.io import local_frame
 from .dedup import _spread
+
+_log = logging.getLogger(__name__)
 
 
 def _dot(a, b):
@@ -43,43 +50,76 @@ def _norm(a):
     )
 
 
-def _group_rerank(k: int, round_digits: int | None = 6):
-    """Shared exact-rerank kernel for the cogrouped paths (IVF cells, brute
-    -force shards): one BLAS matmul of the group's queries against the
-    group's members, per-query top-k with self-exclusion and deterministic
-    (cosine desc, neighbor id asc) tie-break."""
+def _matrix(vectors):
+    """A column of equal-length vectors as one dense float64 matrix."""
     import numpy as np
-    import pandas as pd
 
-    def rerank(queries: pd.DataFrame, members: pd.DataFrame) -> pd.DataFrame:
-        if len(queries) == 0 or len(members) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine_sim": []}
-            ).astype(
-                {"query_id": "int64", "neighbor_id": "int64", "cosine_sim": "float64"}
-            )
-        q = np.stack([np.asarray(v, dtype=np.float64) for v in queries["qvec"]])
-        qids = queries["qid"].to_numpy(dtype=np.int64)
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in members["nvec"]])
-        nids = members["nid"].to_numpy(dtype=np.int64)
-        qn = np.sqrt((q * q).sum(axis=1))
-        mnorm = np.sqrt((m * m).sum(axis=1))
-        cos = (q @ m.T) / np.outer(qn, mnorm)
+    if len(vectors) == 0:
+        return np.empty((0, 0))
+    return np.stack([np.asarray(v, dtype=np.float64) for v in vectors])
+
+
+def _topk_arrays(qids, q, nids, m, k: int, round_digits: int | None):
+    """The exact-top-k kernel behind every brute-force mode and the IVF
+    rerank: cosine of each query row of ``q`` against every member row of
+    ``m`` by BLAS matmul, then per query the ``k`` best members by (cosine
+    desc, neighbor id asc), members sharing the query's id excluded.
+    Queries are scored in blocks of ~``_TOPK_BLOCK_CELLS`` cosines, so the
+    temp stays bounded whatever the group size. Returns (query_id,
+    neighbor_id, cosine_sim) arrays, query by query in input order."""
+    import numpy as np
+
+    qids = np.asarray(qids, dtype=np.int64)
+    nids = np.asarray(nids, dtype=np.int64)
+    if len(qids) == 0 or len(nids) == 0:
+        none = np.empty(0, dtype=np.int64)
+        return none, none, np.empty(0, dtype=np.float64)
+    qn = np.sqrt((q * q).sum(axis=1))
+    mnorm = np.sqrt((m * m).sum(axis=1))
+    step = max(1, _TOPK_BLOCK_CELLS // len(nids))
+    parts = []
+    for lo in range(0, len(qids), step):
+        bq = qids[lo : lo + step]
+        cos = (q[lo : lo + step] @ m.T) / np.outer(qn[lo : lo + step], mnorm)
         if round_digits is not None:
             cos = np.round(cos, round_digits)
-        out_q, out_n, out_c = [], [], []
-        for i in range(len(qids)):
-            mask = nids != qids[i]
-            nid, row = nids[mask], cos[i][mask]
-            order = np.lexsort((nid, -row))[:k]
-            out_q.extend([qids[i]] * len(order))
-            out_n.extend(nid[order])
-            out_c.extend(row[order])
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_c}
+        excluded = nids[None, :] == bq[:, None]
+        # the last key is the primary one: excluded members sort last
+        order = np.lexsort(
+            (np.broadcast_to(nids, cos.shape), -cos, excluded), axis=1
+        )[:, :k]
+        rows = np.arange(len(bq))[:, None]
+        keep = ~excluded[rows, order]
+        parts.append(
+            (
+                np.broadcast_to(bq[:, None], order.shape)[keep],
+                nids[order][keep],
+                cos[rows, order][keep],
+            )
         )
+    return tuple(np.concatenate(col) for col in zip(*parts))
+
+
+def _group_rerank(k: int, round_digits: int | None = 6):
+    """Exact rerank for the cogrouped paths (IVF cells, brute-force
+    shards): the group's queries against the group's members."""
+    import pandas as pd
+
+    def rerank(queries, members):
+        qid, nid, cos = _topk_arrays(
+            queries["qid"], _matrix(queries["qvec"]),
+            members["nid"], _matrix(members["nvec"]),
+            k, round_digits,
+        )
+        return pd.DataFrame({"query_id": qid, "neighbor_id": nid, "cosine_sim": cos})
 
     return rerank
+
+
+# cosines per scored block of queries (8 MB as float64): bounds the kernel's
+# temp whatever the number of queries
+_TOPK_BLOCK_CELLS = 1 << 20
+_TOPK_SCHEMA = "query_id long, neighbor_id long, cosine_sim double"
 
 
 def brute_force_topk(
@@ -94,15 +134,20 @@ def brute_force_topk(
 ) -> DataFrame:
     """Exact cosine top-k neighbors per query vector (queries default to the
     whole table; self-matches excluded). Output: (query_id, neighbor_id,
-    cosine_sim) with deterministic tie-break on neighbor id.
+    cosine_sim) ordered by (query_id, cosine_sim desc, neighbor_id), with
+    deterministic tie-break on neighbor id.
 
-    Two execution modes, identical results:
+    Two execution modes, identical results (one scoring kernel,
+    :func:`_topk_arrays`):
 
-    - default (``n_shards=None``): the candidate side is broadcast as one
-      dense float64 matrix; each Arrow batch of query rows computes a
-      single BLAS matmul against it inside ``mapInPandas`` (vectorized —
-      orders of magnitude faster than per-pair expression evaluation).
-      Right when the corpus fits in a broadcast.
+    - driver (``n_shards=None``): the corpus and the queries are collected
+      as dense float64 matrices by Arrow ``toPandas`` and the driver scores
+      them in blocks of ~``_TOPK_BLOCK_CELLS`` cosines; the result is a
+      ``LocalRelation``. No Python worker starts; a ``mapInPandas`` stage
+      over the queries would start the worker pool (a fork plus one worker
+      per core importing pyspark, pandas and pyarrow) to do ~0.1 s of BLAS
+      (the llm_curation sim1 span read 8.1 s executor run for 0.34 s CPU
+      on a 4-core host).
     - sharded (``n_shards=s``): block-nested-loop over the cluster — the
       corpus is hash-sharded by id (never collected, never broadcast),
       queries replicate to every shard, each shard reranks with one BLAS
@@ -110,100 +155,74 @@ def brute_force_topk(
       candidates to the global top-k. This is the 100 TB exact path; for
       corpus-scale candidate sets prefer :func:`lsh_topk`.
 
-    The broadcast mode enforces its small-corpus contract: above
-    ``max_broadcast_rows`` it AUTO-ROUTES to the sharded mode (identical
-    results by construction — both modes share the oracle), sizing shards
-    so each holds ~max_broadcast_rows vectors. The guard is the
-    ``limit(max+1)`` on the corpus collect itself — driver memory stays
-    bounded and the common small case pays no extra Spark job.
+    The driver mode enforces its small-input contract: when the corpus or
+    the query side holds more than ``max_broadcast_rows`` rows it
+    AUTO-ROUTES to the sharded mode (identical results by construction —
+    both modes share the oracle), sizing shards so each holds
+    ~max_broadcast_rows corpus vectors. The guard is the ``limit(max+1)``
+    on each collect itself — the driver never holds more than
+    max_broadcast_rows + 1 vectors a side, and the common small case pays
+    no extra Spark job. The decision is logged once per call with its
+    inputs.
     """
-    import math
-
     import numpy as np
-    import pandas as pd
 
-    probe = None
     if n_shards is None:
-        # Arrow-backed toPandas: columnar transfer of the corpus instead of
-        # row-object collect (the driver-side cost of this path).
-        probe = df.select(F.col(id_col), F.col(vec_col)).limit(
-            max_broadcast_rows + 1
-        ).toPandas()
-        if len(probe) > max_broadcast_rows:
-            n = df.count()
-            n_shards = max(2, math.ceil(n / max_broadcast_rows))
+        bound = max_broadcast_rows
 
-    if n_shards is not None and n_shards > 1:
-        corpus = df.select(
-            F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"),
-            F.col(id_col).alias("nid"),
-            F.col(vec_col).alias("nvec"),
-        )
-        queries = (
-            (query_df if query_df is not None else df)
-            .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-            .withColumn(
-                "shard", F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1)))
-            )
-        )
-        local = (
-            queries.groupBy("shard")
-            .cogroup(corpus.groupBy("shard"))
-            .applyInPandas(
-                _group_rerank(k, round_digits),
-                "query_id long, neighbor_id long, cosine_sim double",
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine_sim").desc(), F.col("neighbor_id")
-        )
-        return (
-            local.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .drop("rn")
-            .orderBy("query_id", F.col("cosine_sim").desc(), "neighbor_id")
-        )
+        def collect(frame):
+            return frame.select(F.col(id_col), F.col(vec_col)).limit(bound + 1).toPandas()
 
-    spark = df.sparkSession
-    cand = (
-        probe
-        if probe is not None
-        else df.select(F.col(id_col), F.col(vec_col)).toPandas()
+        cand = collect(df)
+        # an over-bound corpus routes to the sharded mode whatever the
+        # query side holds, so the queries are then not collected at all
+        qry = cand if query_df is None else (collect(query_df) if len(cand) <= bound else None)
+        on_driver = qry is not None and max(len(cand), len(qry)) <= bound
+
+        def size(rows):
+            if rows is None:
+                return "uncollected"
+            return str(len(rows)) if len(rows) <= bound else f">{bound}"
+
+        _log.info(
+            "brute_force_topk on_driver=%s queries=%s corpus=%s max_broadcast_rows=%d",
+            on_driver, size(qry), size(cand), bound,
+        )
+        if on_driver:
+            cand_ids = cand.iloc[:, 0].to_numpy(dtype=np.int64)
+            qids = qry.iloc[:, 0].to_numpy(dtype=np.int64)
+            by_id = np.argsort(qids, kind="stable")
+            qid, nid, cos = _topk_arrays(
+                qids[by_id], _matrix(qry.iloc[:, 1])[by_id],
+                cand_ids, _matrix(cand.iloc[:, 1]), k, round_digits,
+            )
+            rows = zip(qid.tolist(), nid.tolist(), cos.tolist())
+            return local_frame(df.sparkSession, rows, _TOPK_SCHEMA)
+        n = df.count() if len(cand) > bound else len(cand)
+        n_shards = max(2, math.ceil(n / bound))
+
+    corpus = df.select(
+        F.pmod(F.col(id_col), F.lit(n_shards)).cast("int").alias("shard"),
+        F.col(id_col).alias("nid"),
+        F.col(vec_col).alias("nvec"),
     )
-    cand_ids = cand.iloc[:, 0].to_numpy(dtype=np.int64)
-    cand_m = np.stack([np.asarray(v, dtype=np.float64) for v in cand.iloc[:, 1]])
-    cand_norm = np.sqrt((cand_m * cand_m).sum(axis=1))
-    bc = spark.sparkContext.broadcast((cand_ids, cand_m, cand_norm))
-
-    def gen(batches):
-        ids, m, mnorm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["__vec"]])
-            qn = np.sqrt((q * q).sum(axis=1))
-            cos = (q @ m.T) / np.outer(qn, mnorm)
-            if round_digits is not None:
-                cos = np.round(cos, round_digits)
-            qids = pdf["__id"].to_numpy(dtype=np.int64)
-            out_q, out_n, out_c = [], [], []
-            for i in range(len(qids)):
-                mask = ids != qids[i]
-                nid, row = ids[mask], cos[i][mask]
-                order = np.lexsort((nid, -row))[:k]
-                out_q.extend([qids[i]] * len(order))
-                out_n.extend(nid[order])
-                out_c.extend(row[order])
-            yield pd.DataFrame(
-                {"query_id": out_q, "neighbor_id": out_n, "cosine_sim": out_c}
-            )
-
-    q = (query_df if query_df is not None else df).select(
-        F.col(id_col).alias("__id"), F.col(vec_col).alias("__vec")
+    queries = (
+        (query_df if query_df is not None else df)
+        .select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
+        .withColumn("shard", F.explode(F.sequence(F.lit(0), F.lit(n_shards - 1))))
+    )
+    local = (
+        queries.groupBy("shard")
+        .cogroup(corpus.groupBy("shard"))
+        .applyInPandas(_group_rerank(k, round_digits), _TOPK_SCHEMA)
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine_sim").desc(), F.col("neighbor_id")
     )
     return (
-        _spread(q)
-        .mapInPandas(gen, "query_id long, neighbor_id long, cosine_sim double")
+        local.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
         .orderBy("query_id", F.col("cosine_sim").desc(), "neighbor_id")
     )
 
@@ -485,9 +504,7 @@ def ivf_topk(
     local = (
         query_probes.groupBy("cell")
         .cogroup(corpus_cells.groupBy("cell"))
-        .applyInPandas(
-            _group_rerank(k), "query_id long, neighbor_id long, cosine_sim double"
-        )
+        .applyInPandas(_group_rerank(k), _TOPK_SCHEMA)
     )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cosine_sim").desc(), F.col("neighbor_id")
@@ -871,7 +888,8 @@ def ivf_pruning_report(
     cand_rows = cand.count()
     total = n_queries * n_cells
     pruned = 0.0 if total == 0 else 1.0 - cand_rows / total
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_queries, n_cells, cand_rows, float(pruned))],
         "n_queries long, cells_total long, candidate_cell_rows long, "
         "pruned_fraction double",

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 
 from ..materialize import checkpoint_at_scale, persist
+from ..sources.io import local_frame
 
 # Knuth multiplicative hash; exact in int64 for keys < ~3.5e9, and computable
 # identically by any SQL engine (pure integer arithmetic).
@@ -335,7 +336,7 @@ def carve_assignment(
     # — would each rescan the fact table (the offsets branch re-executed
     # inside the final job; round-7 review finding): this way the final
     # assignment plan scans df exactly once and joins two small
-    # createDataFrame broadcasts.
+    # local_frame broadcasts (Arrow LocalRelations: no Python worker runs).
     count_rows = counts.collect()
     totals: dict = {}
     for r in count_rows:
@@ -365,8 +366,8 @@ def carve_assignment(
         cls = StructField(class_col, df.schema[class_col].dataType)
         return StructType([cls] + [StructField(c, LongType()) for c in longs])
 
-    offsets = spark.createDataFrame(off_rows, schema("__b", "__off"))
-    cuts = spark.createDataFrame(cut_rows, schema("__c1", "__c2", "__c3"))
+    offsets = local_frame(spark, off_rows, schema("__b", "__off"))
+    cuts = local_frame(spark, cut_rows, schema("__c1", "__c2", "__c3"))
     rank = F.col("__off") + F.col("__r_in")
     subset = (
         F.when(rank <= F.col("__c3"), F.lit("train"))
@@ -745,10 +746,7 @@ def token_budget_waterfill(
         )
         for g in groups
     ]
-    return spark.createDataFrame(
-        out,
-        base.schema,
-    )
+    return local_frame(spark, out, base.schema)
 
 
 def group_split(

@@ -5003,8 +5003,8 @@ def x16_bpe_merges(spark, sf_dir):
     TestBpeTrain matches a from-scratch python BPE exactly)."""
     docs = load_table(spark, sf_dir, "documents")
     merges = text.bpe_train(docs, "text", n_merges=15)
-    return spark.createDataFrame(
-        merges, "rank INT, left STRING, right STRING, merged STRING, pair_freq BIGINT"
+    return io.local_frame(
+        spark, merges, "rank INT, left STRING, right STRING, merged STRING, pair_freq BIGINT"
     ).orderBy("rank")
 
 
@@ -5031,8 +5031,8 @@ def x16b_bpe_batched(spark, sf_dir):
     merges = text.bpe_train_batched(
         docs, "text", n_merges=256, merges_per_round=32, min_pair_freq=1
     )
-    return spark.createDataFrame(
-        merges, "rank INT, left STRING, right STRING, merged STRING, pair_freq BIGINT"
+    return io.local_frame(
+        spark, merges, "rank INT, left STRING, right STRING, merged STRING, pair_freq BIGINT"
     ).orderBy("rank")
 
 

@@ -162,6 +162,7 @@ def test_feature_importances_name_every_feature(spark):
         model = fitted.stages[-1]
         assert len(names) == model.numFeatures
         assert "c_mktsegment__ohe_BUILDING" in names
+        assert names[0] == "c_acctbal"
         imp = MZ.feature_importances(fitted, names)
         assert [n for n, _ in imp] == names
         vals = [v for _, v in imp]

@@ -598,83 +598,6 @@ def test_curation_pipeline_incremental_e2e(spark, tmp_path):
     assert sorted(map(tuple, c)) == sorted(map(tuple, curated2.collect()))
 
 
-def test_curation_multi_epoch_invariants(spark, tmp_path):
-    """round-9 verdict #5 — the COMPOSED incremental loop: chain
-    curate_epoch across 3 synthetic 'nights' (doc_id % 3 slices) carrying
-    the versioned fingerprint store, and assert the cross-epoch
-    invariants end-to-end: (1) no fingerprint admitted twice across
-    epochs; (2) the final store equals the union of admitted
-    fingerprints; (3) per-epoch stats reconcile exactly with the
-    materialized curated frames; (4) every admitted doc belongs to the
-    gate-surviving population of the ONE-SHOT run on the union (an epoch
-    can never admit what the batch run would have gated out). The
-    corpus genuinely has fingerprints spanning multiple %3 slices (16 at
-    sf0.001), so invariant (1) is non-vacuous."""
-    import os
-    import sys
-    from collections import Counter
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from run_curation_pipeline import run_epochs
-
-    from end_to_end_ml_spark.operators import text
-    from end_to_end_ml_spark.sources import load_table
-    from pyspark.sql import functions as F
-
-    sf = "/root/testdata/sf0.001"
-    out = str(tmp_path / "nights")
-    per_epoch, store = run_epochs(spark, sf, budget_tokens=2000, n_epochs=3, out_dir=out)
-    assert len(per_epoch) == 3
-
-    docs = load_table(spark, sf, "documents")
-    fp_by_id = {
-        r["doc_id"]: r["fp"]
-        for r in docs.select(
-            "doc_id", text.prefix_fingerprint_column("text").alias("fp")
-        ).collect()
-    }
-    epoch_rows = [c.collect() for c, _ in per_epoch]
-    assert any(len(rows) > 0 for rows in epoch_rows)
-    # (1) no fingerprint admitted twice — within or across epochs
-    all_fps = [fp_by_id[r["doc_id"]] for rows in epoch_rows for r in rows]
-    dup = [f for f, n in Counter(all_fps).items() if n > 1]
-    assert dup == []
-    # each doc lands in its own night's slice
-    for e, rows in enumerate(epoch_rows):
-        assert all(r["doc_id"] % 3 == e for r in rows)
-    # (2) store == union of admitted fingerprints, and the on-disk v2
-    # version is the same set
-    store_fps = {r["fp"] for r in store.collect()}
-    assert store_fps == set(all_fps)
-    v2 = {
-        r["fp"]
-        for r in spark.read.parquet(os.path.join(out, "fp_store", "v2")).collect()
-    }
-    assert v2 == store_fps
-    # (3) stats reconcile with the materialized frames
-    for rows, (_, stats) in zip(epoch_rows, per_epoch):
-        per_src_docs = Counter(r["source"] for r in rows)
-        per_src_tokens = Counter()
-        for r in rows:
-            per_src_tokens[r["source"]] += r["n_words"]
-        for s in stats.collect():
-            assert per_src_docs[s["source"]] == s["n_docs_kept"]
-            assert per_src_tokens[s["source"]] == s["n_tokens_kept"]
-    # (4) every admitted doc is in the one-shot gate-surviving population
-    gate_fps = {
-        r["fp"]
-        for r in docs.select(
-            "source",
-            text.prefix_fingerprint_column("text").alias("fp"),
-            *text.gopher_evidence_columns("text"),
-        )
-        .select("source", "fp", *text.gopher_rule_columns())
-        .filter(F.col("keep") & F.col("source").isNotNull())
-        .collect()
-    }
-    assert set(all_fps) <= gate_fps
-
-
 def test_curation_cli_incremental_flag_and_sidecar(spark, tmp_path, monkeypatch):
     """The CLI paths (argv parsing incl. --incremental) were untested:
     run main() in-process (get_spark -> getOrCreate reuses the session)
@@ -952,125 +875,6 @@ def test_pipe13_matches_runner_dsir_mode(spark):
         for r in REGISTRY["pipe13_dsir_curation"][0](spark, sf).collect()
     }
     assert declarative == runner
-
-
-def test_curation_multi_epoch_dsir_invariants(spark, tmp_path):
-    """round-10 verdict #4 — the multi-epoch DSIR composition: run_epochs
-    with dsir_frac carries a VERSIONED bucket-count store alongside the
-    fingerprint store (same (bucket, t_count, r_count) shape the
-    streaming ingest sink maintains). Invariants, each replayed with
-    library pieces against the on-disk stores:
-    (1) dsir_store/v{e} equals the SUM-merge of survivor counts through
-        night e (merge-FIRST semantics: tonight's docs are part of the
-        distribution they are scored against, so the inner weights join
-        drops nothing by construction);
-    (2) counts are monotone across versions (counters only ever add);
-    (3) every admitted NON-target doc of night e is inside the top
-        ceil(frac·|scored|) of the replayed night-e pool scored against
-        the v{e} weights — selection is honest per epoch, against
-        weights reflecting all history, with NO historical rescans;
-    (4) the base cross-epoch invariants still hold under DSIR (no
-        fingerprint admitted twice; every doc in its own night's
-        slice)."""
-    import math
-    import os
-    import sys
-    from collections import Counter
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from run_curation_pipeline import (
-        DSIR_TARGET_SOURCES,
-        run_epochs,
-    )
-
-    from end_to_end_ml_spark.operators import text
-    from end_to_end_ml_spark.sources import load_table
-    from pyspark.sql import Window, functions as F
-
-    sf = "/root/testdata/sf0.001"
-    out = str(tmp_path / "nights_dsir")
-    per_epoch, _ = run_epochs(
-        spark, sf, budget_tokens=2000, n_epochs=3, out_dir=out, dsir_frac=0.5
-    )
-    epoch_rows = [c.collect() for c, _ in per_epoch]
-    assert any(len(rows) > 0 for rows in epoch_rows)
-
-    docs = load_table(spark, sf, "documents")
-    tgt = set(DSIR_TARGET_SOURCES)
-    is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
-    prev_counts = None
-    prev_version = None
-    for e in range(3):
-        # replay night e's survivors with library pieces
-        surv = (
-            docs.filter(F.col("doc_id") % 3 == e)
-            .select(
-                "doc_id", "source", "text",
-                text.prefix_fingerprint_column("text").alias("fp"),
-                *text.gopher_evidence_columns("text"),
-            )
-            .select("*", *text.gopher_rule_columns())
-            .filter(F.col("keep") & F.col("source").isNotNull())
-            .withColumn(
-                "__rn",
-                F.row_number().over(
-                    Window.partitionBy("fp").orderBy("doc_id")
-                ),
-            )
-            .filter(F.col("__rn") == 1)
-        )
-        if e > 0:
-            hist = spark.read.parquet(
-                os.path.join(out, "fp_store", f"v{e - 1}")
-            )
-            surv = surv.join(hist, "fp", "left_anti")
-        surv = surv.select("doc_id", "source", "text", "n_words").persist()
-        counts_replay = text.dsir_merge_counts(
-            prev_counts, text.dsir_bucket_counts_from_flag(surv, is_target, "text")
-        ).persist()
-        on_disk = spark.read.parquet(os.path.join(out, "dsir_store", f"v{e}"))
-        # (1) on-disk version e == replayed merge through night e
-        assert sorted(map(tuple, on_disk.collect())) == sorted(
-            map(tuple, counts_replay.collect())
-        )
-        # (2) monotone vs the previous version
-        if prev_version is not None:
-            cur = {r["bucket"]: (r["t_count"], r["r_count"]) for r in on_disk.collect()}
-            for b, (t0, r0) in prev_version.items():
-                t1, r1 = cur.get(b, (0, 0))
-                assert t1 >= t0 and r1 >= r0
-        prev_version = {
-            r["bucket"]: (r["t_count"], r["r_count"]) for r in on_disk.collect()
-        }
-        # (3) admitted pool docs ⊆ top-ceil(frac·|scored|) vs v{e} weights
-        weights = text.dsir_weights_from_counts(on_disk)
-        scored = text.dsir_scores(
-            surv.filter(~is_target), "doc_id", "text", weights
-        )
-        n_scored = scored.count()
-        k = int(math.ceil(0.5 * n_scored))
-        top_ids = {
-            r["doc_id"]
-            for r in scored.orderBy(
-                F.col("dsir_score_q").desc(), "doc_id"
-            ).limit(k).collect()
-        }
-        admitted_pool = {
-            r["doc_id"] for r in epoch_rows[e] if r["source"] not in tgt
-        }
-        assert admitted_pool <= top_ids
-        prev_counts = counts_replay
-    # (4) base cross-epoch invariants under DSIR
-    fp_by_id = {
-        r["doc_id"]: r["fp"]
-        for r in docs.select(
-            "doc_id", text.prefix_fingerprint_column("text").alias("fp")
-        ).collect()
-    }
-    all_fps = [fp_by_id[r["doc_id"]] for rows in epoch_rows for r in rows]
-    assert [f for f, n in Counter(all_fps).items() if n > 1] == []
-    for e, rows in enumerate(epoch_rows):
-        assert all(r["doc_id"] % 3 == e for r in rows)
 
 
 def test_operational_loop_composes_four_systems(spark, tmp_path):

@@ -518,6 +518,47 @@ def test_materialization_has_one_owner():
     assert not offenders, offenders
 
 
+# Modules that may build a frame from Python rows, with the reason.
+LOCAL_FRAME_EXEMPT = {
+    "tools/run_pipeline.py": "the Optuna trial log, written once per model "
+    "by a tool no benchmark runs; its dict rows keep Spark's schema inference",
+}
+
+
+def test_local_frames_have_one_owner():
+    """Every driver-built frame goes through sources/io.local_frame, which
+    hands Spark an Arrow table (a JVM-only LocalRelation). A
+    ``createDataFrame`` on Python rows anywhere else in the package or
+    tools/ (outside LOCAL_FRAME_EXEMPT) builds a Python RDD whose first
+    action starts the Python worker pool just to unpickle the rows."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    pkg = root / "end_to_end_ml_spark"
+    offenders = []
+    for py in [*sorted(pkg.rglob("*.py")), *sorted((root / "tools").glob("*.py"))]:
+        if str(py.relative_to(root)) in LOCAL_FRAME_EXEMPT:
+            continue
+        tree = ast.parse(py.read_text())
+        owner = set()
+        if py == pkg / "sources" / "io.py":
+            owner = {
+                id(sub)
+                for node in tree.body
+                if isinstance(node, ast.FunctionDef) and node.name == "local_frame"
+                for sub in ast.walk(node)
+            }
+        offenders += [
+            f"{py.relative_to(root)}:{node.lineno}"
+            for node in ast.walk(tree)
+            if isinstance(node, ast.Attribute)
+            and node.attr == "createDataFrame"
+            and id(node) not in owner
+        ]
+    assert not offenders, offenders
+
+
 # Public names whose caller is not in this repo's runtime, with the reason.
 RUNTIME_CALLER_ALLOWLIST = {
     "create_app": "serving.py: the ASGI factory behind the REST endpoint; "
@@ -534,8 +575,8 @@ RUNTIME_CALLER_ALLOWLIST = {
 
 
 def test_every_public_name_has_a_runtime_caller():
-    """Every public top-level function and class of the package is used by
-    code that runs: the package itself, tools/, perfbench/ (not its
+    """Every public top-level function and class of the package and of
+    tools/ is used by code that runs: the package itself, tools/, perfbench/ (not its
     tests), bench.py or __spark_entry__.py. A use is an ``ast.Name``, an
     ``ast.Attribute`` or an import alias of that name outside the name's
     own definition; comments and docstrings do not count. A name without
@@ -556,7 +597,7 @@ def test_every_public_name_has_a_runtime_caller():
     trees = {py: ast.parse(py.read_text()) for py in runtime}
     defs = [
         (node.name, py, node)
-        for py in sorted(pkg.rglob("*.py"))
+        for py in [*sorted(pkg.rglob("*.py")), *sorted((root / "tools").glob("*.py"))]
         for node in trees[py].body
         if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
         and not node.name.startswith("_")
@@ -674,18 +715,23 @@ def test_driver_java_options_grow_only_merge():
     sizing."""
     from end_to_end_ml_spark.session import merge_driver_java_options as m
 
-    defaults = "-XX:MaxHeapFreeRatio=100 -XX:ReservedCodeCacheSize=512m"
+    defaults = (
+        "-XX:MaxHeapFreeRatio=100 -XX:ReservedCodeCacheSize=512m"
+        " -XX:G1HeapRegionSize=4m"
+    )
     assert m(None) == m("") == defaults
     assert "-Xms" not in m(None)
-    # a caller's flag wins its own family, keeps the other default, and
+    # a caller's flag wins its own family, keeps the other defaults, and
     # comes last so it would win any conflict (JVM last-flag-wins)
     assert m("-XX:ReservedCodeCacheSize=256m") == (
-        "-XX:MaxHeapFreeRatio=100 -XX:ReservedCodeCacheSize=256m"
+        "-XX:MaxHeapFreeRatio=100 -XX:G1HeapRegionSize=4m"
+        " -XX:ReservedCodeCacheSize=256m"
     )
     assert m("-XX:MaxHeapFreeRatio=70 -XX:+UseG1GC") == (
-        "-XX:ReservedCodeCacheSize=512m -XX:MaxHeapFreeRatio=70 -XX:+UseG1GC"
+        "-XX:ReservedCodeCacheSize=512m -XX:G1HeapRegionSize=4m"
+        " -XX:MaxHeapFreeRatio=70 -XX:+UseG1GC"
     )
-    # unrelated caller flags (a caller's own -Xms among them) keep both
+    # unrelated caller flags (a caller's own -Xms among them) keep all
     assert m("-XX:+UseZGC") == f"{defaults} -XX:+UseZGC"
     assert m("-Xms4g") == f"{defaults} -Xms4g"
 
@@ -726,7 +772,8 @@ def test_default_driver_memory_fits_a_small_host(tmp_path):
 
 def test_live_driver_heap_is_grow_only(spark):
     """The running driver JVM got the grow-only policy: no -Xms among its
-    input arguments, MaxHeapFreeRatio=100, and a full GC after a job that
+    input arguments, MaxHeapFreeRatio=100, 4m G1 regions (Spark's 1 MB
+    buffers stay off the humongous path), and a full GC after a job that
     grew the heap leaves committed heap where it was (no uncommit)."""
     jvm = spark._jvm
     mf = jvm.java.lang.management.ManagementFactory
@@ -736,6 +783,7 @@ def test_live_driver_heap_is_grow_only(spark):
         jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean")
     )
     assert diag.getVMOption("MaxHeapFreeRatio").getValue() == "100"
+    assert diag.getVMOption("G1HeapRegionSize").getValue() == str(4 << 20)
     spark.range(3_000_000).selectExpr(
         "id % 100000 AS k", "CAST(id AS STRING) AS s"
     ).groupBy("k").agg(F.max("s")).collect()

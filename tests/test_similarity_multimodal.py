@@ -444,7 +444,7 @@ def test_quantizer_sample_bounded(spark):
 
 def test_bruteforce_sharded_equals_broadcast(spark):
     """n_shards forces the no-broadcast block-nested-loop path; results must
-    be row-identical to the broadcast matmul path."""
+    be row-identical to the default driver-side matmul path."""
     import random
 
     rng = random.Random(11)
@@ -463,19 +463,51 @@ def test_bruteforce_sharded_equals_broadcast(spark):
     assert "FlatMapCoGroupsInPandas" in plan_b, plan_b
 
 
-def test_brute_force_autoroutes_to_sharded_above_threshold(spark):
-    """The broadcast mode must never silently collect a big corpus: above
-    max_broadcast_rows it auto-routes to the sharded exact path, with
-    identical results (both modes share the same oracle)."""
+def test_brute_force_autoroutes_to_sharded_above_threshold(spark, caplog):
+    """The driver mode must never silently collect a big input: when the
+    corpus or the query side holds more than max_broadcast_rows rows it
+    auto-routes to the sharded exact path. Both modes return the same rows
+    in the same (query_id, cosine_sim desc, neighbor_id) order, with and
+    without a query frame, and with a tiny corpus under a query side over
+    the bound; the tied integer-valued vectors exercise the neighbor-id
+    tie-break. Each call logs its decision once, with its inputs."""
     emb = spark.range(0, 60).selectExpr(
         "id as vec_id",
         "array(cast(id % 7 as double), cast((id * 3) % 5 as double), 1.0d) as embedding",
     )
-    small = similarity.brute_force_topk(emb, "vec_id", "embedding", k=3)
-    routed = similarity.brute_force_topk(
-        emb, "vec_id", "embedding", k=3, max_broadcast_rows=10
-    )
-    assert sorted(map(tuple, routed.collect())) == sorted(map(tuple, small.collect()))
+    tiny = emb.filter("vec_id < 8")
+
+    def topk(corpus, **kw):
+        caplog.clear()
+        with caplog.at_level("INFO", logger=similarity.__name__):
+            out = similarity.brute_force_topk(corpus, "vec_id", "embedding", k=3, **kw)
+        logged = [r.getMessage() for r in caplog.records if r.name == similarity.__name__]
+        return out, logged
+
+    cases = [
+        # (corpus, query frame, rows out, driver log, routed log)
+        (emb, None, 60 * 3, "queries=60 corpus=60", "queries=>10 corpus=>10"),
+        (emb, emb.filter("vec_id % 4 = 1"), 15 * 3,
+         "queries=15 corpus=60", "queries=uncollected corpus=>10"),
+        (tiny, emb, 60 * 3, "queries=60 corpus=8", "queries=>10 corpus=8"),
+    ]
+    for corpus, queries, n_rows, driver_sizes, routed_sizes in cases:
+        kw = {} if queries is None else {"query_df": queries}
+        driver, driver_log = topk(corpus, **kw)
+        routed, routed_log = topk(corpus, max_broadcast_rows=10, **kw)
+        assert driver_log == [
+            f"brute_force_topk on_driver=True {driver_sizes} max_broadcast_rows=200000"
+        ]
+        assert routed_log == [
+            f"brute_force_topk on_driver=False {routed_sizes} max_broadcast_rows=10"
+        ]
+        assert "LocalRelation" in driver._jdf.queryExecution().optimizedPlan().toString()
+        assert "FlatMapCoGroupsInPandas" in (
+            routed._jdf.queryExecution().executedPlan().toString()
+        )
+        rows = [tuple(r) for r in driver.collect()]
+        assert len(rows) == n_rows
+        assert rows == [tuple(r) for r in routed.collect()]
 
 
 def test_sample_frames_stride_shape_and_determinism(spark):

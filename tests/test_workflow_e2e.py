@@ -161,6 +161,54 @@ def test_serving_predict_records_request_order(spark):
         {c: r[c] for c in ("predicted_probability", "prediction")} for r in keyed
     ]
 
+def test_serving_predict_records_runs_no_job(spark):
+    """A request is an Arrow LocalRelation, so the optimizer folds the
+    whole fitted pipeline into it on the driver: predict_records launches
+    no Spark job (and so starts no Python worker). A wrong-typed request
+    value still raises, as it did when the request was a Python-row
+    frame."""
+    import pytest
+
+    from end_to_end_ml_spark import serving
+
+    priorities = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
+    segments = ["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"]
+    df = spark.createDataFrame(
+        [
+            (float(i % 17) * 100.0, priorities[i % 5], segments[(i // 5) % 5],
+             float((i % 17 > 8) != (i % 5 == 0)))
+            for i in range(200)
+        ],
+        ["c_acctbal", "o_orderpriority", "c_mktsegment", "label"],
+    )
+    stages = FP.build_preprocessing_stages(
+        numeric_cols=["c_acctbal"],
+        categorical_cols=["o_orderpriority", "c_mktsegment"],
+        variance_threshold=0.0,
+    )
+    fitted = FP.build_full_pipeline(stages, MZ.logistic_regression(max_iter=10)).fit(df)
+    schema = "o_orderkey long, c_acctbal double, o_orderpriority string, c_mktsegment string"
+    expected = ["c_acctbal", "o_orderpriority", "c_mktsegment"]
+    records = [
+        {"o_orderkey": k, "c_acctbal": 100.0 * k, "o_orderpriority": priorities[k],
+         "c_mktsegment": segments[-k]}
+        for k in range(5)
+    ]
+    sc = spark.sparkContext
+    sc.setJobGroup("predict-records-jobs", "predict_records")
+    try:
+        out = serving.predict_records(spark, fitted, records, schema, expected, pk_col="o_orderkey")
+        jobs = sc.statusTracker().getJobIdsForGroup("predict-records-jobs")
+    finally:
+        sc.setJobGroup(None, None)
+    assert [r["o_orderkey"] for r in out] == list(range(5))
+    assert jobs == []
+
+    bad = [{**records[0], "c_acctbal": "a lot"}]
+    with pytest.raises(TypeError):
+        serving.predict_records(spark, fitted, bad, schema, expected, pk_col="o_orderkey")
+
+
 def test_local_json_tracker_full_run_log(tmp_path):
     """E7: the always-on local tracker produces a complete run log —
     params, per-model metrics, trial assets, champion, gate decision,

@@ -244,10 +244,10 @@ def curate_incremental(
     against bucket counts that reflect the historical docs — in this
     synthetic-history demo the historical counts come from one pass
     over the history slice (they are the demo stand-in for the
-    versioned store a production loop carries: run_epochs threads the
-    store between epochs, and stream_dsir_counts_ingest maintains the
-    same shape online, so a real nightly job reads ≤256 rows instead
-    of running this pass). The history slice is gated + deduped before
+    versioned store a production loop carries: run_operational_loop
+    threads the store between nights, and stream_dsir_counts_ingest
+    maintains the same shape online, so a real nightly job reads ≤256
+    rows instead of running this pass). The history slice is gated + deduped before
     counting: the production stores accumulate SURVIVOR counts, so a
     demo distribution counted over raw history — gated-out and
     duplicate docs included — would differ in shape from the store it
@@ -274,101 +274,6 @@ def curate_incremental(
         dsir_counts=hist_counts,
     )
     return curated, stats
-
-
-def run_epochs(
-    spark,
-    sf_dir: str,
-    budget_tokens: int,
-    n_epochs: int = 3,
-    out_dir: str | None = None,
-    dsir_frac: float | None = None,
-):
-    """Chain :func:`curate_epoch` across ``n_epochs`` synthetic 'nights'
-    (night e = doc_id % n_epochs == e) carrying the VERSIONED fingerprint
-    store between them — the composed loop the per-epoch function exists
-    for (round-9 verdict #5). The store after night e is exactly the
-    union of all admitted fingerprints through night e (store version e
-    written to fp_store/v{e} when out_dir is given), so no fingerprint
-    is ever admitted twice across epochs.
-
-    With ``dsir_frac`` set (round-10 verdict #4), a SECOND versioned
-    store rides along: the DSIR bucket counts (bucket, t_count,
-    r_count — written to dsir_store/v{e}, the exact shape
-    streaming/events.stream_dsir_counts_ingest maintains online), so
-    night e's pool is scored against weights reflecting every survivor
-    through night e without rescanning history — both stores are ≤256
-    rows / 16-bytes-per-doc no matter the corpus size. Returns
-    (per_epoch, fp_store_df) where per_epoch is a list of
-    (curated_df, stats_df) per night — frames, never driver collects.
-    Cache discipline (round-11 ADVICE #2): with ``out_dir`` each night's
-    persisted survivor/scored frames are unpersisted once the night's
-    outputs are written (re-evaluating a returned frame recomputes from
-    lineage over the versioned parquet stores — deterministic, and the
-    cache stays O(one night) instead of O(n_epochs)); without
-    ``out_dir`` (the in-memory test/demo mode) survivors stay persisted
-    for cheap later evaluation, but the previous night's store/counts
-    versions are unpersisted as soon as the new versions materialize."""
-    docs = load_table(spark, sf_dir, "documents")
-    store = None
-    counts = None
-    owned_state: list = []
-    per_epoch = []
-    for e in range(n_epochs):
-        batch = docs.filter(F.col("doc_id") % n_epochs == e)
-        epoch_persisted: list = []
-        curated, stats, admitted_fps, new_counts, _ = curate_epoch(
-            spark,
-            batch,
-            store,
-            budget_tokens,
-            salt=f"cur2e{e}",
-            dsir_frac=dsir_frac,
-            dsir_counts=counts,
-            persisted_out=epoch_persisted,
-        )
-        # materialize the store ONCE per night: checkpoint through parquet
-        # when out_dir is given (the versioned store a production loop
-        # keeps), else persist — either way the next epoch reads stored
-        # fps/counts, not a growing lineage over every prior night
-        new_store = (
-            admitted_fps if store is None else store.unionByName(admitted_fps)
-        ).distinct()
-        if out_dir is not None:
-            version_dir = os.path.join(out_dir, "fp_store", f"v{e}")
-            new_store.write.mode("overwrite").parquet(version_dir)
-            store = spark.read.parquet(version_dir)
-            curated.write.mode("overwrite").partitionBy("shard").parquet(
-                os.path.join(out_dir, "curated", f"epoch={e}")
-            )
-            if new_counts is not None:
-                counts_dir = os.path.join(out_dir, "dsir_store", f"v{e}")
-                new_counts.write.mode("overwrite").parquet(counts_dir)
-                counts = spark.read.parquet(counts_dir)
-            # epoch outputs are on disk and next-epoch state reads parquet —
-            # the night's survivor/scored blocks are done; without this the
-            # executor cache grows linearly with n_epochs (round-11 ADVICE
-            # #2). Returned frames re-evaluate from lineage (reading the
-            # versioned parquet stores), which stays deterministic.
-            for f in epoch_persisted:
-                f.unpersist()
-        else:
-            prev_owned, owned_state = owned_state, []
-            store, owned = materialize.persist(new_store)
-            if owned:
-                owned_state.append(store)
-            if new_counts is not None:
-                counts, owned = materialize.persist(new_counts)
-                if owned:
-                    owned_state.append(counts)
-                counts.count()  # materialize before dropping the previous
-            store.count()
-            # the new versions are materialized; the previous epoch's
-            # store/counts blocks are unreachable by any later lineage
-            for f in prev_owned:
-                f.unpersist()
-        per_epoch.append((curated, stats))
-    return per_epoch, store
 
 
 def run_operational_loop(
@@ -401,7 +306,7 @@ def run_operational_loop(
          curate_epoch(dsir_weights=..., floor_unseen inside) — tonight's
          docs are NOT yet counted into the store, so unseen buckets take
          the metadata-derived add-one floor. The fingerprint store
-         threads between nights exactly as run_epochs does
+         threads between nights as a versioned parquet store
          (``work_dir/fp_store/v{e}``), and each night's persisted
          frames are unpersisted once its outputs are on disk.
       3. ANN MAINTENANCE over the matching embedding nights

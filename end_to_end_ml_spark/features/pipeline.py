@@ -170,8 +170,8 @@ class ParityStringIndexer(Estimator, DefaultParamsReadable, DefaultParamsWritabl
     absent from the fit data, an unseen category at transform/serving time
     maps to index numLabels (handleInvalid='keep'), and the downstream
     OneHotEncoder (handleInvalid='error') throws. Building the
-    ``StringIndexerModel`` from the observed labels ∪ {__infrequent__} via
-    ``from_arrays_of_labels`` guarantees the unseen→__infrequent__ path is
+    ``StringIndexerModel`` directly from the observed labels ∪
+    {__infrequent__} guarantees the unseen→__infrequent__ path is
     total, preserving the sklearn handle_unknown='infrequent_if_exist'
     contract.
 
@@ -221,16 +221,19 @@ class ParityStringIndexer(Estimator, DefaultParamsReadable, DefaultParamsWritabl
         seen: dict[str, set[str]] = {c: set() for c in input_cols}
         for r in rows:
             seen[r["col_name"]].add(r["value"])
-        labels = [
-            [INFREQUENT] + sorted(seen[c] - {INFREQUENT}, reverse=True)
-            for c in input_cols
-        ]
-        return StringIndexerModel.from_arrays_of_labels(
-            labels,
-            inputCols=input_cols,
-            outputCols=output_cols,
-            handleInvalid="keep",
+        # a ragged String[][]: from_arrays_of_labels pads every column's
+        # labels to the longest with nulls, and OneHotEncoder fails on a
+        # null label of a column with fewer levels than another
+        gateway = df.sparkSession.sparkContext._gateway
+        jstring = gateway.jvm.java.lang.String
+        jlabels = gateway.new_array(jstring, len(input_cols), 0)
+        for i, c in enumerate(input_cols):
+            labels = [INFREQUENT] + sorted(seen[c] - {INFREQUENT}, reverse=True)
+            jlabels[i] = StringIndexerModel._new_java_array(labels, jstring)
+        model = StringIndexerModel._create_from_java_class(
+            "org.apache.spark.ml.feature.StringIndexerModel", jlabels
         )
+        return model.setInputCols(input_cols).setOutputCols(output_cols).setHandleInvalid("keep")
 
 
 def build_preprocessing_stages(

@@ -1235,7 +1235,8 @@ def tile_dedup_rewrite(
     bounded n_tokens/tile_words tile fan-out. One shuffle partitions by
     tile_text for the keep-first window; a boilerplate tile duplicated
     10^9 times is NOT a hot-key hazard because Spark pushes the rank-1
-    limit below the exchange (WindowGroupLimit, visible in PLANS.md):
+    limit below the exchange (WindowGroupLimit, counted for d17 in
+    plans/SHAPES.json):
     each map partition forwards at most ONE row per tile, so the
     reducer-side hot tile sees <= #map-partitions rows regardless of
     duplication. One groupBy(doc) then reassembles via

@@ -1096,28 +1096,27 @@ SELECT group_id, doc_id AS canonical_id FROM (
 def _pair_recall_summary(exact: DataFrame, approx: DataFrame, keys: list[str]) -> DataFrame:
     """One-row (n_exact, n_approx, n_common, recall_ppm) frame — fully lazy,
     deterministic given deterministic inputs (all our hashes are seeded).
-    recall_ppm is an exact integer: floor(n_common * 1e6 / n_exact)."""
-    e = exact.select(*keys)
-    # the approx pair set is consumed TWICE (hit join + n_approx count);
-    # without the checkpoint the whole approx pipeline re-ran per
-    # reference (r14 census: sim2r/sim3r/d6r each carried 5 input scans,
-    # d4r 18 exchanges). Key columns only — a narrow result-pair frame.
-    a = approx.select(*keys).localCheckpoint(eager=False)
-    hits = e.join(a.withColumn("__hit", F.lit(1)), on=keys, how="left")
-    stats = hits.agg(
-        F.count(F.lit(1)).alias("n_exact"),
-        F.coalesce(F.sum("__hit"), F.lit(0)).alias("n_common"),
+    recall_ppm is an exact integer: floor(n_common * 1e6 / n_exact).
+
+    Each input is read once: one full-outer join on the keys (a pair set
+    holds each key once) and one global aggregate count both sets and
+    their common keys. The join also drops the inputs' presentation
+    sorts, which a union would keep as mid-plan global sorts."""
+    both = exact.select(*keys, F.lit(1).alias("__e")).join(
+        approx.select(*keys, F.lit(1).alias("__a")), on=keys, how="full_outer"
     )
-    return (
-        stats.crossJoin(a.agg(F.count(F.lit(1)).alias("n_approx")))
-        .select(
-            "n_exact",
-            "n_approx",
-            "n_common",
-            F.floor(F.col("n_common") * 1000000 / F.col("n_exact"))
-            .cast("long")
-            .alias("recall_ppm"),
-        )
+    in_both = F.col("__e").isNotNull() & F.col("__a").isNotNull()
+    return both.agg(
+        F.count("__e").alias("n_exact"),
+        F.count("__a").alias("n_approx"),
+        F.count_if(in_both).alias("n_common"),
+    ).select(
+        "n_exact",
+        "n_approx",
+        "n_common",
+        F.floor(F.col("n_common") * 1000000 / F.col("n_exact"))
+        .cast("long")
+        .alias("recall_ppm"),
     )
 
 
@@ -3003,7 +3002,8 @@ def pipe3_pretrain_corpus(spark, sf_dir):
     # the exchange — a fingerprint duplicated 10^9 times forwards at most
     # one row per map partition to the reducer instead of funneling every
     # copy through one hot window partition (round-12; same argument as
-    # tile_dedup_rewrite's hot-tile note, visible in PLANS.md).
+    # tile_dedup_rewrite's hot-tile note; plans/SHAPES.json counts the
+    # WindowGroupLimit for pipe3).
     w_fp = Window.partitionBy("fingerprint").orderBy("doc_id")
     keep = (
         enriched.withColumn("__rn", F.row_number().over(w_fp))

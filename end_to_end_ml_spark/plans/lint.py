@@ -21,6 +21,11 @@ The linter inspects the PHYSICAL plan (post-Catalyst), so it sees what
 would actually run — a filter Catalyst pushed into the scan no longer
 shows as a stage. AQE is disabled for the snapshot so plan shapes are
 deterministic.
+
+``plan_shape`` counts the same plan's nodes (scans per table, exchanges,
+joins, windows, Python eval nodes, checkpoint leaves); the lint test keeps
+those counts equal to the ledger ``plans/SHAPES.json`` that
+``tools/plan_shapes.py`` writes.
 """
 
 from __future__ import annotations
@@ -48,6 +53,62 @@ def _walk(node, ancestors):
     nxt = ancestors + [node.nodeName().split(" (")[0]]
     for i in range(ch.size()):
         yield from _walk(ch.apply(i), nxt)
+
+
+def executed_plan(df: DataFrame):
+    """The JVM executed physical plan of ``df`` with AQE off, so the shape
+    is deterministic. The plan is a lazy value of the DataFrame's
+    QueryExecution: a second call returns the same plan without planning
+    again."""
+    spark = df.sparkSession
+    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        return df._jdf.queryExecution().executedPlan()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+
+
+# node types the shape counts by name; joins, Python/Arrow eval nodes,
+# file scans and windows are matched below
+_SHAPE_NODES = {
+    "Exchange",
+    "BroadcastExchange",
+    "ReusedExchange",
+    "Expand",
+    "Generate",
+    "WindowGroupLimit",
+    "Scan ExistingRDD",
+    "InMemoryTableScan",
+}
+
+
+def plan_shape(df: DataFrame) -> dict[str, int]:
+    """Node counts of ``df``'s AQE-off executed plan: file scans per table
+    (``scan:<table>``), exchanges, each join operator, Expand, Generate,
+    WindowGroupLimit, partitioned and unpartitioned Window
+    (``Window[global]``), Python/Arrow eval nodes, checkpoint leaves
+    (``Scan ExistingRDD``) and InMemoryTableScan. Only non-zero counts are
+    listed. ``plans/SHAPES.json`` records this per registry query."""
+    counts: dict[str, int] = {}
+    for node, _ in _walk(executed_plan(df), []):
+        name = node.nodeName().split(" (")[0].strip()
+        if name.startswith("Scan ") and name != "Scan ExistingRDD":
+            table = node.relation().location().rootPaths().head().getName()
+            key = "scan:" + table.removesuffix(".parquet")
+        elif name == "Window":
+            key = "Window[global]" if node.partitionSpec().isEmpty() else name
+        elif (
+            name in _SHAPE_NODES
+            or name.endswith("Join")
+            or name == "CartesianProduct"
+            or any(s in name for s in ("Python", "Pandas", "InArrow"))
+        ):
+            key = name
+        else:
+            continue
+        counts[key] = counts.get(key, 0) + 1
+    return dict(sorted(counts.items()))
 
 
 # Nodes that preserve (or reduce) the row stream between an aggregate and
@@ -148,20 +209,12 @@ def audit_plan(df: DataFrame, include_info: bool = False) -> list[str]:
     ``info:accepted-bounded-window:`` entries for every global Window/Sort
     the linter ACCEPTED because its input is aggregate-bounded — these are
     the plans that emit Spark's ``WindowExec: No Partition Defined``
-    warning at runtime; the tag lets logs/PLANS.md distinguish them from
+    warning at runtime; the tag lets logs distinguish them from
     true scale-killers without changing the CI gate (default excludes
     them)."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        root = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
     hazards: list[str] = []
     infos: list[str] = []
-    for node, ancestors in _walk(root, []):
+    for node, ancestors in _walk(executed_plan(df), []):
         name = node.nodeName().split(" (")[0]
         head = node.toString().splitlines()[0].strip()[:140]
         if name == "CartesianProduct":

@@ -119,6 +119,31 @@ def test_ohe_drop_first_parity(spark):
     assert vecs["a"][:2] == [0.0, 0.0]  # 'a' is the dropped category
 
 
+def test_indexer_labels_are_per_column_when_level_counts_differ(spark):
+    """Two categorical columns with 2 and 3 levels: each column keeps its
+    own label list. Padded to the longest list, the 2-level column got a
+    null label and the OneHotEncoder fit threw NullPointerException."""
+    from pyspark.ml import Pipeline
+
+    df = spark.createDataFrame(
+        [(i, ["1-URGENT", "2-HIGH"][i % 2], ["AUTO", "BUILD", "HOUSE"][i % 3])
+         for i in range(120)],
+        ["id", "prio", "seg"],
+    )
+    stages = FP.build_preprocessing_stages(
+        numeric_cols=[], categorical_cols=["prio", "seg"], variance_threshold=0.0
+    )
+    fitted = Pipeline(stages=stages).fit(df)
+    indexer = next(
+        s for s in fitted.stages if s.__class__.__name__ == "StringIndexerModel"
+    )
+    assert indexer.labelsArray == [
+        ["__infrequent__", "2-HIGH", "1-URGENT"],
+        ["__infrequent__", "HOUSE", "BUILD", "AUTO"],
+    ]
+    assert fitted.transform(df).count() == 120
+
+
 def test_full_pipeline_and_evaluation(spark, frame):
     m = FP.fit_label_indexer(frame, "label_str")
     labeled = m.transform(frame).withColumnRenamed("label", "label_idx") \

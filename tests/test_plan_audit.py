@@ -8,6 +8,7 @@ from __future__ import annotations
 import pytest
 
 from end_to_end_ml_spark.plans.entry_queries import REGISTRY
+from end_to_end_ml_spark.plans.lint import _walk, executed_plan
 
 SF = "/root/testdata/sf0.001"
 
@@ -98,38 +99,26 @@ def test_filters_reach_the_scan(spark, name):
 # never the full table).
 
 
-def _walk(node):
-    yield node
-    ch = node.children()
-    for i in range(ch.size()):
-        yield from _walk(ch.apply(i))
-
-
 def _has_agg_below(node) -> bool:
     ch = node.children()
-    for i in range(ch.size()):
-        for d in _walk(ch.apply(i)):
-            if "Aggregate" in d.nodeName():
-                return True
-    return False
+    return any(
+        "Aggregate" in d.nodeName()
+        for i in range(ch.size())
+        for d, _ in _walk(ch.apply(i), [])
+    )
 
 
 @pytest.mark.parametrize(
     "name", ["a13_lift_gains", "a6_roc_auc", "a12_roc_curve", "a10_pr_curve_ap"]
 )
 def test_no_unpartitioned_window_over_full_input(spark, name):
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = REGISTRY[name][0](spark, SF)
-        plan = df._jdf.queryExecution().executedPlan()
-        for node in _walk(plan):
-            if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
-                assert _has_agg_below(node), (
-                    "unpartitioned Window over non-aggregated input:\n"
-                    + node.toString()
-                )
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    plan = executed_plan(REGISTRY[name][0](spark, SF))
+    for node, _ in _walk(plan, []):
+        if node.nodeName() == "Window" and node.partitionSpec().isEmpty():
+            assert _has_agg_below(node), (
+                "unpartitioned Window over non-aggregated input:\n"
+                + node.toString()
+            )
 
 
 def test_w1_threshold_prefilter_reaches_scan(spark):

@@ -3,14 +3,21 @@ and pass every flagship registry query."""
 
 from __future__ import annotations
 
+import os
+import sys
+
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from end_to_end_ml_spark.plans.entry_queries import REGISTRY
-from end_to_end_ml_spark.plans.lint import audit_plan
+from end_to_end_ml_spark.plans.lint import audit_plan, plan_shape
 
 SF = "/root/testdata/sf0.001"
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path[:0] = [ROOT, os.path.join(ROOT, "tools")]
+
+import plan_shapes  # noqa: E402
 
 
 def test_flags_cartesian_product(spark):
@@ -161,13 +168,50 @@ def test_flagship_queries_are_clean(spark, name):
 
 def test_entire_registry_is_lint_clean(spark):
     """Every registry query's physical plan passes the scale linter —
-    the CI gate form (`assert not audit_plan(df)`)."""
+    the CI gate form (`assert not audit_plan(df)`) — and has the node
+    counts recorded in the plan-shape ledger plans/SHAPES.json. Each query
+    is planned once: audit_plan and plan_shape read the same executed
+    plan."""
+    import json
+
+    # frames that earlier tests cached would stand in for subplans here;
+    # the ledger holds the plans of a fresh session, as the tool makes them
+    spark.catalog.clearCache()
     dirty = {}
+    shapes = {}
     for name, (fn, _) in REGISTRY.items():
-        hazards = audit_plan(fn(spark, SF))
+        df = fn(spark, SF)
+        hazards = audit_plan(df)
         if hazards:
             dirty[name] = hazards
+        shapes[name] = plan_shape(df)
     assert dirty == {}, dirty
+    with open(plan_shapes.LEDGER) as fh:
+        report = plan_shapes.ledger_report(json.load(fh), shapes, spark.version)
+    assert not report, report
+
+
+def test_ledger_report_names_query_node_and_counts():
+    """The ledger comparison names each differing query with the node type
+    and both counts, states both Spark versions and the rewrite command,
+    and is empty when the counts match."""
+    ledger = {
+        "spark_version": "4.1.2",
+        "shapes": {
+            "p15_profile_columns": {"Exchange": 2, "scan:orders": 1},
+            "q1_pricing_summary": {"Exchange": 1, "scan:lineitem": 1},
+        },
+    }
+    running = {
+        "p15_profile_columns": {"Exchange": 2, "Expand": 1, "scan:orders": 1},
+        "q1_pricing_summary": {"Exchange": 1, "scan:lineitem": 1},
+    }
+    report = plan_shapes.ledger_report(ledger, running, "4.2.0")
+    assert "p15_profile_columns: Expand 0 → 1" in report
+    assert "q1_pricing_summary" not in report
+    assert "Spark 4.1.2" in report and "Spark 4.2.0" in report
+    assert plan_shapes.WRITE_CMD in report
+    assert plan_shapes.ledger_report(ledger, ledger["shapes"], "4.1.2") == ""
 
 
 def test_query_rejects_duplicate_name():
@@ -216,19 +260,15 @@ def test_driver_window_is_pick_window_output():
     query without re-running the pick fails here, which is the intended
     discipline."""
     import glob
-    import os
     import re
-    import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
     import pick_window
 
     from end_to_end_ml_spark.plans.entry_queries import DRIVER_WINDOW
 
     rounds = [
         int(re.search(r"_r(\d+)\.json$", p).group(1))
-        for p in glob.glob(os.path.join(root, "CORRECTNESS_r*.json"))
+        for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))
     ]
     current_round = max(rounds) + 1
     assert pick_window.pick(current_round) == DRIVER_WINDOW
@@ -242,18 +282,14 @@ def test_cohort2_is_disjoint_deterministic_and_skips_slow_oracles():
     quadratic brute-force oracles that cost ~100x at sf0.1)."""
     import glob
     import json
-    import os
-    import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
     import pick_window
 
     c2 = pick_window.cohort2(10)
     assert len(c2) == 50 and len(set(c2)) == 50
     assert c2 == pick_window.cohort2(10)  # deterministic
     assert not set(c2) & set(pick_window.pick(10))
-    locals_ = sorted(glob.glob(os.path.join(root, "CHECK_ORACLE_LOCAL_r*.json")))
+    locals_ = sorted(glob.glob(os.path.join(ROOT, "CHECK_ORACLE_LOCAL_r*.json")))
     res = json.load(open(locals_[-1])).get("results", {})
     slow = {n for n, r in res.items() if (r.get("duck_s") or 0) > 5}
     assert not set(c2) & slow
@@ -267,12 +303,7 @@ def test_cohorts_partition_the_oracled_tail():
     claim in the round close."""
     import glob
     import json
-    import os
-    import sys
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
-    sys.path.insert(0, root)
     import pick_window
 
     import __spark_entry__ as entry
@@ -283,24 +314,17 @@ def test_cohorts_partition_the_oracled_tail():
     for c in cohorts:
         assert not set(c) & seen  # disjoint from window and prior cohorts
         seen |= set(c)
-    locals_ = sorted(glob.glob(os.path.join(root, "CHECK_ORACLE_LOCAL_r*.json")))
+    locals_ = sorted(glob.glob(os.path.join(ROOT, "CHECK_ORACLE_LOCAL_r*.json")))
     res = json.load(open(locals_[-1])).get("results", {})
     slow = {n for n, r in res.items() if (r.get("duck_s") or 0) > 5}
     assert seen | slow >= set(entry.oracle_sql())
 
 
-def test_bench_and_plandump_lists_reference_live_queries():
+def test_bench_lists_reference_live_queries():
     """Round-9 retired two registry names (ts4, ml1) — a stale name left
-    in bench.py's run tables or tools/dump_plans.py would only surface as
-    a runtime KeyError in the driver's bench run. Check every name."""
-    import os
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, root)
-    sys.path.insert(0, os.path.join(root, "tools"))
+    in bench.py's run tables would only surface as a runtime KeyError in
+    the driver's bench run. Check every name."""
     import bench
-    import dump_plans
 
     import __spark_entry__ as entry_mod
 
@@ -309,7 +333,6 @@ def test_bench_and_plandump_lists_reference_live_queries():
     for where, names in (
         ("bench.HEADLINE", bench.HEADLINE),
         ("bench.REST", bench.REST),
-        ("tools/dump_plans.QUERIES", dump_plans.QUERIES),
     ):
         assert names, where
         stale = set(names) - live
@@ -329,11 +352,6 @@ def test_check_oracle_cli_fails_before_spark(monkeypatch, capsys, argv, code, sa
     Spark: --help, an unknown flag and a name that is not in the registry
     each exit without a session (a mistyped query name used to be skipped,
     reporting 0/0 pass with exit 0)."""
-    import os
-    import sys
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(root, "tools"))
     import check_oracle
 
     def no_spark(*args, **kwargs):

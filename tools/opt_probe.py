@@ -1,17 +1,19 @@
 """Optimization probe: time individual registry queries in a
-bench-identical session (same conf as bench.py) and/or dump their
-``explain("formatted")`` plans to plans/<round>/<query>_<tag>.txt (SPARK_GRAFT_PLANS_ROUND, default r14).
+bench-identical session (same conf as bench.py) and/or write their
+``explain("formatted")`` plans to <DIR>/<query>.txt.
 
 Usage:
   python tools/opt_probe.py --reps 5 q1_pricing_summary d16_prefix_filter_jaccard
-  python tools/opt_probe.py --plan before d16_prefix_filter_jaccard
-  python tools/opt_probe.py --reps 5 --plan after d16_prefix_filter_jaccard
+  python tools/opt_probe.py --plan /tmp/plans_before d16_prefix_filter_jaccard
+  python tools/opt_probe.py --reps 5 --plan /tmp/plans_after d16_prefix_filter_jaccard
 
 With --reps N each query runs N noop-forced executions and prints every
-rep plus the min (the bench statistic). With --plan TAG the formatted
-plan is written to plans/<round>/<name>_<TAG>.txt. Alternating A/B across
-two working trees is done by running this twice from different checkouts;
-within-session rep lists make warm-up slope visible either way.
+rep plus the min (the bench statistic). With --plan DIR the formatted
+plan is written to DIR/<name>.txt (per-query node counts of the whole
+registry are in plans/SHAPES.json, see tools/plan_shapes.py). Alternating
+A/B across two working trees is done by running this twice from different
+checkouts, for plans into two directories; within-session rep lists make
+warm-up slope visible either way.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--reps", type=int, default=0)
-    ap.add_argument("--plan", default=None, metavar="TAG")
+    ap.add_argument("--plan", default=None, metavar="DIR")
     ap.add_argument("--json", action="store_true", help="print one JSON line")
     args = ap.parse_args()
 
@@ -47,19 +49,14 @@ def main() -> None:
     )
     from end_to_end_ml_spark.plans.entry_queries import REGISTRY
 
-    plans_dir = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "plans",
-        os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r14"),
-    )
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     results: dict[str, dict] = {}
     for name in args.queries:
         fn = REGISTRY[name][0]
         if args.plan:
-            os.makedirs(plans_dir, exist_ok=True)
+            os.makedirs(args.plan, exist_ok=True)
             df = fn(spark, SF_DIR)
-            path = os.path.join(plans_dir, f"{name}_{args.plan}.txt")
+            path = os.path.join(args.plan, f"{name}.txt")
             with open(path, "w") as fh:
                 fh.write(df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
                     df._jdf.queryExecution(), "formatted"
